@@ -488,31 +488,37 @@ def main() -> None:
     ) as fh:
         json.dump(full, fh, indent=1)
 
-    # The driver captures only the LAST ~2000 characters of stdout and
-    # json-parses the final line (round-8 lesson: the full 105-query line
-    # was 2.9k chars, the tail started mid-line, and the driver recorded
-    # "parsed": null — a whole round of perf data lost). So the printed
-    # line reports a priority-truncated subset that always fits.
-    # Round-17 fix (round-16 VERDICT gate item): every name the driver has
-    # ALREADY seen in a prior round's line (PRIOR_REPORTED) is reported
-    # unconditionally — the fill loop places them first and the assert
-    # below fails loudly if they ever stop fitting, instead of silently
-    # dropping a query's round-over-round number (which is what evicted
-    # stream_txlog_ingest in round 16). To make them fit, the printed
-    # line rounds per-query seconds to 2 decimals (~10 ms resolution —
-    # far below host jitter; BENCH_FULL.json keeps the 3-decimal values).
-    # Remaining budget then goes to never-reported names, newest first
-    # (newest queries are the ones without any prior driver number).
-    # "value"/"common18_sec" stay totals over ALL measured queries.
+    print(build_printed_line(timings, total, common18, full["sf"]))
+
+
+#: The driver's capture is exactly the last 2000 chars (measured: every
+#: committed BENCH_r*.json "tail" is len 2000) and the printed line is the
+#: last thing printed, so line + trailing newline <= 2000 is fully
+#: captured; 1950 leaves a 49-char safety margin.
+PRINT_BUDGET = 1950
+
+
+def build_printed_line(
+    timings: dict[str, float],
+    total: float,
+    common18: float,
+    sf,
+    budget: int = PRINT_BUDGET,
+) -> str:
+    """The one-line JSON result bench.py prints last.
+
+    The driver captures only the LAST ~2000 characters of stdout and
+    json-parses the final line, so the line reports a priority-truncated
+    subset of the queries that always fits ``budget``. Every name the
+    driver has ALREADY seen in an earlier line (PRIOR_REPORTED) is placed
+    first and must fit — a name that no longer fits raises instead of
+    silently dropping that query's run-over-run number. To make them
+    fit, per-query seconds are rounded to 2 decimals (~10 ms, far below
+    host jitter; BENCH_FULL.json keeps 3 decimals). Remaining budget goes
+    to never-reported names, newest first. ``total``/``common18`` stay
+    totals over ALL measured queries."""
     tail_priority = [n for n in reversed(HEADLINE) if n not in PRIOR_REPORTED]
     priority = PRIOR_REPORTED + tail_priority
-    reported: dict[str, float] = {}
-    # The driver's capture is exactly the last 2000 chars (measured: every
-    # committed BENCH_r*.json "tail" is len 2000) and this line is the last
-    # thing printed, so line + trailing newline <= 2000 is fully captured;
-    # 1950 leaves a 49-char safety margin. (The old 1800 was conservative
-    # guesswork and is what made the round-16 eviction possible.)
-    budget = 1950
 
     def _line(q: dict[str, float]) -> str:
         return json.dumps(
@@ -524,28 +530,28 @@ def main() -> None:
                 "queries": q,
                 "nq_total": len(timings),
                 "full": "BENCH_FULL.json",
-                "sf": full["sf"],
+                "sf": sf,
             },
             separators=(",", ":"),
         )
 
+    reported: dict[str, float] = {}
     for name in priority:
         candidate = dict(reported)
         candidate[name] = round(timings[name], 2)
         if len(_line(candidate)) > budget:
             break
         reported = candidate
-    # previously-reported names must never be evicted (round-16 gate)
     missing = [n for n in PRIOR_REPORTED if n not in reported]
-    assert not missing, f"printed line evicted previously-reported: {missing}"
+    if missing:
+        raise RuntimeError(f"printed line evicted previously-reported: {missing}")
     # keep HEADLINE order within the reported subset
-    reported = {n: reported[n] for n in HEADLINE if n in reported}
-    line = _line(reported)
-    # hard stop, not just the loop above: a future edit to the line's
-    # fixed fields must not silently re-break the driver's ~2 KB tail
-    # parse (the round-8 lesson)
-    assert len(line) <= budget, (len(line), budget)
-    print(line)
+    line = _line({n: reported[n] for n in HEADLINE if n in reported})
+    # hard stop, not just the loop above: an edit to the line's fixed
+    # fields must not silently break the driver's ~2 KB tail parse
+    if len(line) > budget:
+        raise RuntimeError(f"printed line is {len(line)} chars > {budget}")
+    return line
 
 
 if __name__ == "__main__":

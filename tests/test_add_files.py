@@ -43,7 +43,7 @@ def _docs(spark, lo, hi):
 @pytest.fixture()
 def table(spark, tmp_path):
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, _docs(spark, 0, 10), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _docs(spark, 0, 10), ["lang"])
     return path
 
 
@@ -147,13 +147,14 @@ def test_tombstones_never_apply_to_imported_files(spark, tmp_path, table):
 
 
 def test_non_manifest_and_bad_sources_refuse(spark, tmp_path):
+    # a plain directory is adopted as v1, then imported into
     plain = str(tmp_path / "plain")
     _docs(spark, 0, 5).write.partitionBy("lang").parquet(plain)
     landing = _land(spark, tmp_path, _docs(spark, 5, 8))
-    with pytest.raises(ValueError, match="not manifest-committed"):
-        add_files(spark, plain, landing)
+    add_files(spark, plain, landing)
+    assert read_table(spark, plain).count() == 8
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, _docs(spark, 0, 5), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _docs(spark, 0, 5), ["lang"])
     with pytest.raises(ValueError, match="does not exist"):
         add_files(spark, path, str(tmp_path / "ghost"))
     empty = tmp_path / "empty"
@@ -168,7 +169,7 @@ def test_sql_statement_gate_and_audit(spark, tmp_path):
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, _docs(spark, 0, 10), ["lang"], manifest=True)
+    publish_overwrite(spark, loc, _docs(spark, 0, 10), ["lang"])
     cat.register_table(
         TableDef(
             "db",
@@ -219,7 +220,7 @@ def test_numeric_looking_string_partition_values_import(spark, tmp_path):
         [(i, f"2024010{i % 2 + 1}", i) for i in range(6)],
         "id long, day string, v long",
     )
-    publish_overwrite(spark, path, df, ["day"], manifest=True)
+    publish_overwrite(spark, path, df, ["day"])
     landing = str(tmp_path / "land")
     spark.createDataFrame(
         [(100 + i, f"2024010{i % 2 + 1}", i) for i in range(4)],
@@ -239,7 +240,7 @@ def test_add_files_refuses_mv_state(spark, tmp_path):
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, _docs(spark, 0, 10), ["lang"], manifest=True)
+    publish_overwrite(spark, loc, _docs(spark, 0, 10), ["lang"])
     cat.register_table(
         TableDef(
             "db", "docs", loc, schema=_docs(spark, 0, 10).schema,
@@ -331,7 +332,7 @@ def test_ntz_timestamp_columns_import(spark, tmp_path):
         [(i, datetime.datetime(2026, 1, 1 + i)) for i in range(4)],
         "id long, ts timestamp_ntz",
     )
-    publish_overwrite(spark, path, df, None, manifest=True)
+    publish_overwrite(spark, path, df, None)
     landing = str(tmp_path / "tsland")
     spark.createDataFrame(
         [(10 + i, datetime.datetime(2026, 2, 1 + i)) for i in range(3)],
@@ -363,7 +364,7 @@ def test_add_files_accept_path_cross_checks_spark(spark, tmp_path, monkeypatch):
 
     loc = str(tmp_path / "t")
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    publish_overwrite(spark, loc, df, None, manifest=True)
+    publish_overwrite(spark, loc, df, None)
 
     # landing files whose v column is GENUINELY long (Spark refuses:
     # long is not readable as the declared string)

@@ -41,7 +41,7 @@ def test_append_refuses_concurrent_partition_evolution(spark, tmp_path):
     path = str(tmp_path / "t")
     publish_overwrite(
         spark, path, _mk(spark, [(1, "a", "x"), (2, "b", "y")]),
-        ["grp"], manifest=True,
+        ["grp"],
     )
 
     real_lock = lk.publish_lock
@@ -91,7 +91,7 @@ def test_first_publish_does_not_adopt_wap_candidate(spark, tmp_path):
     # first committed publish covers only partition 'a' — pre-fix, the
     # candidate's 'b' files would ride in as carried "pre-existing data"
     publish_overwrite(
-        spark, path, _mk(spark, [(9, "a", "real")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(9, "a", "real")]), ["grp"]
     )
     m = read_manifest(path)
     assert not set(m["files"]) & set(cand["new_files"])
@@ -112,7 +112,7 @@ def test_verify_table_counts_tag_pinned_snapshots(spark, tmp_path):
     the audit."""
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"]
     )
     tag_snapshot(path, "train-corpus")  # pins v1
     publish_overwrite(spark, path, _mk(spark, [(1, "a", "v2")]), ["grp"])
@@ -135,7 +135,7 @@ def test_vacuum_default_grace_protects_fresh_candidate(spark, tmp_path):
     candidate: candidates get their own >=1h default grace."""
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"]
     )
     cand = begin_publish(
         spark, path, _mk(spark, [(1, "a", "v2")]), ["grp"]

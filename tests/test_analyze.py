@@ -74,7 +74,7 @@ def env(spark, tmp_path_factory):
         [(i, f"g{i % 3}", None if i == 7 else i * 10) for i in range(20)],
         "id long, grp string, v long",
     )
-    publish_overwrite(spark, f"{lake}/dim", dim, ["grp"], manifest=True)
+    publish_overwrite(spark, f"{lake}/dim", dim, ["grp"])
     cat.register_table(
         TableDef(
             "db", "dim", f"{lake}/dim",
@@ -85,7 +85,7 @@ def env(spark, tmp_path_factory):
         [(i, i % 20, float(i)) for i in range(500)],
         "fid long, id long, amt double",
     )
-    publish_overwrite(spark, f"{lake}/fact", fact, None, manifest=True)
+    publish_overwrite(spark, f"{lake}/fact", fact, None)
     cat.register_table(
         TableDef("db", "fact", f"{lake}/fact", schema=fact.schema)
     )
@@ -266,7 +266,7 @@ def test_analyze_histograms_and_skew_detection(env):
     spark = eng.spark
     rows = [(i, 5 if i % 2 == 0 else i % 20, float(i)) for i in range(400)]
     df = spark.createDataFrame(rows, "fid long, id long, amt double")
-    publish_overwrite(spark, f"{lake}/skewfact", df, None, manifest=True)
+    publish_overwrite(spark, f"{lake}/skewfact", df, None)
     cat.register_table(
         TableDef("db", "skewfact", f"{lake}/skewfact", schema=df.schema)
     )
@@ -298,7 +298,7 @@ def test_histogram_drives_salted_join_flip(env):
     spark = eng.spark
     rows = [(i, 5 if i % 2 == 0 else i % 20, float(i)) for i in range(400)]
     big = spark.createDataFrame(rows, "fid long, id long, amt double")
-    publish_overwrite(spark, f"{lake}/bigf", big, None, manifest=True)
+    publish_overwrite(spark, f"{lake}/bigf", big, None)
     cat.register_table(
         TableDef("db", "bigf", f"{lake}/bigf", schema=big.schema)
     )

@@ -1,17 +1,21 @@
-"""Atomic publication for lake mutations (round-6 VERDICT #3).
+"""Atomic publication for lake mutations.
 
 The reference's lake inherits S3's atomic object PUT + versioning
-(main.tf:25-30): readers never see torn state. publish_overwrite gives
-plain-Parquet merge_into/scd2_apply the same guarantee via
-stage-then-rename. These tests inject crashes at both phases:
+(main.tf:25-30): readers never see torn state. Every lake write commits
+through the manifest: adopt a plain directory as snapshot v1, stage the
+result, move the staged files in, then replace the ``_manifest.json``
+pointer. These tests inject crashes at the two points where a write can
+die with work on disk:
 
-- during the staged WRITE (the expensive Spark job — "kill between
-  partition writes"): the live table must stay byte-identical;
-- between partition SWAPS: every partition must be fully-old or
-  fully-new, never torn;
+- during the staged WRITE (the expensive Spark job): nothing has moved
+  into the live tree yet;
+- after the move-in, before the pointer replace: new files sit in the
+  live tree but no snapshot references them;
 
-and prove re-running the batch converges, untouched partitions stay
-byte-identical, and leftover artifacts are reclaimed and invisible.
+over every rewrite-shaped mutator, each starting from a plain (never
+written) directory, and prove readers see exactly the pre-state, the
+table verifies clean, the leftovers are reclaimable, and a re-run
+converges.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
     load,
@@ -28,25 +33,32 @@ from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
 )
 from tf_aws_lakeformation_governed_datalake_demo_spark.sources import lake as lk
 
+COLS = ("n_nationkey", "n_name", "n_regionkey", "note")
+
 
 def _snapshot(path: str) -> dict[str, bytes]:
     """Relative path -> content for every data file under ``path``,
-    skipping publish artifacts and _SUCCESS markers."""
+    skipping staging directories."""
     root = Path(path)
     out = {}
     for p in root.rglob("*.parquet"):
         rel = p.relative_to(root)
-        if any(
-            part.startswith(("_staged_", "_trash_")) for part in rel.parts
-        ):
+        if any(part.startswith("_staged_") for part in rel.parts):
             continue
         out[str(rel)] = p.read_bytes()
     return out
 
 
+def _rows(spark, path) -> list[tuple]:
+    return sorted(
+        tuple(r[c] for c in COLS) for r in lk.read_table(spark, path).collect()
+    )
+
+
 @pytest.fixture()
 def nation_table(spark, sf_dir):
-    """A small partitioned table: nation partitioned by region key."""
+    """A small partitioned plain directory: nation partitioned by region
+    key, written without any manifest."""
     path = tempfile.mkdtemp(prefix="atomic_pub_") + "/nation"
     n = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
@@ -71,13 +83,14 @@ def _boom_frame(df):
 def test_crash_during_staged_write_leaves_table_untouched(spark, nation_table):
     path, n = nation_table
     before = _snapshot(path)
+    rows = _rows(spark, path)
     with pytest.raises(Exception):
         lk.publish_overwrite(
             spark, path, _boom_frame(n), partition_by=["n_regionkey"]
         )
     assert _snapshot(path) == before  # byte-identical, every partition
     # reader still sees the old, complete state
-    assert spark.read.parquet(path).count() == n.count()
+    assert _rows(spark, path) == rows
     # leftover staging is invisible but reclaimable
     removed = lk.vacuum_publish_artifacts(path)
     assert any("_staged_" in r for r in removed)
@@ -94,52 +107,96 @@ def test_crash_during_staged_write_unpartitioned(spark, nation_table):
     assert _snapshot(path) == before
     lk.vacuum_publish_artifacts(path)
     assert _snapshot(path) == before
-    assert not list(Path(path).parent.glob("nation.__staged_*"))
+    # staging always lives inside the table directory
+    assert not list(Path(path).parent.glob("nation.__*"))
 
 
-def test_crash_between_partition_swaps_never_torn(spark, nation_table, monkeypatch):
+def _expected(rows, op):
+    if op == "publish_overwrite":
+        return sorted((k, nm, r, "v2") for k, nm, r, _ in rows)
+    if op == "update_rows":
+        return sorted((k, nm, r, "v2" if r == 2 else v) for k, nm, r, v in rows)
+    if op == "delete_rows":
+        return sorted(t for t in rows if t[0] % 2)
+    return sorted((k, nm, r, "merged" if r == 2 else v) for k, nm, r, v in rows)
+
+
+def _run(spark, path, n, op):
+    if op == "publish_overwrite":
+        lk.publish_overwrite(
+            spark, path, n.withColumn("note", F.lit("v2")), ["n_regionkey"]
+        )
+    elif op == "update_rows":
+        lk.update_rows(
+            spark, path, {"note": "'v2'"}, "n_regionkey = 2",
+            partition_col="n_regionkey",
+        )
+    elif op == "delete_rows":
+        lk.delete_rows(
+            spark, path, "n_nationkey % 2 = 0", partition_col="n_regionkey"
+        )
+    else:
+        upd = n.filter(F.col("n_regionkey") == 2).withColumn(
+            "note", F.lit("merged")
+        )
+        lk.merge_into(
+            spark, path, upd, ["n_nationkey"], partition_by=["n_regionkey"]
+        )
+
+
+OPS = ("publish_overwrite", "update_rows", "delete_rows", "merge_into")
+
+
+@pytest.mark.parametrize("crash_at", ["staged_write", "after_move_in"])
+@pytest.mark.parametrize("op", OPS)
+def test_crash_matrix_on_adopted_directory(
+    spark, nation_table, monkeypatch, op, crash_at
+):
     path, n = nation_table
-    before = _snapshot(path)
-    updated = n.withColumn("note", F.lit("v2"))
+    rows = _rows(spark, path)  # schema-on-read: no manifest yet
+    assert lk.read_manifest(path) is None
+    if crash_at == "staged_write":
+        real_parquet = DataFrameWriter.parquet
 
-    real_walk = lk._leaf_partition_dirs
+        def crashing_parquet(self, p, *a, **k):
+            real_parquet(self, p, *a, **k)
+            if "_staged_" in str(p):
+                raise RuntimeError("injected crash during the staged write")
 
-    def interrupted(root, depth):
-        it = real_walk(root, depth)
-        yield next(it)  # first partition flips...
-        raise RuntimeError("injected crash between partition swaps")
+        monkeypatch.setattr(DataFrameWriter, "parquet", crashing_parquet)
+    else:
+        real_move = lk._move_staged_in
 
-    monkeypatch.setattr(lk, "_leaf_partition_dirs", interrupted)
-    with pytest.raises(RuntimeError):
-        lk.publish_overwrite(spark, path, updated, partition_by=["n_regionkey"])
+        def crashing_move(*a, **k):
+            real_move(*a, **k)
+            raise RuntimeError("injected crash before the pointer replace")
+
+        monkeypatch.setattr(lk, "_move_staged_in", crashing_move)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        _run(spark, path, n, op)
     monkeypatch.undo()
 
-    after = _snapshot(path)
-    # every partition is fully-old or fully-new: group files by partition
-    def parts(snap):
-        by = {}
-        for rel, data in snap.items():
-            by.setdefault(rel.split("/")[0], {})[rel] = data
-        return by
-
-    old_p, new_p = parts(before), parts(after)
-    assert set(old_p) == set(new_p)
-    n_new = 0
-    for part in old_p:
-        if new_p[part] == old_p[part]:
-            continue  # fully old
-        n_new += 1
-        # fully new: readable, complete, carries the v2 marker on EVERY row
-        dfp = spark.read.parquet(f"{path}/{part}")
-        rows = dfp.collect()
-        assert rows and all(r.note == "v2" for r in rows)
-    assert n_new == 1  # exactly the one flipped partition
-    # the whole table still reads clean (no torn files anywhere)
-    assert spark.read.parquet(path).count() == n.count()
-    # recovery: re-running the full publish converges to all-new
+    # the write adopted the directory, then died: readers see exactly
+    # the pre-state through the adopted snapshot
+    m = lk.read_manifest(path)
+    assert m is not None and m["version"] == 1
+    assert _rows(spark, path) == rows
+    report = lk.verify_table(path)
+    assert report["ok"], report
+    if crash_at == "after_move_in":
+        assert report["orphans"]  # moved in, never committed
+    # the leftovers are reclaimable and reclaiming them changes nothing
     lk.vacuum_publish_artifacts(path)
-    lk.publish_overwrite(spark, path, updated, partition_by=["n_regionkey"])
-    assert spark.read.parquet(path).filter(F.col("note") != "v2").count() == 0
+    lk.vacuum_manifests(path, keep_last=1)
+    assert not list(Path(path).glob("_staged_*"))
+    report = lk.verify_table(path)
+    assert report["ok"] and not report["orphans"], report
+    assert _rows(spark, path) == rows
+
+    # a re-run converges to the intended result
+    _run(spark, path, n, op)
+    assert _rows(spark, path) == _expected(rows, op)
+    assert lk.verify_table(path)["ok"]
 
 
 def test_merge_crash_then_rerun_converges(spark, nation_table):
@@ -166,7 +223,7 @@ def test_merge_crash_then_rerun_converges(spark, nation_table):
     untouched_before = {k: v for k, v in before.items() if "n_regionkey=2" not in k}
     untouched_after = {k: v for k, v in after.items() if "n_regionkey=2" not in k}
     assert untouched_before == untouched_after
-    got = spark.read.parquet(path).filter(F.col("note") == "merged").count()
+    got = lk.read_table(spark, path).filter(F.col("note") == "merged").count()
     assert got == upd.count()
 
 
@@ -184,15 +241,20 @@ def test_publish_drops_partitions_emptied_by_deletion(spark, nation_table):
         partition_by=["n_regionkey"],
         drop_missing_partitions=["n_regionkey=2"],
     )
-    back = spark.read.parquet(path)
+    back = lk.read_table(spark, path)
     assert back.filter(F.col("n_regionkey") == 2).count() == 0
     assert back.count() == survivors.count()
-    assert not (Path(path) / "n_regionkey=2").exists()
+    assert not any(
+        f.startswith("n_regionkey=2/") for f in lk.read_manifest(path)["files"]
+    )
+    # the dropped partition's files leave the disk with its history
+    lk.vacuum_manifests(path, keep_last=1)
+    assert not list((Path(path) / "n_regionkey=2").glob("*.parquet"))
 
 
 def test_concurrent_publishes_never_interleave_partitions(spark, nation_table):
-    """Two concurrent full-table publishes: the swap-phase lock makes
-    the final state exactly ONE writer's complete result — never a
+    """Two concurrent full-table publishes: the commit lock makes the
+    final state exactly ONE writer's complete result — never a
     partition mix of the two."""
     import threading
 
@@ -217,18 +279,7 @@ def test_concurrent_publishes_never_interleave_partitions(spark, nation_table):
     for t in threads:
         t.join()
     assert not errs, errs
-    notes = {r.note for r in spark.read.parquet(path).select("note").collect()}
+    back = lk.read_table(spark, path)
+    notes = {r.note for r in back.select("note").collect()}
     assert notes in ({"writerA"}, {"writerB"})  # one whole result, no mix
-    assert spark.read.parquet(path).count() == n.count()
-
-
-def test_atomic_exchange_swaps_directories(tmp_path):
-    """The RENAME_EXCHANGE primitive must truly swap on this platform
-    (publication relies on it to keep the live path always-complete;
-    the two-rename fallback covers platforms where this returns False)."""
-    a, b = tmp_path / "a", tmp_path / "b"
-    a.mkdir(); b.mkdir()
-    (a / "fa").write_text("A")
-    (b / "fb").write_text("B")
-    assert lk._atomic_exchange(a, b)  # supported here
-    assert (a / "fb").exists() and (b / "fa").exists()
+    assert back.count() == n.count()

@@ -2,40 +2,11 @@
 has already seen (round-16 VERDICT gate item: stream_txlog_ingest lost its
 round-over-round number when two HEADLINE additions pushed it out of the
 1800-char budget). These tests exercise the reporting logic offline — no
-Spark session, just the same fill loop bench.main runs."""
+Spark session, just bench.build_printed_line, which bench.main prints."""
 
 import json
 
 import bench
-
-
-def _printed_line(timings, total, common18):
-    tail = [n for n in reversed(bench.HEADLINE) if n not in bench.PRIOR_REPORTED]
-    priority = bench.PRIOR_REPORTED + tail
-    reported = {}
-
-    def _line(q):
-        return json.dumps(
-            {
-                "metric": "headline_queries_total_wall_clock",
-                "value": total,
-                "unit": "sec",
-                "common18_sec": common18,
-                "queries": q,
-                "nq_total": len(timings),
-                "full": "BENCH_FULL.json",
-                "sf": 0.1,
-            },
-            separators=(",", ":"),
-        )
-
-    for name in priority:
-        candidate = dict(reported)
-        candidate[name] = round(timings[name], 2)
-        if len(_line(candidate)) > 1950:
-            break
-        reported = candidate
-    return reported, _line({n: reported[n] for n in bench.HEADLINE if n in reported})
 
 
 def test_prior_reported_is_well_formed():
@@ -49,10 +20,11 @@ def test_prior_reported_always_fits_with_pessimistic_timings():
     # every query at a pessimistic 99.99 s (5-char float) — the widest
     # realistic per-entry encoding; all prior-reported names must still fit
     timings = {n: 99.99 for n in bench.HEADLINE}
-    reported, line = _printed_line(timings, 9999.999, 999.999)
+    line = bench.build_printed_line(timings, 9999.999, 999.999, 0.1)
+    reported = json.loads(line)["queries"]
     missing = [n for n in bench.PRIOR_REPORTED if n not in reported]
     assert not missing, missing
-    assert len(line) <= 1950, len(line)
+    assert len(line) <= bench.PRINT_BUDGET, len(line)
     # and the line parses back whole
     parsed = json.loads(line)
     assert set(bench.PRIOR_REPORTED) <= set(parsed["queries"])

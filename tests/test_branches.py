@@ -42,7 +42,7 @@ def seeded(spark, tmp_path):
     path = str(tmp_path / "t")
     publish_overwrite(
         spark, path, _mk(spark, [(1, "a", "seed"), (2, "b", "seed")]),
-        ["grp"], manifest=True,
+        ["grp"],
     )
     return path
 
@@ -180,7 +180,7 @@ def test_engine_sql_branch_as_of_governed(spark, tmp_path):
             [(1, "a", 10.0), (2, "b", 20.0)],
             "id long, grp string, bal double",
         ),
-        ["grp"], manifest=True,
+        ["grp"],
     )
     create_branch(path, "staged")
     append_rows(
@@ -246,7 +246,7 @@ def test_erasure_dominates_staged_branches(spark, tmp_path):
     path = str(tmp_path / "t")
     publish_overwrite(
         spark, path, _mk(spark, [(1, "a", "keep"), (2, "b", "erase-me")]),
-        ["grp"], manifest=True,
+        ["grp"],
     )
     create_branch(path, "staged")
     snap = append_rows(

@@ -77,7 +77,7 @@ def src(spark, tmp_path):
         [(i, ["a", "b"][i % 2], i * 10) for i in range(20)],
         "id long, grp string, v long",
     )
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)  # v1
+    publish_overwrite(spark, loc, df, ["grp"])  # v1
     delete_rows_mor(spark, loc, "id = 3")  # v2: MoR tombstone
     append_rows(
         spark, loc,

@@ -31,7 +31,7 @@ def docs_table(spark, sf_dir, tmp_path):
         "doc_id", "lang", "source", "n_chars"
     )
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     add_constraint(spark, path, "chars_positive", "n_chars > 0")
     return path, d
 
@@ -173,7 +173,7 @@ def test_sql_add_drop_constraint_roundtrip(spark, tmp_path):
         [(i, i * 10) for i in range(10)], "id long, v long"
     )
     loc = f"{lake}/t"
-    publish_overwrite(spark, loc, df, None, manifest=True)
+    publish_overwrite(spark, loc, df, None)
     cat.register_table(TableDef("db", "t", loc, schema=df.schema))
     eng = Engine(spark, cat)
     cat.grant("analyst", "SELECT", "db", "t")

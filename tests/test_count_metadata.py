@@ -56,7 +56,7 @@ def eng(spark, tmp_path):
         "id long, grp string, v long",
     )
     loc = f"{tmp_path}/t"
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     cat.register_table(
         TableDef("db", "t", loc, schema=df.schema, partition_keys=("grp",))
     )
@@ -173,7 +173,7 @@ def test_grouped_count_typed_partition_values(eng, spark, tmp_path):
         "id long, yr int, v double",
     )
     loc = f"{tmp_path}/ints"
-    publish_overwrite(spark, loc, df, ["yr"], manifest=True)
+    publish_overwrite(spark, loc, df, ["yr"])
     eng.catalog.register_table(
         TableDef("db", "ints", loc, schema=df.schema, partition_keys=("yr",))
     )

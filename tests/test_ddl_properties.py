@@ -72,7 +72,7 @@ def test_ddl_lifecycle_matches_model(spark, tmp_path_factory, ops):
     next_id = 100
     branch = None  # {"rows", "vname", "part", "fork_v", "head_v"}
     publish_overwrite(spark, path, mk([(i, g, v) for i, (g, v) in rows.items()]),
-                      part, manifest=True)
+                      part)
     history = {read_manifest(path)["version"]: (dict(rows), vname, list(part), mixed, mapped)}
 
     def check():

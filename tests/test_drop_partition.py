@@ -65,7 +65,7 @@ def docs_engine(spark, tmp_path_factory):
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, df, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, df, ["lang"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=df.schema, partition_keys=("lang",))
     )
@@ -152,7 +152,7 @@ def test_drop_partition_unpartitioned_refuses(spark, tmp_path_factory):
     cat = GovernedCatalog(spark, lake_root=lake)
     cat.create_database("db")
     cat.set_admins(["ops"])
-    publish_overwrite(spark, f"{lake}/t", df, None, manifest=True)
+    publish_overwrite(spark, f"{lake}/t", df, None)
     cat.register_table(TableDef("db", "t", f"{lake}/t", schema=df.schema))
     eng = Engine(spark, cat)
     with pytest.raises(ValueError, match="unpartitioned"):
@@ -185,7 +185,7 @@ def test_drop_partition_multikey_requires_full_spec(spark, tmp_path_factory):
     cat = GovernedCatalog(spark, lake_root=lake)
     cat.create_database("db")
     cat.set_admins(["ops"])
-    publish_overwrite(spark, f"{lake}/t", df, ["yr", "m"], manifest=True)
+    publish_overwrite(spark, f"{lake}/t", df, ["yr", "m"])
     cat.register_table(
         TableDef(
             "db", "t", f"{lake}/t", schema=df.schema,

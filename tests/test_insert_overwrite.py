@@ -43,7 +43,6 @@ def table(spark, tmp_path):
         loc,
         _df(spark, [(i, "abc"[i % 3], i * 10) for i in range(30)]),
         ["grp"],
-        manifest=True,
     )
     return loc
 
@@ -87,10 +86,13 @@ def test_overwrite_refusals(spark, table, tmp_path):
         )
     with pytest.raises(ValueError, match="does not match"):
         overwrite_partitions(spark, table, _df(spark, [(1, "a", 1)]), ["id"])
+    # a plain directory is adopted, not refused: its grp=b rows carry
     plain = str(tmp_path / "plain")
-    _df(spark, [(1, "a", 1)]).write.partitionBy("grp").parquet(plain)
-    with pytest.raises(FileNotFoundError, match="manifest"):
-        overwrite_partitions(spark, plain, _df(spark, [(1, "a", 1)]), ["grp"])
+    _df(spark, [(1, "a", 1), (2, "b", 2)]).write.partitionBy("grp").parquet(
+        plain
+    )
+    overwrite_partitions(spark, plain, _df(spark, [(3, "a", 3)]), ["grp"])
+    assert sorted(r.id for r in read_table(spark, plain).collect()) == [2, 3]
     # schema drift fails fast
     bad = spark.createDataFrame([(1, "a")], "id long, grp string")
     with pytest.raises(ValueError, match="schema"):
@@ -263,7 +265,6 @@ def test_optimize_where_scopes_to_matching_partitions(spark, tmp_path):
         loc,
         _df(spark, [(i, "abc"[i % 3], i) for i in range(30)]),
         ["grp"],
-        manifest=True,
     )
     for i in range(3):  # small-file tail in every partition
         append_rows(
@@ -355,7 +356,7 @@ def test_static_partition_overwrite_sql(spark, tmp_path):
         "id long, grp string, v long",
     )
     loc = f"{lake}/t"
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     cat.register_table(
         TableDef("db", "t", loc, schema=df.schema, partition_keys=("grp",))
     )
@@ -428,7 +429,7 @@ def test_static_partition_overwrite_empty_batch_truncates(spark, tmp_path):
         "id long, grp string, v long",
     )
     loc = f"{lake}/t"
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     cat.register_table(
         TableDef("db", "t", loc, schema=df.schema, partition_keys=("grp",))
     )

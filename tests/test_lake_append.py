@@ -121,10 +121,12 @@ def test_append_refuses_layout_drift_and_unmanifested_data(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="retyped=\\['v'\\]"):
         append_rows(spark, path, retyped, ["grp"])
+    # a plain directory is adopted as v1, then appended to
     bare = str(tmp_path / "bare")
     _mk(spark, [(1, "a", "x")]).write.parquet(bare)
-    with pytest.raises(ValueError, match="no manifest"):
-        append_rows(spark, bare, _mk(spark, [(2, "b", "y")]))
+    snap = append_rows(spark, bare, _mk(spark, [(2, "b", "y")]))
+    assert snap["version"] == 2
+    assert sorted(r.id for r in read_table(spark, bare).collect()) == [1, 2]
 
 
 def test_stream_restart_with_lost_checkpoint_appends_nothing(spark, tmp_path):

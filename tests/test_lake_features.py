@@ -25,6 +25,8 @@ from tf_aws_lakeformation_governed_datalake_demo_spark import fixtures as fx
 from tf_aws_lakeformation_governed_datalake_demo_spark.operators.skew import salt_join
 from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
     load,
+    read_manifest,
+    read_table,
     write_partitioned,
 )
 
@@ -224,7 +226,7 @@ def test_merge_into_partitioned_upsert(spark, sf_dir):
         "rows_updated": 3, "rows_inserted": 1, "partitions_rewritten": 1,
     }
 
-    back = spark.read.parquet(lake)
+    back = read_table(spark, lake)
     assert back.count() == d.count() + 1
     assert back.filter(F.col("text") == "REPLACED").count() == 3
     assert back.filter(F.col("doc_id") == 999_999_001).count() == 1
@@ -255,7 +257,7 @@ def test_merge_into_unpartitioned_full_rewrite(spark, sf_dir):
     )
     stats = merge_into(spark, lake, updates, ["n_nationkey"])
     assert stats["rows_updated"] == 1 and stats["rows_inserted"] == 1
-    back = spark.read.parquet(lake)
+    back = read_table(spark, lake)
     assert back.count() == n.count() + 1
     assert back.filter(F.col("n_nationkey") == 0).first().n_name == "RENAMED"
     assert back.filter(F.col("n_nationkey") == 99).first().n_name == "NEWLAND"
@@ -285,7 +287,7 @@ def test_scd2_apply_versions_and_idempotency(spark, tmp_path):
         "partitions_rewritten": -1,
     }
     rows = {(r.k, r.v): (r.effective_from, r.effective_to, r.is_current)
-            for r in spark.read.parquet(path).collect()}
+            for r in read_table(spark, path).collect()}
     assert rows[(1, "a")] == (t0, t1, False)   # closed version
     assert rows[(1, "a2")] == (t1, None, True)
     assert rows[(2, "b")] == (t0, None, True)  # no-op untouched
@@ -297,14 +299,14 @@ def test_scd2_apply_versions_and_idempotency(spark, tmp_path):
         "rows_inserted": 0,
         "partitions_rewritten": -1,
     }
-    assert spark.read.parquet(path).count() == 4
+    assert read_table(spark, path).count() == 4
 
     # a second real change preserves full history (two closed versions)
     upd2 = spark.createDataFrame([(1, "a3")], "k int, v string")
     scd2_apply(spark, path, upd2, ["k"], ["v"], t2)
     hist = sorted(
         (r.v, r.is_current)
-        for r in spark.read.parquet(path).filter("k = 1").collect()
+        for r in read_table(spark, path).filter("k = 1").collect()
     )
     assert hist == [("a", False), ("a2", False), ("a3", True)]
 
@@ -356,7 +358,7 @@ def test_scd2_apply_carries_forward_partial_batch(spark, tmp_path):
     scd2_apply(spark, path, upd, ["k"], ["v"], t1)
     rows = {
         (r.k, r.v): (r.w, r.is_current)
-        for r in spark.read.parquet(path).collect()
+        for r in read_table(spark, path).collect()
     }
     assert rows[(1, "a")] == ("keepme", False)
     assert rows[(1, "a2")] == ("keepme", True)  # carried forward
@@ -422,16 +424,16 @@ def test_scd2_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
     mar_after = {f: s for f, s in after.items() if "month=2024-03" in f}
     assert mar_before and mar_before == mar_after  # byte-identical + same mtime
     # the 2024-01 partition was rewritten (k=1 closed, k=2 kept)...
-    jan = spark.read.parquet(path).filter("month = '2024-01'")
+    jan = read_table(spark, path).filter("month = '2024-01'")
     assert {(r.k, r.v, r.is_current) for r in jan.collect()} == {
         (1, "a", False), (2, "b", True),
     }
     assert jan.filter("k = 1").first().effective_to == t_jun
     # ...and the new version landed in the as_of month's partition
-    new = spark.read.parquet(path).filter("month = '2024-06'").collect()
+    new = read_table(spark, path).filter("month = '2024-06'").collect()
     assert [(r.k, r.v, r.is_current) for r in new] == [(1, "a2", True)]
     # invariant: every row's partition value derives from effective_from
-    drift = spark.read.parquet(path).filter(
+    drift = read_table(spark, path).filter(
         F.col("month") != scd2_partition_value(F.col("effective_from"))
     )
     assert drift.count() == 0
@@ -482,7 +484,7 @@ def test_merge_into_schema_evolution_strict_and_evolving(spark, sf_dir, tmp_path
     with pytest.raises(ValueError, match="evolve_schema=True"):
         merge_into(spark, lake, upd, ["n_nationkey"])
     merge_into(spark, lake, upd, ["n_nationkey"], evolve_schema=True)
-    back = spark.read.option("mergeSchema", "true").parquet(lake)
+    back = read_table(spark, lake)
     assert "extra" in back.columns
     assert back.filter("n_nationkey = 0").first().extra == "x"
     assert back.filter("n_nationkey = 1").first().extra is None
@@ -492,7 +494,7 @@ def test_merge_into_schema_evolution_strict_and_evolving(spark, sf_dir, tmp_path
         [(1, "ALSO", "y")], "n_nationkey int, n_name string, extra string"
     )
     merge_into(spark, lake, upd2, ["n_nationkey"])
-    back = spark.read.option("mergeSchema", "true").parquet(lake)
+    back = read_table(spark, lake)
     assert back.filter("n_nationkey = 0").first().extra == "x"  # not dropped
     assert back.filter("n_nationkey = 1").first().extra == "y"
 
@@ -522,7 +524,7 @@ def test_scd2_apply_schema_evolution(spark, tmp_path):
     scd2_apply(spark, path, upd, ["k"], ["v"], t1, evolve_schema=True)
     rows = {
         (r.k, r.v): (r.w, r.is_current)
-        for r in spark.read.option("mergeSchema", "true").parquet(path).collect()
+        for r in read_table(spark, path).collect()
     }
     assert rows[(1, "a")] == (None, False)  # pre-evolution version: NULL
     assert rows[(1, "a2")] == ("w1", True)  # evolved version carries value
@@ -558,7 +560,7 @@ def test_merge_into_declared_schema_preserves_evolved_column(spark, sf_dir, tmp_
         [(1, "ALSO", "y")], "n_nationkey int, n_name string, extra string"
     )
     merge_into(spark, lake, upd2, ["n_nationkey"], schema=evolved)
-    back = spark.read.schema(evolved).parquet(lake)
+    back = read_table(spark, lake, evolved)
     assert back.filter("n_nationkey = 0").first().extra == "x"
     assert back.filter("n_nationkey = 1").first().extra == "y"
     assert back.filter("n_nationkey = 2").first().extra is None
@@ -731,9 +733,11 @@ def test_expire_scd2_versions_preserves_in_window_asof(spark, sf_dir, tmp_path):
     pre_expiry_history = sorted(
         map(tuple, scd2_as_of(spark, path, datetime.datetime(2024, 1, 15)).collect())
     )
+    # the live snapshot's files (superseded ones stay on disk as
+    # history until the erasure's vacuum)
     snap = lambda: {
-        str(p.relative_to(path)): p.stat().st_size
-        for p in Path(path).rglob("*.parquet")
+        f: (Path(path) / f).stat().st_size
+        for f in read_manifest(path)["files"]
     }
     before_files = snap()
 
@@ -778,10 +782,10 @@ def test_compact_in_place_preserves_rows(spark, sf_dir, tmp_path):
     )
     # fragment: many small files per partition
     e.repartition(16).write.partitionBy("bucket").parquet(path)
-    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    before = sorted(map(tuple, read_table(spark, path).collect()))
     n_before, n_after = compact_in_place(spark, path, partition_by=["bucket"])
     assert n_after < n_before
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    assert sorted(map(tuple, read_table(spark, path).collect())) == before
 
 
 def test_scd2_as_of_prunes_future_month_partitions(spark, sf_dir, tmp_path):
@@ -829,7 +833,7 @@ def test_vacuum_artifacts_age_guard(spark, sf_dir, tmp_path):
     path = tmp_path / "t"
     path.mkdir()
     fresh = path / "_staged_fresh"
-    old = path / "_trash_old"
+    old = path / "_staged_old"
     fresh.mkdir()
     old.mkdir()
     past = time.time() - 7200
@@ -865,7 +869,7 @@ def test_delete_rows_erasure_complete_and_idempotent(spark, sf_dir, tmp_path):
     stats = delete_rows(spark, path, "user_id % 8 = 3", partition_col="bucket")
     assert stats["rows_deleted"] == e.filter("user_id % 8 = 3").count()
     assert stats["partitions_rewritten"] == 1
-    back = spark.read.parquet(path)
+    back = read_table(spark, path)
     assert back.filter("user_id % 8 = 3").count() == 0  # erased for any reader
     assert not (Path(path) / "bucket=3").exists()  # emptied dir removed
     # untouched buckets byte-identical
@@ -896,7 +900,7 @@ def test_delete_rows_multi_column_partitioning(spark, sf_dir, tmp_path):
         partition_col=["b1", "b2"],
     )
     assert stats["partitions_rewritten"] == 1  # exactly leaf b1=1/b2=0
-    back = spark.read.parquet(path)
+    back = read_table(spark, path)
     assert back.filter("user_id % 2 = 1 AND event_id % 2 = 0").count() == 0
     want = e.filter("NOT (user_id % 2 = 1 AND event_id % 2 = 0)").count()
     assert back.count() == want
@@ -915,7 +919,7 @@ def test_delete_rows_keeps_null_predicate_rows(spark, tmp_path):
     df.write.partitionBy("bucket").parquet(path)
     stats = delete_rows(spark, path, "note = 'x'", partition_col="bucket")
     assert stats["rows_deleted"] == 1
-    left = sorted(r.id for r in spark.read.parquet(path).collect())
+    left = sorted(r.id for r in read_table(spark, path).collect())
     assert left == [2, 3]  # the NULL-note row survives
 
 
@@ -931,7 +935,7 @@ def test_delete_rows_null_partition_value(spark, tmp_path):
     df.write.partitionBy("grp").parquet(path)
     stats = delete_rows(spark, path, "id IN (2, 4)", partition_col="grp")
     assert stats["rows_deleted"] == 2 and stats["partitions_rewritten"] == 1
-    left = sorted(r.id for r in spark.read.parquet(path).collect())
+    left = sorted(r.id for r in read_table(spark, path).collect())
     assert left == [1, 3]
     from pathlib import Path
 
@@ -956,12 +960,12 @@ def test_delete_rows_null_partition_partial_delete(spark, tmp_path):
     df.write.partitionBy("grp").parquet(path)
     stats = delete_rows(spark, path, "id = 2", partition_col="grp")
     assert stats["rows_deleted"] == 1 and stats["partitions_rewritten"] == 1
-    left = sorted(r.id for r in spark.read.parquet(path).collect())
+    left = sorted(r.id for r in read_table(spark, path).collect())
     assert left == [1, 3, 4]  # 3 and 4 (NULL partition, unmatched) survive
     assert (Path(path) / "grp=__HIVE_DEFAULT_PARTITION__").exists()
     # null-partition read-back carries the NULL value
     assert {
-        r.grp for r in spark.read.parquet(path).filter("id IN (3,4)").collect()
+        r.grp for r in read_table(spark, path).filter("id IN (3,4)").collect()
     } == {None}
 
 
@@ -979,7 +983,7 @@ def test_merge_into_null_partition_keeps_unmatched(spark, tmp_path):
     upd = spark.createDataFrame([(2, None, "new2")], "id long, grp string, v string")
     stats = merge_into(spark, path, upd, ["id"], partition_by=["grp"])
     assert stats["rows_updated"] == 1 and stats["rows_inserted"] == 0
-    back = {r.id: r.v for r in spark.read.parquet(path).collect()}
+    back = {r.id: r.v for r in read_table(spark, path).collect()}
     assert back == {1: "old1", 2: "new2", 3: "old3"}
 
 
@@ -1005,7 +1009,7 @@ def test_compact_in_place_preserves_evolved_schema(spark, tmp_path):
     merge_into(spark, path, upd, ["id"], partition_by=["grp"], evolve_schema=True)
     for _ in range(3):  # run a few times: footer pick order is arbitrary
         compact_in_place(spark, path, partition_by=["grp"])
-        back = spark.read.option("mergeSchema", "true").parquet(path)
+        back = read_table(spark, path)
         assert "extra" in back.columns
         rows = {r.id: r.extra for r in back.collect()}
         assert rows == {1: "extra1", 2: None}
@@ -1023,7 +1027,7 @@ def test_delete_rows_refuses_unpartitioned_rewrite_of_partitioned_table(
     with pytest.raises(ValueError, match="hive-partitioned"):
         delete_rows(spark, path, "id = 1")  # no partition_col
     # layout untouched
-    assert spark.read.parquet(path).count() == 2
+    assert read_table(spark, path).count() == 2
 
 
 def test_publish_overwrite_first_publish(spark, tmp_path):
@@ -1037,13 +1041,13 @@ def test_publish_overwrite_first_publish(spark, tmp_path):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, grp string")
     flat = str(tmp_path / "flat")
     publish_overwrite(spark, flat, df)
-    assert sorted(r.id for r in spark.read.parquet(flat).collect()) == [1, 2]
+    assert sorted(r.id for r in read_table(spark, flat).collect()) == [1, 2]
     parted = str(tmp_path / "parted")
     publish_overwrite(spark, parted, df, partition_by=["grp"])
-    assert sorted(r.id for r in spark.read.parquet(parted).collect()) == [1, 2]
+    assert sorted(r.id for r in read_table(spark, parted).collect()) == [1, 2]
 
 
-def test_hive_partition_relpath_rejects_escapable_values(spark):
+def test_hive_partition_relpath_escapes_like_spark(spark):
     from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
         hive_partition_relpath,
     )
@@ -1053,6 +1057,12 @@ def test_hive_partition_relpath_rejects_escapable_values(spark):
         hive_partition_relpath(["a", "b"], (None, 7))
         == "a=__HIVE_DEFAULT_PARTITION__/b=7"
     )
-    for bad in ("has space", "50%", "a:b", "k=v", "x/y"):
-        with pytest.raises(ValueError, match="escapes"):
-            hive_partition_relpath(["g"], (bad,))
+    assert hive_partition_relpath(["g"], ("",)) == "g=__HIVE_DEFAULT_PARTITION__"
+    for raw, escaped in (
+        ("has space", "has space"),
+        ("50%", "50%25"),
+        ("a:b", "a%3Ab"),
+        ("k=v", "k%3Dv"),
+        ("x/y", "x%2Fy"),
+    ):
+        assert hive_partition_relpath(["g"], (raw,)) == f"g={escaped}"

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
     merge_into,
+    read_table,
     scd2_apply,
     scd2_as_of,
 )
@@ -55,7 +56,7 @@ def test_merge_into_equals_naive_key_replace(spark, tmp_path_factory, batches):
         )
         expected.update(dict(batch))
     got = {
-        r.k: r.v for r in spark.read.schema(df.schema).parquet(path).collect()
+        r.k: r.v for r in read_table(spark, path, df.schema).collect()
     }
     assert got == expected
 
@@ -94,7 +95,7 @@ def test_scd2_history_invariants(spark, tmp_path_factory, batches):
         expected.update(dict(batch))
         # idempotence: re-applying the SAME batch at a later instant is a
         # no-op (null-safe unchanged detection)
-        n_before = spark.read.option("mergeSchema", "true").parquet(path).count()
+        n_before = read_table(spark, path).count()
         scd2_apply(
             spark,
             path,
@@ -104,11 +105,11 @@ def test_scd2_history_invariants(spark, tmp_path_factory, batches):
             as_of=when + datetime.timedelta(days=1),
         )
         assert (
-            spark.read.option("mergeSchema", "true").parquet(path).count()
+            read_table(spark, path).count()
             == n_before
         )
 
-    hist = spark.read.option("mergeSchema", "true").parquet(path).collect()
+    hist = read_table(spark, path).collect()
     by_key: dict = {}
     for r in hist:
         by_key.setdefault(r.k, []).append(r)
@@ -163,7 +164,7 @@ def test_delete_rows_equals_naive_filter_sequence(spark, tmp_path_factory, preds
         )
         assert stats["rows_deleted"] == len(doomed)
         alive -= doomed
-        got = {r.k for r in spark.read.parquet(path).collect()} if alive else set()
+        got = {r.k for r in read_table(spark, path).collect()} if alive else set()
         if alive:
             assert got == alive
         # partitions with no survivors are directory-gone
@@ -202,8 +203,7 @@ def test_publish_overwrite_equals_naive_partition_replace(
 ):
     """For ANY sequence of partial-partition publishes, the table equals
     the naive per-partition replacement replay — untouched partitions
-    keep their exact content, no artifact survives, and the exchange
-    path never tears a partition."""
+    keep their exact content and no artifact survives."""
     from pathlib import Path
 
     from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
@@ -229,13 +229,13 @@ def test_publish_overwrite_equals_naive_partition_replace(
         for k in range(20):
             if k % 4 in buckets:
                 expected[k] = marker
-        got = {r.k: r.v for r in spark.read.parquet(path).collect()}
+        got = {r.k: r.v for r in read_table(spark, path).collect()}
         assert got == expected
         # no publish artifacts linger
         leftovers = [
             p.name
             for p in Path(path).iterdir()
-            if p.name.startswith(("_staged_", "_trash_"))
+            if p.name.startswith("_staged_")
         ]
         assert leftovers == []
 
@@ -266,7 +266,7 @@ def test_table_changes_feed_reconstructs_every_snapshot(
     df = spark.createDataFrame(seed, "k long, v long").withColumn(
         "bucket", F.col("k") % 2
     )
-    publish_overwrite(spark, path, df, ["bucket"], manifest=True)
+    publish_overwrite(spark, path, df, ["bucket"])
     for batch in batches:
         if not batch:
             continue

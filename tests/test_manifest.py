@@ -1,12 +1,9 @@
 """Manifest-pointer commits (round-7 VERDICT #1): per-TABLE atomic
 publication + time travel on plain Parquet.
 
-Exchange-mode publish_overwrite is atomic per PARTITION (each
-renameat2 is one syscall) — a reader whose scan spans partitions
-concurrently with a publish could observe partition A fully-new and
-partition B fully-old. Manifest mode closes that window: readers list
-files through one atomically-replaced ``_manifest.json``, so any scan
-sees exactly one committed snapshot; old snapshots stay readable until
+Readers list files through one atomically-replaced ``_manifest.json``,
+so a scan concurrent with a publish sees exactly one committed snapshot
+— never partition A new and partition B old; old snapshots stay readable until
 vacuum_manifests expires them (the reference's S3 bucket-versioning +
 consistent-listing analog, main.tf:25-30)."""
 
@@ -33,7 +30,7 @@ def _mk(spark, rows):
 def test_manifest_publish_read_and_time_travel(spark, tmp_path):
     path = str(tmp_path / "t")
     v1 = _mk(spark, [(1, "a", "a1"), (2, "b", "b1")])
-    publish_overwrite(spark, path, v1, ["grp"], manifest=True)
+    publish_overwrite(spark, path, v1, ["grp"])
     assert read_manifest(path)["version"] == 1
     got = {(r.id, r.grp, r.v) for r in read_table(spark, path).collect()}
     assert got == {(1, "a", "a1"), (2, "b", "b1")}
@@ -62,7 +59,6 @@ def test_reader_snapshot_isolation_across_publish(spark, tmp_path):
         path,
         _mk(spark, [(1, "a", "a1"), (2, "b", "b1")]),
         ["grp"],
-        manifest=True,
     )
     mid_scan = read_table(spark, path)  # planned against snapshot v1
     publish_overwrite(
@@ -85,7 +81,7 @@ def test_crash_before_and_after_pointer_replace(spark, tmp_path, monkeypatch):
 
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"]
     )
 
     real_replace = _os.replace
@@ -123,7 +119,6 @@ def test_merge_and_delete_on_manifest_table(spark, tmp_path):
         path,
         _mk(spark, [(1, "a", "a1"), (2, "b", "b1"), (3, "b", "b3")]),
         ["grp"],
-        manifest=True,
     )
     stats = merge_into(
         spark,
@@ -167,17 +162,6 @@ def test_merge_and_delete_on_manifest_table(spark, tmp_path):
     assert leftovers == []
 
 
-def test_exchange_publish_on_manifest_table_raises(spark, tmp_path):
-    path = str(tmp_path / "t")
-    publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"], manifest=True
-    )
-    with pytest.raises(ValueError, match="manifest-committed"):
-        publish_overwrite(
-            spark, path, _mk(spark, [(1, "a", "a2")]), ["grp"], manifest=False
-        )
-
-
 def test_vacuum_manifests_keep_last(spark, tmp_path):
     path = str(tmp_path / "t")
     for i in range(1, 4):
@@ -186,7 +170,6 @@ def test_vacuum_manifests_keep_last(spark, tmp_path):
             path,
             _mk(spark, [(1, "a", f"a{i}")]),
             ["grp"],
-            manifest=True,
         )
     out = vacuum_manifests(path, keep_last=2)
     assert out["kept_versions"] == [3, 2]
@@ -214,7 +197,7 @@ def test_publish_lock_hook_is_pluggable(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(lk, "publish_lock", recording_lock)
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"]
     )
     publish_overwrite(spark, path, _mk(spark, [(1, "a", "a2")]), ["grp"])
     assert calls == [path, path]
@@ -223,7 +206,7 @@ def test_publish_lock_hook_is_pluggable(spark, tmp_path, monkeypatch):
 def test_unpartitioned_manifest_roundtrip(spark, tmp_path):
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "a1")]), manifest=True
+        spark, path, _mk(spark, [(1, "a", "a1")])
     )
     publish_overwrite(spark, path, _mk(spark, [(9, "z", "z9")]))
     assert [(r.id, r.v) for r in read_table(spark, path).collect()] == [
@@ -257,7 +240,6 @@ def test_governed_time_travel(spark, tmp_path):
             "id long, grp string, secret string, bal double",
         ),
         ["grp"],
-        manifest=True,
     )
     cat = GovernedCatalog(spark)
     cat.create_database("db")
@@ -335,7 +317,6 @@ def test_engine_sql_as_of_versions(spark, tmp_path):
             [(1, "a", 10.0), (2, "b", 20.0)], "id long, grp string, bal double"
         ),
         ["grp"],
-        manifest=True,
     )
     cat = GovernedCatalog(spark)
     cat.create_database("db")
@@ -403,7 +384,7 @@ def test_compact_in_place_on_manifest_table(spark, tmp_path):
     frag = _mk(
         spark, [(i, "a" if i % 2 else "b", f"v{i}") for i in range(20)]
     ).repartition(8)
-    publish_overwrite(spark, path, frag, ["grp"], manifest=True)
+    publish_overwrite(spark, path, frag, ["grp"])
     n_before = len(read_manifest(path)["files"])
     assert n_before > 2
     before_rows = sorted(map(tuple, read_table(spark, path).collect()))
@@ -440,7 +421,6 @@ def test_engine_history_and_expire_snapshots(spark, tmp_path):
             path,
             _mk(spark, [(1, "a", f"a{i}")]),
             ["grp"],
-            manifest=True,
         )
     cat = GovernedCatalog(spark, lake_root=lake)
     cat.create_database("db")
@@ -493,7 +473,7 @@ def test_cdc_merge_on_manifest_dimension(spark, sf_dir, tmp_path):
     dim = str(tmp_path / "dim")
     seed = e.filter(F.col("event_id") % 7 == 0)
     seeded = cdc_latest_per_user(seed)
-    publish_overwrite(spark, dim, seeded, ["bucket"], manifest=True)
+    publish_overwrite(spark, dim, seeded, ["bucket"])
     dim_schema = seeded.schema
 
     pre = read_table(spark, dim, dim_schema)  # planned against snapshot 1
@@ -529,7 +509,7 @@ def test_table_changes_reads_only_delta_files(spark, tmp_path):
         spark,
         [(1, "a", "a1"), (2, "b", "b1"), (3, "c", "c1"), (4, "b", "b4")],
     )
-    publish_overwrite(spark, path, v1, ["grp"], manifest=True)
+    publish_overwrite(spark, path, v1, ["grp"])
     # rewrite partition b only: update id=2, keep id=4 carried-in-place
     merge_into(
         spark,
@@ -562,7 +542,7 @@ def test_table_changes_composes_and_inverts(spark, tmp_path):
 
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"]
     )
     publish_overwrite(spark, path, _mk(spark, [(1, "a", "a2"), (2, "b", "b1")]), ["grp"])
     publish_overwrite(spark, path, _mk(spark, [(1, "a", "a3")]), ["grp"])
@@ -611,7 +591,7 @@ def test_table_changes_schema_evolution_null_fills(spark, tmp_path):
 
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "a1")]), ["grp"]
     )
     evolved = spark.createDataFrame(
         [(1, "a", "a2", 7)], "id long, grp string, v string, extra long"
@@ -640,7 +620,6 @@ def test_rollback_table_restores_snapshot(spark, tmp_path):
         path,
         _mk(spark, [(1, "a", "good"), (2, "b", "keep")]),
         ["grp"],
-        manifest=True,
     )
     publish_overwrite(spark, path, _mk(spark, [(1, "a", "BAD")]), ["grp"])
     out = rollback_table(path, 1)
@@ -681,7 +660,7 @@ def test_engine_maintain_rollback_governed(spark, tmp_path):
     lake = str(tmp_path / "lake")
     path = f"{lake}/t"
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"]
     )
     publish_overwrite(spark, path, _mk(spark, [(1, "a", "v2")]), ["grp"])
     cat = GovernedCatalog(spark, lake_root=lake)
@@ -729,7 +708,6 @@ def test_manifest_commit_records_file_stats(spark, tmp_path, monkeypatch):
         path,
         _mk(spark, [(1, "a", "a1"), (9, "b", "b1")]),
         ["grp"],
-        manifest=True,
     )
     m1 = read_manifest(path)
     assert set(m1["file_stats"]) == set(m1["files"])
@@ -765,7 +743,7 @@ def test_read_table_prune_skips_files_fail_open(spark, tmp_path):
     rows = [(i, "g", f"v{i}") for i in range(100)]
     df = spark.createDataFrame(rows, "id long, grp string, v string")
     publish_overwrite(
-        spark, path, df.repartitionByRange(5, "id"), None, manifest=True
+        spark, path, df.repartitionByRange(5, "id"), None
     )
     m = read_manifest(path)
     assert len(m["files"]) == 5
@@ -808,7 +786,6 @@ def test_consume_table_changes_checkpointed(spark, tmp_path):
         path,
         _mk(spark, [(1, "a", "a1"), (2, "b", "b1")]),
         ["grp"],
-        manifest=True,
     )
     feed, v, commit = consume_table_changes(spark, path, ckpt)
     assert v == 1
@@ -862,7 +839,7 @@ def test_governed_read_with_manifest_prune(spark, tmp_path):
     rows = [(i, "ok" if i % 3 else "secret", f"v{i}") for i in range(100)]
     df = spark.createDataFrame(rows, "id long, cls string, v string")
     publish_overwrite(
-        spark, path, df.repartitionByRange(5, "id"), None, manifest=True
+        spark, path, df.repartitionByRange(5, "id"), None
     )
     cat = GovernedCatalog(spark, lake_root=lake)
     cat.create_database("db")
@@ -898,8 +875,7 @@ def test_bloom_point_prune_records_inherits_fails_open(spark, tmp_path):
     """S28: per-file bloom bitmaps recorded at commit prune point
     lookups on hash-clustered layouts where min/max stats cannot; a
     merge carries untouched files' bitmaps from the parent (no
-    recompute); unsupported column types record nothing and fail OPEN;
-    exchange mode refuses bloom_cols."""
+    recompute); unsupported column types record nothing and fail OPEN."""
     path = str(tmp_path / "t")
     rows = [(i, "u%d" % (i % 7), float(i) / 3) for i in range(200)]
     df = spark.createDataFrame(rows, "id long, user string, v double")
@@ -909,7 +885,6 @@ def test_bloom_point_prune_records_inherits_fails_open(spark, tmp_path):
         path,
         df.repartition(4, F.col("user")),
         None,
-        manifest=True,
         bloom_cols=["user", "id", "v"],  # v is double -> not recorded
     )
     m = read_manifest(path)
@@ -964,12 +939,6 @@ def test_bloom_point_prune_records_inherits_fails_open(spark, tmp_path):
     )
     assert [(r.id, r.user) for r in got.collect()] == [(1, "u1")]
 
-    with pytest.raises(ValueError, match="bloom_cols requires manifest"):
-        publish_overwrite(
-            spark, str(tmp_path / "x"), df, None, manifest=False,
-            bloom_cols=["id"],
-        )
-
 
 def test_bloom_inherited_by_partition_merge_and_append(spark, tmp_path):
     """Carried files keep their parent-recorded bitmaps through a
@@ -986,7 +955,7 @@ def test_bloom_inherited_by_partition_merge_and_append(spark, tmp_path):
         "id long, grp string, k string",
     )
     publish_overwrite(
-        spark, path, df, ["grp"], manifest=True, bloom_cols=["k"]
+        spark, path, df, ["grp"], bloom_cols=["k"]
     )
     v1 = read_manifest(path)
     merge_into(
@@ -1056,7 +1025,7 @@ def test_concurrent_rewrites_conflict_not_lost_update(spark, tmp_path):
 
     path = str(tmp_path / "t")
     base = _mk(spark, [(1, "a", "v1"), (2, "b", "v1")])
-    publish_overwrite(spark, path, base, ["grp"], manifest=True)
+    publish_overwrite(spark, path, base, ["grp"])
 
     # writer B stages its rewrite against v1 ... then writer A commits
     b_result = read_table(spark, path).filter(F.col("id") == 2).withColumn(
@@ -1080,10 +1049,6 @@ def test_concurrent_rewrites_conflict_not_lost_update(spark, tmp_path):
     )
     got = {(r.id, r.v) for r in read_table(spark, path).collect()}
     assert got == {(1, "from_a"), (2, "from_b")}
-    # exchange mode has no version to check against
-    with pytest.raises(ValueError, match="expected_version requires"):
-        po(spark, str(tmp_path / "x"), base, None, manifest=False,
-           expected_version=1)
 
 
 def test_appends_interleave_with_rewrites_without_conflict(spark, tmp_path):
@@ -1102,7 +1067,7 @@ def test_appends_interleave_with_rewrites_without_conflict(spark, tmp_path):
 
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "x")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "x")]), ["grp"]
     )
     rewrite = read_table(spark, path).localCheckpoint(eager=True)
     append_rows(spark, path, _mk(spark, [(2, "b", "y")]), ["grp"])
@@ -1131,7 +1096,7 @@ def test_timestamp_as_of_resolution_and_read(spark, sf_dir, tmp_path):
 
     n = load(spark, sf_dir, "nation")
     path = str(tmp_path / "nation_ts")
-    publish_overwrite(spark, path, n, None, manifest=True)
+    publish_overwrite(spark, path, n, None)
     t1 = read_manifest(path)["committed_at"]
     append_rows(spark, path, n.limit(3))
     t2 = read_manifest(path)["committed_at"]
@@ -1167,7 +1132,7 @@ def test_verify_table_clean_and_detects_damage(spark, sf_dir, tmp_path):
         "n_nationkey", "n_name", "n_regionkey"
     )
     path = str(tmp_path / "nation_fsck")
-    publish_overwrite(spark, path, n, ["n_regionkey"], manifest=True)
+    publish_overwrite(spark, path, n, ["n_regionkey"])
     append_rows(spark, path, n.limit(2), partition_by=["n_regionkey"])
     rep = verify_table(path, deep=True)
     assert rep["ok"] and rep["snapshots_checked"] == [2, 1]
@@ -1215,7 +1180,7 @@ def test_history_reports_tombstones_and_constraints(spark, sf_dir, tmp_path):
     eng = Engine(spark, cat)
     loc = f"{lake}/docs_hist"
     d = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     add_constraint(spark, loc, "chars_positive", "n_chars > 0")
     delete_rows_mor(spark, loc, "n_chars < 100", count=False)
     cat.register_table(
@@ -1251,7 +1216,7 @@ def test_compact_cluster_by_partitioned_and_purges_tombstones(
         "doc_id", "lang", "source", "n_chars"
     )
     path = str(tmp_path / "docs_opt")
-    publish_overwrite(spark, path, d.repartition(8), ["lang"], manifest=True)
+    publish_overwrite(spark, path, d.repartition(8), ["lang"])
     delete_rows_mor(spark, path, "n_chars < 100", count=False)
     expect = sorted(
         tuple(r)
@@ -1306,7 +1271,7 @@ def test_governed_sql_timestamp_as_of(spark, sf_dir, tmp_path):
     eng = Engine(spark, cat)
     loc = f"{lake}/docs_ts"
     d = load(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     t1 = read_manifest(loc)["committed_at"]
     append_rows(
         spark, loc, d.limit(7).selectExpr("doc_id + 90000000 AS doc_id", "lang", "n_chars"),
@@ -1358,7 +1323,7 @@ def test_count_rows_metadata_only(spark, tmp_path, monkeypatch):
     seed = _mk(
         spark, [(i, "a" if i % 2 else "b", f"v{i}") for i in range(10)]
     )
-    publish_overwrite(spark, path, seed, ["grp"], manifest=True)
+    publish_overwrite(spark, path, seed, ["grp"])
     meta = count_rows(path)
     assert meta["rows"] == 10
     assert meta["partitions"] == {"grp=a": 5, "grp=b": 5}
@@ -1410,7 +1375,6 @@ def test_count_rows_spans_partition_specs(spark, tmp_path):
         path,
         _mk(spark, [(1, "a", "x"), (2, "b", "y")]),
         ["grp"],
-        manifest=True,
     )
     evolve_partitioning(path, ["v"])
     append_rows(spark, path, _mk(spark, [(3, "c", "z")]), ["v"])
@@ -1433,7 +1397,7 @@ def test_snapshot_tags_pin_retention_until_dropped(spark, tmp_path):
 
     path = str(tmp_path / "t")
     publish_overwrite(
-        spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"], manifest=True
+        spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"]
     )
     tag_snapshot(path, "training-run-1")  # pins v1
     publish_overwrite(spark, path, _mk(spark, [(1, "a", "v2")]), ["grp"])
@@ -1493,7 +1457,6 @@ def test_engine_sql_tag_as_of_governed(spark, tmp_path):
             [(1, "a", 10.0), (2, "b", 20.0)], "id long, grp string, bal double"
         ),
         ["grp"],
-        manifest=True,
     )
     tag_snapshot(path, "seed")
     publish_overwrite(
@@ -1572,7 +1535,7 @@ def test_optimize_binpack_partial_rewrite_and_guards(spark, tmp_path):
     path = str(tmp_path / "t")
     # one BIG file per partition (above target) + small appended files
     big = mk([(i, "a", i) for i in range(50)]).coalesce(1)
-    publish_overwrite(spark, path, big, ["grp"], manifest=True)
+    publish_overwrite(spark, path, big, ["grp"])
     m1 = read_manifest(path)
     big_files = set(m1["files"])
     for k in range(3):
@@ -1594,12 +1557,12 @@ def test_optimize_binpack_partial_rewrite_and_guards(spark, tmp_path):
     with _pytest.raises(ValueError, match="purge_deleted_rows"):
         optimize_binpack(spark, path)
     p2 = str(tmp_path / "t2")
-    publish_overwrite(spark, p2, mk([(1, "a", 1)]), ["grp"], manifest=True)
+    publish_overwrite(spark, p2, mk([(1, "a", 1)]), ["grp"])
     rename_column(p2, "v", "val")
     with _pytest.raises(ValueError, match="compact_in_place"):
         optimize_binpack(spark, p2)
     p3 = str(tmp_path / "t3")
-    publish_overwrite(spark, p3, mk([(1, "a", 1)]), ["grp"], manifest=True)
+    publish_overwrite(spark, p3, mk([(1, "a", 1)]), ["grp"])
     evolve_partitioning(p3, [])
     with _pytest.raises(ValueError, match="compact_in_place"):
         optimize_binpack(spark, p3)
@@ -1623,7 +1586,6 @@ def test_expire_snapshots_age_horizon_and_union(spark, tmp_path):
             path,
             _mk(spark, [(1, "a", f"a{i}")]),
             ["grp"],
-            manifest=True,
         )
     # horizon in the far past: nothing is old enough, nothing expires
     out = expire_snapshots(path, older_than=time.time() - 3600)
@@ -1661,7 +1623,6 @@ def test_expire_snapshots_honors_tag_and_branch_pins(spark, tmp_path):
             path,
             _mk(spark, [(1, "a", f"a{i}")]),
             ["grp"],
-            manifest=True,
         )
     tag_snapshot(path, "audit", 1)
     out = expire_snapshots(path, older_than=time.time())
@@ -1688,7 +1649,6 @@ def test_expire_snapshots_dry_run_reports_without_removing(spark, tmp_path):
             path,
             _mk(spark, [(1, "a", f"a{i}")]),
             ["grp"],
-            manifest=True,
         )
     dry = expire_snapshots(path, older_than=time.time(), dry_run=True)
     assert dry["manifests_removed"] == 1

@@ -51,7 +51,7 @@ def test_stream_restarts_at_committed_version_no_duplicates(spark, tmp_path):
         str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
     df = _mk(spark, [(i, i % 2, "v%d" % i) for i in range(10)])
-    publish_overwrite(spark, path, df, ["bucket"], manifest=True)
+    publish_overwrite(spark, path, df, ["bucket"])
     append_rows(spark, path, _mk(spark, [(10, 0, "x")]), ["bucket"])
 
     _run_stream(spark, df.schema, path, out, ckpt)
@@ -74,7 +74,7 @@ def test_stream_refuses_rewrites_unless_ignore_changes(spark, tmp_path):
         str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
     df = _mk(spark, [(1, 0, "a"), (2, 1, "b")])
-    publish_overwrite(spark, path, df, ["bucket"], manifest=True)
+    publish_overwrite(spark, path, df, ["bucket"])
     _run_stream(spark, df.schema, path, out, ckpt)
     # a MERGE rewrites bucket=0's file: the next micro-batch must fail
     merge_into(
@@ -110,7 +110,7 @@ def test_stream_resume_beyond_retention_raises(spark, tmp_path):
         str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
     df = _mk(spark, [(1, 0, "a")])
-    publish_overwrite(spark, path, df, ["bucket"], manifest=True)
+    publish_overwrite(spark, path, df, ["bucket"])
     _run_stream(spark, df.schema, path, out, ckpt)  # checkpoint at v1
     append_rows(spark, path, _mk(spark, [(2, 1, "b")]), ["bucket"])
     append_rows(spark, path, _mk(spark, [(3, 0, "c")]), ["bucket"])
@@ -122,7 +122,7 @@ def test_stream_resume_beyond_retention_raises(spark, tmp_path):
 def test_batch_reader_matches_read_table_and_infers_schema(spark, tmp_path):
     path = str(tmp_path / "t")
     df = _mk(spark, [(i, i % 3, "v%d" % i) for i in range(9)])
-    publish_overwrite(spark, path, df, ["bucket"], manifest=True)
+    publish_overwrite(spark, path, df, ["bucket"])
     b = spark.read.format("lake_manifest").schema(df.schema).load(path)
     want = sorted(map(tuple, read_table(spark, path, df.schema).collect()))
     assert sorted(map(tuple, b.collect())) == want
@@ -149,7 +149,7 @@ def test_governed_stream_table_enforces_like_batch(spark, tmp_path):
     # convert the sales table to manifest commits (same rows)
     sales = spark.read.parquet(f"{lake}/sales")
     publish_overwrite(
-        spark, f"{lake}/sales", sales, None, manifest=True
+        spark, f"{lake}/sales", sales, None
     )
 
     def drain(stream_df):
@@ -194,7 +194,7 @@ def test_stream_refuses_mor_tombstones_unless_ignore_changes(spark, tmp_path):
         str(tmp_path / "t"), str(tmp_path / "out"), str(tmp_path / "ckpt")
     )
     df = _mk(spark, [(1, 0, "a"), (2, 1, "b")])
-    publish_overwrite(spark, path, df, ["bucket"], manifest=True)
+    publish_overwrite(spark, path, df, ["bucket"])
     _run_stream(spark, df.schema, path, out, ckpt)
     delete_rows_mor(spark, path, "id = 1", count=False)
     append_rows(spark, path, _mk(spark, [(3, 0, "c")]), ["bucket"])

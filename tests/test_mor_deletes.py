@@ -42,7 +42,7 @@ def docs_table(spark, sf_dir, tmp_path):
         "doc_id", "lang", "source", "n_chars"
     )
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     return path, d
 
 
@@ -185,7 +185,7 @@ def test_purge_noop_without_tombstones(spark, docs_table):
 def test_purge_unpartitioned_roundtrip(spark, sf_dir, tmp_path):
     n = load(spark, sf_dir, "nation")
     path = str(tmp_path / "nation")
-    publish_overwrite(spark, path, n, None, manifest=True)
+    publish_overwrite(spark, path, n, None)
     delete_rows_mor(spark, path, "n_regionkey = 2", count=False)
     expect = _rows(n.filter(F.col("n_regionkey") != 2))
     assert _rows(read_table(spark, path)) == expect

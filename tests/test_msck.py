@@ -116,7 +116,7 @@ def test_repair_refusals_and_gate(spark, tmp_path):
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/m"
-    publish_overwrite(spark, loc, _docs(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, loc, _docs(spark), ["lang"])
     cat.register_table(
         TableDef(
             "db", "m", loc, schema=_docs(spark).schema,
@@ -170,7 +170,7 @@ def test_describe_files_manifest_and_declared(spark, tmp_path):
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/m"
-    publish_overwrite(spark, loc, _docs(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, loc, _docs(spark), ["lang"])
     cat.register_table(
         TableDef(
             "db", "m", loc, schema=_docs(spark).schema,

@@ -36,7 +36,7 @@ def _setup(spark, tmp_path, n=20):
         [(i, "ab"[i % 2], i * 10) for i in range(n)],
         "id long, grp string, v long",
     )
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=df.schema, partition_keys=("grp",))
     )
@@ -456,7 +456,7 @@ def test_mv_enriched_dim_drift_fail_closes(spark, tmp_path):
         [("a", "north"), ("b", "south")], "grp string, region string"
     )
     dloc = f"{cat.lake_root}/dim"
-    publish_overwrite(spark, dloc, dim, None, manifest=True)
+    publish_overwrite(spark, dloc, dim, None)
     cat.register_table(TableDef("db", "dim", dloc, schema=dim.schema))
     eng.create_materialized_view(
         "db.mv", "db.docs", ["region"],
@@ -525,7 +525,7 @@ def test_mv_enrich_join_is_broadcast(spark, tmp_path):
     )
 
     dloc = f"{cat.lake_root}/dim"
-    publish_overwrite(spark, dloc, dim, None, manifest=True)
+    publish_overwrite(spark, dloc, dim, None)
     cat.register_table(TableDef("db", "dim", dloc, schema=dim.schema))
     fact = read_table(spark, loc)
     joined = eng._mv_enrich(
@@ -550,7 +550,7 @@ def _mv_rewrite_setup(spark, tmp_path):
         [(i, "ab"[i % 2], "xy"[i % 3 == 0], i * 10) for i in range(24)],
         "id long, grp string, sub string, v long",
     )
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=df.schema, partition_keys=("grp",))
     )
@@ -702,7 +702,7 @@ def test_feed_may_delete_manifest_level(spark, tmp_path):
         [(i, "ab"[i % 2], i) for i in range(8)],
         "id long, grp string, v long",
     )
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)  # v1
+    publish_overwrite(spark, loc, df, ["grp"])  # v1
     append_rows(
         spark, loc,
         spark.createDataFrame([(100, "a", 1)], "id long, grp string, v long"),
@@ -778,7 +778,7 @@ def test_mv_rewrite_orderby_limit_and_filtered_mv(spark, tmp_path):
         [(i, "abcd"[i % 4], i * 10) for i in range(40)],
         "id long, grp string, v long",
     )
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=df.schema, partition_keys=("grp",))
     )
@@ -959,7 +959,7 @@ def test_mv_rewrite_filtered_implication_serves_and_refuses(spark, tmp_path):
         [(i, "abcd"[i % 4], i % 5, i * 10) for i in range(40)],
         "id long, grp string, tier long, v long",
     )
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=df.schema, partition_keys=("grp",))
     )

@@ -48,7 +48,7 @@ def evolved(spark, tmp_path):
     """lang-partitioned seed -> evolve to source -> append under the
     new spec: the canonical mixed-layout table."""
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, _seed(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _seed(spark), ["lang"])
     evolve_partitioning(path, ["source"])
     append_rows(spark, path, _batch(spark), ["source"])
     return path
@@ -164,7 +164,7 @@ def test_rollback_across_evolution_restores_spec_bookkeeping(
 def test_evolving_an_empty_or_same_layout_is_cheap(spark, tmp_path):
     path = str(tmp_path / "t")
     empty = _seed(spark).limit(0)
-    publish_overwrite(spark, path, empty, ["lang"], manifest=True)
+    publish_overwrite(spark, path, empty, ["lang"])
     m = evolve_partitioning(path, ["source"])
     # no files to track -> heals immediately to a plain layout change
     assert "partition_specs" not in m and m["partition_by"] == ["source"]
@@ -176,9 +176,9 @@ def test_evolving_an_empty_or_same_layout_is_cheap(spark, tmp_path):
 
 def test_evolution_refusals(spark, tmp_path):
     path = str(tmp_path / "t")
-    with pytest.raises(ValueError, match="not manifest-committed"):
+    with pytest.raises(ValueError, match="holds no data"):
         evolve_partitioning(path, ["lang"])
-    publish_overwrite(spark, path, _seed(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _seed(spark), ["lang"])
     with pytest.raises(ValueError, match="not on the"):
         evolve_partitioning(path, ["nope"])
     # a direct publish cannot change layouts around the evolution API

@@ -628,7 +628,7 @@ def test_rename_alias_preserves_pushdown_and_pruning(spark, tmp_path):
         [(i, f"t{i}", ["en", "de"][i % 2], i * 10) for i in range(10)],
         "doc_id long, text string, lang string, n_chars long",
     )
-    publish_overwrite(spark, path, seed, ["lang"], manifest=True)
+    publish_overwrite(spark, path, seed, ["lang"])
     rename_column(path, "n_chars", "char_count")
     df = (
         read_table(spark, path)

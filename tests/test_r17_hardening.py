@@ -20,7 +20,7 @@ def test_merge_updates_pinned_requires_materialized_plan(spark, lake):
     base = spark.range(10).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
-    publish_overwrite(spark, path, base, None, manifest=True)
+    publish_overwrite(spark, path, base, None)
     # an unpinned derived plan must be refused under updates_pinned=True
     unpinned = base.filter(F.col("k") < 5).withColumn("v", F.col("v") + 1)
     with pytest.raises(ValueError, match="materialized"):
@@ -30,6 +30,40 @@ def test_merge_updates_pinned_requires_materialized_plan(spark, lake):
         spark, path, unpinned.localCheckpoint(eager=True), ["k"],
         updates_pinned=True,
     )
+
+
+@pytest.mark.parametrize("pin", ["localCheckpoint", "cache"])
+def test_merge_updates_pinned_refuses_plans_built_on_a_pin(spark, lake, pin):
+    """The guard fails closed: a frame derived FROM a pinned frame still
+    re-evaluates its own operators per use, so only the materialization
+    itself (plan root LogicalRDD / InMemoryRelation) is accepted."""
+    from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
+        merge_into,
+        publish_overwrite,
+        read_table,
+    )
+
+    path = os.path.join(lake, f"pin_guard_derived_{pin}")
+    base = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    publish_overwrite(spark, path, base, None)
+    upd = base.withColumn("v", F.col("v") + 1)
+    pinned = upd.localCheckpoint(eager=True) if pin == "localCheckpoint" else upd.cache()
+    if pin == "cache":
+        pinned.count()
+    for derived in (
+        pinned.filter(F.col("k") < 5),
+        pinned.select("k", (F.col("v") + 1).alias("v")),
+    ):
+        with pytest.raises(ValueError, match="materialized frame itself"):
+            merge_into(spark, path, derived, ["k"], updates_pinned=True)
+    merge_into(spark, path, pinned, ["k"], updates_pinned=True)
+    assert sorted(r.v for r in read_table(spark, path).collect()) == [
+        2 * k + 1 for k in range(10)
+    ]
+    if pin == "cache":
+        pinned.unpersist()
 
 
 def test_probe_minhash_index_sigless_contract(spark, tmp_path):

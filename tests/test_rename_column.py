@@ -35,7 +35,7 @@ def _seed(spark):
 @pytest.fixture()
 def renamed(spark, tmp_path):
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, _seed(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _seed(spark), ["lang"])
     rename_column(path, "n_chars", "char_count")
     return path
 
@@ -124,7 +124,7 @@ def test_rename_refusals_fail_closed(spark, tmp_path):
     )
 
     path = str(tmp_path / "t")
-    publish_overwrite(spark, path, _seed(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _seed(spark), ["lang"])
     with pytest.raises(ValueError, match="no column"):
         rename_column(path, "nope", "x")
     with pytest.raises(ValueError, match="already exists"):
@@ -318,7 +318,7 @@ def test_rollback_to_pre_evolution_after_heal_and_reevolve(spark, tmp_path):
     )
 
     path = str(tmp_path / "t")
-    publish_overwrite(spark, path, _seed(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _seed(spark), ["lang"])
     evolve_partitioning(path, ["doc_id"])          # v2
     compact_in_place(spark, path, ["doc_id"])      # v3: heals
     evolve_partitioning(path, ["n_chars"])         # v4: fresh specs
@@ -345,7 +345,7 @@ def test_filter_rewrite_is_literal_safe(spark, tmp_path):
         [(1, "n_chars", "en", 5), (2, "other", "en", 6)],
         "doc_id long, text string, lang string, n_chars long",
     )
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     cat = GovernedCatalog(spark)
     cat.create_database("db")
     cat.register_table(
@@ -378,7 +378,7 @@ def test_wap_audit_fails_loudly_on_rename_race(spark, tmp_path):
     )
 
     path = str(tmp_path / "t")
-    publish_overwrite(spark, path, _seed(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _seed(spark), ["lang"])
     cand = begin_publish(
         spark,
         path,

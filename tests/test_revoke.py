@@ -107,7 +107,7 @@ def test_describe_detail_metadata_only(engine, spark, tmp_path_factory):
     lake = str(tmp_path_factory.mktemp("detail"))
     cat = engine.catalog
     d = engine.sql("SELECT * FROM sales_db.sales", "dataadmin")
-    publish_overwrite(spark, f"{lake}/m", d, ["sales_region"], manifest=True)
+    publish_overwrite(spark, f"{lake}/m", d, ["sales_region"])
     cat.register_table(
         TableDef(
             "sales_db", "m", f"{lake}/m",

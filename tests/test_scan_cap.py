@@ -36,7 +36,7 @@ def env(spark, tmp_path_factory):
         [(i, f"g{i % 4}", "x" * 200) for i in range(400)],
         "id long, grp string, pad string",
     )
-    publish_overwrite(spark, f"{lake}/t", df, ["grp"], manifest=True)
+    publish_overwrite(spark, f"{lake}/t", df, ["grp"])
     cat.register_table(
         TableDef(
             "db", "t", f"{lake}/t", schema=df.schema, partition_keys=("grp",)

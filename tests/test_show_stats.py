@@ -51,7 +51,7 @@ def env(spark, tmp_path_factory):
         [(i, f"g{i % 3}", None if i == 7 else i * 10) for i in range(20)],
         "id long, grp string, v long",
     )
-    publish_overwrite(spark, f"{lake}/dim", dim, ["grp"], manifest=True)
+    publish_overwrite(spark, f"{lake}/dim", dim, ["grp"])
     cat.register_table(
         TableDef(
             "db", "dim", f"{lake}/dim",

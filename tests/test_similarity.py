@@ -239,7 +239,7 @@ def test_ivf_index_append_finds_new_vectors_and_prunes(spark, sf_dir):
     index = scratch_dir("ivf_append_t_") + "/cells"
     publish_overwrite(
         spark, index, seed.select("vec_id", "embedding", "label"),
-        ["label"], manifest=True,
+        ["label"],
     )
     cent = label_centroids(seed)
     scored = (
@@ -360,7 +360,7 @@ def test_retrain_ivf_recovers_drifted_recall(spark, sf_dir, tmp_path):
     )
     lake = str(tmp_path / "lake")
     loc = f"{lake}/ivf"
-    publish_overwrite(spark, loc, v, ["label"], manifest=True)
+    publish_overwrite(spark, loc, v, ["label"])
     cat = GovernedCatalog(spark, lake_root=lake)
     cat.create_database("db")
     cat.set_admins(["ops"])

@@ -247,7 +247,7 @@ def test_drop_table_refuses_under_dependent_mv(eng, spark, tmp_path):
         "id long, grp string, v long",
     )
     loc = f"{tmp_path}/docs"
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     eng.catalog.register_table(
         TableDef("db", "docs", loc, schema=df.schema,
                  partition_keys=("grp",))
@@ -523,7 +523,7 @@ def test_drop_column_mv_and_constraint_refuse(eng, spark, tmp_path):
         "id long, grp string, v long",
     )
     loc = f"{tmp_path}/docs"
-    publish_overwrite(spark, loc, df, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, df, ["grp"])
     eng.catalog.register_table(
         TableDef("db", "docs", loc, schema=df.schema, partition_keys=("grp",))
     )

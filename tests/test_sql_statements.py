@@ -432,7 +432,7 @@ def test_show_partitions_and_describe_history(spark, tmp_path_factory):
         [(i, ["a", "b"][i % 2], i) for i in range(10)],
         "id long, grp string, v long",
     )
-    publish_overwrite(spark, f"{lake}/t", d, ["grp"], manifest=True)
+    publish_overwrite(spark, f"{lake}/t", d, ["grp"])
     cat.register_table(
         TableDef("db", "t", f"{lake}/t", schema=d.schema, partition_keys=("grp",))
     )
@@ -466,7 +466,7 @@ def test_sql_optimize_and_vacuum_statements(spark, tmp_path_factory):
         [(i, i % 2, float(i)) for i in range(100)], "id long, grp int, v double"
     )
     loc = f"{lake}/t"
-    publish_overwrite(spark, loc, d.repartition(1), ["grp"], manifest=True)
+    publish_overwrite(spark, loc, d.repartition(1), ["grp"])
     for k in range(4):  # fragment with small appends
         append_rows(
             spark,
@@ -514,7 +514,7 @@ def test_sql_mv_lifecycle_with_avg(spark, tmp_path_factory):
         "id long, lang string, score double, n long",
     )
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=d.schema, partition_keys=("lang",))
     )
@@ -584,7 +584,7 @@ def test_mv_state_write_scales_with_groups(spark, tmp_path_factory):
         [(i, i % 500, i) for i in range(2000)], "id long, grp long, v long"
     )
     loc = f"{lake}/t"
-    publish_overwrite(spark, loc, d, None, manifest=True)
+    publish_overwrite(spark, loc, d, None)
     cat.register_table(TableDef("db", "t", loc, schema=d.schema))
     eng = Engine(spark, cat)
     eng.mv_state_rows_per_file = 100  # 500 groups -> 5 files
@@ -617,7 +617,7 @@ def test_update_rows_three_valued_logic(spark, tmp_path_factory):
     d = spark.createDataFrame(
         [(1, 10.0), (2, None), (3, 30.0)], "id long, v double"
     )
-    publish_overwrite(spark, path, d, None, manifest=True)
+    publish_overwrite(spark, path, d, None)
     # predicate NULL on id=2 -> NOT matched -> kept untouched
     r = update_rows(spark, path, {"v": "0.0"}, "v > 15")
     assert r["rows_updated"] == 1
@@ -633,7 +633,7 @@ def test_update_rows_refuses_partition_col_and_bad_col(spark, tmp_path_factory):
 
     path = str(tmp_path_factory.mktemp("updguard") / "t")
     d = spark.createDataFrame([(1, "a", 1.0)], "id long, grp string, v double")
-    publish_overwrite(spark, path, d, ["grp"], manifest=True)
+    publish_overwrite(spark, path, d, ["grp"])
     with pytest.raises(ValueError, match="partition column"):
         update_rows(spark, path, {"grp": "'b'"}, "TRUE", partition_col="grp")
     with pytest.raises(ValueError, match="unknown column"):
@@ -659,7 +659,7 @@ def test_update_rows_time_travel_preserved(spark, tmp_path_factory):
         [(i, ["a", "b"][i % 2], float(i)) for i in range(10)],
         "id long, grp string, v double",
     )
-    publish_overwrite(spark, path, d, ["grp"], manifest=True)
+    publish_overwrite(spark, path, d, ["grp"])
     update_rows(spark, path, {"v": "v * 10"}, "id = 4", partition_col="grp")
     old = read_table(spark, path, version=1)
     assert {x.v for x in old.filter(F.col("id") == 4).collect()} == {4.0}
@@ -687,7 +687,7 @@ def test_update_rows_pending_column_fail_close(spark, tmp_path_factory):
     cat.create_database("db")
     cat.set_admins(["ops"])
     d = spark.createDataFrame([(1, 1.0, "x")], "id long, v double, secret string")
-    publish_overwrite(spark, f"{lake}/t", d, None, manifest=True)
+    publish_overwrite(spark, f"{lake}/t", d, None)
     td = TableDef("db", "t", f"{lake}/t", schema=d.schema)
     td.pending_columns = {"secret"}
     cat.register_table(td)
@@ -718,7 +718,7 @@ def test_merge_pending_column_fail_close(spark, tmp_path_factory):
     d = spark.createDataFrame(
         [(1, 1.0, "x")], "id long, v double, secret string"
     )
-    publish_overwrite(spark, f"{lake}/t", d, None, manifest=True)
+    publish_overwrite(spark, f"{lake}/t", d, None)
     td = TableDef("db", "t", f"{lake}/t", schema=d.schema)
     td.pending_columns = {"secret"}
     cat.register_table(td)
@@ -901,7 +901,7 @@ def test_insert_statement_manifest_table(spark, tmp_path_factory):
     d = spark.createDataFrame(
         [(1, "a", 1.0), (2, "b", 2.0)], "id long, grp string, v double"
     )
-    publish_overwrite(spark, f"{lake}/t", d, ["grp"], manifest=True)
+    publish_overwrite(spark, f"{lake}/t", d, ["grp"])
     cat.register_table(
         TableDef("db", "t", f"{lake}/t", schema=d.schema,
                  partition_keys=("grp",))
@@ -978,7 +978,7 @@ def test_alter_rename_column_statement(spark, tmp_path_factory):
     cat.create_database("db")
     cat.set_admins(["ops"])
     d = spark.createDataFrame([(1, 10.0), (2, 20.0)], "id long, amt double")
-    publish_overwrite(spark, f"{lake}/t", d, None, manifest=True)
+    publish_overwrite(spark, f"{lake}/t", d, None)
     cat.register_table(TableDef("db", "t", f"{lake}/t", schema=d.schema))
     eng = Engine(spark, cat)
     r = eng.sql(
@@ -1059,7 +1059,7 @@ def test_update_rows_rewrites_only_touched_partitions(spark, tmp_path):
         [(i, ["a", "b", "c"][i % 3], float(i)) for i in range(30)],
         "id long, grp string, v double",
     )
-    publish_overwrite(spark, path, d, ["grp"], manifest=True)
+    publish_overwrite(spark, path, d, ["grp"])
     before = {
         f for f in read_manifest(path)["files"] if not f.startswith("grp=a/")
     }
@@ -1294,7 +1294,7 @@ def test_inline_time_travel_governed(spark, tmp_path_factory):
         [(i, "ab"[i % 2], i) for i in range(10)],
         "id long, grp string, v long",
     )
-    publish_overwrite(spark, f"{lake}/t", d, ["grp"], manifest=True)
+    publish_overwrite(spark, f"{lake}/t", d, ["grp"])
     append_rows(
         spark, f"{lake}/t",
         spark.createDataFrame([(100, "a", 1)], "id long, grp string, v long"),

@@ -34,8 +34,8 @@ def two_tables(spark, tmp_path_factory):
     stats = spark.createDataFrame(
         [("a", 10), ("b", 10)], "grp string, n long"
     )
-    lk.publish_overwrite(spark, f"{lake}/docs", docs, ["grp"], manifest=True)
-    lk.publish_overwrite(spark, f"{lake}/stats", stats, None, manifest=True)
+    lk.publish_overwrite(spark, f"{lake}/docs", docs, ["grp"])
+    lk.publish_overwrite(spark, f"{lake}/stats", stats, None)
     cat.register_table(
         TableDef("db", "docs", f"{lake}/docs", schema=docs.schema,
                  partition_keys=("grp",))

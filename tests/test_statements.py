@@ -732,7 +732,7 @@ def test_maintain_mor_delete_and_purge_governed(spark, sf_dir, tmp_path):
     ev = load(spark, sf_dir, "events").withColumn(
         "bucket", (F.col("user_id") % 4).cast("int")
     )
-    publish_overwrite(spark, loc, ev, ["bucket"], manifest=True)
+    publish_overwrite(spark, loc, ev, ["bucket"])
     cat.register_table(
         TableDef(
             fx.DATABASE,
@@ -807,7 +807,7 @@ def test_maintain_evolve_partitioning_governed(spark, sf_dir, tmp_path):
     eng = Engine(spark, cat)
     loc = f"{lake}/docs_evo"
     d = load(spark, sf_dir, "documents")
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     cat.register_table(
         TableDef(
             fx.DATABASE,
@@ -885,7 +885,7 @@ def test_maintain_rename_column_migrates_policies(spark, tmp_path):
         [(i, f"t{i}", ["en", "de"][i % 2], i * 10) for i in range(10)],
         "doc_id long, text string, lang string, n_chars long",
     )
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     cat.register_table(
         TableDef(
             fx.DATABASE,
@@ -963,7 +963,7 @@ def test_maintain_tag_and_drop_tag_governed(spark, tmp_path):
     eng = Engine(spark, cat)
     loc = f"{lake}/t_tags"
     d = spark.createDataFrame([(1, "a")], "id long, grp string")
-    publish_overwrite(spark, loc, d, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, d, ["grp"])
     cat.register_table(TableDef(fx.DATABASE, "t_tags", loc, schema=d.schema))
     cat.set_admins(["ops"])
     q = f"{fx.DATABASE}.t_tags"
@@ -997,7 +997,7 @@ def test_maintain_branch_lifecycle_governed(spark, tmp_path):
     eng = Engine(spark, cat)
     loc = f"{lake}/t_branch"
     d = spark.createDataFrame([(1, "a")], "id long, grp string")
-    publish_overwrite(spark, loc, d, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, d, ["grp"])
     cat.register_table(TableDef(fx.DATABASE, "t_branch", loc, schema=d.schema))
     cat.set_admins(["ops"])
     q = f"{fx.DATABASE}.t_branch"
@@ -1045,7 +1045,7 @@ def test_maintain_optimize_binpack_governed(spark, tmp_path):
     eng = Engine(spark, cat)
     loc = f"{lake}/t_pack"
     d = spark.createDataFrame([(i, "a") for i in range(10)], "id long, grp string")
-    publish_overwrite(spark, loc, d, ["grp"], manifest=True)
+    publish_overwrite(spark, loc, d, ["grp"])
     for k in range(3):
         append_rows(
             spark, loc,

@@ -349,6 +349,7 @@ def test_cdc_upsert_resume_after_restart(spark, sf_dir, tmp_path):
     )
     from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
         load,
+        read_table,
         write_partitioned,
     )
 
@@ -394,7 +395,7 @@ def test_cdc_upsert_resume_after_restart(spark, sf_dir, tmp_path):
         )
         return {
             r.user_id: (r.last_event_id, r.last_ts)
-            for r in spark.read.parquet(dim).collect()
+            for r in read_table(spark, dim).collect()
         }
 
     land(0)

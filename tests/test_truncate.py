@@ -38,7 +38,7 @@ def _docs(spark, lo=0, hi=10):
 
 def test_truncate_is_metadata_only_mutation(spark, tmp_path):
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, _docs(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _docs(spark), ["lang"])
     v1_files = read_manifest(path)["files"]
     snap = truncate_table(path)
     assert snap["files"] == []
@@ -56,7 +56,7 @@ def test_truncate_is_metadata_only_mutation(spark, tmp_path):
 
 def test_layout_and_ledger_carry_across_truncate(spark, tmp_path):
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, _docs(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _docs(spark), ["lang"])
     append_rows(
         spark, path, _docs(spark, 10, 12), ["lang"], stream_id="s", batch_id=3
     )
@@ -79,15 +79,19 @@ def test_layout_and_ledger_carry_across_truncate(spark, tmp_path):
 
 def test_truncate_clears_tombstones_and_refuses_non_manifest(spark, tmp_path):
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, _docs(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _docs(spark), ["lang"])
     delete_rows_mor(spark, path, "doc_id % 2 = 0")
     assert read_manifest(path)["delete_predicates"]
     truncate_table(path)
     assert not read_manifest(path).get("delete_predicates")
+    # a plain directory is adopted as v1, then truncated
     plain = str(tmp_path / "plain")
     _docs(spark).write.parquet(plain)
-    with pytest.raises(ValueError, match="not manifest-committed"):
-        truncate_table(plain)
+    snap = truncate_table(plain)
+    assert snap["version"] == 2 and snap["files"] == []
+    assert read_manifest(plain, 1)["files"]
+    with pytest.raises(ValueError, match="holds no data"):
+        truncate_table(str(tmp_path / "missing"))
 
 
 def test_sql_truncate_gate_result_and_audit(spark, tmp_path):
@@ -96,7 +100,7 @@ def test_sql_truncate_gate_result_and_audit(spark, tmp_path):
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, _docs(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, loc, _docs(spark), ["lang"])
     cat.register_table(
         TableDef(
             "db", "docs", loc, schema=_docs(spark).schema,
@@ -125,7 +129,7 @@ def test_truncate_refuses_mv_state(spark, tmp_path):
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, _docs(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, loc, _docs(spark), ["lang"])
     cat.register_table(
         TableDef(
             "db", "docs", loc, schema=_docs(spark).schema,
@@ -158,16 +162,16 @@ def test_truncate_counts_rows_under_the_publish_lock(spark, tmp_path):
         [(i, "ab"[i % 2], i * 1.0) for i in range(12)],
         "id long, grp string, v double",
     )
-    publish_overwrite(spark, path, df, ["grp"], manifest=True)
+    publish_overwrite(spark, path, df, ["grp"])
     snap = truncate_table(path)
     assert snap["rows_removed"] == 12  # metadata-only, no spark needed
     # re-publish, tombstone 3 rows (MoR): footer counts overcount, so
     # the lock-held fallback must SCAN — and needs the session
-    publish_overwrite(spark, path, df, ["grp"], manifest=True)
+    publish_overwrite(spark, path, df, ["grp"])
     delete_rows_mor(spark, path, "id < 3")
     snap2 = truncate_table(path)
     assert snap2["rows_removed"] is None  # no session: report None
-    publish_overwrite(spark, path, df, ["grp"], manifest=True)
+    publish_overwrite(spark, path, df, ["grp"])
     delete_rows_mor(spark, path, "id < 3")
     snap3 = truncate_table(path, spark=spark)
     assert snap3["rows_removed"] == 9  # exact scan under the lock

@@ -37,8 +37,8 @@ def lake_pair(spark, tmp_path_factory):
     stats = spark.createDataFrame(
         [("a", 10), ("b", 10)], "grp string, n long"
     )
-    lk.publish_overwrite(spark, f"{lake}/docs", docs, ["grp"], manifest=True)
-    lk.publish_overwrite(spark, f"{lake}/stats", stats, None, manifest=True)
+    lk.publish_overwrite(spark, f"{lake}/docs", docs, ["grp"])
+    lk.publish_overwrite(spark, f"{lake}/stats", stats, None)
     cat.register_table(
         TableDef("db", "docs", f"{lake}/docs", schema=docs.schema,
                  partition_keys=("grp",))
@@ -187,7 +187,7 @@ def test_unpinned_tables_and_later_commits_unaffected(spark, lake_pair):
     lk.publish_overwrite(
         spark, other,
         spark.createDataFrame([(1, 1)], "id long, v long"),
-        None, manifest=True,
+        None,
     )
     eng.lake_transaction(
         ["db.docs", "db.stats"],

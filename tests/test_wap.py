@@ -41,7 +41,7 @@ def nation_manifest(spark, sf_dir, tmp_path):
         "n_nationkey", "n_name", "n_regionkey"
     )
     path = str(tmp_path / "nation")
-    publish_overwrite(spark, path, n, ["n_regionkey"], manifest=True)
+    publish_overwrite(spark, path, n, ["n_regionkey"])
     return path, n
 
 

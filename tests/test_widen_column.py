@@ -48,7 +48,7 @@ def _seed(spark):
 @pytest.fixture()
 def table(spark, tmp_path):
     path = str(tmp_path / "docs")
-    publish_overwrite(spark, path, _seed(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, path, _seed(spark), ["lang"])
     return path
 
 
@@ -102,7 +102,7 @@ def test_float_and_decimal_widening(spark, tmp_path):
         F.col("id").cast("float").alias("f"),
         F.col("id").cast("decimal(5,2)").alias("d"),
     )
-    publish_overwrite(spark, path, df, None, manifest=True)
+    publish_overwrite(spark, path, df, None)
     widen_column_type(path, "f", "double")
     widen_column_type(path, "d", "decimal(12,4)")
     out = read_table(spark, path)
@@ -121,7 +121,7 @@ def _engine(spark, tmp_path):
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, _seed(spark), ["lang"], manifest=True)
+    publish_overwrite(spark, loc, _seed(spark), ["lang"])
     cat.register_table(
         TableDef(
             "db",

@@ -374,7 +374,8 @@ class Engine:
             use_mvs=use_mvs and not as_of_versions,
             mv_allow_stale=mv_allow_stale,
         )
-        assert qe.result is not None
+        if qe.result is None:
+            raise RuntimeError(f"query produced no result: {sql[:200]}")
         return qe.result
 
     def sql_script(
@@ -1479,7 +1480,10 @@ class Engine:
             inner = self._execute(filled, principal, raise_on_error=True)
             qe.tables = list(inner.tables)
             qe.filters_applied = list(inner.filters_applied)
-            assert inner.result is not None
+            if inner.result is None:
+                raise RuntimeError(
+                    f"EXECUTE {stmt.name} produced no result"
+                )
             return inner.result
 
         if isinstance(stmt, ExplainStatement):
@@ -2117,8 +2121,8 @@ class Engine:
             from .sources.lake import read_manifest
 
             # metadata-only: partition values come from the manifest's
-            # file list (or, for exchange-mode tables, the directory
-            # tree) — never a data scan
+            # file list (or, for a never-written schema-on-read
+            # location, the directory tree) — never a data scan
             parts: set[str] = set()
             m = read_manifest(table.location)
             if m is not None:
@@ -2463,8 +2467,8 @@ class Engine:
 
         if isinstance(stmt, DescribeDetailStatement):
             # Delta's one-row metadata summary, metadata-only: catalog
-            # entry + current manifest; a non-manifest (exchange-mode)
-            # table reports its directory facts. Same introspection
+            # entry + current manifest; a never-written schema-on-read
+            # location reports its directory facts. Same introspection
             # gate as DESCRIBE (any grant admits; implicit deny hides).
             import os as _os
 
@@ -2611,13 +2615,13 @@ class Engine:
         POSITIONALLY onto the named (or full declared) column list —
         standard SQL INSERT semantics: unnamed columns fill NULL,
         values cast to the declared types — and lands as a
-        transactional ``append_rows`` commit on manifest tables (ledger,
-        CHECK constraints, O(batch) cost) or a plain partitioned
-        parquet append otherwise. Write gate and pending-column
+        transactional ``append_rows`` commit (ledger, CHECK constraints,
+        O(batch) cost); a plain directory is adopted as the table's
+        first snapshot before the append. Write gate and pending-column
         fail-close match MERGE."""
         from pyspark.sql import functions as F
 
-        from .sources.lake import append_rows, read_manifest
+        from .sources.lake import adopt_table, append_rows
 
         name = (
             principal.name if isinstance(principal, Principal) else principal
@@ -2730,11 +2734,15 @@ class Engine:
             ]
         )
         pkeys = list(table.partition_keys) or None
+        # the declared schema is what the batch was cast to above, so
+        # adopting under it keeps the append's schema check exact
+        cur = adopt_table(table.location, pkeys, spark, table.schema) or {}
+        before = set(cur.get("files", ()))
         if stmt.overwrite:
             # dynamic-partition OVERWRITE: one atomic manifest commit
             # replacing exactly the partitions present in the batch
             # (overwrite_partitions' contract; refusals — unpartitioned,
-            # non-manifest, evolved layout, empty batch — surface loudly)
+            # never-written, evolved layout, empty batch — surface loudly)
             from .sources.lake import overwrite_partitions
 
             if pkeys is None:
@@ -2743,14 +2751,6 @@ class Engine:
                     f"{stmt.target} is unpartitioned; a full replace is "
                     "publish_overwrite / CTAS"
                 )
-            cur = read_manifest(table.location)
-            if cur is None:
-                raise ValueError(
-                    f"INSERT OVERWRITE requires a manifest-committed "
-                    f"table; publish {stmt.target} with manifest=True "
-                    "first"
-                )
-            before = set(cur["files"])
             rp = None
             if static:
                 # the named partition IS the replacement set: batch
@@ -2786,32 +2786,15 @@ class Engine:
                 "rows_inserted long, partitions_replaced long, "
                 "files_replaced long, version long",
             )
-        if read_manifest(table.location) is not None:
-            before = set(read_manifest(table.location)["files"])
-            snap = append_rows(spark, table.location, batch, partition_by=pkeys)
-            cur = read_manifest(table.location)
-            rows = sum(
-                int(cur.get("file_rows", {}).get(f, 0))
-                for f in set(cur["files"]) - before
-            )
-            version = snap["version"] if snap else cur["version"]
-        else:
-            # plain (non-manifest) table: a parquet append is new files
-            # only — existing data untouched; pin the batch so the count
-            # and the write see one materialization
-            batch = batch.localCheckpoint(eager=True)
-            rows = batch.count()
-            writer = batch.write.mode("append").option(
-                "compression", "snappy"
-            )
-            if pkeys:
-                writer = writer.partitionBy(*pkeys)
-            writer.parquet(table.location)
-            version = None
+        snap = append_rows(spark, table.location, batch, partition_by=pkeys)
+        rows = sum(
+            int(snap.get("file_rows", {}).get(f, 0))
+            for f in set(snap["files"]) - before
+        )
         qe.tables = [stmt.target, *touched]
         return _local_df(
-                self.spark,
-            [(rows, version)], "rows_inserted long, version long"
+            self.spark,
+            [(rows, snap["version"])], "rows_inserted long, version long"
         )
 
     def _introspect_gate(
@@ -2901,7 +2884,8 @@ class Engine:
         from .governance import ALL
 
         qe = self._execute(sql, principal, raise_on_error=True)
-        assert qe.result is not None
+        if qe.result is None:
+            raise RuntimeError(f"CTAS query produced no result: {sql[:200]}")
         writer = qe.result.write.mode("overwrite").option("compression", "snappy")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -3749,9 +3733,9 @@ class Engine:
                 _audit("failed", "drop_partition requires spec=")
                 raise ValueError("drop_partition requires spec=")
             from .sources.lake import (
+                adopt_table,
                 hive_partition_relpath,
                 overwrite_partitions,
-                read_manifest,
             )
 
             pkeys = list(table.partition_keys)
@@ -3792,13 +3776,9 @@ class Engine:
             relpath = hive_partition_relpath(
                 pkeys, tuple(spec[k] for k in pkeys)
             )
-            cur = read_manifest(table.location)
-            if cur is None:
-                _audit("failed", "not manifest-committed")
-                raise ValueError(
-                    f"DROP PARTITION requires a manifest-committed "
-                    f"table; publish {qualified} with manifest=True first"
-                )
+            cur = adopt_table(
+                table.location, pkeys, self.spark, table.schema
+            ) or {"files": []}
             # the evolved-layout refusal must come BEFORE the existence
             # check: rows of the named logical partition may live in
             # files under a RETIRED spec's directory naming, so both
@@ -4771,7 +4751,8 @@ class Engine:
         if src_manifest is None:
             raise ValueError(
                 f"source {source} is not manifest-committed — the refresh "
-                "path needs table_changes; publish it with manifest=True"
+                "path needs table_changes over committed snapshots; write "
+                "to it once (any lake write adopts a plain directory)"
             )
         if not any(agg == "count" for agg, _ in measures.values()):
             raise ValueError(
@@ -4797,8 +4778,8 @@ class Engine:
             if dm is None:
                 raise ValueError(
                     f"enrich dimension {dim_q} is not manifest-committed "
-                    "— the refresh pin needs a snapshot version; publish "
-                    "it with manifest=True"
+                    "— the refresh pin needs a snapshot version; write to "
+                    "it once (any lake write adopts a plain directory)"
                 )
             dim_pin = dm["version"]
             enrich_def = {
@@ -4896,7 +4877,6 @@ class Engine:
             location,
             self._mv_state_frame(state, group_by, src.location),
             None,
-            manifest=True,
             app_versions=(
                 {"mv_source": cur, "mv_dim": dim_pin}
                 if dim_pin is not None

@@ -276,7 +276,6 @@ def _stream_catalog(spark: SparkSession):
             f"{lake}/sales",
             spark.read.parquet(f"{lake}/sales"),
             None,
-            manifest=True,
         )
         _STREAM_CATALOGS[spark] = cat
     return cat
@@ -378,7 +377,7 @@ def governance_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=d.schema, partition_keys=("lang",))
     )

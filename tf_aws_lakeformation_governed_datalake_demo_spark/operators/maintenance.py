@@ -239,7 +239,7 @@ def lake_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     path = scratch_dir("table_changes_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     updates = d.filter(
         (F.col("lang") == "de") & (F.col("doc_id") % 10 == 0)
     ).select(
@@ -319,7 +319,7 @@ def lake_cdf_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     path = scratch_dir("cdf_refresh_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     mv0 = (
         read_table(spark, path)
         .groupBy("lang")

@@ -102,15 +102,10 @@ def retrain_ivf(
     the rewrite is one partitioned atomic publish — the same cost
     class as OPTIMIZE cluster_by, run on the maintenance cadence, not
     the ingest path. Returns ``{"cells", "moved", "rows"}``."""
-    from ..sources.lake import publish_overwrite, read_manifest, read_table
+    from ..sources.lake import adopt_table, publish_overwrite, read_table
 
-    if read_manifest(path) is None:
-        raise ValueError(
-            f"IVF index at {path} is not manifest-committed — the "
-            "retrain rewrite moves vectors BETWEEN cells (emptied cell "
-            "dirs must drop atomically); publish the index with "
-            "manifest=True first"
-        )
+    if adopt_table(path, ["label"], spark=spark) is None:
+        raise ValueError(f"IVF index at {path} holds no data")
     cur = read_table(spark, path)
     need = {"vec_id", "embedding", "label"}
     if not need <= set(cur.columns):
@@ -1486,7 +1481,6 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         index,
         seed.select("vec_id", "embedding", "label"),
         ["label"],
-        manifest=True,
     )
     # FROZEN quantizer: seed-only means. r17 (guide §2.4): pinned once —
     # the O(cells) centroid table used to be re-derived (seed scan +

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..scratch import scratch_dir
-from ..sources import load, write_partitioned
+from ..sources import load, read_table, write_partitioned
 from .registry import query
 
 
@@ -117,7 +117,7 @@ def lake_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         change_cols=["c_acctbal"],
         as_of=datetime.datetime(2024, 6, 1),
     )
-    return spark.read.parquet(path).orderBy(
+    return read_table(spark, path).orderBy(
         "c_custkey", "effective_from"
     )
 
@@ -189,7 +189,7 @@ def lake_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_by=["grp"],
         evolve_schema=True,
     )
-    back = spark.read.option("mergeSchema", "true").parquet(lake)
+    back = read_table(spark, lake)
     return back.select(
         "c_custkey",
         "c_name",
@@ -287,7 +287,7 @@ def lake_scd2_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         as_of=datetime.datetime(2024, 6, 1),
         partition_col="effective_month",
     )
-    return spark.read.parquet(path).select(
+    return read_table(spark, path).select(
         "c_custkey",
         "c_name",
         "c_acctbal",
@@ -433,8 +433,8 @@ def partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: see sources.lake.merge_into — old-row reads prune to the
-    partitions named by the update batch, the write replaces only those
-    directories (dynamic partitionOverwriteMode), and the checksum
+    partitions named by the update batch, the commit replaces only those
+    partitions' files, and the checksum
     aggregation proves replaced text actually landed on disk. The md5
     bucket sum is an integer, so the verdict is order-free."""
     from ..sources.lake import merge_into
@@ -466,7 +466,7 @@ def lake_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_into(
         spark, lake, updates, ["doc_id"], partition_by=["lang"], schema=d.schema
     )
-    back = spark.read.parquet(lake)
+    back = read_table(spark, lake)
     return back.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
@@ -733,7 +733,7 @@ def lake_vacuum_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
         before=datetime.datetime(2024, 2, 15),
         partition_col="effective_month",
     )
-    return spark.read.parquet(path).select(
+    return read_table(spark, path).select(
         "c_custkey",
         "c_name",
         F.col("c_acctbal").cast("double").alias("c_acctbal"),
@@ -782,7 +782,7 @@ def lake_delete_user_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assert stats["partitions_rewritten"] == 1, stats
     return (
-        spark.read.parquet(path)
+        read_table(spark, path)
         .groupBy(F.col("bucket").cast("long").alias("bucket"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -832,7 +832,7 @@ def lake_delete_user_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drives the manifest-pointer commit protocol (sources.lake
-    read_table/publish_overwrite manifest mode) end to end. Scale: the
+    read_table/publish_overwrite) end to end. Scale: the
     historical read costs the same as the current one — both are a
     planning-time file-list selection, no data copied per snapshot
     (the reference gets this from S3 bucket versioning, main.tf:25-30);
@@ -841,7 +841,7 @@ def lake_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     path = scratch_dir("time_travel_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     updates = d.filter(F.col("doc_id") % 10 == 0).select(
         "doc_id",
         F.upper("text").alias("text"),
@@ -908,7 +908,7 @@ def lake_manifest_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     path = scratch_dir("manifest_skip_") + "/docs"
     publish_overwrite(
-        spark, path, d.repartitionByRange(8, "n_chars"), None, manifest=True
+        spark, path, d.repartitionByRange(8, "n_chars"), None
     )
     lo, hi = 200, 300
     pruned = read_table(spark, path, d.schema, prune={"n_chars": (lo, hi)})
@@ -1084,7 +1084,6 @@ def lake_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         e.repartition(8, F.col("user_id")),
         None,
-        manifest=True,
         bloom_cols=["user_id"],
     )
     uid = e.agg(F.min("user_id")).first()[0]  # O(1) collect — probe key
@@ -1148,7 +1147,7 @@ def lake_rollback_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents").select("doc_id", "n_chars", "lang")
     path = scratch_dir("rollback_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     bad = d.filter(F.col("doc_id") % 10 == 0).withColumn(
         "n_chars", F.col("n_chars") + 777
     )
@@ -1225,7 +1224,7 @@ def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars"
     )
     path = scratch_dir("mor_delete_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     before = read_manifest(path)
     delete_rows_mor(spark, path, "n_chars < 200", count=False)
     delete_rows_mor(spark, path, "nullif(lang, 'en') = 'de'", count=False)
@@ -1296,7 +1295,7 @@ def lake_mor_purge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars"
     )
     path = scratch_dir("mor_purge_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     v1 = read_manifest(path)["version"]
     delete_rows_mor(spark, path, "n_chars < 200", count=False)
     delete_rows_mor(spark, path, "nullif(lang, 'en') = 'de'", count=False)
@@ -1370,7 +1369,7 @@ def lake_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars"
     )
     path = scratch_dir("wap_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     v1 = read_manifest(path)["version"]
 
     def profile(df: DataFrame, tag: str) -> DataFrame:
@@ -1451,7 +1450,7 @@ def lake_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "source", "n_chars"
     )
     path = scratch_dir("constraints_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     add_constraint(spark, path, "chars_positive", "n_chars > 0")
     m_before = read_manifest(path)
     bad = (
@@ -1517,7 +1516,7 @@ def lake_optimize_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir("optimize_") + "/docs"
     # deliberately shuffled layout: 8 files, each spanning the full
     # n_chars range -> stats-based skipping has nothing to bite on
-    publish_overwrite(spark, path, d.repartition(8), None, manifest=True)
+    publish_overwrite(spark, path, d.repartition(8), None)
     band = {"n_chars": (200, 300)}
     files_before = len(read_table(spark, path, prune=band).inputFiles())
     n_total = len(read_manifest(path)["files"])
@@ -1583,7 +1582,6 @@ def lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir("part_evo_") + "/docs"
     publish_overwrite(
         spark, path, d.filter(F.col("doc_id") % 5 != 0), ["lang"],
-        manifest=True,
     )
     evolve_partitioning(path, ["source"])
     append_rows(
@@ -1637,7 +1635,6 @@ def lake_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir("count_push_") + "/docs"
     publish_overwrite(
         spark, path, d.filter(F.col("doc_id") % 3 != 0), ["lang"],
-        manifest=True,
     )
     append_rows(spark, path, d.filter(F.col("doc_id") % 3 == 0), ["lang"])
     meta = count_rows(path)
@@ -1684,7 +1681,6 @@ def lake_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir("rename_col_") + "/docs"
     publish_overwrite(
         spark, path, d.filter(F.col("doc_id") % 3 != 0), ["lang"],
-        manifest=True,
     )
     rename_column(path, "n_chars", "char_count")
     batch = d.filter(F.col("doc_id") % 3 == 0).withColumnRenamed(
@@ -1750,7 +1746,7 @@ def lake_snapshot_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     path = scratch_dir("snap_tags_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     tag_snapshot(path, "training-data-v1")
     upd = d.filter(F.col("doc_id") % 10 == 0).withColumn(
         "n_chars", F.col("n_chars") + 500
@@ -1835,7 +1831,7 @@ def lake_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     path = scratch_dir("branch_merge_") + "/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)
+    publish_overwrite(spark, path, d, ["lang"])
     create_branch(path, "backfill")
     b1 = d.filter(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang",
@@ -1898,7 +1894,7 @@ def lake_optimize_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir("binpack_") + "/docs"
     publish_overwrite(
         spark, path, d.filter(F.col("doc_id") % 5 == 0).repartition(16),
-        ["lang"], manifest=True,
+        ["lang"],
     )
     for k in (1, 2, 3):
         append_rows(

@@ -40,7 +40,7 @@ def _governed_docs(
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     cat.register_table(
         TableDef(
             "db", "docs", loc, schema=d.schema, partition_keys=("lang",)
@@ -217,7 +217,7 @@ def sql_optimize_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
     seed = d.filter(F.col("doc_id") % 5 != 0)
-    publish_overwrite(spark, loc, seed, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, seed, ["lang"])
     for k in range(4):  # fragment: four small per-partition appends
         batch = d.filter(
             (F.col("doc_id") % 5 == 0) & (F.col("doc_id") % 4 == k)
@@ -528,7 +528,6 @@ def sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     loc = f"{lake}/docs"
     publish_overwrite(
         spark, loc, d.filter(F.col("doc_id") % 3 != 0), ["lang"],
-        manifest=True,
     )
     append_rows(
         spark, loc, d.filter(F.col("doc_id") % 3 == 0), partition_by=["lang"]
@@ -1101,8 +1100,8 @@ def governance_materialized_view_join(
     )
     dim = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     floc, dloc = f"{lake}/orders_f", f"{lake}/cust_d"
-    publish_overwrite(spark, floc, fact, None, manifest=True)
-    publish_overwrite(spark, dloc, dim, None, manifest=True)
+    publish_overwrite(spark, floc, fact, None)
+    publish_overwrite(spark, dloc, dim, None)
     cat.register_table(TableDef("db", "orders_f", floc, schema=fact.schema))
     cat.register_table(TableDef("db", "cust_d", dloc, schema=dim.schema))
     eng = Engine(spark, cat)
@@ -1170,11 +1169,11 @@ def lake_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.set_admins(["ops"])
     seed = d.filter(F.col("doc_id") % 5 != 0)
     batch = d.filter(F.col("doc_id") % 5 == 0)
-    publish_overwrite(spark, f"{lake}/docs", seed, ["lang"], manifest=True)
+    publish_overwrite(spark, f"{lake}/docs", seed, ["lang"])
     seed_stats = seed.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    publish_overwrite(spark, f"{lake}/stats", seed_stats, None, manifest=True)
+    publish_overwrite(spark, f"{lake}/stats", seed_stats, None)
     cat.register_table(
         TableDef(
             "db", "docs", f"{lake}/docs", schema=d.schema,
@@ -1256,7 +1255,7 @@ def governance_materialized_view_avg(
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=d.schema, partition_keys=("lang",))
     )
@@ -1315,12 +1314,12 @@ def lake_txlog_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed = d.filter(F.col("doc_id") % 3 == 0)
     b1 = d.filter(F.col("doc_id") % 3 == 1)
     b2 = d.filter(F.col("doc_id") % 3 == 2)
-    publish_overwrite(spark, f"{lake}/docs", seed, ["lang"], manifest=True)
+    publish_overwrite(spark, f"{lake}/docs", seed, ["lang"])
     stats_of = lambda batch: batch.groupBy("lang").agg(  # noqa: E731
         F.count(F.lit(1)).cast("long").alias("n")
     )
     publish_overwrite(
-        spark, f"{lake}/stats", stats_of(seed), None, manifest=True
+        spark, f"{lake}/stats", stats_of(seed), None
     )
     cat.register_table(
         TableDef("db", "docs", f"{lake}/docs", schema=d.schema,
@@ -1638,7 +1637,7 @@ def sql_alter_column_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.create_database("db")
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
-    publish_overwrite(spark, loc, d, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, d, ["lang"])
     cat.register_table(
         TableDef(
             "db", "docs", loc, schema=d.schema, partition_keys=("lang",)
@@ -1717,7 +1716,7 @@ def sql_add_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat.set_admins(["ops"])
     loc = f"{lake}/docs"
     seed = d.filter(F.col("doc_id") % 3 != 0)
-    publish_overwrite(spark, loc, seed, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, seed, ["lang"])
     cat.register_table(
         TableDef(
             "db", "docs", loc, schema=d.schema, partition_keys=("lang",)

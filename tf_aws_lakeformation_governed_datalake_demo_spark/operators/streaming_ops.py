@@ -548,7 +548,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..scratch import scratch_dir
-    from ..sources import load, write_partitioned
+    from ..sources import load, read_table, write_partitioned
 
     e = load(spark, sf_dir, "events")
     base = scratch_dir("cdc_upsert_")
@@ -567,7 +567,7 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _drive_file_stream(spark, e.schema, src, apply_batch, f"{base}/ckpt")
 
-    return spark.read.parquet(dim).select(
+    return read_table(spark, dim).select(
         "user_id",
         F.col("bucket").cast("long").alias("bucket"),
         "last_event_id",
@@ -727,7 +727,7 @@ def stream_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..scratch import scratch_dir
-    from ..sources import load, scd2_apply
+    from ..sources import load, read_table, scd2_apply
 
     e = load(spark, sf_dir, "events")
     mid = spark.sql(
@@ -754,7 +754,7 @@ def stream_scd2_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = F.broadcast(
-        spark.read.parquet(dim).select(
+        read_table(spark, dim).select(
             F.col("user_id").alias("d_user_id"),
             "tier",
             "effective_from",
@@ -966,7 +966,6 @@ def stream_from_lake_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         e.filter(F.col("event_id") % 3 == 0).repartition(n_w, "event_type"),
         ["event_type"],
-        manifest=True,
     )
     for k in (1, 2):
         append_rows(
@@ -1054,7 +1053,7 @@ def stream_branch_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{base}/facts"
     seed = e.filter(F.col("event_id") % 4 == 3)
     arriving = e.filter(F.col("event_id") % 4 != 3)
-    publish_overwrite(spark, path, seed, ["event_type"], manifest=True)
+    publish_overwrite(spark, path, seed, ["event_type"])
     create_branch(path, "ingest")
     cdc_land_change_files(arriving, src, base, n=3)
     stream_lake_append(
@@ -1126,7 +1125,7 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     loc = f"{base}/docs"
     seed = d.filter(F.col("doc_id") % 2 == 0)
     arriving = d.filter(F.col("doc_id") % 2 == 1)
-    publish_overwrite(spark, loc, seed, ["lang"], manifest=True)
+    publish_overwrite(spark, loc, seed, ["lang"])
     cat.register_table(
         TableDef("db", "docs", loc, schema=d.schema, partition_keys=("lang",))
     )
@@ -1233,9 +1232,9 @@ def stream_txlog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         [], "event_type string, n long, cents long"
     )
     publish_overwrite(
-        spark, f"{base}/facts", seed, ["event_type"], manifest=True
+        spark, f"{base}/facts", seed, ["event_type"]
     )
-    publish_overwrite(spark, f"{base}/stats", seed_stats, None, manifest=True)
+    publish_overwrite(spark, f"{base}/stats", seed_stats, None)
     cat.register_table(
         TableDef("db", "facts", f"{base}/facts", schema=e.schema,
                  partition_keys=("event_type",))
@@ -1345,7 +1344,7 @@ def stream_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = scratch_dir("stream_ow_")
     path = f"{base}/docs"
-    publish_overwrite(spark, path, d, ["lang"], manifest=True)  # v1
+    publish_overwrite(spark, path, d, ["lang"])  # v1
 
     langs = [r.lang for r in d.select("lang").distinct().collect()]
     targets = sorted(langs)[:3]

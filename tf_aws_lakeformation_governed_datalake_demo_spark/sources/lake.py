@@ -141,53 +141,35 @@ def _reader(spark: SparkSession, schema: T.StructType | None):
     )
 
 
-def _leaf_partition_dirs(root, depth: int):
-    """Yield hive leaf partition dirs (``a=1/b=2``) exactly ``depth``
-    levels under ``root``, as paths relative to it."""
-    from pathlib import Path
-
-    def walk(d: Path, level: int):
-        for child in d.iterdir():
-            if not (child.is_dir() and "=" in child.name):
-                continue
-            if level == depth - 1:
-                yield child
-            else:
-                yield from walk(child, level + 1)
-
-    yield from walk(Path(root), 0)
+#: Characters Spark percent-escapes in partition directory names
+#: (``ExternalCatalogUtils.escapePathName``): ASCII control characters
+#: 0x01-0x1F and DEL plus ``"#%'*/:=?\\{[]^``. Everything else, space
+#: included, is written as-is.
+_HIVE_ESCAPED = frozenset(
+    [chr(c) for c in range(0x01, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^")
+)
 
 
-#: Partition-value characters we can map to an on-disk dir name without
-#: replicating Hive's escapePathName. Everything our partition columns
-#: produce (ints, 'yyyy-MM' months, word tokens) matches; anything Spark
-#: would URL-escape (space, '%', ':', '=', ...) does not.
-_SAFE_PARTITION_VALUE = re.compile(r"^[A-Za-z0-9._-]+$")
+def _escape_path_name(s: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in s)
 
 
 def hive_partition_relpath(partition_by: list[str], values: tuple) -> str:
     """Relative hive directory path for one partition-value tuple, in
-    Spark's naming (``a=1/b=x``; NULL becomes the Hive default token).
-    Only the value classes our partition columns use (ints, plain
-    strings like 'yyyy-MM') are supported — no URL-escaping. Values
-    containing characters Spark WOULD escape raise loudly (round-7
-    ADVICE): an unescaped relpath silently fails to match the escaped
-    on-disk dir name, so publish bookkeeping (partition drops) would
-    miss directories and keep stale data."""
+    Spark's naming (``a=1/b=x``): names and values are escaped exactly
+    as Spark's writer escapes them, and NULL or the empty string becomes
+    the Hive default partition token. Publish bookkeeping (partition
+    drops, DROP PARTITION, static overwrite) matches these paths against
+    the directories Spark wrote, so the two encodings must agree."""
     parts = []
     for col, v in zip(partition_by, values):
-        if v is None:
+        if v is None or v == "":
             sv = "__HIVE_DEFAULT_PARTITION__"
+        elif isinstance(v, bool):
+            sv = str(v).lower()  # Spark casts booleans to 'true'/'false'
         else:
-            sv = str(v)
-            if not _SAFE_PARTITION_VALUE.match(sv):
-                raise ValueError(
-                    f"partition value {sv!r} for column {col!r} contains "
-                    "characters Spark escapes in directory names; this "
-                    "engine's publish bookkeeping does not implement Hive "
-                    "path escaping — use values matching [A-Za-z0-9._-]+"
-                )
-        parts.append(f"{col}={sv}")
+            sv = _escape_path_name(str(v))
+        parts.append(f"{_escape_path_name(col)}={sv}")
     return "/".join(parts)
 
 
@@ -209,39 +191,11 @@ def _restrict_to_partitions(
     return a.join(F.broadcast(t), cond, "left_semi")
 
 
-def _atomic_exchange(a, b) -> bool:
-    """Atomically SWAP two paths in one syscall (Linux ``renameat2``
-    with ``RENAME_EXCHANGE``). Returns False when the syscall or the
-    filesystem doesn't support it — callers fall back to the two-rename
-    dance. The exchange is what removes the last crash window in
-    publication: with two renames there is an instant where the live
-    partition exists only in trash/staging; with the exchange the live
-    path ALWAYS holds a complete tree (old or new)."""
-    import ctypes
-    import os
-
-    libc = ctypes.CDLL(None, use_errno=True)
-    try:
-        fn = libc.renameat2
-    except AttributeError:
-        return False
-    AT_FDCWD = -100
-    RENAME_EXCHANGE = 2
-    r = fn(
-        AT_FDCWD,
-        os.fsencode(str(a)),
-        AT_FDCWD,
-        os.fsencode(str(b)),
-        RENAME_EXCHANGE,
-    )
-    return r == 0
-
-
 def _flock_publish_lock(live_dir):
     """Default single-writer guard for a publish's COMMIT phase: an
-    exclusive flock on a hidden sibling lock file (sibling, not
-    in-table: the unpartitioned rename dance moves the table dir itself
-    away). Advisory and single-host.
+    exclusive flock on a hidden sibling lock file (a sibling, so the
+    lock never appears in the table's own tree and can be taken before
+    the table directory exists). Advisory and single-host.
 
     Multi-host note (round-7 VERDICT #5): the reference gets cross-
     writer publication safety from S3 conditional PUTs (compare-and-swap
@@ -302,209 +256,91 @@ def publish_overwrite(
     partition_by: list[str] | None = None,
     compression: str = "snappy",
     drop_missing_partitions: list[str] | None = None,
-    manifest: bool | None = None,
+    manifest: bool = True,
     bloom_cols: list[str] | None = None,
     expected_version: int | None = None,
     full_rewrite: bool = False,
     app_versions: dict | None = None,
 ) -> None:
-    """Atomic stage-then-rename publication of a (slice) rewrite —
-    the commit protocol under merge_into / scd2_apply /
-    expire_scd2_versions (round-6 VERDICT #3).
+    """Atomic (slice) rewrite of a lake table as one manifest commit —
+    the commit protocol under merge_into / scd2_apply / delete_rows /
+    update_rows / compact_in_place and every full-table publish.
 
     The reference's lake inherits S3's atomic object PUT + bucket
     versioning (main.tf:25-30), so its readers never observe a torn
-    object; plain-Parquet directory overwrites had no equivalent — a
-    crash mid-write left partitions half-replaced with old files
-    already deleted. This closes that window without Delta/Iceberg
-    (environment-blocked, decision recorded round 5):
+    object. The manifest commit is the plain-Parquet equivalent:
 
-    1. **Stage.** ``result`` is written COMPLETELY to
-       ``<path>/_staged_<txid>`` (partitioned tables) or the sibling
-       ``<path>.__staged_<txid>`` (unpartitioned). The ``_``/``.``
-       prefixes make staging invisible to every parquet reader of
-       ``path``, so a crash anywhere in this phase — the expensive,
-       failure-prone part: a full Spark job — leaves the live table
-       byte-identical.
-    2. **Swap.** Partitioned: each staged leaf partition dir EXCHANGES
-       with its live counterpart in one atomic ``renameat2
-       RENAME_EXCHANGE`` syscall — the live path holds a complete tree
-       (old or new) at every instant, so a kill anywhere, including
-       inside a flip, leaves readers and vacuum a consistent table; a
-       crash between flips leaves every partition either fully-old or
-       fully-new (per-partition atomicity, the granularity
-       dynamic-overwrite pretended to have without the safety). On
-       platforms without the syscall the flip falls back to two renames
-       (old -> ``_trash_<txid>``, staged -> live) with a microsecond
-       missing-live window during which the old tree stays complete in
-       trash. Unpartitioned: the same exchange on the whole table dir
-       (fallback: the rename dance).
-    3. **Clean.** Trash and staging remnants are deleted; leftovers
-       from a crashed publish are underscore-invisible and reclaimed by
-       :func:`vacuum_publish_artifacts`.
-
-    Scale: the protocol adds only O(#touched partitions) renames and no
-    extra data movement; the staged write replaces the previous
-    dynamic-``partitionOverwriteMode`` write one-for-one (same bytes,
-    different directory), and the merged plan no longer needs a
-    ``localCheckpoint`` to guard read-write overlap — the staged write
-    never targets the directory it reads.
-
-    Manifest mode (round-7 VERDICT #1 — per-TABLE atomicity +
-    time travel): with ``manifest=True`` (or auto-detected from an
-    existing ``_manifest.json``; ``None`` = auto), the commit is a
-    single atomic pointer replace instead of per-partition exchanges:
-
-    1. Stage exactly as above.
-    2. MOVE each staged file into the live tree under its (globally
-       unique) part-file name — old files are NOT deleted.
-    3. Commit: write snapshot ``_manifests/v{N}.json`` naming the
-       complete live file set (staged partitions' new files + carried
-       untouched-partition files − dropped partitions), then atomically
-       replace ``_manifest.json`` with it. Readers
+    1. **Adopt.** A directory that holds data but no manifest is first
+       adopted as snapshot v1 (:func:`adopt_table`), so the commit
+       below always has a committed base to carry from and check
+       against.
+    2. **Stage.** ``result`` is written COMPLETELY to
+       ``<path>/_staged_<txid>``. The ``_`` prefix makes staging
+       invisible to every reader, so a crash in this phase — the
+       expensive, failure-prone part: a full Spark job — leaves the
+       table byte-identical.
+    3. **Move in.** Each staged file moves into the live tree under its
+       (globally unique) part-file name; old files are NOT deleted.
+    4. **Commit.** Snapshot ``_manifests/v{N}.json`` names the complete
+       live file set (staged partitions' new files + carried
+       untouched-partition files − ``drop_missing_partitions``), then
+       ``_manifest.json`` is atomically replaced with it. Readers
        (:func:`read_table`) list files THROUGH the manifest, so a scan
        planned at any instant sees one committed snapshot — entirely
-       old or entirely new, never partition A new + partition B old
-       (the residual window exchange mode had). A crash before the
-       pointer replace leaves the moved files invisible to manifest
-       readers; old snapshots stay readable (:func:`read_table` with
-       ``version=``) until :func:`vacuum_manifests` reclaims them.
-       This is the plain-Parquet equivalent of the reference's S3
-       bucket versioning + consistent listing (main.tf:25-30).
+       old or entirely new. A crash before the pointer replace leaves
+       the moved files invisible; old snapshots stay readable
+       (``version=``) until :func:`vacuum_manifests` reclaims them, and
+       :func:`vacuum_publish_artifacts` reclaims crashed staging.
 
-    Exchange mode on a manifest table raises: it would destroy files
-    historical manifests reference and leave the pointer stale.
+    ``partition_by`` must equal the table's committed layout (``None``
+    on a partitioned table included) unless ``full_rewrite=True``
+    declares ``result`` to be the whole table. Touched partitions whose
+    rewrite produced ZERO rows have no staged directory — a
+    deletion-capable caller names them in ``drop_missing_partitions``
+    so their files leave the snapshot instead of being carried.
 
-    The swap/commit critical section is serialized by the pluggable
-    :data:`publish_lock` (default: single-host flock; see its
-    multi-host CAS note). It serializes PUBLICATION, not semantics —
-    two writers that both read the pre-state still last-write-wins at
-    whole-publish granularity, UNLESS ``expected_version`` is given
-    (manifest mode only): the commit then fails with
+    The commit critical section is serialized by the pluggable
+    :data:`publish_lock` (default: single-host flock; see its multi-host
+    CAS note). With ``expected_version`` the commit fails with
     :class:`ConcurrentLakeModificationError` when the current snapshot
     is no longer the one the writer read — optimistic concurrency, the
     Delta/Iceberg commit-conflict model. Every rewrite-shaped mutator
-    here (merge_into / scd2_apply / delete_rows / compact_in_place)
-    passes the version it read, so concurrent rewrites can never
-    silently drop each other's rows; plain appends
-    (:func:`append_rows`) commute and need no check — they recompute
-    the carried file list under the commit lock.
-    """
-    import shutil
+    passes the version it read; plain appends (:func:`append_rows`)
+    commute and need no check.
+
+    ``manifest`` is accepted for callers written against the earlier
+    two-protocol signature; the manifest commit is the only protocol,
+    so any value other than True raises."""
     import uuid as _uuid
     from pathlib import Path
 
-    txid = _uuid.uuid4().hex
-    live = Path(path)
-    has_manifest = (live / "_manifest.json").exists()
-    if manifest is None:
-        manifest = has_manifest
-    if not manifest and has_manifest:
+    if manifest is not True:
         raise ValueError(
-            f"table at {path} is manifest-committed; an exchange-mode "
-            "publish would orphan the manifest pointer and delete files "
-            "historical snapshots reference — pass manifest=True (or "
-            "leave manifest=None to auto-detect)"
+            "publish_overwrite always commits through the manifest; "
+            f"manifest={manifest!r} is not supported"
         )
-    if manifest:
-        _publish_manifest_commit(
-            live,
-            result,
-            partition_by,
-            compression,
-            drop_missing_partitions,
-            txid,
-            bloom_cols=bloom_cols,
-            expected_version=expected_version,
-            full_rewrite=full_rewrite,
-            app_versions=app_versions,
-        )
-        return
-    if app_versions is not None:
-        raise ValueError(
-            "app_versions requires manifest mode — exchange-mode tables "
-            "have no snapshot ledger to record it in"
-        )
-    if bloom_cols:
-        raise ValueError(
-            "bloom_cols requires manifest mode — exchange-mode tables "
-            "have nowhere to record per-file bloom bitmaps"
-        )
-    if expected_version is not None:
-        raise ValueError(
-            "expected_version requires manifest mode — exchange-mode "
-            "tables have no committed version to check against"
-        )
-    if partition_by:
-        staged = live / f"_staged_{txid}"
-        trash = live / f"_trash_{txid}"
-        writer = result.write.mode("overwrite").option("compression", compression)
-        writer.partitionBy(*partition_by).parquet(str(staged))
-        trash.mkdir()
-        flipped: set[str] = set()
-        with publish_lock(live):
-            for leaf in _leaf_partition_dirs(staged, len(partition_by)):
-                rel = leaf.relative_to(staged)
-                flipped.add(str(rel))
-                dst = live / rel
-                dst.parent.mkdir(parents=True, exist_ok=True)
-                if dst.exists():
-                    # preferred: ONE atomic syscall swaps old and new —
-                    # the live path never lacks a complete tree, so even
-                    # a kill inside the flip leaves readers (and vacuum)
-                    # a consistent table; the old tree now sits in the
-                    # staged slot, reclaimed with it below.
-                    if not _atomic_exchange(leaf, dst):
-                        # fallback (non-Linux / exotic fs): two renames
-                        # with a microsecond missing-live window; the
-                        # old tree stays complete in trash throughout.
-                        tomb = trash / rel
-                        tomb.parent.mkdir(parents=True, exist_ok=True)
-                        dst.rename(tomb)
-                        leaf.rename(dst)
-                else:
-                    leaf.rename(dst)
-            # Touched partitions whose rewrite produced ZERO rows have
-            # no staged dir to flip in — a deletion-capable caller
-            # (expire) names them so their old dirs are REMOVED (one
-            # atomic rename to trash each), not silently kept. Without
-            # this, a partition whose every row was deleted would
-            # survive the publish intact.
-            for rel in drop_missing_partitions or []:
-                if rel in flipped:
-                    continue
-                dst = live / rel
-                if dst.exists():
-                    tomb = trash / rel
-                    tomb.parent.mkdir(parents=True, exist_ok=True)
-                    dst.rename(tomb)
-        shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)
-    else:
-        staged = live.parent / f"{live.name}.__staged_{txid}"
-        trash = live.parent / f"{live.name}.__trash_{txid}"
-        result.write.mode("overwrite").option("compression", compression).parquet(
-            str(staged)
-        )
-        with publish_lock(live):
-            if not live.exists():
-                # first publish: nothing to exchange with — the staged
-                # tree simply becomes the table (round-7 ADVICE: the
-                # exchange/trash dance raised ENOENT here, after the
-                # staged write already ran)
-                staged.rename(live)
-            elif not _atomic_exchange(live, staged):
-                live.rename(trash)
-                staged.rename(live)
-        shutil.rmtree(trash, ignore_errors=True)
-        shutil.rmtree(staged, ignore_errors=True)  # old tree after exchange
+    adopt_table(path, partition_by, spark=spark)
+    _publish_manifest_commit(
+        Path(path),
+        result,
+        partition_by,
+        compression,
+        drop_missing_partitions,
+        _uuid.uuid4().hex,
+        bloom_cols=bloom_cols,
+        expected_version=expected_version,
+        full_rewrite=full_rewrite,
+        app_versions=app_versions,
+    )
 
 
 def vacuum_publish_artifacts(path: str, min_age_seconds: float = 0.0) -> list[str]:
-    """Reclaim staging/trash remnants a crashed publish left behind.
-    They are invisible to readers (``_``/``.`` prefixes), so this is
+    """Reclaim the ``_staged_<txid>`` directories a crashed commit left
+    behind. They are invisible to readers (``_`` prefix), so this is
     space hygiene, not correctness; run it before/after batch windows.
-    Returns the removed paths.
+    Files a crash already moved into the live tree but never committed
+    are unreferenced by every snapshot — :func:`vacuum_manifests`
+    reclaims those. Returns the removed paths.
 
     ``min_age_seconds`` guards concurrent writers: an artifact younger
     than the threshold may belong to a publish IN PROGRESS in another
@@ -520,19 +356,12 @@ def vacuum_publish_artifacts(path: str, min_age_seconds: float = 0.0) -> list[st
 
     live = Path(path)
     removed = []
-    candidates = []
-    if live.is_dir():
-        candidates += [
-            p for p in live.iterdir()
-            if p.is_dir() and (
-                p.name.startswith("_staged_") or p.name.startswith("_trash_")
-            )
-        ]
-    candidates += [
-        p for p in live.parent.glob(f"{live.name}.__staged_*")
-    ] + [p for p in live.parent.glob(f"{live.name}.__trash_*")]
+    if not live.is_dir():
+        return removed
     cutoff = time.time() - min_age_seconds
-    for p in candidates:
+    for p in live.iterdir():
+        if not (p.is_dir() and p.name.startswith("_staged_")):
+            continue
         try:
             if p.stat().st_mtime > cutoff:
                 continue  # possibly a live publish — leave it
@@ -934,7 +763,7 @@ def _candidate_file_relpaths(live) -> set[str]:
     candidates (their ``new_files`` — carried files belong to committed
     snapshots). These live in the visible tree but are NOT table data:
     first-commit file adoption and "has data but no manifest" checks
-    must ignore them, or a concurrent first publish would adopt a
+    must ignore them, or a concurrent first write would adopt a
     never-audited candidate's files into the committed snapshot."""
     import json as _json
 
@@ -948,6 +777,109 @@ def _candidate_file_relpaths(live) -> set[str]:
         except (OSError, ValueError, KeyError):
             continue
     return out
+
+
+def _unescape_path_name(s: str) -> str:
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s)
+
+
+def _hive_layout(path: str, files: list[str]) -> list[str]:
+    """The partition columns a set of data files is laid out under,
+    read from their hive ``k=v`` directory names. Every file must sit
+    at the same depth under the same keys; anything else is not one
+    table layout and is refused."""
+    layouts = set()
+    for f in files:
+        dirs = f.split("/")[:-1]
+        if not all("=" in d for d in dirs):
+            raise ValueError(
+                f"cannot adopt {path}: {f} lies under a directory that is "
+                "not a hive k=v partition"
+            )
+        layouts.add(tuple(_unescape_path_name(d.split("=", 1)[0]) for d in dirs))
+    if len(layouts) > 1:
+        raise ValueError(
+            f"cannot adopt {path}: its data files sit under mixed "
+            f"partition layouts {sorted(layouts)}"
+        )
+    return list(layouts.pop()) if layouts else []
+
+
+def _active_spark() -> SparkSession | None:
+    """The running session, if any — schema inference for writers that
+    take no session argument. Never starts a JVM."""
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is None:
+        return None
+    return SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
+
+
+def adopt_table(
+    path: str,
+    partition_by: list[str] | None = None,
+    spark: SparkSession | None = None,
+    schema: T.StructType | None = None,
+) -> dict | None:
+    """Adopt a plain Parquet directory as its first manifest snapshot —
+    the lake's ``CONVERT TO DELTA``, run by every writer before it reads
+    so that all writes commit through one protocol and every rewrite
+    has a base version for its ``expected_version`` check.
+
+    Snapshot v1 records the directory's visible data files minus any
+    staged write-audit-publish candidate's files (unaudited data never
+    rides an adoption into the table). The partition layout is read
+    from the hive ``k=v`` directory names and must match a non-empty
+    ``partition_by``; files at mixed depths are refused. The recorded
+    schema is ``schema`` when given (the catalog's declared schema),
+    else the one a mergeSchema read of those files infers.
+
+    Idempotent and race-safe: it runs under :data:`publish_lock` and
+    does nothing on a table that already has a manifest. Returns the
+    current snapshot, or None when the path holds no data (the first
+    commit then creates v1 itself). After adoption the table is
+    transactional: files landed in its directory out of band are read
+    only once imported with :func:`add_files`."""
+    import uuid as _uuid
+    from pathlib import Path
+
+    live = Path(path)
+    current = read_manifest(path)
+    if current is not None or not live.is_dir():
+        return current
+    with publish_lock(live):
+        current = read_manifest(path)
+        if current is not None:
+            return current
+        files = sorted(
+            set(_data_file_relpaths(live)) - _candidate_file_relpaths(live)
+        )
+        if not files:
+            return None
+        layout = _hive_layout(path, files)
+        if partition_by and list(partition_by) != layout:
+            raise ValueError(
+                f"cannot adopt {path} with partition_by "
+                f"{list(partition_by)}: its files are laid out under "
+                f"{layout}"
+            )
+        if schema is None:
+            spark = spark or _active_spark()
+            if spark is not None:
+                schema = (
+                    _reader(spark, None)
+                    .option("basePath", path)
+                    .parquet(*[str(live / f) for f in files])
+                    .schema
+                )
+        return _commit_manifest(
+            live,
+            files,
+            layout,
+            None,
+            _uuid.uuid4().hex,
+            table_schema=schema.jsonValue() if schema is not None else None,
+        )
 
 
 #: String min/max longer than this are not recorded in manifest file
@@ -1500,7 +1432,7 @@ def _publish_manifest_commit(
     full_rewrite: bool = False,
     app_versions: dict | None = None,
 ) -> None:
-    """Manifest-mode publish body (see publish_overwrite's contract):
+    """The body of :func:`publish_overwrite` (see its contract):
     ``app_versions`` (None = carry the parent's) lets a caller commit a
     WATERMARK atomically with the state it describes — the MV refresh
     records the source snapshot its stored aggregates reflect in the
@@ -1585,15 +1517,28 @@ def _publish_manifest_commit(
                         "intervening writer's changes; re-run against "
                         "the current snapshot"
                     )
-            if partition_by and current is not None:
+            if current is not None:
                 cur_pb = current.get("partition_by", [])
-                if cur_pb != list(partition_by):
+                pb = list(partition_by or [])
+                if cur_pb != pb and (pb or not full_rewrite):
+                    if not pb:
+                        raise ValueError(
+                            f"table at {live} is hive-partitioned by "
+                            f"{cur_pb} but no partition columns were "
+                            "given: refusing the unpartitioned rewrite "
+                            "that would destroy the layout — pass the "
+                            "partition column(s)"
+                        )
                     raise ValueError(
-                        f"publish partition_by {list(partition_by)} does "
-                        f"not match the table's committed layout {cur_pb}"
-                        " — change layouts with evolve_partitioning()"
+                        f"publish partition_by {pb} does not match the "
+                        f"table's committed layout {cur_pb} — change "
+                        "layouts with evolve_partitioning()"
                     )
-                if current.get("partition_specs") and not full_rewrite:
+                if (
+                    partition_by
+                    and current.get("partition_specs")
+                    and not full_rewrite
+                ):
                     raise ValueError(
                         f"table at {live} is partition-evolved (files "
                         "under retired spec(s) remain): a partial "
@@ -1601,17 +1546,7 @@ def _publish_manifest_commit(
                         "directories — compact_in_place() it first to "
                         "migrate every file to the current spec"
                     )
-            prev_files = (
-                current["files"]
-                if current is not None
-                # first commit adopts pre-existing visible files — but
-                # never a staged WAP candidate's (unaudited data must
-                # not ride a concurrent first publish into the snapshot)
-                else sorted(
-                    set(_data_file_relpaths(live))
-                    - _candidate_file_relpaths(live)
-                )
-            )
+            prev_files = current["files"] if current is not None else []
             new_files = _move_staged_in(live, staged, staged_files)
             if full_rewrite:
                 carried = []  # result IS the whole table
@@ -1669,9 +1604,9 @@ def read_table(
     and publishes never delete committed files (only
     :func:`vacuum_manifests` does), so a reader concurrent with any
     number of publishes sees exactly one snapshot — the per-table
-    atomicity the reference gets from S3 consistent listing. Non-
-    manifest tables read the directory as before (per-partition
-    atomicity via renameat2 exchange).
+    atomicity the reference gets from S3 consistent listing. A
+    directory no writer has touched yet has no manifest and is read
+    schema-on-read, as a plain Parquet directory.
 
     When ``schema`` is declared the result's column ORDER matches it
     too: Spark always appends hive partition columns after the data
@@ -2066,9 +2001,8 @@ def append_rows(
     must advance or a replay after an all-late-data batch would stall.
 
     First append on an empty/missing path creates snapshot v1; a
-    directory with pre-existing un-manifested data raises (publish it
-    with ``manifest=True`` first — appending around a directory
-    listing would be the mixed-read window manifests exist to close).
+    plain directory that already holds data is adopted first
+    (:func:`adopt_table`), so the append lands on top of it.
 
     ``branch=`` commits onto a named branch (:func:`create_branch`)
     instead of main: the parent is the BRANCH head, every guard
@@ -2092,15 +2026,9 @@ def append_rows(
             str(live)
         )
 
-    current = _parent()
-    if current is None and live.exists() and (
-        set(_data_file_relpaths(live)) - _candidate_file_relpaths(live)
-    ):
-        raise ValueError(
-            f"table at {path} has data but no manifest — append_rows "
-            "requires manifest commits; publish_overwrite(..., "
-            "manifest=True) it first"
-        )
+    # branches fork from a committed snapshot, so only main can still
+    # be a plain directory
+    current = _parent() if branch else adopt_table(path, partition_by, spark)
     pb = list(partition_by or [])
     if current is not None and current["partition_by"] != pb:
         raise ValueError(
@@ -2292,13 +2220,9 @@ def overwrite_partitions(
     if (stream_id is None) != (batch_id is None):
         raise ValueError("stream_id and batch_id must be given together")
     live = Path(path)
-    current = read_manifest(str(live))
-    if current is None:
-        raise FileNotFoundError(
-            f"table at {path} is not manifest-committed — "
-            "overwrite_partitions requires manifest commits "
-            "(publish_overwrite(..., manifest=True) first)"
-        )
+    # a never-written path has nothing to replace: the batch lands as
+    # the first snapshot
+    current = adopt_table(path, partition_by, spark=spark) or {}
 
     def _committed(snap: dict) -> bool:
         return (
@@ -2314,7 +2238,7 @@ def overwrite_partitions(
             "overwrite_partitions needs partition columns — for a full "
             "overwrite use publish_overwrite"
         )
-    if current["partition_by"] != pb:
+    if current.get("partition_by", pb) != pb:
         raise ValueError(
             f"partition_by {pb} does not match the table's committed "
             f"layout {current['partition_by']}"
@@ -2394,7 +2318,7 @@ def overwrite_partitions(
         raise
     try:
         with publish_lock(live):
-            current = read_manifest(str(live))  # re-read under the lock
+            current = read_manifest(str(live)) or {}  # re-read under the lock
             if current.get("constraints", {}) != pre_constraints:
                 raise ConcurrentLakeModificationError(
                     f"table at {live} changed its CHECK constraints while "
@@ -2405,7 +2329,7 @@ def overwrite_partitions(
                     f"table at {live} renamed columns while this "
                     "overwrite was staging — re-run"
                 )
-            if current.get("partition_by", []) != pb or current.get(
+            if current.get("partition_by", pb) != pb or current.get(
                 "partition_specs"
             ):
                 raise ConcurrentLakeModificationError(
@@ -2415,12 +2339,13 @@ def overwrite_partitions(
             if _committed(current):
                 return None  # raced with our own replay
             new_files = _move_staged_in(live, staged, staged_files)
+            prev_files = current.get("files", [])
             kept = [
                 f
-                for f in current["files"]
+                for f in prev_files
                 if (f.rsplit("/", 1)[0] if "/" in f else "") not in touched
             ]
-            replaced = len(current["files"]) - len(kept)
+            replaced = len(prev_files) - len(kept)
             ledger = dict(current.get("app_versions", {}))
             if stream_id is not None:
                 ledger[stream_id] = batch_id
@@ -2428,7 +2353,7 @@ def overwrite_partitions(
                 live,
                 [*kept, *new_files],
                 pb,
-                current,
+                current or None,
                 txid,
                 app_versions=ledger,
                 table_schema=logical_schema,
@@ -2443,7 +2368,7 @@ def overwrite_partitions(
                 # the report understate what was replaced
                 "rows_replaced": sum(
                     int(current.get("file_rows", {}).get(f, 0))
-                    for f in current["files"]
+                    for f in prev_files
                     if f not in kept_set
                 ),
                 "partitions_replaced": sorted(touched),
@@ -2587,7 +2512,8 @@ def clone_table(src: str, dst: str, version: int | None = None) -> dict:
     if m is None:
         raise FileNotFoundError(
             f"table at {src} is not manifest-committed — clone_table "
-            "requires a manifest source (publish with manifest=True)"
+            "needs a source with committed snapshots (any lake write "
+            "adopts a plain directory)"
         )
     if dst_live.exists() and (
         (dst_live / "_manifest.json").exists()
@@ -2668,12 +2594,8 @@ def rename_column(path: str, old: str, new: str) -> dict:
     from pathlib import Path
 
     live = Path(path)
-    if read_manifest(path) is None:
-        raise ValueError(
-            f"table at {path} is not manifest-committed — rename needs "
-            "manifest snapshots; publish_overwrite(..., manifest=True) "
-            "it first"
-        )
+    if adopt_table(path) is None:
+        raise ValueError(f"table at {path} holds no data — nothing to rename")
     with publish_lock(live):
         current = read_manifest(path)
         recorded = current.get("schema")
@@ -2839,13 +2761,8 @@ def truncate_table(path: str, spark: SparkSession | None = None) -> dict:
     from pathlib import Path
 
     live = Path(path)
-    if read_manifest(path) is None:
-        raise ValueError(
-            f"table at {path} is not manifest-committed — TRUNCATE is a "
-            "snapshot commit; publish_overwrite(..., manifest=True) it "
-            "first (schema-on-read locations have no transactional "
-            "state to truncate)"
-        )
+    if adopt_table(path, spark=spark) is None:
+        raise ValueError(f"table at {path} holds no data — nothing to truncate")
     with publish_lock(live):
         current = read_manifest(path)
         file_rows = current.get("file_rows") or {}
@@ -2923,11 +2840,10 @@ def add_files(spark: SparkSession, path: str, source_dir: str) -> dict:
 
     live = Path(path)
     src = Path(source_dir)
-    if read_manifest(path) is None:
+    if adopt_table(path, spark=spark) is None:
         raise ValueError(
-            f"table at {path} is not manifest-committed — ADD FILES "
-            "imports into the transactional layout; declared-location "
-            "tables read landed files as-is"
+            f"table at {path} holds no data — ADD FILES imports into an "
+            "existing table's committed layout"
         )
     if not src.is_dir():
         raise ValueError(f"source directory {source_dir} does not exist")
@@ -3162,12 +3078,8 @@ def widen_column_type(path: str, col: str, new_type: str) -> dict:
     from pathlib import Path
 
     live = Path(path)
-    if read_manifest(path) is None:
-        raise ValueError(
-            f"table at {path} is not manifest-committed — widening "
-            "needs manifest snapshots; publish_overwrite(..., "
-            "manifest=True) it first"
-        )
+    if adopt_table(path) is None:
+        raise ValueError(f"table at {path} holds no data — nothing to widen")
     with publish_lock(live):
         current = read_manifest(path)
         recorded = current.get("schema")
@@ -3249,11 +3161,9 @@ def evolve_partitioning(path: str, new_partition_by: list[str] | None) -> dict:
     from pathlib import Path
 
     live = Path(path)
-    if read_manifest(path) is None:
+    if adopt_table(path) is None:
         raise ValueError(
-            f"table at {path} is not manifest-committed — partition "
-            "evolution needs manifest snapshots; publish_overwrite(..., "
-            "manifest=True) it first"
+            f"table at {path} holds no data — nothing to repartition"
         )
     new = list(new_partition_by or [])
     with publish_lock(live):
@@ -3366,11 +3276,11 @@ def add_constraint(
 
     F.expr(sql)  # fail fast on unparseable SQL
     live = _P(path)
-    m = read_manifest(path)
+    m = adopt_table(path, spark=spark)
     if m is None:
         raise ValueError(
-            f"table at {path} is not manifest-committed — constraints "
-            "live in the manifest"
+            f"table at {path} holds no data — constraints live in its "
+            "manifest"
         )
     existing = (
         read_table(spark, path)
@@ -3406,10 +3316,11 @@ def drop_constraint(path: str, name: str) -> dict:
     from pathlib import Path as _P
 
     live = _P(path)
+    adopt_table(path)
     with publish_lock(live):
         current = read_manifest(path)
         if current is None:
-            raise ValueError(f"table at {path} is not manifest-committed")
+            raise ValueError(f"table at {path} holds no data")
         cons = dict(current.get("constraints", {}))
         if name not in cons:
             raise KeyError(f"table at {path} has no constraint {name!r}")
@@ -3442,7 +3353,7 @@ def begin_publish(
     with :func:`commit_publish` — one atomic pointer commit — or
     discard it with :func:`abort_publish`.
 
-    Same replace semantics as ``publish_overwrite`` manifest mode:
+    Same replace semantics as ``publish_overwrite``:
     partitions present in ``result`` are replaced, the rest carried.
 
     100 TB design: the expensive Spark job (the staged write) happens
@@ -3463,15 +3374,7 @@ def begin_publish(
 
     txid = _uuid.uuid4().hex
     live = Path(path)
-    current = read_manifest(path)
-    if current is None and live.exists() and (
-        set(_data_file_relpaths(live)) - _candidate_file_relpaths(live)
-    ):
-        raise ValueError(
-            f"table at {path} has data but no manifest — write-audit-"
-            "publish needs manifest commits; publish_overwrite(..., "
-            "manifest=True) it first"
-        )
+    current = adopt_table(path, partition_by, spark=spark)
     if current is not None and current["partition_by"] != list(
         partition_by or []
     ):
@@ -3887,6 +3790,9 @@ def vacuum_manifests(
                 continue  # possibly an in-flight publish's moved file
             if not dry_run:
                 p.unlink()
+                # the Hadoop checksum sibling a Spark-written (adopted)
+                # file carries would otherwise keep its directory alive
+                p.with_name(f".{p.name}.crc").unlink(missing_ok=True)
             files_removed += 1
         except OSError:
             continue
@@ -3983,8 +3889,8 @@ def merge_into(
     updates side (one collect of distinct partition values, bounded by
     the update batch, not the table), the old-rows read is
     partition-pruned to exactly those directories, and the rewrite is
-    staged + swapped per partition (``publish_overwrite``) so untouched
-    partitions' files are never listed, read, or replaced. Cost scales
+    one manifest commit (``publish_overwrite``) that carries untouched
+    partitions' files without listing, reading, or replacing them. Cost scales
     with the touched slice, not table size. Unpartitioned tables degrade
     to a full rewrite — at scale, partition your lake. Returns
     ``{"rows_updated", "rows_inserted", "partitions_rewritten"}``.
@@ -4008,17 +3914,15 @@ def merge_into(
     declared schema) and the read plans ZERO footer reads while old
     files still NULL-fill evolved columns.
 
-    Durability contract (round-6 VERDICT #3 closed the round-4 crash
-    window): publication is stage-then-rename (:func:`publish_overwrite`).
-    A crash during the rewrite job leaves the live table byte-identical
-    (everything lands in an underscore-invisible staging dir); a crash
-    during the swap leaves every partition either fully-old or fully-new
-    — never torn, old files never deleted before their replacement is
-    complete. Re-running the batch converges (the operation is
-    idempotent given the same ``updates``); leftover staging/trash is
-    reclaimed by :func:`vacuum_publish_artifacts`. This matches the
-    reference's atomic-object-PUT model (main.tf:25-30) at partition
-    granularity.
+    Durability contract: publication is one manifest commit
+    (:func:`publish_overwrite`). A crash before the pointer replace
+    leaves readers on the old snapshot — staging is underscore-invisible
+    and moved-in files are unreferenced; old files are never deleted by
+    the commit. Re-running the batch converges (the operation is
+    idempotent given the same ``updates``); leftovers are reclaimed by
+    :func:`vacuum_publish_artifacts` and :func:`vacuum_manifests`. This
+    matches the reference's atomic-object-PUT model (main.tf:25-30) at
+    table granularity.
     """
     # Pin the updates batch ONCE: the merged frame AND the reported stats
     # must derive from the same materialization, or a nondeterministic
@@ -4031,27 +3935,25 @@ def merge_into(
     if not updates_pinned:
         updates = updates.localCheckpoint(eager=True)
     else:
-        # Guardrail (r16 ADVICE): trust-but-verify the caller's pin —
-        # a merely-deterministic-LOOKING but unpinned plan would
-        # silently reintroduce the stats-divergence bug. A checkpointed
-        # frame's plan is (or roots in) a scan of materialized RDD
-        # blocks; a cached frame carries InMemoryRelation.
-        plan = updates._jdf.queryExecution().optimizedPlan().toString()
-        if (
-            "LogicalRDD" not in plan
-            and "InMemoryRelation" not in plan
-            and "Relation" not in plan.splitlines()[0]
-        ):
+        # Trust-but-verify the caller's pin, failing closed: a
+        # merely-deterministic-LOOKING but unpinned plan would silently
+        # reintroduce the stats-divergence bug. The optimized plan's
+        # ROOT must be the materialization itself — a checkpoint's
+        # LogicalRDD or a cache's InMemoryRelation. Anything built on
+        # top (pinned.filter(...), a projection) re-evaluates per use.
+        plan = updates._jdf.queryExecution().optimizedPlan()
+        if plan.nodeName() not in ("LogicalRDD", "InMemoryRelation"):
             raise ValueError(
-                "merge_into(updates_pinned=True) requires an actually "
-                "materialized updates frame (localCheckpoint or cache); "
-                "got an unpinned plan:\n" + plan[:500]
+                "merge_into(updates_pinned=True) requires the "
+                "materialized frame itself (localCheckpoint or cache), "
+                "not a plan built on top of it; got:\n"
+                + plan.toString()[:500]
             )
     # Optimistic concurrency: remember which snapshot this rewrite is
     # computed against (read_table's file list is fixed at planning
-    # time); the publish refuses to commit over a different one.
-    pre = read_manifest(path)
-    base_version = pre["version"] if pre else None
+    # time); the publish refuses to commit over a different one. A
+    # plain directory is adopted first, so there is always a base.
+    pre = adopt_table(path, partition_by, spark=spark, schema=schema)
     if partition_by:
         missing = [c for c in partition_by if c not in updates.columns]
         if missing:
@@ -4083,7 +3985,7 @@ def merge_into(
     merged = keep.select(*cols).unionByName(updates.select(*cols))
     if collect_stats:
         # Key-overlap stats: column-pruned semi-join count over the
-        # pinned updates, evaluated BEFORE the swap mutates ``path``.
+        # pinned updates, evaluated BEFORE the commit moves ``path``.
         # ``collect_stats=False`` skips these two jobs — the right call
         # for high-frequency callers that never read them (CDC
         # micro-batches); the updates localCheckpoint above stays
@@ -4103,7 +4005,7 @@ def merge_into(
         merged,
         partition_by,
         bloom_cols=bloom_cols,
-        expected_version=base_version,
+        expected_version=pre["version"] if pre else 0,
     )
     return {
         "rows_updated": n_updated,
@@ -4162,7 +4064,7 @@ def scd2_apply(
     start). Closing a row never changes its ``from_col``, so every
     touched row stays in its partition and the rewrite is bounded to
     the partitions that actually hold closing rows plus the ``as_of``
-    month — written with dynamic ``partitionOverwriteMode`` so
+    month — committed as replaced partitions of one manifest commit, so
     untouched partitions' files are never listed, read for rewrite, or
     replaced (byte-identical; pinned in tests/test_lake_features.py).
     The change-detection read still scans current rows of every
@@ -4170,10 +4072,9 @@ def scd2_apply(
     current-rows projection or max-month stats would prune that too.
 
     Contract: update keys unique per batch. Same durability contract as
-    merge_into: stage-then-rename publication (publish_overwrite) — a
-    crash mid-rewrite leaves the live table byte-identical, a crash
-    mid-swap leaves whole old or whole new partitions, and re-running
-    the batch converges (an already-applied change compares
+    merge_into: one manifest commit (publish_overwrite) — a crash at
+    any point before the pointer replace leaves readers on the old
+    snapshot, and re-running the batch converges (an already-applied change compares
     unchanged). Scale: one key-join against current rows only (AQE
     broadcasts a small batch), map-only version arithmetic, rewrite
     bounded by touched partitions.
@@ -4183,8 +4084,12 @@ def scd2_apply(
     missing = [c for c in [*key_cols, *change_cols] if c not in updates.columns]
     if missing:
         raise ValueError(f"updates is missing key/change columns: {missing}")
-    pre = read_manifest(path)  # optimistic concurrency (merge_into's note)
-    base_version = pre["version"] if pre else None
+    pre = adopt_table(  # optimistic concurrency (merge_into's note)
+        path,
+        [partition_col] if partition_col is not None else None,
+        spark=spark,
+        schema=schema,
+    )
     cur = read_table(spark, path, schema)
     if partition_col is not None and partition_col not in cur.columns:
         raise ValueError(f"table at {path} has no partition column {partition_col!r}")
@@ -4294,7 +4199,8 @@ def scd2_apply(
     )
     out_cols = cur.columns
     # No localCheckpoint: publish_overwrite stages to a directory the
-    # plan never reads, then swaps — no read-under-overwrite hazard.
+    # plan never reads and deletes nothing — no read-under-overwrite
+    # hazard.
     result = (
         untouched.select(*out_cols)
         .unionByName(closing.select(*out_cols))
@@ -4312,7 +4218,7 @@ def scd2_apply(
         path,
         result,
         [partition_col] if partition_col is not None else None,
-        expected_version=base_version,
+        expected_version=pre["version"] if pre else 0,
     )
     return {
         "rows_closed": n_closed,
@@ -4393,32 +4299,16 @@ def delete_rows(
     part_cols = (
         [partition_col] if isinstance(partition_col, str) else partition_col
     )
-    pre = read_manifest(path)  # optimistic concurrency (merge_into's note)
-    base_version = pre["version"] if pre else None
+    # optimistic concurrency (merge_into's note); an unpartitioned
+    # rewrite of a partitioned table is refused by the publish's layout
+    # guard
+    pre = adopt_table(path, part_cols, spark=spark, schema=schema)
     cur = read_table(spark, path, schema)
     if part_cols:
         missing = [c for c in part_cols if c not in cur.columns]
         if missing:
             raise ValueError(
                 f"table at {path} has no partition columns {missing}"
-            )
-    else:
-        # Fail-closed layout guard (round-7 ADVICE): an unpartitioned
-        # full rewrite of a hive-partitioned table would swap in a tree
-        # WITHOUT partition dirs — the layout is silently destroyed and
-        # a later partitioned publish would flip leaf dirs in next to
-        # the leftover root files, duplicating rows.
-        from pathlib import Path as _P
-
-        root = _P(path)
-        if root.is_dir() and any(
-            c.is_dir() and "=" in c.name and not c.name.startswith(("_", "."))
-            for c in root.iterdir()
-        ):
-            raise ValueError(
-                f"table at {path} is hive-partitioned but no partition_col "
-                "was given: refusing the unpartitioned full rewrite that "
-                "would destroy the layout — pass the partition column(s)"
             )
     matched = cur.filter(pred)
     if part_cols:
@@ -4460,16 +4350,15 @@ def delete_rows(
         keep,
         part_cols,
         drop_missing_partitions=drop,
-        expected_version=base_version,
+        expected_version=pre["version"] if pre else 0,
     )
-    if read_manifest(path) is not None:
-        # Erasure dominates time travel (vacuum_manifests' GDPR note):
-        # the rewrite produced a clean CURRENT snapshot, but matched
-        # rows still exist in retained historical snapshots' files —
-        # truncate history so the "no reader can observe a matched row"
-        # contract holds for version= readers too. drop_tags: erasure
-        # dominates tag pinning the same way it dominates time travel.
-        vacuum_manifests(path, keep_last=1, drop_tags=True)
+    # Erasure dominates time travel (vacuum_manifests' GDPR note): the
+    # rewrite produced a clean CURRENT snapshot, but matched rows still
+    # exist in retained historical snapshots' files — truncate history
+    # so the "no reader can observe a matched row" contract holds for
+    # version= readers too. drop_tags: erasure dominates tag pinning the
+    # same way it dominates time travel.
+    vacuum_manifests(path, keep_last=1, drop_tags=True)
     return {"rows_deleted": n_deleted, "partitions_rewritten": n_partitions}
 
 
@@ -4534,8 +4423,8 @@ def update_rows(
                 "rewrite replaces — move rows via delete+append or a "
                 "keyed merge_into instead"
             )
-    pre = read_manifest(path)  # optimistic concurrency (merge_into's note)
-    base_version = pre["version"] if pre else None
+    # optimistic concurrency and layout guard: delete_rows' notes
+    pre = adopt_table(path, part_cols, spark=spark, schema=schema)
     cur = read_table(spark, path, schema)
     unknown = sorted(set(set_map) - set(cur.columns))
     if unknown:
@@ -4545,21 +4434,6 @@ def update_rows(
         if missing:
             raise ValueError(
                 f"table at {path} has no partition columns {missing}"
-            )
-    else:
-        # same fail-closed layout guard as delete_rows: refuse the
-        # unpartitioned full rewrite of a hive-partitioned tree
-        from pathlib import Path as _P
-
-        root = _P(path)
-        if root.is_dir() and any(
-            c.is_dir() and "=" in c.name and not c.name.startswith(("_", "."))
-            for c in root.iterdir()
-        ):
-            raise ValueError(
-                f"table at {path} is hive-partitioned but no partition_col "
-                "was given: refusing the unpartitioned full rewrite that "
-                "would destroy the layout — pass the partition column(s)"
             )
     matched = cur.filter(pred)
     if part_cols:
@@ -4606,7 +4480,7 @@ def update_rows(
         path,
         out,
         part_cols,
-        expected_version=base_version,
+        expected_version=pre["version"] if pre else 0,
     )
     return {"rows_updated": n_updated, "partitions_rewritten": n_partitions}
 
@@ -4661,13 +4535,9 @@ def delete_rows_mor(
         )
     F.expr(predicate)  # fail fast on unparseable SQL
     live = _P(path)
-    m = read_manifest(path)
+    m = adopt_table(path, spark=spark)
     if m is None:
-        raise ValueError(
-            f"table at {path} is not manifest-committed — tombstones "
-            "live in the manifest; use delete_rows (eager) or "
-            "publish_overwrite(..., manifest=True) first"
-        )
+        raise ValueError(f"table at {path} holds no data — nothing to delete")
     rows_deleted = None
     if count:
         raw = F.expr(predicate).cast("boolean")
@@ -4783,7 +4653,11 @@ def purge_deleted_rows(
             )
     finally:
         shutil.rmtree(staged, ignore_errors=True)
-    assert not snap.get("delete_predicates"), snap.get("delete_predicates")
+    if snap.get("delete_predicates"):
+        raise RuntimeError(
+            f"purge committed v{snap['version']} with tombstones still in "
+            f"force: {snap['delete_predicates']}"
+        )
     return {
         "files_rewritten": len(covered),
         "files_written": len(new_files),
@@ -4900,11 +4774,9 @@ def optimize_binpack(
     from pathlib import Path
 
     live = Path(path)
-    m = read_manifest(path)
+    m = adopt_table(path, spark=spark)
     if m is None:
-        raise ValueError(
-            f"table at {path} is not manifest-committed — nothing to optimize"
-        )
+        raise ValueError(f"table at {path} holds no data — nothing to optimize")
     if m.get("partition_specs"):
         raise ValueError(
             f"table at {path} is partition-evolved — compact_in_place() "
@@ -5072,20 +4944,12 @@ def compact_in_place(
     from pathlib import Path
 
     live = Path(path)
-    m = read_manifest(path)
-    if m is not None:
-        # manifest table: only the CURRENT snapshot's files are being
-        # compacted (history keeps its own files until vacuum)
-        files = [live / f for f in m["files"]]
-    else:
-        files = [
-            p
-            for p in live.rglob("*.parquet")
-            if p.is_file()
-            and not any(
-                part.startswith(("_staged_", "_trash_")) for part in p.parts
-            )
-        ]
+    m = adopt_table(path, partition_by, spark=spark, schema=schema)
+    if m is None:
+        raise ValueError(f"table at {path} holds no data — nothing to compact")
+    # only the CURRENT snapshot's files are compacted (history keeps its
+    # own files until vacuum)
+    files = [live / f for f in m["files"]]
     total = sum(p.stat().st_size for p in files)
     df = read_table(spark, path, schema)
     n_out = max(1, math.ceil(total / target_file_bytes))
@@ -5105,25 +4969,13 @@ def compact_in_place(
         df,
         partition_by,
         compression=compression,
-        expected_version=m["version"] if m is not None else None,
+        expected_version=m["version"],
         # compaction reads the WHOLE table and rewrites it — declaring
-        # that lets the manifest publish carry nothing, which is also
-        # what migrates a partition-evolved table back to a single spec
-        full_rewrite=m is not None,
+        # that lets the publish carry nothing, which is also what
+        # migrates a partition-evolved table back to a single spec
+        full_rewrite=True,
     )
-    m2 = read_manifest(path)
-    if m2 is not None:
-        n_after = len(m2["files"])
-    else:
-        n_after = sum(
-            1
-            for p in Path(path).rglob("*.parquet")
-            if p.is_file()
-            and not any(
-                part.startswith(("_staged_", "_trash_")) for part in p.parts
-            )
-        )
-    return len(files), n_after
+    return len(files), len(read_manifest(path)["files"])
 
 
 def write_partitioned(

@@ -307,10 +307,12 @@ def stream_state_partitions(spark: SparkSession, n_bytes: int) -> int:
     - At warehouse scale (TBs/day) the byte term exceeds the clamp and
       the stream runs at 8 x cluster cores — a scheduling-friendly
       multiple, with each state shard still well under the
-      memory-pressure zone. The count is derived from DATA, not from
-      the local core count, so an 8-core and a 32-core run of the same
-      input choose the same layout (the state-store partition count is
-      a durable layout choice fixed at first checkpoint).
+      memory-pressure zone. Below the clamp the count depends on the
+      input bytes alone, so an 8-core and a 32-core run of the same
+      input choose the same layout; once the byte term reaches 8 x
+      cores the clamp binds and the layout follows the core count.
+      Either way the state-store partition count is a durable layout
+      choice fixed at first checkpoint.
 
     Callers pass the result to :func:`run_stream_to_batch` /
     :func:`run_stream_durable`; restarts from an existing checkpoint
