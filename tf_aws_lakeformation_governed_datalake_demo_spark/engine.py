@@ -13,15 +13,21 @@ polling client unchanged.
 from __future__ import annotations
 
 import enum
+import os
+import re
+import time
 import uuid
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import statements as _st
 from .catalog import GovernedCatalog
-from .governance import PermissionDeniedError, Principal
+from .governance import ALL, PermissionDeniedError, Principal
+from .sources import lake as _lake
 
 # Equi-height histogram resolution for ANALYZE ... FOR COLUMNS
 # (Spark CBO's spark.sql.statistics.histogram.numBins defaults to 254;
@@ -75,6 +81,31 @@ class QueryExecution:
 
 
 
+def _principal_name(principal) -> str | None:
+    return principal.name if isinstance(principal, Principal) else principal
+
+
+def _structure_copy(src, database: str, name: str, location: str):
+    """A new table's catalog entry with ``src``'s structure — declared
+    schema, format, comments, column tags, partition keys AND its
+    pending-column quarantine (a copy must not launder unapproved
+    evolved columns into visibility). Policy objects (filters, grants,
+    LF tags on the resource) do not travel: the copy is a NEW resource."""
+    from .catalog import TableDef
+
+    return TableDef(
+        database=database,
+        name=name,
+        location=location,
+        schema=src.schema,
+        format=src.format,
+        column_comments=dict(src.column_comments),
+        column_tags={c: dict(v) for c, v in src.column_tags.items()},
+        partition_keys=tuple(src.partition_keys),
+        pending_columns=set(src.pending_columns),
+    )
+
+
 def _local_df(spark, rows, schema):
     """Driver-local result rows as a ONE-partition DataFrame.
 
@@ -89,6 +120,111 @@ def _local_df(spark, rows, schema):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(list(rows), 1), schema
     )
+
+
+class _Action(NamedTuple):
+    """One :meth:`Engine.maintain` action's contract: the kwargs it
+    requires (passed and not None); the suffix of its audit line,
+    rendered from the call's kwargs once every required one is there;
+    and, for a verb that must not rewrite derived materialized-view
+    state, the verb that refusal names."""
+
+    required: tuple = ()
+    suffix: Callable[[dict], str] | None = None
+    refuse_mv: str | None = None
+
+
+def _where(kw: dict) -> str:
+    # the erasure/update predicate is recorded VERBATIM: a
+    # right-to-be-forgotten trail must show exactly WHAT was deleted,
+    # and a denied attempt must show what was attempted
+    p = kw.get("predicate")
+    return f" WHERE {p}" if p is not None else ""
+
+
+def _named_at(kw: dict) -> str:
+    v = kw.get("to_version")
+    return f" {kw['name']}" + (f" AT VERSION {v}" if v is not None else "")
+
+
+def _constraint(kw: dict) -> str:
+    expr = f" CHECK ({kw['expr']})" if "expr" in kw else ""
+    return f" {kw['constraint']}{expr}"
+
+
+_MAINTAIN_ACTIONS = {
+    "compact": _Action(),
+    "optimize_binpack": _Action(
+        suffix=lambda kw: (
+            f" WHERE {kw['partition_where']}"
+            if kw.get("partition_where")
+            else ""
+        )
+    ),
+    "expire_versions": _Action(),
+    "vacuum_artifacts": _Action(),
+    "delete_rows": _Action((), _where, "maintain('delete_rows')"),
+    "delete_rows_mor": _Action((), _where, "maintain('delete_rows_mor')"),
+    "update_rows": _Action(
+        ("assignments", "predicate"),
+        lambda kw: " SET "
+        + ", ".join(f"{c} = {e}" for c, e in kw["assignments"].items())
+        + _where(kw),
+        "maintain('update_rows')",
+    ),
+    "purge_deletes": _Action(),
+    "expire_snapshots": _Action(
+        suffix=lambda kw: (
+            f" OLDER THAN {kw['older_than']:.3f}"
+            if kw.get("older_than") is not None
+            else ""
+        )
+        + (" DRY RUN" if kw.get("dry_run") else "")
+    ),
+    "rollback": _Action(
+        ("to_version",), lambda kw: f" TO VERSION {kw['to_version']}"
+    ),
+    "evolve_partitioning": _Action(
+        ("new_partition_by",),
+        lambda kw: f" TO ({', '.join(kw['new_partition_by'])})",
+    ),
+    "tag": _Action(("name",), _named_at),
+    "drop_tag": _Action(("name",), _named_at),
+    "create_branch": _Action(("name",)),
+    "fast_forward": _Action(("name",)),
+    "drop_branch": _Action(("name",)),
+    "retrain_ivf": _Action(),
+    "rename_column": _Action(
+        ("old", "new"), lambda kw: f" {kw['old']} TO {kw['new']}"
+    ),
+    "drop_column": _Action(("column",), lambda kw: f" {kw['column']}"),
+    "widen_column": _Action(
+        ("column", "ddl_type"),
+        lambda kw: f" {kw['column']} TYPE {kw['ddl_type']}",
+        "ALTER COLUMN TYPE",
+    ),
+    "add_files": _Action(
+        ("source",), lambda kw: f" '{kw['source']}'", "ALTER TABLE ADD FILES"
+    ),
+    "msck_repair": _Action(),
+    "truncate": _Action(refuse_mv="TRUNCATE TABLE"),
+    "add_constraint": _Action(
+        ("constraint", "expr"), _constraint, "ALTER TABLE ADD CONSTRAINT"
+    ),
+    "drop_constraint": _Action(
+        ("constraint",), _constraint, "ALTER TABLE DROP CONSTRAINT"
+    ),
+    "drop_partition": _Action(
+        ("spec",),
+        # verbatim-spec trail: the audit shows exactly WHICH partition
+        # was retired (or attempted)
+        lambda kw: " PARTITION ("
+        + ", ".join(f"{c} = {v!r}" for c, v in kw["spec"])
+        + ")"
+        + (" IF EXISTS" if kw.get("if_exists") else ""),
+        "ALTER TABLE DROP PARTITION",
+    ),
+}
 
 
 class Engine:
@@ -399,9 +535,7 @@ class Engine:
 
         from .statements import split_statements
 
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
+        name = _principal_name(principal)
         stmts = split_statements(script)
         if not stmts:
             raise ValueError("empty script")
@@ -592,7 +726,7 @@ class Engine:
 
         from .statements import parse_statement
 
-        name = principal.name if isinstance(principal, Principal) else principal
+        name = _principal_name(principal)
         qe = QueryExecution(query_id=uuid.uuid4().hex, sql=sql, principal=name)
         self.executions[qe.query_id] = qe
         self.metrics["queries_submitted"] += 1
@@ -782,7 +916,264 @@ class Engine:
                 raise
         return qe
 
-    # ----------------------------------------- statement dispatch (r10)
+    # ---------------------------------------------- governance primitives
+    def _holds(self, principal: str, database: str, resource: str, perm) -> bool:
+        """``principal`` holds an UNCONDITIONED ``perm`` grant on the
+        resource (no data-cells filter, no tag exclusion)."""
+        return any(
+            g.permission == perm
+            and g.via_filter is None
+            and g.via_tag_exclude is None
+            for g in self.catalog.grants_for(principal, database, resource)
+        )
+
+    def _ungated(self, name) -> bool:
+        """No grant check applies: governance is off or ``name`` is a
+        data-lake admin (main.tf:82-91)."""
+        return not self.catalog.governance_enabled or name in self.catalog.admins
+
+    def _owns(self, name, database: str, resource: str) -> bool:
+        """The ownership rule of every destructive or unfiltered verb:
+        :meth:`_ungated`, or an unconditioned ALL grant on the resource
+        — SELECT, even unfiltered, is read permission and does not
+        qualify."""
+        if self._ungated(name):
+            return True
+        return name is not None and self._holds(name, database, resource, ALL)
+
+    def _visible(self, name, database: str, resource: str | None = None) -> bool:
+        """The grant-aware listing rule (implicit deny, G6, hides even
+        existence): admins see everything; anyone else sees an object
+        they hold SOME grant on — ``resource=None`` asks for any grant
+        inside ``database``."""
+        if self._ungated(name):
+            return True
+        if name is None:
+            return False
+        if resource is None:
+            return any(
+                g.principal == name and g.database == database
+                for g in self.catalog.grants
+            )
+        return bool(self.catalog.grants_for(name, database, resource))
+
+    def _gate(
+        self, name, query: str, tables: list, *, admin_only: bool = False,
+        owner: tuple | None = None, denied: str = "", refusal: str = "",
+    ) -> None:
+        """Apply one verb's rule: none, admin-only, or :meth:`_owns` on
+        ``owner`` = (database, resource). A refusal records the
+        ``denied`` audit line and raises PermissionDeniedError."""
+        if owner is not None:
+            allowed = self._owns(name, *owner)
+        elif admin_only:
+            allowed = self._ungated(name)
+        else:
+            return
+        if not allowed:
+            self.catalog.audit.record(
+                name or "<none>", query, tables, [], "denied", error=denied
+            )
+            raise PermissionDeniedError(refusal)
+
+    @contextmanager
+    def _governed(
+        self, name, query: str, tables: list, *, admin_only: bool = False,
+        owner: tuple | None = None, denied: str = "", refusal: str = "",
+        ok: str = "succeeded",
+    ):
+        """The gate-and-audit path of every governed verb: :meth:`_gate`,
+        then the body, then ONE action line for ``query`` — ``ok`` on
+        success; on an exception the body did not audit itself,
+        ``failed`` with the exception text (then re-raised). The body
+        receives ``audit(status, error)`` for its own refusals (a
+        refusal it records suppresses the generic ``failed`` line)."""
+        self._gate(
+            name, query, tables, admin_only=admin_only, owner=owner,
+            denied=denied, refusal=refusal,
+        )
+        recorded: list[str] = []
+
+        def audit(status: str, error: str | None = None) -> None:
+            recorded.append(status)
+            self.catalog.audit.record(
+                name or "<none>", query, tables, [], status, error=error
+            )
+
+        try:
+            yield audit
+        except Exception as exc:
+            if not recorded:
+                audit("failed", f"{type(exc).__name__}: {exc}")
+            raise
+        audit(ok)
+
+    @contextmanager
+    def _rewritten(self, sql: str, principal, filters_out=None):
+        """``sql`` rewritten for the submitting principal, and the
+        objects it touched; the governed temp views it created are
+        dropped on exit. spark.sql analyzes eagerly, so a DataFrame
+        built inside the block outlives them (no governed alias
+        outlives the statement)."""
+        created: list[str] = []
+        try:
+            yield self.catalog._rewrite_sql(
+                sql, principal, _filters_out=filters_out, _views_out=created
+            )
+        finally:
+            for v in created:
+                self.spark.catalog.dropTempView(v)
+
+    # ------------------------------------------------- statement dispatch
+    # Statements that are exactly one maintain() action: (action, its
+    # kwargs, result schema, result row).
+    _MAINTAIN_STATEMENTS = {
+        _st.DeleteStatement: (
+            "delete_rows",
+            lambda s: {"predicate": s.predicate},
+            "rows_deleted long, partitions_rewritten long",
+            lambda s, r: (r["rows_deleted"], r["partitions_rewritten"]),
+        ),
+        _st.UpdateStatement: (
+            "update_rows",
+            lambda s: {
+                "assignments": dict(s.assignments),
+                "predicate": s.predicate,
+            },
+            "rows_updated long, partitions_rewritten long",
+            lambda s, r: (r["rows_updated"], r["partitions_rewritten"]),
+        ),
+        _st.RenameColumnStatement: (
+            "rename_column",
+            lambda s: {"old": s.old, "new": s.new},
+            "table string, old string, new string",
+            lambda s, r: (s.target, s.old, s.new),
+        ),
+        _st.DropColumnStatement: (
+            "drop_column",
+            lambda s: {"column": s.column},
+            "table string, dropped_column string",
+            lambda s, r: (s.target, s.column),
+        ),
+        _st.WidenColumnStatement: (
+            "widen_column",
+            lambda s: {"column": s.column, "ddl_type": s.ddl_type},
+            "table string, column string, new_type string",
+            lambda s, r: (s.target, s.column, s.ddl_type),
+        ),
+        _st.MsckRepairStatement: (
+            "msck_repair",
+            lambda s: {},
+            "table string, partitions long, files_indexed long, "
+            "new_files long, rows_indexed long",
+            lambda s, r: (
+                s.target,
+                int(r["partitions"]),
+                int(r["files_indexed"]),
+                int(r["new_files"]),
+                int(r["rows_indexed"]),
+            ),
+        ),
+        _st.TruncateTableStatement: (
+            "truncate",
+            lambda s: {},
+            "table string, rows_removed long, version long",
+            lambda s, r: (s.target, int(r["rows_removed"]), int(r["version"])),
+        ),
+        _st.AddConstraintStatement: (
+            "add_constraint",
+            lambda s: {"constraint": s.name, "expr": s.expr},
+            "table string, constraint string, expr string, status string",
+            lambda s, r: (s.target, s.name, s.expr, "added"),
+        ),
+        _st.DropConstraintStatement: (
+            "drop_constraint",
+            lambda s: {"constraint": s.name},
+            "table string, constraint string, status string",
+            lambda s, r: (s.target, s.name, "dropped"),
+        ),
+        _st.DropPartitionStatement: (
+            "drop_partition",
+            lambda s: {"spec": s.spec, "if_exists": s.if_exists},
+            "table string, partition string, files_removed long, "
+            "rows_removed long, version long",
+            lambda s, r: (
+                s.target,
+                r["partition"],
+                int(r["files_removed"]),
+                int(r["rows_removed"]),
+                int(r["version"]) if r["version"] is not None else None,
+            ),
+        ),
+        _st.AddFilesStatement: (
+            "add_files",
+            lambda s: {"source": s.location},
+            "table string, files_added long, rows_added long, version long",
+            lambda s, r: (
+                s.target,
+                int(r["files_added"]),
+                int(r["rows_added"]),
+                int(r["version"]),
+            ),
+        ),
+    }
+    # One handler per statements.py dataclass, resolved by NAME on each
+    # call so a wrapped method is the one that runs.
+    _HANDLERS = {
+        **{cls: "_stmt_maintain" for cls in _MAINTAIN_STATEMENTS},
+        _st.CtasStatement: "_stmt_ctas",
+        _st.CloneStatement: "_stmt_clone",
+        _st.CreateDatabaseStatement: "_stmt_create_database",
+        _st.CreateTableStatement: "_stmt_create_table",
+        _st.CreateTableLikeStatement: "_stmt_create_table",
+        _st.DropTableStatement: "_stmt_drop_table",
+        _st.GrantStatement: "_stmt_grant",
+        _st.RevokeStatement: "_stmt_revoke",
+        _st.UnloadStatement: "_stmt_unload",
+        _st.CreateViewStatement: "_stmt_create_view",
+        _st.DropViewStatement: "_stmt_drop_view",
+        _st.InsertStatement: "_stmt_insert",
+        _st.PrepareStatement: "_stmt_prepare",
+        _st.ExecuteStatement: "_stmt_execute",
+        _st.ExplainStatement: "_stmt_explain",
+        _st.AddColumnsStatement: "_stmt_add_columns",
+        _st.MergeStatement: "_stmt_merge",
+        _st.OptimizeStatement: "_stmt_optimize",
+        _st.VacuumStatement: "_stmt_vacuum",
+        _st.CreateMVStatement: "_stmt_create_mv",
+        _st.RefreshMVStatement: "_stmt_refresh_mv",
+        _st.DropMVStatement: "_stmt_drop_mv",
+        _st.AnalyzeStatement: "_stmt_analyze",
+        _st.ShowDatabasesStatement: "_stmt_show_databases",
+        _st.ShowTablesStatement: "_stmt_show_tables",
+        _st.ShowViewsStatement: "_stmt_show_views",
+        _st.ShowPartitionsStatement: "_stmt_show_partitions",
+        _st.ShowGrantsStatement: "_stmt_show_grants",
+        _st.ShowStatsStatement: "_stmt_show_stats",
+        _st.ShowColumnsStatement: "_stmt_show_columns",
+        _st.ShowCreateTableStatement: "_stmt_show_create_table",
+        _st.DescribeStatement: "_stmt_describe",
+        _st.DescribeDatabaseStatement: "_stmt_describe_database",
+        _st.DescribeDetailStatement: "_stmt_describe_detail",
+        _st.DescribeFilesStatement: "_stmt_describe_files",
+        _st.DescribeHistoryStatement: "_stmt_describe_history",
+    }
+    # Verbs whose statement audit line names the target even when they
+    # fail; every other verb's line names it once it succeeded (or once
+    # the introspection gate admitted the principal).
+    _TARGET_BEFORE_RUN = frozenset(
+        {
+            _st.DropTableStatement,
+            _st.GrantStatement,
+            _st.RevokeStatement,
+            _st.ShowGrantsStatement,
+            _st.AnalyzeStatement,
+            _st.ShowStatsStatement,
+            _st.OptimizeStatement,
+            _st.VacuumStatement,
+        }
+    )
+
     def _run_statement(self, stmt, principal, qe: QueryExecution) -> DataFrame:
         """Execute a parsed governed statement (statements.py) and
         return its result set as a DataFrame — DML verbs return their
@@ -791,235 +1182,182 @@ class Engine:
 
         Every mutation routes through the SAME choke points the Python
         API uses — :meth:`maintain` for DELETE/UPDATE/OPTIMIZE/VACUUM
-        (admin-or-ALL gate, verbatim audit, lake-root guard, pending-
-        column fail-close) and the MV lifecycle methods — so the SQL
-        surface can never do what the API surface would refuse. MERGE
-        reads its USING select THROUGH the governance rewrite as the
-        submitting principal, then applies the same write gate. Audit:
+        and the ALTERs (admin-or-ALL gate, verbatim audit, lake-root
+        guard, pending-column fail-close) and the MV lifecycle methods
+        — and every gate is :meth:`_gate`, so the SQL surface can never
+        do what the API surface would refuse. MERGE reads its USING
+        select THROUGH the governance rewrite as the submitting
+        principal, then applies the same write gate. Audit:
         ``_execute`` records the verbatim statement; the underlying
         action records its own line (two-line trail: what was asked,
-        what ran)."""
-        from pyspark.sql import functions as F
+        what ran). ``qe.tables`` defaults to the statement's target."""
+        handler = self._HANDLERS.get(type(stmt))
+        if handler is None:
+            raise ValueError(f"unhandled statement {type(stmt).__name__}")
+        target = getattr(stmt, "target", None)
+        if type(stmt) in self._TARGET_BEFORE_RUN:
+            qe.tables = [target]
+        df = getattr(self, handler)(
+            stmt, principal, _principal_name(principal), qe
+        )
+        if target is not None and not qe.tables:
+            qe.tables = [target]
+        return df
 
-        from .statements import (
-            AddColumnsStatement,
-            AnalyzeStatement,
-            CloneStatement,
-            CreateDatabaseStatement,
-            CreateMVStatement,
-            CreateTableLikeStatement,
-            CreateTableStatement,
-            CreateViewStatement,
-            CtasStatement,
-            DeleteStatement,
-            DescribeDatabaseStatement,
-            DescribeDetailStatement,
-            DescribeHistoryStatement,
-            DescribeStatement,
-            AddConstraintStatement,
-            AddFilesStatement,
-            DescribeFilesStatement,
-            MsckRepairStatement,
-            TruncateTableStatement,
-            DropColumnStatement,
-            DropConstraintStatement,
-            DropPartitionStatement,
-            WidenColumnStatement,
-            DropMVStatement,
-            DropTableStatement,
-            DropViewStatement,
-            ExecuteStatement,
-            ExplainStatement,
-            GrantStatement,
-            InsertStatement,
-            MergeStatement,
-            OptimizeStatement,
-            PrepareStatement,
-            RefreshMVStatement,
-            RenameColumnStatement,
-            RevokeStatement,
-            ShowColumnsStatement,
-            ShowCreateTableStatement,
-            ShowDatabasesStatement,
-            ShowGrantsStatement,
-            ShowPartitionsStatement,
-            ShowStatsStatement,
-            ShowTablesStatement,
-            ShowViewsStatement,
-            UnloadStatement,
-            UpdateStatement,
-            VacuumStatement,
+    def _stmt_maintain(self, stmt, principal, name, qe) -> DataFrame:
+        action, kwargs, schema, row = self._MAINTAIN_STATEMENTS[type(stmt)]
+        res = self.maintain(stmt.target, action, principal, **kwargs(stmt))
+        return _local_df(self.spark, [row(stmt, res)], schema)
+
+    def _stmt_ctas(self, stmt, principal, name, qe) -> DataFrame:
+        # Athena CTAS as SQL: the governed select materializes only
+        # what the principal's grants allow; creator owns the table
+        db, _, tname = stmt.target.partition(".")
+        inner = self.ctas(
+            stmt.select_sql,
+            database=db,
+            table=tname,
+            location=stmt.location,
+            principal=principal,
+            partition_by=list(stmt.partitioned_by) or None,
+        )
+        qe.tables = [stmt.target, *inner.tables]
+        return _local_df(
+            self.spark,
+            [(stmt.target, stmt.location)],
+            "table string, location string",
         )
 
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
+    def _stmt_clone(self, stmt, principal, name, qe) -> DataFrame:
+        res = self.clone_table(
+            stmt.source,
+            stmt.target,
+            stmt.location,
+            version=stmt.version,
+            principal=principal,
         )
-        spark = self.spark
-
-        def _row(d: dict, types: str) -> DataFrame:
-            return _local_df(spark, [tuple(d.values())], types)
-
-        if isinstance(stmt, CtasStatement):
-            # Athena CTAS as SQL: the governed select materializes only
-            # what the principal's grants allow; creator owns the table
-            db, _, tname = stmt.target.partition(".")
-            inner = self.ctas(
-                stmt.select_sql,
-                database=db,
-                table=tname,
-                location=stmt.location,
-                principal=principal,
-                partition_by=list(stmt.partitioned_by) or None,
-            )
-            qe.tables = [stmt.target, *inner.tables]
-            return _row(
-                {"table": stmt.target, "location": stmt.location},
-                "table string, location string",
-            )
-
-        if isinstance(stmt, CloneStatement):
-            res = self.clone_table(
-                stmt.source,
-                stmt.target,
-                stmt.location,
-                version=stmt.version,
-                principal=principal,
-            )
-            qe.tables = [stmt.target, stmt.source]
-            return _row(
-                {
-                    "table": stmt.target,
-                    "cloned_from_version": int(res["cloned_from_version"]),
-                    "n_files": int(res["n_files"]),
-                },
-                "table string, cloned_from_version long, n_files long",
-            )
-
-        if isinstance(stmt, CreateDatabaseStatement):
-            # the reference's provisioning object (main.tf:291-300) as
-            # DDL. Admin-gated: in Lake Formation, catalog databases
-            # are created by administrators (provisioning), not by
-            # query principals.
-            def _audit_cd(status: str, error: str | None = None):
-                self.catalog.audit.record(
-                    name or "<none>",
-                    f"CREATE DATABASE {stmt.name}",
-                    [],
-                    [],
-                    status,
-                    error=error,
+        qe.tables = [stmt.target, stmt.source]
+        return _local_df(
+            self.spark,
+            [
+                (
+                    stmt.target,
+                    int(res["cloned_from_version"]),
+                    int(res["n_files"]),
                 )
+            ],
+            "table string, cloned_from_version long, n_files long",
+        )
 
-            if (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            ):
-                _audit_cd("denied", "CREATE DATABASE requires an admin")
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not create databases: "
-                    "catalog provisioning is admin-only"
-                )
+    def _stmt_create_database(self, stmt, principal, name, qe) -> DataFrame:
+        # the reference's provisioning object (main.tf:291-300) as DDL.
+        # Admin-gated: in Lake Formation, catalog databases are created
+        # by administrators (provisioning), not by query principals.
+        with self._governed(
+            name,
+            f"CREATE DATABASE {stmt.name}",
+            [],
+            admin_only=True,
+            denied="CREATE DATABASE requires an admin",
+            refusal=(
+                f"principal {name!r} may not create databases: "
+                "catalog provisioning is admin-only"
+            ),
+        ) as audit:
             existed = stmt.name in self.catalog.databases
             if existed and not stmt.if_not_exists:
-                _audit_cd("failed", "database exists")
+                audit("failed", "database exists")
                 raise ValueError(
                     f"database {stmt.name!r} already exists (use IF NOT "
                     "EXISTS to make creation idempotent)"
                 )
             if not existed:
                 self.catalog.create_database(stmt.name, stmt.comment or "")
-            _audit_cd("succeeded")
-            qe.tables = []
-            return _row(
-                {"database": stmt.name, "created": not existed},
-                "database string, created boolean",
-            )
+        return _local_df(
+            self.spark,
+            [(stmt.name, not existed)],
+            "database string, created boolean",
+        )
 
-        if isinstance(stmt, CreateTableStatement):
-            # column-list CREATE [EXTERNAL] TABLE (main.tf:303-372 as
-            # Athena DDL): declares catalog metadata over an external
-            # LOCATION — schema-on-read, no data written or read here.
-            # Admin-gated: registering an arbitrary location is Lake
-            # Formation's data-location permission — a non-admin could
-            # otherwise point a fresh table at files behind another
-            # table's row/column security and grant themselves around
-            # it (CTAS/CLONE stay open to non-admins because they
-            # materialize THROUGH the governed read path).
-            from pyspark.sql import types as T
+    def _stmt_create_table(self, stmt, principal, name, qe) -> DataFrame:
+        """Column-list CREATE [EXTERNAL] TABLE (main.tf:303-372 as Athena
+        DDL) and CREATE TABLE ... LIKE: declare catalog metadata over an
+        external LOCATION — schema-on-read, no data written or read
+        here. The column list declares the schema (data columns then
+        partition columns, hive-style; never inferred); LIKE copies the
+        source's structure by the CLONE rule (schema, comments, tags,
+        pending quarantine travel; policy objects and data do not).
 
-            from .catalog import TableDef as _TableDef
-            from .governance import ALL as _ALL_PERM
+        Admin-gated: registering an arbitrary location is Lake
+        Formation's data-location permission — a non-admin could
+        otherwise point a fresh table at files behind another table's
+        row/column security and grant themselves around it (CTAS/CLONE
+        stay open to non-admins because they materialize THROUGH the
+        governed read path)."""
+        from pyspark.sql import types as T
 
-            def _audit_ct(status: str, error: str | None = None):
-                self.catalog.audit.record(
-                    name or "<none>",
-                    f"CREATE TABLE {stmt.target}",
-                    [stmt.target],
-                    [],
-                    status,
-                    error=error,
+        from .catalog import TableDef
+
+        source = getattr(stmt, "source", None)
+        like = f" LIKE {source}" if source is not None else ""
+        qe.tables = [stmt.target] + ([source] if source is not None else [])
+        with self._governed(
+            name,
+            f"CREATE TABLE {stmt.target}{like}",
+            qe.tables,
+            admin_only=True,
+            denied=("CREATE TABLE LIKE" if source is not None else "CREATE TABLE")
+            + " (external location) is admin-only",
+            refusal=(
+                f"principal {name!r} may not register external "
+                "tables: declaring a LOCATION is the data-location "
+                "permission (admin-only)"
+                + (
+                    "; CTAS materializes through the governed read path "
+                    "instead"
+                    if source is None
+                    else ""
                 )
-
-            qe.tables = [stmt.target]
-            if (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            ):
-                _audit_ct(
-                    "denied", "CREATE TABLE (external location) is admin-only"
-                )
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not register external "
-                    "tables: declaring a LOCATION is the data-location "
-                    "permission (admin-only); CTAS materializes through "
-                    "the governed read path instead"
-                )
-            db, _, tname = stmt.target.partition(".")
-            if db not in self.catalog.databases:
-                _audit_ct("failed", f"unknown database {db!r}")
-                raise KeyError(f"unknown database {db!r}")
-            for registry, kind in (
-                (self.catalog.tables, "table"),
-                (self.catalog.views, "view"),
-                (self.catalog.mvs, "materialized view"),
-            ):
-                if stmt.target in registry:
-                    if stmt.if_not_exists and kind == "table":
-                        _audit_ct("succeeded")
-                        return _row(
-                            {
-                                "table": stmt.target,
-                                "location": registry[stmt.target].location,
-                                "created": False,
-                            },
-                            "table string, location string, created boolean",
-                        )
-                    _audit_ct("failed", f"{stmt.target} already a {kind}")
+            ),
+        ) as audit:
+            if source is not None:
+                src = self.catalog.tables.get(source)
+                if src is None:
+                    audit("failed", "unknown source table")
+                    raise KeyError(f"unknown table {source!r}")
+                if src.schema is None:
+                    audit("failed", "source has no declared schema")
                     raise ValueError(
-                        f"{stmt.target} already exists (a {kind})"
+                        f"{source} has no declared schema to copy"
                     )
-            # declared (never inferred) schema: data columns then
-            # partition columns, hive-style; a bad type name raises
-            # BEFORE any catalog mutation (fail-closed)
-            ddl = ", ".join(
-                f"{c} {t}"
-                for c, t, _cm in (*stmt.columns, *stmt.partitioned_by)
-            )
-            try:
-                schema = T.StructType.fromDDL(ddl)
-            except Exception as exc:
-                _audit_ct("failed", f"bad column list: {exc}")
-                raise ValueError(
-                    f"CREATE TABLE {stmt.target}: unparseable column "
-                    f"list ({ddl!r})"
-                ) from exc
-            import os as _os
-
-            # declare-then-query-empty must work (the Athena UX): the
-            # location exists from declaration; data arrives later
-            _os.makedirs(stmt.location, exist_ok=True)
-            self.catalog.register_table(
-                _TableDef(
+            db, _, tname = stmt.target.partition(".")
+            if self._claim_table_name(stmt.target, audit, stmt.if_not_exists):
+                return _local_df(
+                    self.spark,
+                    [
+                        (
+                            stmt.target,
+                            self.catalog.tables[stmt.target].location,
+                            False,
+                        )
+                    ],
+                    "table string, location string, created boolean",
+                )
+            if source is not None:
+                tdef = _structure_copy(src, db, tname, stmt.location)
+            else:
+                # a bad type name raises BEFORE any catalog mutation
+                items = (*stmt.columns, *stmt.partitioned_by)
+                ddl = ", ".join(f"{c} {t}" for c, t, _cm in items)
+                try:
+                    schema = T.StructType.fromDDL(ddl)
+                except Exception as exc:
+                    audit("failed", f"bad column list: {exc}")
+                    raise ValueError(
+                        f"CREATE TABLE {stmt.target}: unparseable column "
+                        f"list ({ddl!r})"
+                    ) from exc
+                tdef = TableDef(
                     database=db,
                     name=tname,
                     location=stmt.location,
@@ -1028,177 +1366,74 @@ class Engine:
                         p for p, _t, _cm in stmt.partitioned_by
                     ),
                     column_comments={
-                        c: cm
-                        for c, _t, cm in (*stmt.columns, *stmt.partitioned_by)
-                        if cm is not None
+                        c: cm for c, _t, cm in items if cm is not None
                     },
                 )
-            )
+            # declare-then-query-empty must work (the Athena UX): the
+            # location exists from declaration; data arrives later
+            os.makedirs(stmt.location, exist_ok=True)
+            self.catalog.register_table(tdef)
             if name is not None:
                 # creator owns the table (the CTAS/CLONE rule)
-                self.catalog.grant(name, _ALL_PERM, db, tname)
-            _audit_ct("succeeded")
-            return _row(
-                {
-                    "table": stmt.target,
-                    "location": stmt.location,
-                    "created": True,
-                },
-                "table string, location string, created boolean",
-            )
+                self.catalog.grant(name, ALL, db, tname)
+        return _local_df(
+            self.spark,
+            [(stmt.target, stmt.location, True)],
+            "table string, location string, created boolean",
+        )
 
-        if isinstance(stmt, CreateTableLikeStatement):
-            # structure copy without data: the CLONE rule for metadata
-            # (schema, comments, tags, pending quarantine travel; policy
-            # objects and data do not), the CREATE TABLE rule for the
-            # gate (declaring a LOCATION is the admin-only data-location
-            # permission)
-            from .catalog import TableDef as _TableDef
-            from .governance import ALL as _ALL_PERM
+    def _claim_table_name(self, target: str, audit, if_not_exists=False) -> bool:
+        """Refuse, audited, a new table whose database is unknown or
+        whose name a table, view or MV already holds. Returns True when
+        IF NOT EXISTS meets an existing table (a no-op)."""
+        db = target.partition(".")[0]
+        if db not in self.catalog.databases:
+            audit("failed", f"unknown database {db!r}")
+            raise KeyError(f"unknown database {db!r}")
+        for registry, kind in (
+            (self.catalog.tables, "table"),
+            (self.catalog.views, "view"),
+            (self.catalog.mvs, "materialized view"),
+        ):
+            if target in registry:
+                if if_not_exists and kind == "table":
+                    return True
+                audit("failed", f"{target} already a {kind}")
+                raise ValueError(f"{target} already exists (a {kind})")
+        return False
 
-            def _audit_ctl(status: str, error: str | None = None):
-                self.catalog.audit.record(
-                    name or "<none>",
-                    f"CREATE TABLE {stmt.target} LIKE {stmt.source}",
-                    [stmt.target, stmt.source],
-                    [],
-                    status,
-                    error=error,
-                )
-
-            qe.tables = [stmt.target, stmt.source]
-            if (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            ):
-                _audit_ctl(
-                    "denied",
-                    "CREATE TABLE LIKE (external location) is admin-only",
-                )
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not register external "
-                    "tables: declaring a LOCATION is the data-location "
-                    "permission (admin-only)"
-                )
-            src = self.catalog.tables.get(stmt.source)
-            if src is None:
-                _audit_ctl("failed", "unknown source table")
-                raise KeyError(f"unknown table {stmt.source!r}")
-            if src.schema is None:
-                _audit_ctl("failed", "source has no declared schema")
-                raise ValueError(
-                    f"{stmt.source} has no declared schema to copy"
-                )
-            db, _, tname = stmt.target.partition(".")
-            if db not in self.catalog.databases:
-                _audit_ctl("failed", f"unknown database {db!r}")
-                raise KeyError(f"unknown database {db!r}")
-            for registry, kind in (
-                (self.catalog.tables, "table"),
-                (self.catalog.views, "view"),
-                (self.catalog.mvs, "materialized view"),
-            ):
-                if stmt.target in registry:
-                    if stmt.if_not_exists and kind == "table":
-                        _audit_ctl("succeeded")
-                        return _row(
-                            {
-                                "table": stmt.target,
-                                "location": registry[stmt.target].location,
-                                "created": False,
-                            },
-                            "table string, location string, "
-                            "created boolean",
-                        )
-                    _audit_ctl("failed", f"{stmt.target} already a {kind}")
-                    raise ValueError(
-                        f"{stmt.target} already exists (a {kind})"
-                    )
-            import os as _os
-
-            _os.makedirs(stmt.location, exist_ok=True)
-            self.catalog.register_table(
-                _TableDef(
-                    database=db,
-                    name=tname,
-                    location=stmt.location,
-                    schema=src.schema,
-                    format=src.format,
-                    column_comments=dict(src.column_comments),
-                    column_tags={
-                        c: dict(v) for c, v in src.column_tags.items()
-                    },
-                    partition_keys=tuple(src.partition_keys),
-                    pending_columns=set(src.pending_columns),
-                )
-            )
-            if name is not None:
-                self.catalog.grant(name, _ALL_PERM, db, tname)
-            _audit_ctl("succeeded")
-            return _row(
-                {
-                    "table": stmt.target,
-                    "location": stmt.location,
-                    "created": True,
-                },
-                "table string, location string, created boolean",
-            )
-
-        if isinstance(stmt, DropTableStatement):
-            # Glue DeleteTable: catalog entry (and every grant on it)
-            # goes; EXTERNAL semantics leave data files untouched.
-            def _audit_dt(status: str, error: str | None = None):
-                self.catalog.audit.record(
-                    name or "<none>",
-                    f"DROP TABLE {stmt.target}",
-                    [stmt.target],
-                    [],
-                    status,
-                    error=error,
-                )
-
-            qe.tables = [stmt.target]
-            td = self.catalog.tables.get(stmt.target)
+    def _stmt_drop_table(self, stmt, principal, name, qe) -> DataFrame:
+        # Glue DeleteTable: catalog entry (and every grant on it) goes;
+        # EXTERNAL semantics leave data files untouched. An unknown
+        # table is checked before the gate.
+        td = self.catalog.tables.get(stmt.target)
+        with self._governed(
+            name,
+            f"DROP TABLE {stmt.target}",
+            [stmt.target],
+            owner=(td.database, td.name) if td is not None else None,
+            denied="DROP TABLE requires admin or ALL",
+            refusal=(
+                f"principal {name!r} may not drop {stmt.target}: "
+                "admin or an unconditioned ALL grant required"
+            ),
+        ) as audit:
             if td is None:
                 if stmt.if_exists:
-                    _audit_dt("succeeded")
-                    return _row(
-                        {"table": stmt.target, "dropped": False},
+                    return _local_df(
+                        self.spark,
+                        [(stmt.target, False)],
                         "table string, dropped boolean",
                     )
-                _audit_dt("failed", "unknown table")
+                audit("failed", "unknown table")
                 raise KeyError(f"unknown table {stmt.target!r}")
-            from .governance import ALL as _ALL_PERM
-
-            if (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            ):
-                grants = (
-                    self.catalog.grants_for(name, td.database, td.name)
-                    if name is not None
-                    else []
-                )
-                if not any(
-                    g.permission == _ALL_PERM
-                    and g.via_filter is None
-                    and g.via_tag_exclude is None
-                    for g in grants
-                ):
-                    _audit_dt(
-                        "denied", "DROP TABLE requires admin or ALL"
-                    )
-                    raise PermissionDeniedError(
-                        f"principal {name!r} may not drop {stmt.target}: "
-                        "admin or an unconditioned ALL grant required"
-                    )
             dependent = sorted(
                 q
                 for q, mv in self.catalog.mvs.items()
                 if mv.source == stmt.target
             )
             if dependent:
-                _audit_dt("failed", f"dependent MVs {dependent}")
+                audit("failed", f"dependent MVs {dependent}")
                 raise ValueError(
                     f"{stmt.target} feeds materialized view(s) "
                     f"{dependent}; drop those first"
@@ -1209,17 +1444,13 @@ class Engine:
             # vetted only for the old table. Word-match on the bare
             # table name, case-insensitive — false positives are the
             # fail-closed direction and the message names the cure.
-            import re as _re
-
             dep_views = sorted(
                 vq
                 for vq, v in self.catalog.views.items()
-                if _re.search(
-                    rf"\b{_re.escape(td.name)}\b", v.sql, _re.I
-                )
+                if re.search(rf"\b{re.escape(td.name)}\b", v.sql, re.I)
             )
             if dep_views:
-                _audit_dt("failed", f"dependent views {dep_views}")
+                audit("failed", f"dependent views {dep_views}")
                 raise ValueError(
                     f"view(s) {dep_views} reference {stmt.target}; "
                     "drop those first"
@@ -1231,603 +1462,326 @@ class Engine:
             self.catalog.grants = [
                 g
                 for g in self.catalog.grants
-                if not (
-                    g.database == td.database and g.resource == td.name
-                )
+                if not (g.database == td.database and g.resource == td.name)
             ]
-            _audit_dt("succeeded")
-            return _row(
-                {"table": stmt.target, "dropped": True},
-                "table string, dropped boolean",
-            )
+        return _local_df(
+            self.spark, [(stmt.target, True)], "table string, dropped boolean"
+        )
 
-        if isinstance(stmt, GrantStatement):
-            # the LF permission mutation (main.tf:460-487) as governed
-            # SQL. Admin-only: granting access IS the governance
-            # console. Principals are free-form names (IAM roles live
-            # out-of-band, validate.sh:46-58), but the OBJECT must
-            # exist — no grants on phantom resources.
-            def _audit_g(status: str, error: str | None = None):
-                self.catalog.audit.record(
-                    name or "<none>",
-                    f"GRANT {stmt.permission} ON {stmt.target} "
-                    f"TO {stmt.principal}",
-                    [stmt.target],
-                    [],
-                    status,
-                    error=error,
-                )
+    def _is_object(self, qualified: str) -> bool:
+        return qualified in self.catalog.tables or qualified in self.catalog.views
 
-            qe.tables = [stmt.target]
-            if (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            ):
-                _audit_g("denied", "GRANT is admin-only")
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not grant permissions: "
-                    "the permissions console is admin-only"
-                )
-            if (
-                stmt.target not in self.catalog.tables
-                and stmt.target not in self.catalog.views
-            ):
-                _audit_g("failed", "unknown object")
+    def _stmt_grant(self, stmt, principal, name, qe) -> DataFrame:
+        # the LF permission mutation (main.tf:460-487) as governed SQL.
+        # Admin-only: granting access IS the governance console.
+        # Principals are free-form names (IAM roles live out-of-band,
+        # validate.sh:46-58), but the OBJECT must exist — no grants on
+        # phantom resources.
+        db, _, res = stmt.target.partition(".")
+        with self._governed(
+            name,
+            f"GRANT {stmt.permission} ON {stmt.target} TO {stmt.principal}",
+            [stmt.target],
+            admin_only=True,
+            denied="GRANT is admin-only",
+            refusal=(
+                f"principal {name!r} may not grant permissions: "
+                "the permissions console is admin-only"
+            ),
+        ) as audit:
+            if not self._is_object(stmt.target):
+                audit("failed", "unknown object")
                 raise KeyError(f"unknown table or view {stmt.target!r}")
-            db, _, res = stmt.target.partition(".")
-            already = any(
-                g.permission == stmt.permission
-                and g.via_filter is None
-                and g.via_tag_exclude is None
-                for g in self.catalog.grants_for(stmt.principal, db, res)
-            )
+            # idempotent: re-granting an identical unconditioned
+            # permission must not duplicate SHOW GRANTS rows
+            already = self._holds(stmt.principal, db, res, stmt.permission)
             if not already:
-                # idempotent: re-granting an identical unconditioned
-                # permission must not duplicate SHOW GRANTS rows
                 self.catalog.grant(stmt.principal, stmt.permission, db, res)
-            _audit_g("succeeded")
-            return _row(
-                {
-                    "principal": stmt.principal,
-                    "permission": stmt.permission,
-                    "object": stmt.target,
-                    "granted": not already,
-                },
-                "principal string, permission string, object string, "
-                "granted boolean",
-            )
+        return _local_df(
+            self.spark,
+            [(stmt.principal, stmt.permission, stmt.target, not already)],
+            "principal string, permission string, object string, "
+            "granted boolean",
+        )
 
-        if isinstance(stmt, RevokeStatement):
-            # immediate enforcement: catalog.revoke mutates the live
-            # grant list AND churns the governance fingerprint, so a
-            # revoked principal can never ride the reuse cache into
-            # data they just lost (tests/test_revoke.py)
-            def _audit_r(status: str, error: str | None = None):
-                perm = stmt.permission or "ALL PERMISSIONS"
-                self.catalog.audit.record(
-                    name or "<none>",
-                    f"REVOKE {perm} ON {stmt.target} "
-                    f"FROM {stmt.principal}",
-                    [stmt.target],
-                    [],
-                    status,
-                    error=error,
-                )
-
-            qe.tables = [stmt.target]
-            if (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            ):
-                _audit_r("denied", "REVOKE is admin-only")
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not revoke permissions: "
-                    "the permissions console is admin-only"
-                )
-            if (
-                stmt.target not in self.catalog.tables
-                and stmt.target not in self.catalog.views
-            ):
-                _audit_r("failed", "unknown object")
+    def _stmt_revoke(self, stmt, principal, name, qe) -> DataFrame:
+        # immediate enforcement: catalog.revoke mutates the live grant
+        # list AND churns the governance fingerprint, so a revoked
+        # principal can never ride the reuse cache into data they just
+        # lost (tests/test_revoke.py)
+        with self._governed(
+            name,
+            f"REVOKE {stmt.permission or 'ALL PERMISSIONS'} ON "
+            f"{stmt.target} FROM {stmt.principal}",
+            [stmt.target],
+            admin_only=True,
+            denied="REVOKE is admin-only",
+            refusal=(
+                f"principal {name!r} may not revoke permissions: "
+                "the permissions console is admin-only"
+            ),
+        ) as audit:
+            if not self._is_object(stmt.target):
+                audit("failed", "unknown object")
                 raise KeyError(f"unknown table or view {stmt.target!r}")
             db, _, res = stmt.target.partition(".")
             n_revoked = self.catalog.revoke(
                 stmt.principal, stmt.permission, db, res
             )
-            _audit_r("succeeded")
-            return _row(
-                {
-                    "principal": stmt.principal,
-                    "object": stmt.target,
-                    "revoked": n_revoked,
-                },
-                "principal string, object string, revoked long",
+        return _local_df(
+            self.spark,
+            [(stmt.principal, stmt.target, n_revoked)],
+            "principal string, object string, revoked long",
+        )
+
+    def _stmt_unload(self, stmt, principal, name, qe) -> DataFrame:
+        self.unload(
+            stmt.select_sql,
+            stmt.path,
+            principal=principal,
+            format=stmt.format,
+            partition_by=list(stmt.partitioned_by) or None,
+        )
+        return _local_df(
+            self.spark, [(stmt.path, stmt.format)], "path string, format string"
+        )
+
+    def _stmt_create_view(self, stmt, principal, name, qe) -> DataFrame:
+        # V1 as SQL (outputs.tf:44-53): the verb a reference user types
+        # first. The body is VALIDATED as the submitting principal —
+        # _rewrite_sql raises implicit deny on any referenced table they
+        # hold no grant on, and spark.sql analyzes the rewritten text —
+        # then stored VERBATIM (view reads re-apply the READING
+        # principal's security, V3).
+        db, _, vname = stmt.view.partition(".")
+        if stmt.view in self.catalog.tables:
+            raise ValueError(f"{stmt.view} is a table, not a view")
+        if stmt.view in self.catalog.mvs:
+            raise ValueError(
+                f"{stmt.view} is a materialized view — use the MV "
+                "lifecycle statements"
             )
-
-        if isinstance(stmt, UnloadStatement):
-            self.unload(
-                stmt.select_sql,
-                stmt.path,
-                principal=principal,
-                format=stmt.format,
-                partition_by=list(stmt.partitioned_by) or None,
+        if db not in self.catalog.databases:
+            raise KeyError(f"database {db!r} does not exist")
+        if re.search(
+            r"(?<![A-Za-z0-9_.])"
+            + re.escape(stmt.view)
+            + r"(?![A-Za-z0-9_])",
+            stmt.select_sql,
+        ):
+            raise ValueError(
+                f"view body references {stmt.view} itself — recursive "
+                "views are not supported"
             )
-            qe.tables = []
-            return _row(
-                {"path": stmt.path, "format": stmt.format},
-                "path string, format string",
+        replaced = stmt.view in self.catalog.views
+        if replaced and not stmt.or_replace:
+            raise ValueError(
+                f"view {stmt.view} already exists (use CREATE OR "
+                "REPLACE VIEW)"
             )
+        if replaced:
+            # replacing someone's view is destructive: same gate as
+            # dropping it (admin or unconditioned ALL on the view)
+            self._view_gate(name, stmt.view, "CREATE OR REPLACE VIEW")
+        with self._rewritten(stmt.select_sql, principal) as (sql, touched):
+            self.spark.sql(sql)  # analyze only — never executed
+        self.catalog.create_view(db, vname, stmt.select_sql)
+        # creator-grant (CTAS parity): the creating principal owns the
+        # view; granting OTHERS stays the explicit second phase (the
+        # reference's deferred view grant, main.tf:538-549)
+        if name is not None and not replaced:
+            self.catalog.grant(name, ALL, db, vname)
+        qe.tables = [stmt.view, *touched]
+        return _local_df(
+            self.spark,
+            [(stmt.view, replaced)],
+            "view string, replaced boolean",
+        )
 
-        if isinstance(stmt, CreateViewStatement):
-            # V1 as SQL (outputs.tf:44-53): the verb a reference user
-            # types first. The body is VALIDATED as the submitting
-            # principal — _rewrite_sql raises implicit deny on any
-            # referenced table they hold no grant on, and spark.sql
-            # analyzes the rewritten text — then stored VERBATIM (view
-            # reads re-apply the READING principal's security, V3).
-            db, _, vname = stmt.view.partition(".")
-            if stmt.view in self.catalog.tables:
-                raise ValueError(f"{stmt.view} is a table, not a view")
-            if stmt.view in self.catalog.mvs:
-                raise ValueError(
-                    f"{stmt.view} is a materialized view — use the MV "
-                    "lifecycle statements"
-                )
-            if db not in self.catalog.databases:
-                raise KeyError(f"database {db!r} does not exist")
-            import re as _re
-
-            if _re.search(
-                r"(?<![A-Za-z0-9_.])"
-                + _re.escape(stmt.view)
-                + r"(?![A-Za-z0-9_])",
-                stmt.select_sql,
-            ):
-                raise ValueError(
-                    f"view body references {stmt.view} itself — recursive "
-                    "views are not supported"
-                )
-            replaced = stmt.view in self.catalog.views
-            if replaced and not stmt.or_replace:
-                raise ValueError(
-                    f"view {stmt.view} already exists (use CREATE OR "
-                    "REPLACE VIEW)"
-                )
-            if replaced:
-                # replacing someone's view is destructive: same gate as
-                # dropping it (admin or unconditioned ALL on the view)
-                self._view_gate(name, stmt.view, "CREATE OR REPLACE VIEW")
-            created_v: list[str] = []
-            try:
-                rewritten, touched = self.catalog._rewrite_sql(
-                    stmt.select_sql, principal, _views_out=created_v
-                )
-                spark.sql(rewritten)  # analyze only — never executed
-            finally:
-                for v in created_v:
-                    spark.catalog.dropTempView(v)
-            self.catalog.create_view(db, vname, stmt.select_sql)
-            # creator-grant (CTAS parity): the creating principal owns
-            # the view; granting OTHERS stays the explicit second phase
-            # (the reference's deferred view grant, main.tf:538-549)
-            if name is not None and not replaced:
-                from .governance import ALL
-
-                self.catalog.grant(name, ALL, db, vname)
-            qe.tables = [stmt.view, *touched]
-            return _row(
-                {"view": stmt.view, "replaced": replaced},
-                "view string, replaced boolean",
+    def _stmt_drop_view(self, stmt, principal, name, qe) -> DataFrame:
+        # V2 as SQL (README.md:320)
+        db, _, vname = stmt.view.partition(".")
+        if stmt.view in self.catalog.mvs:
+            raise ValueError(
+                f"{stmt.view} is a materialized view — use DROP "
+                "MATERIALIZED VIEW"
             )
-
-        if isinstance(stmt, DropViewStatement):
-            # V2 as SQL (README.md:320)
-            db, _, vname = stmt.view.partition(".")
-            if stmt.view in self.catalog.mvs:
-                raise ValueError(
-                    f"{stmt.view} is a materialized view — use DROP "
-                    "MATERIALIZED VIEW"
-                )
-            if stmt.view not in self.catalog.views:
-                if stmt.if_exists:
-                    qe.tables = []
-                    return _row(
-                        {"view": stmt.view, "dropped": False},
-                        "view string, dropped boolean",
-                    )
-                raise KeyError(f"view {stmt.view} does not exist")
+        dropped = stmt.view in self.catalog.views
+        if dropped:
             self._view_gate(name, stmt.view, "DROP VIEW")
             self.catalog.drop_view(db, vname)
             qe.tables = [stmt.view]
-            return _row(
-                {"view": stmt.view, "dropped": True},
-                "view string, dropped boolean",
+        elif not stmt.if_exists:
+            raise KeyError(f"view {stmt.view} does not exist")
+        return _local_df(
+            self.spark,
+            [(stmt.view, dropped)],
+            "view string, dropped boolean",
+        )
+
+    def _view_gate(self, name, qualified: str, verb: str) -> None:
+        """Destructive view DDL (DROP / CREATE OR REPLACE over an
+        existing view) requires admin or an unconditioned ALL grant on
+        the VIEW — the same ownership rule as table maintenance; the
+        creator-grant issued at CREATE VIEW satisfies it."""
+        self._gate(
+            name,
+            f"{verb} {qualified}",
+            [qualified],
+            owner=qualified.partition(".")[::2],
+            denied="requires admin or ALL grant on the view",
+            refusal=(
+                f"principal {name!r} may not {verb} {qualified}: requires "
+                "admin or an unconditioned ALL grant on the view"
+            ),
+        )
+
+    def _stmt_prepare(self, stmt, principal, name, qe) -> DataFrame:
+        # Athena PREPARE: store the template verbatim; placeholder
+        # filling and statement dispatch happen at EXECUTE, so the gates
+        # of the FILLED verb apply then
+        self.prepare(stmt.name, stmt.statement_sql)
+        return _local_df(
+            self.spark, [(stmt.name, True)], "name string, prepared boolean"
+        )
+
+    def _stmt_execute(self, stmt, principal, name, qe) -> DataFrame:
+        template = self._prepared.get(stmt.name)
+        if template is None:
+            raise KeyError(f"no prepared statement {stmt.name!r}")
+        # a template that is itself PREPARE/EXECUTE would recurse
+        # (EXECUTE q FROM a template saying EXECUTE q) — refuse the
+        # verbs outright rather than bound a depth counter
+        head = re.match(r"\s*([A-Za-z]+)", template)
+        if head and head.group(1).lower() in ("execute", "prepare"):
+            raise ValueError(
+                "a prepared template may not itself be "
+                "PREPARE/EXECUTE (recursive prepared statements)"
             )
+        # parameters were parsed as VALUES (literals only) and are
+        # re-rendered through the escaping literal writer — a parameter
+        # containing quotes/keywords stays one literal
+        filled = _fill_params(template, list(stmt.params))
+        inner = self._execute(filled, principal, raise_on_error=True)
+        qe.tables = list(inner.tables)
+        qe.filters_applied = list(inner.filters_applied)
+        if inner.result is None:
+            raise RuntimeError(f"EXECUTE {stmt.name} produced no result")
+        return inner.result
 
-        if isinstance(stmt, InsertStatement):
-            return self._run_insert(stmt, principal, qe)
-
-        if isinstance(stmt, PrepareStatement):
-            # Athena PREPARE: store the template verbatim; placeholder
-            # filling and statement dispatch happen at EXECUTE, so the
-            # gates of the FILLED verb apply then
-            self.prepare(stmt.name, stmt.statement_sql)
-            qe.tables = []
-            return _row(
-                {"name": stmt.name, "prepared": True},
-                "name string, prepared boolean",
-            )
-
-        if isinstance(stmt, ExecuteStatement):
-            import re as _re
-
-            template = self._prepared.get(stmt.name)
-            if template is None:
-                raise KeyError(f"no prepared statement {stmt.name!r}")
-            # a template that is itself PREPARE/EXECUTE would recurse
-            # (EXECUTE q FROM a template saying EXECUTE q) — refuse the
-            # verbs outright rather than bound a depth counter
-            head = _re.match(r"\s*([A-Za-z]+)", template)
-            if head and head.group(1).lower() in ("execute", "prepare"):
-                raise ValueError(
-                    "a prepared template may not itself be "
-                    "PREPARE/EXECUTE (recursive prepared statements)"
-                )
-            # parameters were parsed as VALUES (literals only) and are
-            # re-rendered through the escaping literal writer — a
-            # parameter containing quotes/keywords stays one literal
-            filled = _fill_params(template, list(stmt.params))
-            inner = self._execute(filled, principal, raise_on_error=True)
-            qe.tables = list(inner.tables)
-            qe.filters_applied = list(inner.filters_applied)
-            if inner.result is None:
-                raise RuntimeError(
-                    f"EXECUTE {stmt.name} produced no result"
-                )
-            return inner.result
-
-        if isinstance(stmt, ExplainStatement):
-            if stmt.analyze:
-                # EXPLAIN ANALYZE (round-15): Trino/Athena semantics —
-                # the governed query EXECUTES (noop sink, no result
-                # CSV) and the rows are the final plan's per-operator
-                # RUNTIME metrics (numOutputRows etc., harvested from
-                # the finalized AQE plan), so a reference user can see
-                # where rows and time actually went. The rewrite runs
-                # AS the principal: denied principals get the deny,
-                # never an execution.
-                created_views: list[str] = []
-                try:
-                    rewritten, touched = self.catalog._rewrite_sql(
-                        stmt.query_sql, principal, _views_out=created_views
-                    )
-                    qe.tables = touched
-                    df = self.spark.sql(rewritten)
-                    self._enforce_scan_cap(qe, df)  # the cap still gates
-                    # Execute THIS QueryExecution's physical plan (a
-                    # distributed count on its row RDD — nothing
-                    # materializes to the driver). A sink write would
-                    # wrap the logical plan in a NEW execution whose
-                    # fresh node instances collect the metrics,
-                    # leaving these at zero.
-                    jplan = df._jdf.queryExecution().executedPlan()
-                    jplan.execute().count()
-                    rows = []
-                    stack = [jplan]
-                    op_id = 0
-                    while stack:
-                        node = stack.pop()
-                        cls = node.getClass().getSimpleName()
-                        if cls == "AdaptiveSparkPlanExec":
-                            stack.append(node.executedPlan())
-                            continue
-                        if cls.endswith("QueryStageExec"):
-                            # AQE stage wrappers are leaves whose real
-                            # subtree hangs off .plan()
-                            stack.append(node.plan())
-                            continue
-                        mets = node.metrics()
-                        it = mets.keysIterator()
-                        emitted = False
-                        while it.hasNext():
-                            k = it.next()
-                            v = int(mets.apply(k).value())
-                            rows.append((op_id, cls, k, v))
-                            emitted = True
-                        if not emitted:
-                            rows.append((op_id, cls, None, None))
-                        op_id += 1
-                        ch = node.children()
-                        for i in range(ch.size()):
-                            stack.append(ch.apply(i))
-                finally:
-                    for v in created_views:
-                        self.spark.catalog.dropTempView(v)
-                return _local_df(
-                    spark,
-                    rows,
-                    "op_id long, operator string, metric string, "
-                    "value long",
-                )
+    def _stmt_explain(self, stmt, principal, name, qe) -> DataFrame:
+        if not stmt.analyze:
             # Athena EXPLAIN shape: the governed plan as result rows
             # (engine.explain never executes, writes no result CSV)
             text = self.explain(stmt.query_sql, principal, mode=stmt.mode)
-            qe.tables = []
             return _local_df(
-                spark,
-                [(ln,) for ln in text.splitlines()], "plan string"
+                self.spark, [(ln,) for ln in text.splitlines()], "plan string"
             )
+        # EXPLAIN ANALYZE: Trino/Athena semantics — the governed query
+        # EXECUTES (noop sink, no result CSV) and the rows are the final
+        # plan's per-operator RUNTIME metrics (numOutputRows etc.,
+        # harvested from the finalized AQE plan), so a reference user
+        # can see where rows and time actually went. The rewrite runs
+        # AS the principal: denied principals get the deny, never an
+        # execution.
+        with self._rewritten(stmt.query_sql, principal) as (sql, touched):
+            qe.tables = touched
+            df = self.spark.sql(sql)
+            self._enforce_scan_cap(qe, df)  # the cap still gates
+            # Execute THIS QueryExecution's physical plan (a distributed
+            # count on its row RDD — nothing materializes to the
+            # driver). A sink write would wrap the logical plan in a NEW
+            # execution whose fresh node instances collect the metrics,
+            # leaving these at zero.
+            jplan = df._jdf.queryExecution().executedPlan()
+            jplan.execute().count()
+        rows = []
+        stack = [jplan]
+        op_id = 0
+        while stack:
+            node = stack.pop()
+            cls = node.getClass().getSimpleName()
+            if cls == "AdaptiveSparkPlanExec":
+                stack.append(node.executedPlan())
+                continue
+            if cls.endswith("QueryStageExec"):
+                # AQE stage wrappers are leaves whose real subtree hangs
+                # off .plan()
+                stack.append(node.plan())
+                continue
+            mets = node.metrics()
+            it = mets.keysIterator()
+            emitted = False
+            while it.hasNext():
+                k = it.next()
+                rows.append((op_id, cls, k, int(mets.apply(k).value())))
+                emitted = True
+            if not emitted:
+                rows.append((op_id, cls, None, None))
+            op_id += 1
+            ch = node.children()
+            for i in range(ch.size()):
+                stack.append(ch.apply(i))
+        return _local_df(
+            self.spark,
+            rows,
+            "op_id long, operator string, metric string, value long",
+        )
 
-        if isinstance(stmt, AddColumnsStatement):
-            # Glue UpdateTable as SQL: schema-on-read evolution — no
-            # data rewrite, and the new columns land PENDING (invisible
-            # to every conditioned grant path until
-            # approve_evolved_columns — the fail-closed quarantine).
-            # Gate: evolving the schema is an operator action on the
-            # table, same admin-or-ALL rule as the other ALTER.
-            from pyspark.sql import types as T
+    def _stmt_add_columns(self, stmt, principal, name, qe) -> DataFrame:
+        # Glue UpdateTable as SQL: schema-on-read evolution — no data
+        # rewrite, and the new columns land PENDING (invisible to every
+        # conditioned grant path until approve_evolved_columns — the
+        # fail-closed quarantine). Gate: evolving the schema is an
+        # operator action on the table, same admin-or-ALL rule as the
+        # other ALTERs.
+        from pyspark.sql import types as T
 
-            table = self.catalog.tables[stmt.target]  # KeyError: closed
-            self._mv_gate(name, table, "ALTER TABLE ADD COLUMNS", stmt.target)
-            fields = []
-            for cname, ddl_type, _comment in stmt.columns:
-                try:
-                    parsed_t = T.StructType.fromDDL(f"{cname} {ddl_type}")
-                except Exception as exc:
-                    raise ValueError(
-                        f"ADD COLUMNS: cannot parse type {ddl_type!r} for "
-                        f"{cname!r}: {exc}"
-                    ) from exc
-                fields.append(parsed_t.fields[0])
-            comments = {
-                cname: c for cname, _t, c in stmt.columns if c is not None
-            }
-            self.catalog.evolve_table_schema(
-                stmt.target, fields, comments=comments or None
-            )
-            qe.tables = [stmt.target]
-            return _local_df(
-                spark,
-                [
-                    (cname, ddl_type, "pending")
-                    for cname, ddl_type, _c in stmt.columns
-                ],
-                "col_name string, data_type string, status string",
-            )
-
-        if isinstance(stmt, ShowDatabasesStatement):
-            # grant-aware database listing: an ungranted principal
-            # cannot enumerate even database NAMES (implicit deny G6 on
-            # the enumeration surface, like SHOW TABLES)
-            gov = (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            )
-            rows = []
-            for db in sorted(self.catalog.databases):
-                if gov and (
-                    name is None
-                    or not any(
-                        g.principal == name and g.database == db
-                        for g in self.catalog.grants
-                    )
-                ):
-                    continue
-                rows.append((db,))
-            qe.tables = []
-            return _local_df(spark, rows or [], "database string")
-
-        if isinstance(stmt, ShowViewsStatement):
-            gov = (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            )
-            rows = []
-            for q, vd in sorted(self.catalog.views.items()):
-                if stmt.database and vd.database != stmt.database:
-                    continue
-                if gov and (
-                    name is None
-                    or not self.catalog.grants_for(name, vd.database, vd.name)
-                ):
-                    continue
-                rows.append((vd.database, vd.name))
-            qe.tables = []
-            return _local_df(
-                spark,
-                rows or [], "database string, view string"
-            )
-
-        if isinstance(stmt, RenameColumnStatement):
-            self.maintain(
-                stmt.target,
-                "rename_column",
-                principal,
-                old=stmt.old,
-                new=stmt.new,
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {"table": stmt.target, "old": stmt.old, "new": stmt.new},
-                "table string, old string, new string",
-            )
-
-        if isinstance(stmt, DropColumnStatement):
-            self.maintain(
-                stmt.target, "drop_column", principal, column=stmt.column
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {"table": stmt.target, "dropped_column": stmt.column},
-                "table string, dropped_column string",
-            )
-
-        if isinstance(stmt, MsckRepairStatement):
-            result = self.maintain(stmt.target, "msck_repair", principal)
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "table": stmt.target,
-                    "partitions": int(result["partitions"]),
-                    "files_indexed": int(result["files_indexed"]),
-                    "new_files": int(result["new_files"]),
-                    "rows_indexed": int(result["rows_indexed"]),
-                },
-                "table string, partitions long, files_indexed long, "
-                "new_files long, rows_indexed long",
-            )
-
-        if isinstance(stmt, TruncateTableStatement):
-            result = self.maintain(stmt.target, "truncate", principal)
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "table": stmt.target,
-                    "rows_removed": int(result["rows_removed"]),
-                    "version": int(result["version"]),
-                },
-                "table string, rows_removed long, version long",
-            )
-
-        if isinstance(stmt, AddConstraintStatement):
-            self.maintain(
-                stmt.target,
-                "add_constraint",
-                principal,
-                constraint=stmt.name,
-                expr=stmt.expr,
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "table": stmt.target,
-                    "constraint": stmt.name,
-                    "expr": stmt.expr,
-                    "status": "added",
-                },
-                "table string, constraint string, expr string, "
-                "status string",
-            )
-
-        if isinstance(stmt, DropConstraintStatement):
-            self.maintain(
-                stmt.target,
-                "drop_constraint",
-                principal,
-                constraint=stmt.name,
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "table": stmt.target,
-                    "constraint": stmt.name,
-                    "status": "dropped",
-                },
-                "table string, constraint string, status string",
-            )
-
-        if isinstance(stmt, DropPartitionStatement):
-            result = self.maintain(
-                stmt.target,
-                "drop_partition",
-                principal,
-                spec=stmt.spec,
-                if_exists=stmt.if_exists,
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "table": stmt.target,
-                    "partition": result["partition"],
-                    "files_removed": int(result["files_removed"]),
-                    "rows_removed": int(result["rows_removed"]),
-                    "version": (
-                        int(result["version"])
-                        if result["version"] is not None
-                        else None
-                    ),
-                },
-                "table string, partition string, files_removed long, "
-                "rows_removed long, version long",
-            )
-
-        if isinstance(stmt, AddFilesStatement):
-            result = self.maintain(
-                stmt.target, "add_files", principal, source=stmt.location
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "table": stmt.target,
-                    "files_added": int(result["files_added"]),
-                    "rows_added": int(result["rows_added"]),
-                    "version": int(result["version"]),
-                },
-                "table string, files_added long, rows_added long, "
-                "version long",
-            )
-
-        if isinstance(stmt, WidenColumnStatement):
-            self.maintain(
-                stmt.target,
-                "widen_column",
-                principal,
-                column=stmt.column,
-                ddl_type=stmt.ddl_type,
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "table": stmt.target,
-                    "column": stmt.column,
-                    "new_type": stmt.ddl_type,
-                },
-                "table string, column string, new_type string",
-            )
-
-        if isinstance(stmt, MergeStatement):
-            from .sources.lake import merge_into
-
-            self._refuse_mv_mutation(stmt.target, "MERGE INTO")
-            table = self.catalog.tables[stmt.target]  # KeyError: fail closed
-            # write gate first: a principal who may not write the target
-            # must not even trigger the source read
-            self._mv_gate(name, table, "MERGE INTO", stmt.target)
-
-            # maintain-style audit parity (round-10 ADVICE): MERGE is a
-            # mutation verb like UPDATE/DELETE — it records its own
-            # MAINTAIN-shaped line (incl. pending-column denials) on top
-            # of _execute's verbatim-statement line
-            def _merge_audit(status: str, error: str | None = None):
-                self.catalog.audit.record(
-                    principal=name or "<none>",
-                    query=(
-                        f"MAINTAIN merge_into {stmt.target} "
-                        f"ON ({', '.join(stmt.key_cols)})"
-                    ),
-                    tables=[stmt.target],
-                    filters_applied=[],
-                    status=status,
-                    error=error,
-                )
-
-            created: list[str] = []
+        table = self.catalog.tables[stmt.target]  # KeyError: closed
+        self._mv_gate(name, table, "ALTER TABLE ADD COLUMNS", stmt.target)
+        fields = []
+        for cname, ddl_type, _comment in stmt.columns:
             try:
-                rewritten, touched = self.catalog._rewrite_sql(
-                    stmt.source_sql,
-                    principal,
-                    _filters_out=qe.filters_applied,
-                    _views_out=created,
-                )
-                updates = spark.sql(rewritten)
+                parsed_t = T.StructType.fromDDL(f"{cname} {ddl_type}")
+            except Exception as exc:
+                raise ValueError(
+                    f"ADD COLUMNS: cannot parse type {ddl_type!r} for "
+                    f"{cname!r}: {exc}"
+                ) from exc
+            fields.append(parsed_t.fields[0])
+        comments = {cname: c for cname, _t, c in stmt.columns if c is not None}
+        self.catalog.evolve_table_schema(
+            stmt.target, fields, comments=comments or None
+        )
+        return _local_df(
+            self.spark,
+            [(cname, ddl_type, "pending") for cname, ddl_type, _c in stmt.columns],
+            "col_name string, data_type string, status string",
+        )
+
+    def _stmt_merge(self, stmt, principal, name, qe) -> DataFrame:
+        self._refuse_mv_mutation(stmt.target, "MERGE INTO")
+        table = self.catalog.tables[stmt.target]  # KeyError: fail closed
+        # write gate first: a principal who may not write the target
+        # must not even trigger the source read
+        self._mv_gate(name, table, "MERGE INTO", stmt.target)
+        # MERGE is a mutation verb like UPDATE/DELETE: it records its
+        # own MAINTAIN-shaped line (incl. pending-column denials) on top
+        # of _execute's verbatim-statement line
+        with self._governed(
+            name,
+            f"MAINTAIN merge_into {stmt.target} "
+            f"ON ({', '.join(stmt.key_cols)})",
+            [stmt.target],
+            ok="ok",
+        ) as audit:
+            with self._rewritten(
+                stmt.source_sql, principal, qe.filters_applied
+            ) as (sql, touched):
+                updates = self.spark.sql(sql)
                 # the workgroup scan cap bills DML source reads too
-                # (Athena: only DDL is free of data-scanned charges;
-                # round-16 ADVICE — CTAS/UNLOAD already inherit the cap
-                # through their inner query execution)
+                # (Athena: only DDL is free of data-scanned charges)
                 self._enforce_scan_cap(qe, updates)
-            finally:
-                for v in created:
-                    spark.catalog.dropTempView(v)
             missing = [k for k in stmt.key_cols if k not in updates.columns]
             if missing:
                 raise ValueError(
@@ -1835,23 +1789,19 @@ class Engine:
                     "USING select's output"
                 )
             # fail-closed schema evolution, same rule as UPDATE/DELETE
-            # through maintain (round-10 ADVICE): MERGE rewrites whole
-            # rows, so neither a key column nor any USING output column
-            # may be pending approval
-            if table.pending_columns:
-                struck = sorted(
-                    (set(stmt.key_cols) | set(updates.columns))
-                    & set(table.pending_columns)
+            # through maintain: MERGE rewrites whole rows, so neither a
+            # key column nor any USING output column may be pending
+            struck = sorted(
+                (set(stmt.key_cols) | set(updates.columns))
+                & set(table.pending_columns)
+            )
+            if struck:
+                audit("denied", f"merge uses pending columns {struck}")
+                raise PermissionDeniedError(
+                    f"MERGE references pending-approval column(s) "
+                    f"{struck} on {stmt.target}; approve the evolved "
+                    "columns first (fail-closed schema evolution)"
                 )
-                if struck:
-                    _merge_audit(
-                        "denied", f"merge uses pending columns {struck}"
-                    )
-                    raise PermissionDeniedError(
-                        f"MERGE references pending-approval column(s) "
-                        f"{struck} on {stmt.target}; approve the evolved "
-                        "columns first (fail-closed schema evolution)"
-                    )
             if table.schema is not None:
                 short = [
                     f.name
@@ -1864,700 +1814,528 @@ class Engine:
                         f" the USING select must produce every table column;"
                         f" missing {short}"
                     )
-            res = merge_into(
-                spark,
+            res = _lake.merge_into(
+                self.spark,
                 table.location,
                 updates,
                 list(stmt.key_cols),
                 partition_by=list(table.partition_keys) or None,
                 schema=table.schema,
             )
-            _merge_audit("ok")
-            qe.tables = [stmt.target, *touched]
-            return _row(
-                {
-                    "rows_updated": res["rows_updated"],
-                    "rows_inserted": res["rows_inserted"],
-                    "partitions_rewritten": res["partitions_rewritten"],
-                },
-                "rows_updated long, rows_inserted long, "
-                "partitions_rewritten long",
-            )
-
-        if isinstance(stmt, DeleteStatement):
-            res = self.maintain(
-                stmt.target, "delete_rows", principal, predicate=stmt.predicate
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "rows_deleted": res["rows_deleted"],
-                    "partitions_rewritten": res["partitions_rewritten"],
-                },
-                "rows_deleted long, partitions_rewritten long",
-            )
-
-        if isinstance(stmt, UpdateStatement):
-            res = self.maintain(
-                stmt.target,
-                "update_rows",
-                principal,
-                assignments=dict(stmt.assignments),
-                predicate=stmt.predicate,
-            )
-            qe.tables = [stmt.target]
-            return _row(
-                {
-                    "rows_updated": res["rows_updated"],
-                    "partitions_rewritten": res["partitions_rewritten"],
-                },
-                "rows_updated long, partitions_rewritten long",
-            )
-
-        if isinstance(stmt, OptimizeStatement):
-            qe.tables = [stmt.target]
-            if stmt.mode == "binpack":
-                kw = (
-                    {"partition_where": stmt.where}
-                    if stmt.where is not None
-                    else {}
+        qe.tables = [stmt.target, *touched]
+        return _local_df(
+            self.spark,
+            [
+                (
+                    res["rows_updated"],
+                    res["rows_inserted"],
+                    res["partitions_rewritten"],
                 )
-                res = self.maintain(
-                    stmt.target, "optimize_binpack", principal, **kw
-                )
-                return _row(
-                    {
-                        "files_before": res["files_before"],
-                        "files_after": res["files_after"],
-                        "files_rewritten": res["files_rewritten"],
-                    },
-                    "files_before long, files_after long, files_rewritten long",
-                )
-            res = self.maintain(
-                stmt.target, "compact", principal,
-                cluster_by=list(stmt.cluster_by),
-            )
-            return _row(
-                {
-                    "files_before": res["files_before"],
-                    "files_after": res["files_after"],
-                },
-                "files_before long, files_after long",
-            )
+            ],
+            "rows_updated long, rows_inserted long, partitions_rewritten long",
+        )
 
-        if isinstance(stmt, VacuumStatement):
-            qe.tables = [stmt.target]
-            kwargs: dict = {
-                "keep_last": stmt.keep_last,
-                "dry_run": stmt.dry_run,
-            }
-            if stmt.older_than_seconds is not None:
-                # the INTERVAL form resolves against now at EXECUTION
-                # time (a prepared statement re-executed tomorrow means
-                # "7 days before tomorrow")
-                import time as _time
-
-                kwargs["older_than"] = _time.time() - stmt.older_than_seconds
-            elif stmt.older_than_epoch is not None:
-                kwargs["older_than"] = stmt.older_than_epoch
-            res = self.maintain(
-                stmt.target,
-                "expire_snapshots",
-                principal,
-                **kwargs,
+    def _stmt_optimize(self, stmt, principal, name, qe) -> DataFrame:
+        if stmt.mode == "binpack":
+            kw = {"partition_where": stmt.where} if stmt.where is not None else {}
+            res = self.maintain(stmt.target, "optimize_binpack", principal, **kw)
+            return _local_df(
+                self.spark,
+                [(res["files_before"], res["files_after"], res["files_rewritten"])],
+                "files_before long, files_after long, files_rewritten long",
             )
-            if stmt.dry_run:
-                # report-only: the artifact sweep also stays untouched
-                return _row(
-                    {
-                        "snapshots_removed": int(
-                            res.get("manifests_removed", 0)
-                        ),
-                        "files_removed": int(res.get("files_removed", 0)),
-                        "artifacts_removed": 0,
-                        "dry_run": True,
-                    },
-                    "snapshots_removed long, files_removed long, "
-                    "artifacts_removed long, dry_run boolean",
-                )
-            removed = self.maintain(stmt.target, "vacuum_artifacts", principal)
-            return _row(
-                {
-                    "snapshots_removed": int(res.get("manifests_removed", 0)),
-                    "files_removed": int(res.get("files_removed", 0)),
-                    "artifacts_removed": len(removed["removed"]),
-                },
+        res = self.maintain(
+            stmt.target, "compact", principal, cluster_by=list(stmt.cluster_by)
+        )
+        return _local_df(
+            self.spark,
+            [(res["files_before"], res["files_after"])],
+            "files_before long, files_after long",
+        )
+
+    def _stmt_vacuum(self, stmt, principal, name, qe) -> DataFrame:
+        kwargs: dict = {"keep_last": stmt.keep_last, "dry_run": stmt.dry_run}
+        if stmt.older_than_seconds is not None:
+            # the INTERVAL form resolves against now at EXECUTION time
+            # (a prepared statement re-executed tomorrow means "7 days
+            # before tomorrow")
+            kwargs["older_than"] = time.time() - stmt.older_than_seconds
+        elif stmt.older_than_epoch is not None:
+            kwargs["older_than"] = stmt.older_than_epoch
+        res = self.maintain(stmt.target, "expire_snapshots", principal, **kwargs)
+        counts = (
+            int(res.get("manifests_removed", 0)),
+            int(res.get("files_removed", 0)),
+        )
+        if stmt.dry_run:
+            # report-only: the artifact sweep also stays untouched
+            return _local_df(
+                self.spark,
+                [(*counts, 0, True)],
                 "snapshots_removed long, files_removed long, "
-                "artifacts_removed long",
+                "artifacts_removed long, dry_run boolean",
             )
+        removed = self.maintain(stmt.target, "vacuum_artifacts", principal)
+        return _local_df(
+            self.spark,
+            [(*counts, len(removed["removed"]))],
+            "snapshots_removed long, files_removed long, artifacts_removed long",
+        )
 
-        if isinstance(stmt, CreateMVStatement):
-            res = self.create_materialized_view(
-                stmt.mv,
-                stmt.source,
-                list(stmt.group_by),
-                {out: (agg, col) for out, agg, col in stmt.measures},
-                principal=principal,
-                where=stmt.where,
-            )
-            qe.tables = [stmt.mv, stmt.source]
-            return _row(
-                {
-                    "mv": stmt.mv,
-                    "source_version": res["source_version"],
-                },
-                "mv string, source_version long",
-            )
+    def _stmt_create_mv(self, stmt, principal, name, qe) -> DataFrame:
+        res = self.create_materialized_view(
+            stmt.mv,
+            stmt.source,
+            list(stmt.group_by),
+            {out: (agg, col) for out, agg, col in stmt.measures},
+            principal=principal,
+            where=stmt.where,
+        )
+        qe.tables = [stmt.mv, stmt.source]
+        return _local_df(
+            self.spark,
+            [(stmt.mv, res["source_version"])],
+            "mv string, source_version long",
+        )
 
-        if isinstance(stmt, RefreshMVStatement):
-            res = self.refresh_materialized_view(stmt.mv, principal=principal)
-            qe.tables = [stmt.mv]
-            return _row(
-                {
-                    "refreshed": res["refreshed"],
-                    "source_version": res["source_version"],
-                },
-                "refreshed boolean, source_version long",
-            )
+    def _stmt_refresh_mv(self, stmt, principal, name, qe) -> DataFrame:
+        res = self.refresh_materialized_view(stmt.mv, principal=principal)
+        qe.tables = [stmt.mv]
+        return _local_df(
+            self.spark,
+            [(res["refreshed"], res["source_version"])],
+            "refreshed boolean, source_version long",
+        )
 
-        if isinstance(stmt, DropMVStatement):
-            self.drop_materialized_view(
-                stmt.mv, principal=principal, delete_data=stmt.purge
-            )
-            qe.tables = [stmt.mv]
-            return _row(
-                {"mv": stmt.mv, "purged": stmt.purge}, "mv string, purged boolean"
-            )
+    def _stmt_drop_mv(self, stmt, principal, name, qe) -> DataFrame:
+        self.drop_materialized_view(
+            stmt.mv, principal=principal, delete_data=stmt.purge
+        )
+        qe.tables = [stmt.mv]
+        return _local_df(
+            self.spark, [(stmt.mv, stmt.purge)], "mv string, purged boolean"
+        )
 
-        # ---- introspection (SHOW / DESCRIBE) — the Glue GetTable(s) /
-        # GetPartitions read surface (main.tf:165-180), grant-aware:
-        # governance hides from an ungranted principal even the
-        # EXISTENCE of a table (implicit deny, G6).
-        if isinstance(stmt, ShowTablesStatement):
-            gov = self.catalog.governance_enabled and name not in self.catalog.admins
-            rows = []
-            for q, td in sorted(self.catalog.tables.items()):
-                if stmt.database and td.database != stmt.database:
-                    continue
-                if gov and (
-                    name is None
-                    or not self.catalog.grants_for(name, td.database, td.name)
-                ):
-                    continue
-                rows.append((td.database, td.name))
-            qe.tables = []
-            return _local_df(
-                spark,
-                rows or [], "database string, table string"
-            )
-
-        if isinstance(stmt, DescribeFilesStatement):
-            import os as _os
-            from pathlib import Path as _Path
-
-            from .sources.lake import _data_file_relpaths, read_manifest
-
-            table, _ = self._introspect_gate(stmt.target, name)
-            qe.tables = [stmt.target]
-            live = _Path(table.location)
-            rows = []
-            m = read_manifest(table.location)
-            if m is not None:
-                fr = m.get("file_rows", {})
-                fa = m.get("file_added", {})
-                for f in sorted(m["files"]):
-                    part = _os.path.dirname(f).replace(_os.sep, "/")
-                    try:
-                        size = (live / f).stat().st_size
-                    except OSError:
-                        size = None
-                    rows.append(
-                        (
-                            f,
-                            part,
-                            int(fr[f]) if f in fr else None,
-                            size,
-                            int(fa[f]) if f in fa else None,
-                        )
-                    )
-            else:
-                # declared location: the MSCK index supplies exact rows
-                # when fresh; otherwise a live listing with sizes only
-                # (no per-query footer reads)
-                disc = (getattr(table, "discovered", None) or {}).get(
-                    "files", {}
-                )
-                if live.is_dir():
-                    for f in _data_file_relpaths(live):
-                        part = _os.path.dirname(f).replace(_os.sep, "/")
-                        try:
-                            size = (live / f).stat().st_size
-                        except OSError:
-                            # deleted out-of-band between the listing
-                            # and the stat — exactly the churn declared
-                            # locations see; report unknown, never crash
-                            size = None
-                        known = disc.get(f)
-                        nrows = (
-                            int(known[1])
-                            if known is not None
-                            and size is not None
-                            and int(known[0]) == size
-                            else None
-                        )
-                        rows.append((f, part, nrows, size, None))
-            return _local_df(
-                spark,
-                rows,
-                "file string, partition string, rows long, "
-                "size_bytes long, added_version long",
-            )
-
-        if isinstance(stmt, ShowPartitionsStatement):
-            import os
-
-            table, _ = self._introspect_gate(stmt.target, name)
-            qe.tables = [stmt.target]
-            from .sources.lake import read_manifest
-
-            # metadata-only: partition values come from the manifest's
-            # file list (or, for a never-written schema-on-read
-            # location, the directory tree) — never a data scan
-            parts: set[str] = set()
-            m = read_manifest(table.location)
-            if m is not None:
-                for f in m["files"]:
-                    rel = os.path.dirname(f)
-                    if rel and "=" in rel:
-                        parts.add(rel.replace(os.sep, "/"))
-            else:
-                for root, dirs, files in os.walk(table.location):
-                    rel = os.path.relpath(root, table.location)
-                    if (
-                        rel != "."
-                        and all("=" in seg for seg in rel.split(os.sep))
-                        and any(not f.startswith(("_", ".")) for f in files)
-                    ):
-                        parts.add(rel.replace(os.sep, "/"))
-            return _local_df(
-                spark,
-                [(p,) for p in sorted(parts)] or [], "partition string"
-            )
-
-        if isinstance(stmt, ShowGrantsStatement):
-            # the Lake Formation permissions-console view. Admins may
-            # inspect any principal (FOR omitted = every grant on the
-            # object); a non-admin lists only their OWN grants, and only
-            # on an object they hold SOME grant on — implicit deny hides
-            # existence here exactly as it does for SHOW/DESCRIBE.
-            qe.tables = [stmt.target]
-            if (
-                stmt.target not in self.catalog.tables
-                and stmt.target not in self.catalog.views
-            ):
-                raise KeyError(f"unknown table or view {stmt.target!r}")
-            db, _, res = stmt.target.partition(".")
-            who = stmt.principal
-            if self.catalog.governance_enabled and name not in self.catalog.admins:
-                from .governance import ALL as _ALL
-
-                mine = (
-                    self.catalog.grants_for(name, db, res)
-                    if name is not None
-                    else []
-                )
-                owner = any(
-                    g.permission == _ALL
-                    and g.via_filter is None
-                    and g.via_tag_exclude is None
-                    for g in mine
-                )
-                if not owner:
-                    # a non-owner lists only their OWN grants
-                    if name is None or (who is not None and who != name):
-                        raise PermissionDeniedError(
-                            "SHOW GRANTS FOR another principal requires an "
-                            "admin or an unconditioned ALL grant on the "
-                            "object; others may list only their own grants"
-                        )
-                    who = name
-                    if not mine:
-                        raise PermissionDeniedError(
-                            f"principal {name!r} is not authorized to "
-                            f"access {stmt.target}"
-                        )
-            rows = [
+    def _stmt_analyze(self, stmt, principal, name, qe) -> DataFrame:
+        res = self.analyze_table(
+            stmt.target, columns=(list(stmt.columns) or None), principal=principal
+        )
+        return _local_df(
+            self.spark,
+            [
                 (
-                    g.principal,
-                    g.permission,
-                    g.via_filter,
-                    (
-                        f"{g.via_tag_exclude[0]}={g.via_tag_exclude[1]}"
-                        if g.via_tag_exclude is not None
-                        else None
-                    ),
+                    int(res["row_count"]),
+                    len(res.get("columns", {})),
+                    res.get("snapshot_version"),
                 )
-                for g in self.catalog.grants
-                if g.database == db
-                and g.resource == res
-                and (who is None or g.principal == who)
-            ]
-            return _local_df(
-                spark,
-                rows or [],
-                "principal string, permission string, via_filter string, "
-                "via_tag_exclude string",
-            )
+            ],
+            "row_count long, columns_analyzed long, snapshot_version long",
+        )
 
-        if isinstance(stmt, AnalyzeStatement):
-            qe.tables = [stmt.target]
-            res = self.analyze_table(
-                stmt.target,
-                columns=(list(stmt.columns) or None),
-                principal=principal,
-            )
-            return _row(
-                {
-                    "row_count": int(res["row_count"]),
-                    "columns_analyzed": len(res.get("columns", {})),
-                    "snapshot_version": res.get("snapshot_version"),
-                },
-                "row_count long, columns_analyzed long, "
-                "snapshot_version long",
-            )
+    # ---- introspection (SHOW / DESCRIBE) — the Glue GetTable(s) /
+    # GetPartitions read surface (main.tf:165-180), grant-aware:
+    # governance hides from an ungranted principal even the EXISTENCE
+    # of a table (implicit deny, G6).
+    def _stmt_show_databases(self, stmt, principal, name, qe) -> DataFrame:
+        return _local_df(
+            self.spark,
+            [(db,) for db in sorted(self.catalog.databases) if self._visible(name, db)],
+            "database string",
+        )
 
-        if isinstance(stmt, ShowStatsStatement):
-            # SHOW STATS (round-15; r14 What's missing #2): the governed
-            # READ surface for what ANALYZE computes — one row per
-            # analyzed column (null_count / ndv_approx / min / max) plus
-            # a summary row carrying row_count. Metadata-only by
-            # construction: served from TableDef.stats and, when no
-            # ANALYZE ran, the manifest's footer row counts — never a
-            # scan. Redaction = DESCRIBE's column rule PLUS the ANALYZE
-            # reasoning read-side: stats are TABLE-WIDE unfiltered
-            # aggregates, so a ROW-filtered principal is denied outright
-            # (table-wide min/max/ndv leak past their row rectangle),
-            # while a column-rectangle-only principal sees only allowed
-            # columns' rows.
-            qe.tables = [stmt.target]
-            # the column rectangle comes from the SAME helper DESCRIBE
-            # and SHOW PARTITIONS use (incl. its pending-column strike
-            # on all-columns cells) so the redaction paths can never
-            # drift (round-15 review finding #5); the only logic new
-            # here is the row-filter deny below
-            table, allowed = self._introspect_gate(
-                stmt.target, name, columns=True
-            )
-            if (
-                self.catalog.governance_enabled
-                and name is not None
-                and name not in self.catalog.admins
-            ):
-                resolved = self.catalog._resolve_cells(
-                    name, table, stmt.target
-                )
-                if resolved is not None and any(
-                    pred is not None for pred, _cols in resolved[0]
+    def _stmt_show_tables(self, stmt, principal, name, qe) -> DataFrame:
+        return _local_df(
+            self.spark,
+            self._listing(self.catalog.tables, stmt.database, name),
+            "database string, table string",
+        )
+
+    def _stmt_show_views(self, stmt, principal, name, qe) -> DataFrame:
+        return _local_df(
+            self.spark,
+            self._listing(self.catalog.views, stmt.database, name),
+            "database string, view string",
+        )
+
+    def _listing(self, registry: dict, database, name) -> list:
+        return [
+            (d.database, d.name)
+            for _q, d in sorted(registry.items())
+            if (not database or d.database == database)
+            and self._visible(name, d.database, d.name)
+        ]
+
+    def _stmt_show_partitions(self, stmt, principal, name, qe) -> DataFrame:
+        table, _ = self._introspect_gate(qe, stmt.target, name)
+        # metadata-only: partition values come from the manifest's file
+        # list (or, for a never-written schema-on-read location, the
+        # directory tree) — never a data scan
+        parts: set[str] = set()
+        m = _lake.read_manifest(table.location)
+        if m is not None:
+            for f in m["files"]:
+                rel = os.path.dirname(f)
+                if rel and "=" in rel:
+                    parts.add(rel.replace(os.sep, "/"))
+        else:
+            for root, _dirs, files in os.walk(table.location):
+                rel = os.path.relpath(root, table.location)
+                if (
+                    rel != "."
+                    and all("=" in seg for seg in rel.split(os.sep))
+                    and any(not f.startswith(("_", ".")) for f in files)
                 ):
-                    raise PermissionDeniedError(
-                        f"principal {name!r} may not SHOW STATS on "
-                        f"{stmt.target}: statistics are table-wide "
-                        "unfiltered aggregates, and this principal's "
-                        "access is row-filtered (same reasoning as "
-                        "the ANALYZE gate)"
-                    )
-            st = dict(table.stats or {})
-            rows = []
-            for c in sorted((st.get("columns") or {})):
-                if allowed is not None and c not in allowed:
-                    continue  # outside every grant rectangle: redacted
-                e = st["columns"][c]
-                hist = e.get("histogram")
-                rows.append(
-                    (
-                        c,
-                        int(e["null_count"]),
-                        int(e["ndv_approx"]),
-                        e.get("min"),
-                        e.get("max"),
-                        # equi-height bounds, compact 'b0|b1|...|bN'
-                        # (same redaction rectangle as min/max — a
-                        # histogram IS a finer min/max)
-                        "|".join(repr(b) for b in hist) if hist else None,
-                        None,
-                        "analyze",
-                    )
-                )
-            row_count = st.get("row_count")
-            source = "analyze" if row_count is not None else None
-            if row_count is None and table.format == "parquet":
-                from .sources.lake import count_rows as _count_rows
+                    parts.add(rel.replace(os.sep, "/"))
+        return _local_df(
+            self.spark, [(p,) for p in sorted(parts)], "partition string"
+        )
 
-                info = _count_rows(table.location)
-                if info is not None:
-                    row_count = int(info["rows"])
-                    source = "metadata"
+    def _stmt_show_grants(self, stmt, principal, name, qe) -> DataFrame:
+        # the Lake Formation permissions-console view. Admins and owners
+        # may inspect any principal (FOR omitted = every grant on the
+        # object); anyone else lists only their OWN grants, and only on
+        # an object they hold SOME grant on — implicit deny hides
+        # existence here exactly as it does for SHOW/DESCRIBE.
+        if not self._is_object(stmt.target):
+            raise KeyError(f"unknown table or view {stmt.target!r}")
+        db, _, res = stmt.target.partition(".")
+        who = stmt.principal
+        if not self._owns(name, db, res):
+            if name is None or (who is not None and who != name):
+                raise PermissionDeniedError(
+                    "SHOW GRANTS FOR another principal requires an "
+                    "admin or an unconditioned ALL grant on the "
+                    "object; others may list only their own grants"
+                )
+            who = name
+            if not self.catalog.grants_for(name, db, res):
+                raise PermissionDeniedError(
+                    f"principal {name!r} is not authorized to "
+                    f"access {stmt.target}"
+                )
+        rows = [
+            (
+                g.principal,
+                g.permission,
+                g.via_filter,
+                (
+                    f"{g.via_tag_exclude[0]}={g.via_tag_exclude[1]}"
+                    if g.via_tag_exclude is not None
+                    else None
+                ),
+            )
+            for g in self.catalog.grants
+            if g.database == db
+            and g.resource == res
+            and (who is None or g.principal == who)
+        ]
+        return _local_df(
+            self.spark,
+            rows,
+            "principal string, permission string, via_filter string, "
+            "via_tag_exclude string",
+        )
+
+    def _stmt_show_stats(self, stmt, principal, name, qe) -> DataFrame:
+        # SHOW STATS: the governed READ surface for what ANALYZE
+        # computes — one row per analyzed column (null_count /
+        # ndv_approx / min / max) plus a summary row carrying
+        # row_count. Metadata-only by construction: served from
+        # TableDef.stats and, when no ANALYZE ran, the manifest's footer
+        # row counts — never a scan. Redaction = DESCRIBE's column rule
+        # (the SAME helper, incl. its pending-column strike, so the
+        # redaction paths can never drift) PLUS the ANALYZE reasoning
+        # read-side: stats are TABLE-WIDE unfiltered aggregates, so a
+        # ROW-filtered principal is denied outright (table-wide
+        # min/max/ndv leak past their row rectangle).
+        table, allowed = self._introspect_gate(
+            qe, stmt.target, name, columns=True
+        )
+        if name is not None and not self._ungated(name):
+            resolved = self.catalog._resolve_cells(name, table, stmt.target)
+            if resolved is not None and any(
+                pred is not None for pred, _cols in resolved[0]
+            ):
+                raise PermissionDeniedError(
+                    f"principal {name!r} may not SHOW STATS on "
+                    f"{stmt.target}: statistics are table-wide "
+                    "unfiltered aggregates, and this principal's "
+                    "access is row-filtered (same reasoning as "
+                    "the ANALYZE gate)"
+                )
+        st = dict(table.stats or {})
+        rows = []
+        for c in sorted(st.get("columns") or {}):
+            if allowed is not None and c not in allowed:
+                continue  # outside every grant rectangle: redacted
+            e = st["columns"][c]
+            hist = e.get("histogram")
             rows.append(
-                (None, None, None, None, None, None, row_count, source)
-            )
-            return _local_df(
-                spark,
-                rows,
-                "column_name string, null_count long, ndv_approx long, "
-                "min string, max string, histogram string, "
-                "row_count long, stats_source string",
-            )
-
-        if isinstance(stmt, DescribeStatement):
-            if stmt.target in self.catalog.views:
-                # DESCRIBE a view: resolve the body AS the principal —
-                # catalog.view gates (implicit deny) and its schema is
-                # the view's own projection
-                vdf = self.catalog.view(stmt.target, principal)
-                qe.tables = [stmt.target]
-                return _local_df(
-                spark,
-                    [
-                        (f.name, f.dataType.simpleString(), False, None)
-                        for f in vdf.schema.fields
-                    ],
-                    "col_name string, data_type string, "
-                    "is_partition boolean, comment string",
+                (
+                    c,
+                    int(e["null_count"]),
+                    int(e["ndv_approx"]),
+                    e.get("min"),
+                    e.get("max"),
+                    # equi-height bounds, compact 'b0|b1|...|bN' (same
+                    # redaction rectangle as min/max — a histogram IS a
+                    # finer min/max)
+                    "|".join(repr(b) for b in hist) if hist else None,
+                    None,
+                    "analyze",
                 )
-            table, allowed = self._introspect_gate(
-                stmt.target, name, columns=True
             )
-            qe.tables = [stmt.target]
-            rows = []
-            schema = table.schema
-            if schema is None:
-                schema = self.catalog.table(stmt.target, principal).schema
-            for f in schema.fields:
-                if allowed is not None and f.name not in allowed:
-                    continue  # redacted: outside every grant rectangle
+        row_count = st.get("row_count")
+        source = "analyze" if row_count is not None else None
+        if row_count is None and table.format == "parquet":
+            info = _lake.count_rows(table.location)
+            if info is not None:
+                row_count = int(info["rows"])
+                source = "metadata"
+        rows.append((None, None, None, None, None, None, row_count, source))
+        return _local_df(
+            self.spark,
+            rows,
+            "column_name string, null_count long, ndv_approx long, "
+            "min string, max string, histogram string, "
+            "row_count long, stats_source string",
+        )
+
+    def _visible_columns(self, target: str, principal, name, qe) -> list:
+        """DESCRIBE's rows — (name, type, is_partition, comment) — with
+        its redaction: a view resolves AS the principal (catalog.view
+        gates; the schema is the view's own projection); a table drops
+        columns outside every grant rectangle."""
+        if target in self.catalog.views:
+            vdf = self.catalog.view(target, principal)
+            return [
+                (f.name, f.dataType.simpleString(), False, None)
+                for f in vdf.schema.fields
+            ]
+        table, allowed = self._introspect_gate(qe, target, name, columns=True)
+        schema = table.schema
+        if schema is None:
+            schema = self.catalog.table(target, principal).schema
+        return [
+            (
+                f.name,
+                f.dataType.simpleString(),
+                f.name in (table.partition_keys or ()),
+                table.column_comments.get(f.name),
+            )
+            for f in schema.fields
+            if allowed is None or f.name in allowed
+        ]
+
+    def _stmt_describe(self, stmt, principal, name, qe) -> DataFrame:
+        return _local_df(
+            self.spark,
+            self._visible_columns(stmt.target, principal, name, qe),
+            "col_name string, data_type string, is_partition boolean, "
+            "comment string",
+        )
+
+    def _stmt_show_columns(self, stmt, principal, name, qe) -> DataFrame:
+        # DESCRIBE's redaction rules, names only
+        rows = self._visible_columns(stmt.target, principal, name, qe)
+        return _local_df(self.spark, [r[:1] for r in rows], "col_name string")
+
+    def _stmt_show_create_table(self, stmt, principal, name, qe) -> DataFrame:
+        # the console's copy-the-DDL verb: reconstruct the column-list
+        # CREATE EXTERNAL TABLE (round-trip pinned in
+        # tests/test_sql_ddl.py) or the stored view DDL. Metadata-only;
+        # DESCRIBE's gate and redaction.
+        def _q(s: str) -> str:
+            return s.replace("'", "''")
+
+        if stmt.target in self.catalog.views:
+            # gates like a view read; body is stored verbatim
+            self.catalog.view(stmt.target, principal)
+            vd = self.catalog.views[stmt.target]
+            ddl = f"CREATE OR REPLACE VIEW {stmt.target} AS {vd.sql}"
+            return _local_df(self.spark, [(ddl,)], "ddl string")
+        table, allowed = self._introspect_gate(
+            qe, stmt.target, name, columns=True
+        )
+        if table.schema is None:
+            raise ValueError(f"{stmt.target} has no declared schema to render")
+
+        def _item(f) -> str:
+            c = table.column_comments.get(f.name)
+            comment = f" COMMENT '{_q(c)}'" if c else ""
+            return f"{f.name} {f.dataType.simpleString()}{comment}"
+
+        # a partition key outside every grant rectangle is redacted
+        # exactly like a data column: it must not leak its existence
+        # through the DDL (DESCRIBE/SHOW COLUMNS already hide it)
+        pkeys = tuple(table.partition_keys or ())
+        shown = [
+            f
+            for f in table.schema.fields
+            if allowed is None or f.name in allowed
+        ]
+        items = [f"  {_item(f)}" for f in shown if f.name not in pkeys]
+        by_name = {f.name: f for f in shown}
+        pby = ", ".join(_item(by_name[k]) for k in pkeys if k in by_name)
+        ddl = (
+            f"CREATE EXTERNAL TABLE {stmt.target} (\n"
+            + ",\n".join(items)
+            + ")"
+            + (f"\nPARTITIONED BY ({pby})" if pby else "")
+            + "\nSTORED AS PARQUET"
+            + f"\nLOCATION '{_q(table.location)}'"
+        )
+        return _local_df(self.spark, [(ddl,)], "ddl string")
+
+    def _stmt_describe_database(self, stmt, principal, name, qe) -> DataFrame:
+        # metadata-only; table count follows the SHOW TABLES visibility
+        # rule (implicit deny hides existence)
+        if stmt.name not in self.catalog.databases:
+            raise KeyError(f"unknown database {stmt.name!r}")
+        n_vis = sum(
+            1
+            for td in self.catalog.tables.values()
+            if td.database == stmt.name
+            and self._visible(name, td.database, td.name)
+        )
+        return _local_df(
+            self.spark,
+            [(stmt.name, self.catalog.databases[stmt.name] or None, n_vis)],
+            "database string, comment string, n_tables_visible long",
+        )
+
+    def _stmt_describe_detail(self, stmt, principal, name, qe) -> DataFrame:
+        # Delta's one-row metadata summary, metadata-only: catalog entry
+        # + current manifest; a never-written schema-on-read location
+        # reports its directory facts. Same introspection gate as
+        # DESCRIBE (any grant admits; implicit deny hides).
+        table, _ = self._introspect_gate(qe, stmt.target, name)
+        m = (
+            _lake.read_manifest(table.location)
+            if table.format == "parquet"
+            else None
+        )
+        if m is not None:
+            files = m["files"]
+            size = 0
+            for f in files:
+                try:
+                    size += os.stat(os.path.join(table.location, f)).st_size
+                except OSError:
+                    pass  # vacuumed between read and stat: skip
+            info = _lake.count_rows(table.location)
+            row = (
+                table.format,
+                table.location,
+                int(m["version"]),
+                float(m["committed_at"]),
+                len(files),
+                int(size),
+                (int(info["rows"]) if info is not None else None),
+                list(m.get("partition_by") or []),
+                len(m.get("delete_predicates", [])),
+                sorted(m.get("constraints", {})),
+            )
+        else:
+            files = _lake._data_file_relpaths(Path(table.location))
+            size = sum(
+                os.stat(os.path.join(table.location, f)).st_size
+                for f in files
+            )
+            row = (
+                table.format,
+                table.location,
+                None,
+                None,
+                len(files),
+                int(size),
+                None,
+                list(table.partition_keys),
+                0,
+                [],
+            )
+        return _local_df(
+            self.spark,
+            [row],
+            "format string, location string, version long, "
+            "committed_at double, num_files long, size_bytes long, "
+            "num_rows long, partition_by array<string>, "
+            "num_tombstones long, constraints array<string>",
+        )
+
+    def _stmt_describe_files(self, stmt, principal, name, qe) -> DataFrame:
+        table, _ = self._introspect_gate(qe, stmt.target, name)
+        live = Path(table.location)
+
+        def _size(f):
+            try:
+                return (live / f).stat().st_size
+            except OSError:
+                # deleted out-of-band between the listing and the stat —
+                # exactly the churn declared locations see; report
+                # unknown, never crash
+                return None
+
+        rows = []
+        m = _lake.read_manifest(table.location)
+        if m is not None:
+            fr = m.get("file_rows", {})
+            fa = m.get("file_added", {})
+            for f in sorted(m["files"]):
                 rows.append(
                     (
-                        f.name,
-                        f.dataType.simpleString(),
-                        f.name in (table.partition_keys or ()),
-                        table.column_comments.get(f.name),
+                        f,
+                        os.path.dirname(f).replace(os.sep, "/"),
+                        int(fr[f]) if f in fr else None,
+                        _size(f),
+                        int(fa[f]) if f in fa else None,
                     )
                 )
-            return _local_df(
-                spark,
-                rows,
-                "col_name string, data_type string, is_partition boolean, "
-                "comment string",
-            )
-
-        if isinstance(stmt, ShowColumnsStatement):
-            # DESCRIBE's redaction rules, names only
-            if stmt.target in self.catalog.views:
-                vdf = self.catalog.view(stmt.target, principal)
-                qe.tables = [stmt.target]
-                return _local_df(
-                spark,
-                    [(f.name,) for f in vdf.schema.fields], "col_name string"
+        elif live.is_dir():
+            # declared location: the MSCK index supplies exact rows when
+            # fresh; otherwise a live listing with sizes only (no
+            # per-query footer reads)
+            disc = (getattr(table, "discovered", None) or {}).get("files", {})
+            for f in _lake._data_file_relpaths(live):
+                size = _size(f)
+                known = disc.get(f)
+                nrows = (
+                    int(known[1])
+                    if known is not None
+                    and size is not None
+                    and int(known[0]) == size
+                    else None
                 )
-            table, allowed = self._introspect_gate(
-                stmt.target, name, columns=True
-            )
-            qe.tables = [stmt.target]
-            schema = table.schema
-            if schema is None:
-                schema = self.catalog.table(stmt.target, principal).schema
-            rows = [
-                (f.name,)
-                for f in schema.fields
-                if allowed is None or f.name in allowed
-            ]
-            return _local_df(spark, rows, "col_name string")
-
-        if isinstance(stmt, ShowCreateTableStatement):
-            # the console's copy-the-DDL verb: reconstruct the
-            # round-13 column-list CREATE EXTERNAL TABLE (round-trip
-            # pinned in tests/test_sql_ddl.py) or the stored view DDL.
-            # Metadata-only; DESCRIBE's gate and redaction.
-            def _q(s: str) -> str:
-                return s.replace("'", "''")
-
-            if stmt.target in self.catalog.views:
-                # gates like a view read; body is stored verbatim
-                self.catalog.view(stmt.target, principal)
-                qe.tables = [stmt.target]
-                vd = self.catalog.views[stmt.target]
-                ddl = f"CREATE OR REPLACE VIEW {stmt.target} AS {vd.sql}"
-                return _local_df(spark, [(ddl,)], "ddl string")
-            table, allowed = self._introspect_gate(
-                stmt.target, name, columns=True
-            )
-            qe.tables = [stmt.target]
-            schema = table.schema
-            if schema is None:
-                raise ValueError(
-                    f"{stmt.target} has no declared schema to render"
+                rows.append(
+                    (f, os.path.dirname(f).replace(os.sep, "/"), nrows, size, None)
                 )
-            pkeys = tuple(table.partition_keys or ())
-            items = []
-            for f in schema.fields:
-                if f.name in pkeys:
-                    continue
-                if allowed is not None and f.name not in allowed:
-                    continue  # redacted: outside every grant rectangle
-                c = table.column_comments.get(f.name)
-                comment = f" COMMENT '{_q(c)}'" if c else ""
-                items.append(
-                    f"  {f.name} {f.dataType.simpleString()}{comment}"
-                )
-            by_name = {f.name: f for f in schema.fields}
-            pby_items = []
-            for k in pkeys:
-                if k not in by_name:
-                    continue
-                if allowed is not None and k not in allowed:
-                    # redacted exactly like data columns: a partition
-                    # key outside every grant rectangle must not leak
-                    # its existence through the DDL (DESCRIBE/SHOW
-                    # COLUMNS already hide it)
-                    continue
-                c = table.column_comments.get(k)
-                comment = f" COMMENT '{_q(c)}'" if c else ""
-                pby_items.append(
-                    f"{k} {by_name[k].dataType.simpleString()}{comment}"
-                )
-            pby = ", ".join(pby_items)
-            ddl = (
-                f"CREATE EXTERNAL TABLE {stmt.target} (\n"
-                + ",\n".join(items)
-                + ")"
-                + (f"\nPARTITIONED BY ({pby})" if pby else "")
-                + "\nSTORED AS PARQUET"
-                + f"\nLOCATION '{_q(table.location)}'"
+        return _local_df(
+            self.spark,
+            rows,
+            "file string, partition string, rows long, "
+            "size_bytes long, added_version long",
+        )
+
+    def _stmt_describe_history(self, stmt, principal, name, qe) -> DataFrame:
+        rows = [
+            (
+                h["version"],
+                h["parent"],
+                float(h["committed_at"]),
+                h["n_files"],
+                h["n_tombstones"],
+                list(h["partition_by"] or []),
+                list(h["constraints"]),
             )
-            return _local_df(spark, [(ddl,)], "ddl string")
-
-        if isinstance(stmt, DescribeDatabaseStatement):
-            # metadata-only; table count follows the SHOW TABLES
-            # visibility rule (implicit deny hides existence)
-            if stmt.name not in self.catalog.databases:
-                raise KeyError(f"unknown database {stmt.name!r}")
-            gov = (
-                self.catalog.governance_enabled
-                and name not in self.catalog.admins
-            )
-            n_vis = 0
-            for _q, td in self.catalog.tables.items():
-                if td.database != stmt.name:
-                    continue
-                if gov and (
-                    name is None
-                    or not self.catalog.grants_for(name, td.database, td.name)
-                ):
-                    continue
-                n_vis += 1
-            qe.tables = []
-            return _row(
-                {
-                    "database": stmt.name,
-                    "comment": self.catalog.databases[stmt.name] or None,
-                    "n_tables_visible": n_vis,
-                },
-                "database string, comment string, n_tables_visible long",
-            )
-
-        if isinstance(stmt, DescribeDetailStatement):
-            # Delta's one-row metadata summary, metadata-only: catalog
-            # entry + current manifest; a never-written schema-on-read
-            # location reports its directory facts. Same introspection
-            # gate as DESCRIBE (any grant admits; implicit deny hides).
-            import os as _os
-
-            from .sources.lake import count_rows, read_manifest
-
-            table, _ = self._introspect_gate(stmt.target, name)
-            qe.tables = [stmt.target]
-            m = (
-                read_manifest(table.location)
-                if table.format == "parquet"
-                else None
-            )
-            if m is not None:
-                files = m["files"]
-                size = 0
-                for f in files:
-                    try:
-                        size += _os.stat(
-                            _os.path.join(table.location, f)
-                        ).st_size
-                    except OSError:
-                        pass  # vacuumed between read and stat: skip
-                info = count_rows(table.location)
-                row = (
-                    table.format,
-                    table.location,
-                    int(m["version"]),
-                    float(m["committed_at"]),
-                    len(files),
-                    int(size),
-                    (int(info["rows"]) if info is not None else None),
-                    list(m.get("partition_by") or []),
-                    len(m.get("delete_predicates", [])),
-                    sorted(m.get("constraints", {})),
-                )
-            else:
-                from .sources.lake import _data_file_relpaths
-                from pathlib import Path as _P
-
-                files = _data_file_relpaths(_P(table.location))
-                size = sum(
-                    _os.stat(_os.path.join(table.location, f)).st_size
-                    for f in files
-                )
-                row = (
-                    table.format,
-                    table.location,
-                    None,
-                    None,
-                    len(files),
-                    int(size),
-                    None,
-                    list(table.partition_keys),
-                    0,
-                    [],
-                )
-            return _local_df(
-                spark,
-                [row],
-                "format string, location string, version long, "
-                "committed_at double, num_files long, size_bytes long, "
-                "num_rows long, partition_by array<string>, "
-                "num_tombstones long, constraints array<string>",
-            )
-
-        if isinstance(stmt, DescribeHistoryStatement):
-            hist = self.history(stmt.target, principal)
-            qe.tables = [stmt.target]
-            rows = [
-                (
-                    h["version"],
-                    h["parent"],
-                    float(h["committed_at"]),
-                    h["n_files"],
-                    h["n_tombstones"],
-                    list(h["partition_by"] or []),
-                    list(h["constraints"]),
-                )
-                for h in hist
-            ]
-            return _local_df(
-                spark,
-                rows or [],
-                "version long, parent long, committed_at double, "
-                "n_files long, n_tombstones long, "
-                "partition_by array<string>, constraints array<string>",
-            )
-
-        raise ValueError(f"unhandled statement {type(stmt).__name__}")
+            for h in self.history(stmt.target, principal)
+        ]
+        return _local_df(
+            self.spark,
+            rows,
+            "version long, parent long, committed_at double, "
+            "n_files long, n_tombstones long, "
+            "partition_by array<string>, constraints array<string>",
+        )
 
     def _refuse_mv_mutation(self, qualified: str, verb: str) -> None:
         """Row-mutation verbs (INSERT/MERGE/UPDATE/DELETE) must not
@@ -2574,42 +2352,7 @@ class Engine:
                     "its definition)"
                 )
 
-    def _view_gate(self, name, qualified: str, verb: str) -> None:
-        """Destructive view DDL (DROP / CREATE OR REPLACE over an
-        existing view) requires admin or an unconditioned ALL grant on
-        the VIEW — the same ownership rule as table maintenance; the
-        creator-grant issued at CREATE VIEW satisfies it. Denials are
-        audited."""
-        from .governance import ALL, PermissionDeniedError
-
-        if not self.catalog.governance_enabled or name in self.catalog.admins:
-            return
-        db, _, vname = qualified.partition(".")
-        grants = (
-            self.catalog.grants_for(name, db, vname)
-            if name is not None
-            else []
-        )
-        if not any(
-            g.permission == ALL
-            and g.via_filter is None
-            and g.via_tag_exclude is None
-            for g in grants
-        ):
-            self.catalog.audit.record(
-                principal=name or "<none>",
-                query=f"{verb} {qualified}",
-                tables=[qualified],
-                filters_applied=[],
-                status="denied",
-                error="requires admin or ALL grant on the view",
-            )
-            raise PermissionDeniedError(
-                f"principal {name!r} may not {verb} {qualified}: requires "
-                "admin or an unconditioned ALL grant on the view"
-            )
-
-    def _run_insert(self, stmt, principal, qe: QueryExecution) -> DataFrame:
+    def _stmt_insert(self, stmt, principal, name, qe) -> DataFrame:
         """INSERT INTO dispatch: the batch query reads THROUGH the
         governance rewrite as the submitting principal, maps
         POSITIONALLY onto the named (or full declared) column list —
@@ -2621,11 +2364,6 @@ class Engine:
         fail-close match MERGE."""
         from pyspark.sql import functions as F
 
-        from .sources.lake import adopt_table, append_rows
-
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
         spark = self.spark
         self._refuse_mv_mutation(stmt.target, "INSERT INTO")
         table = self.catalog.tables[stmt.target]  # KeyError: fail closed
@@ -2679,38 +2417,29 @@ class Engine:
             expected = list(stmt.columns) or declared
         # fail-closed schema evolution (MERGE's rule): a pending column
         # cannot be written — named or swept in by the full-width form
-        if table.pending_columns:
-            struck = sorted(set(expected) & set(table.pending_columns))
-            if struck:
-                self.catalog.audit.record(
-                    principal=name or "<none>",
-                    query=f"INSERT INTO {stmt.target}",
-                    tables=[stmt.target],
-                    filters_applied=[],
-                    status="denied",
-                    error=f"insert targets pending columns {struck}",
-                )
-                raise PermissionDeniedError(
-                    f"INSERT references pending-approval column(s) "
-                    f"{struck} on {stmt.target}; approve the evolved "
-                    "columns first (fail-closed schema evolution) or "
-                    "name the approved columns explicitly"
-                )
-        created: list[str] = []
-        try:
-            rewritten, touched = self.catalog._rewrite_sql(
-                stmt.source_sql,
-                principal,
-                _filters_out=qe.filters_applied,
-                _views_out=created,
+        struck = sorted(set(expected) & set(table.pending_columns))
+        if struck:
+            self.catalog.audit.record(
+                name or "<none>",
+                f"INSERT INTO {stmt.target}",
+                [stmt.target],
+                [],
+                "denied",
+                error=f"insert targets pending columns {struck}",
             )
-            batch = spark.sql(rewritten)
+            raise PermissionDeniedError(
+                f"INSERT references pending-approval column(s) "
+                f"{struck} on {stmt.target}; approve the evolved "
+                "columns first (fail-closed schema evolution) or "
+                "name the approved columns explicitly"
+            )
+        with self._rewritten(
+            stmt.source_sql, principal, qe.filters_applied
+        ) as (sql, touched):
+            batch = spark.sql(sql)
             # DML source reads bill against the workgroup scan cap
-            # (round-16 ADVICE; Athena exempts only DDL)
+            # (Athena exempts only DDL)
             self._enforce_scan_cap(qe, batch)
-        finally:
-            for v in created:
-                spark.catalog.dropTempView(v)
         if len(batch.columns) != len(expected):
             raise ValueError(
                 f"INSERT source produces {len(batch.columns)} column(s), "
@@ -2736,73 +2465,69 @@ class Engine:
         pkeys = list(table.partition_keys) or None
         # the declared schema is what the batch was cast to above, so
         # adopting under it keeps the append's schema check exact
-        cur = adopt_table(table.location, pkeys, spark, table.schema) or {}
+        cur = _lake.adopt_table(table.location, pkeys, spark, table.schema) or {}
         before = set(cur.get("files", ()))
-        if stmt.overwrite:
+        if not stmt.overwrite:
+            snap = _lake.append_rows(
+                spark, table.location, batch, partition_by=pkeys
+            )
+        elif pkeys is None:
+            raise ValueError(
+                f"INSERT OVERWRITE requires a partitioned table — "
+                f"{stmt.target} is unpartitioned; a full replace is "
+                "publish_overwrite / CTAS"
+            )
+        else:
             # dynamic-partition OVERWRITE: one atomic manifest commit
             # replacing exactly the partitions present in the batch
-            # (overwrite_partitions' contract; refusals — unpartitioned,
-            # never-written, evolved layout, empty batch — surface loudly)
-            from .sources.lake import overwrite_partitions
-
-            if pkeys is None:
-                raise ValueError(
-                    f"INSERT OVERWRITE requires a partitioned table — "
-                    f"{stmt.target} is unpartitioned; a full replace is "
-                    "publish_overwrite / CTAS"
-                )
-            rp = None
-            if static:
-                # the named partition IS the replacement set: batch
-                # rows outside it refuse in the lake layer, and an
-                # empty batch legitimately TRUNCATES the partition
-                # (hive static-overwrite semantics)
-                from .sources.lake import hive_partition_relpath
-
-                rp = [
-                    hive_partition_relpath(
+            # (overwrite_partitions' contract; refusals — never-written,
+            # evolved layout, empty batch — surface loudly). Static
+            # form: the named partition IS the replacement set — batch
+            # rows outside it refuse in the lake layer, and an empty
+            # batch legitimately TRUNCATES the partition (hive
+            # static-overwrite semantics).
+            rp = (
+                [
+                    _lake.hive_partition_relpath(
                         pkeys, tuple(static[k] for k in pkeys)
                     )
                 ]
-            snap = overwrite_partitions(
-                spark, table.location, batch, pkeys,
-                replace_partitions=rp,
+                if static
+                else None
             )
-            rows = sum(
-                int(snap.get("file_rows", {}).get(f, 0))
-                for f in set(snap["files"]) - before
+            snap = _lake.overwrite_partitions(
+                spark, table.location, batch, pkeys, replace_partitions=rp
             )
-            qe.tables = [stmt.target, *touched]
-            return _local_df(
-                self.spark,
-                [
-                    (
-                        rows,
-                        len(snap["partitions_replaced"]),
-                        int(snap["files_replaced"]),
-                        snap["version"],
-                    )
-                ],
-                "rows_inserted long, partitions_replaced long, "
-                "files_replaced long, version long",
-            )
-        snap = append_rows(spark, table.location, batch, partition_by=pkeys)
         rows = sum(
             int(snap.get("file_rows", {}).get(f, 0))
             for f in set(snap["files"]) - before
         )
         qe.tables = [stmt.target, *touched]
+        if not stmt.overwrite:
+            return _local_df(
+                spark, [(rows, snap["version"])], "rows_inserted long, version long"
+            )
         return _local_df(
-            self.spark,
-            [(rows, snap["version"])], "rows_inserted long, version long"
+            spark,
+            [
+                (
+                    rows,
+                    len(snap["partitions_replaced"]),
+                    int(snap["files_replaced"]),
+                    snap["version"],
+                )
+            ],
+            "rows_inserted long, partitions_replaced long, "
+            "files_replaced long, version long",
         )
 
     def _introspect_gate(
-        self, qualified: str, name, columns: bool = False
+        self, qe: QueryExecution, qualified: str, name, columns: bool = False
     ) -> tuple:
         """Grant gate for SHOW PARTITIONS / DESCRIBE: any grant admits
         (same rule as :meth:`history` — metadata still requires SOME
-        SELECT path; implicit deny otherwise). Returns ``(table,
+        SELECT path; implicit deny otherwise); an admitted statement's
+        audit line names the table. Returns ``(table,
         allowed_columns)`` where ``allowed_columns`` is None for
         unrestricted principals, else the DESCRIBE redaction set: the
         union of every conditioned grant's column rectangle — a column
@@ -2810,14 +2535,12 @@ class Engine:
         rectangle does not exist for them (computed only when
         ``columns=True``)."""
         table = self.catalog.tables[qualified]  # KeyError: fail closed
-        if (
-            not self.catalog.governance_enabled
-            or name is None
-            or name in self.catalog.admins
-        ):
+        if name is None or self._ungated(name):
+            qe.tables = [qualified]
             return table, None
         # raises PermissionDeniedError on no grant (implicit deny)
         resolved = self.catalog._resolve_cells(name, table, qualified)
+        qe.tables = [qualified]
         if resolved is None or not columns:
             return table, None
         cells, _ = resolved
@@ -2851,15 +2574,8 @@ class Engine:
         rewrite directly (not ``_execute``), so no result CSV is written
         and no query execution is recorded (round-2 ADVICE).
         """
-        created_views: list[str] = []
-        try:
-            rewritten, _ = self.catalog._rewrite_sql(
-                sql, principal, _views_out=created_views
-            )
+        with self._rewritten(sql, principal) as (rewritten, _):
             df = self.spark.sql(rewritten)
-        finally:
-            for v in created_views:
-                self.spark.catalog.dropTempView(v)
         jvm = self.spark.sparkContext._jvm
         return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
 
@@ -2881,7 +2597,6 @@ class Engine:
         (Athena/Glue behavior: creator owns the result table).
         """
         from .catalog import TableDef
-        from .governance import ALL
 
         qe = self._execute(sql, principal, raise_on_error=True)
         if qe.result is None:
@@ -2929,75 +2644,29 @@ class Engine:
         contrast, materializes THROUGH the governed query, which is why
         SELECT suffices there). Audited as ``CLONE TABLE`` incl.
         denials."""
-        from .catalog import TableDef
-        from .governance import ALL
-        from .sources.lake import clone_table as lake_clone
-
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
+        name = _principal_name(principal)
         src = self.catalog.tables[source]  # KeyError: fail closed
-        audit_suffix = (
-            f" VERSION AS OF {version}" if version is not None else ""
-        )
-
-        def _audit(status: str, error: str | None = None):
-            self.catalog.audit.record(
-                principal=name or "<none>",
-                query=f"CLONE TABLE {target} FROM {source}{audit_suffix}",
-                tables=[source, target],
-                filters_applied=[],
-                status=status,
-                error=error,
+        suffix = f" VERSION AS OF {version}" if version is not None else ""
+        with self._governed(
+            name,
+            f"CLONE TABLE {target} FROM {source}{suffix}",
+            [source, target],
+            owner=(src.database, src.name),
+            denied="CLONE requires admin or ALL on source",
+            refusal=(
+                f"principal {name!r} may not clone {source}: a clone "
+                "copies every row and column, so it requires an admin "
+                "or an unconditioned ALL grant on the source"
+            ),
+        ) as audit:
+            self._claim_table_name(target, audit)
+            res = _lake.clone_table(src.location, location, version)
+            db, _, tname = target.partition(".")
+            self.catalog.register_table(
+                _structure_copy(src, db, tname, location)
             )
-
-        if self.catalog.governance_enabled and name not in self.catalog.admins:
-            grants = (
-                self.catalog.grants_for(name, src.database, src.name)
-                if name is not None
-                else []
-            )
-            if not any(
-                g.permission == ALL
-                and g.via_filter is None
-                and g.via_tag_exclude is None
-                for g in grants
-            ):
-                _audit("denied", "CLONE requires admin or ALL on source")
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not clone {source}: a clone "
-                    "copies every row and column, so it requires an admin "
-                    "or an unconditioned ALL grant on the source"
-                )
-        db, _, tname = target.partition(".")
-        if db not in self.catalog.databases:
-            _audit("failed", f"unknown database {db!r}")
-            raise KeyError(f"unknown database {db!r}")
-        for registry, kind in (
-            (self.catalog.tables, "table"),
-            (self.catalog.views, "view"),
-            (self.catalog.mvs, "materialized view"),
-        ):
-            if target in registry:
-                _audit("failed", f"{target} already a {kind}")
-                raise ValueError(f"{target} already exists (a {kind})")
-        res = lake_clone(src.location, location, version)
-        self.catalog.register_table(
-            TableDef(
-                database=db,
-                name=tname,
-                location=location,
-                schema=src.schema,
-                format=src.format,
-                column_comments=dict(src.column_comments),
-                column_tags={c: dict(v) for c, v in src.column_tags.items()},
-                partition_keys=tuple(src.partition_keys),
-                pending_columns=set(src.pending_columns),
-            )
-        )
-        if name is not None:
-            self.catalog.grant(name, ALL, db, tname)
-        _audit("succeeded")
+            if name is not None:
+                self.catalog.grant(name, ALL, db, tname)
         return res
 
     def unload(
@@ -3069,11 +2738,7 @@ class Engine:
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        from .governance import ALL
-
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
+        name = _principal_name(principal)
         table = self.catalog.tables[qualified]  # KeyError: fail closed
         want = [str(c) for c in (columns or [])]
         audit_suffix = (
@@ -3084,138 +2749,117 @@ class Engine:
             else ""
         )
 
-        def _audit(status: str, error: str | None = None):
-            self.catalog.audit.record(
-                principal=name or "<none>",
-                query=f"ANALYZE TABLE {qualified}{audit_suffix}",
-                tables=[qualified],
-                filters_applied=[],
-                status=status,
-                error=error,
-            )
-
-        if self.catalog.governance_enabled and name not in self.catalog.admins:
-            grants = (
-                self.catalog.grants_for(name, table.database, table.name)
-                if name is not None
+        with self._governed(
+            name,
+            f"ANALYZE TABLE {qualified}{audit_suffix}",
+            [qualified],
+            owner=(table.database, table.name),
+            denied="ANALYZE requires admin or ALL grant",
+            refusal=(
+                f"principal {name!r} may not ANALYZE {qualified}: "
+                "table-wide statistics require an admin or an "
+                "unconditioned ALL grant (stats bypass row/column "
+                "security by construction)"
+            ),
+        ) as audit:
+            # resolve the column list against the DECLARED schema
+            declared = (
+                [f_.name for f_ in table.schema.fields]
+                if table.schema is not None
                 else []
             )
-            if not any(
-                g.permission == ALL
-                and g.via_filter is None
-                and g.via_tag_exclude is None
-                for g in grants
-            ):
-                _audit("denied", "ANALYZE requires admin or ALL grant")
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not ANALYZE {qualified}: "
-                    "table-wide statistics require an admin or an "
-                    "unconditioned ALL grant (stats bypass row/column "
-                    "security by construction)"
+            pending = set(table.pending_columns)
+            if want == ["*"]:
+                cols = [c for c in declared if c not in pending]
+            else:
+                for c in want:
+                    if c not in declared:
+                        audit("failed", f"unknown column {c!r}")
+                        raise ValueError(
+                            f"ANALYZE: {qualified} declares no column {c!r} "
+                            f"(declared: {declared})"
+                        )
+                    if c in pending:
+                        audit("failed", f"column {c!r} pending approval")
+                        raise ValueError(
+                            f"ANALYZE: column {c!r} on {qualified} is "
+                            "pending schema-evolution approval "
+                            "(approve_evolved_columns releases it)"
+                        )
+                cols = want
+
+            stats: dict = {"computed_at": time.time()}
+            if table.format == "parquet":
+                m = _lake.read_manifest(table.location)
+                if m is not None:
+                    stats["snapshot_version"] = m["version"]
+            if not cols:
+                info = (
+                    _lake.count_rows(table.location)
+                    if table.format == "parquet"
+                    else None
                 )
-
-        # resolve the column list against the DECLARED schema
-        declared = (
-            [f_.name for f_ in table.schema.fields]
-            if table.schema is not None
-            else []
-        )
-        pending = set(table.pending_columns)
-        if want == ["*"]:
-            cols = [c for c in declared if c not in pending]
-        else:
-            for c in want:
-                if c not in declared:
-                    _audit("failed", f"unknown column {c!r}")
-                    raise ValueError(
-                        f"ANALYZE: {qualified} declares no column {c!r} "
-                        f"(declared: {declared})"
-                    )
-                if c in pending:
-                    _audit("failed", f"column {c!r} pending approval")
-                    raise ValueError(
-                        f"ANALYZE: column {c!r} on {qualified} is "
-                        "pending schema-evolution approval "
-                        "(approve_evolved_columns releases it)"
-                    )
-            cols = want
-
-        from .sources.lake import count_rows, read_manifest
-
-        stats: dict = {"computed_at": time.time()}
-        if table.format == "parquet":
-            m = read_manifest(table.location)
-            if m is not None:
-                stats["snapshot_version"] = m["version"]
-        if not cols:
-            info = (
-                count_rows(table.location)
-                if table.format == "parquet"
-                else None
-            )
-            if info is not None:
-                # metadata-only fast path: O(#files) driver arithmetic
-                stats["row_count"] = int(info["rows"])
-                stats["columns"] = {}
-                table.stats = stats
-                _audit("succeeded")
-                return dict(stats)
-        df = self.catalog.table(qualified, principal)
-        aggs = [F.count(F.lit(1)).alias("__rows__")]
-        atomic: dict[str, bool] = {}
-        numeric: dict[str, bool] = {}
-        quantiles = [
-            j / HISTOGRAM_BINS for j in range(HISTOGRAM_BINS + 1)
-        ]
-        for i, c in enumerate(cols):
-            dt = df.schema[c].dataType
-            atomic[c] = not isinstance(
-                dt, (T.ArrayType, T.MapType, T.StructType)
-            )
-            numeric[c] = isinstance(dt, T.NumericType)
-            aggs.append(F.count(F.col(c)).alias(f"nn_{i}"))
-            aggs.append(F.approx_count_distinct(F.col(c)).alias(f"ndv_{i}"))
-            if atomic[c]:
-                aggs.append(F.min(F.col(c)).alias(f"mn_{i}"))
-                aggs.append(F.max(F.col(c)).alias(f"mx_{i}"))
-            if numeric[c]:
-                # equi-height histogram bounds (Spark/Athena CBO's
-                # histogram shape): HISTOGRAM_BINS+1 approximate
-                # quantiles from the SAME single aggregate pass —
-                # percentile_approx is one-pass and mergeable like the
-                # HLL NDV, so histograms add no extra job
-                aggs.append(
-                    F.percentile_approx(
-                        F.col(c).cast("double"), quantiles, 10000
-                    ).alias(f"hist_{i}")
+                if info is not None:
+                    # metadata-only fast path: O(#files) driver arithmetic
+                    stats["row_count"] = int(info["rows"])
+                    stats["columns"] = {}
+                    table.stats = stats
+                    return dict(stats)
+            df = self.catalog.table(qualified, principal)
+            aggs = [F.count(F.lit(1)).alias("__rows__")]
+            atomic: dict[str, bool] = {}
+            numeric: dict[str, bool] = {}
+            quantiles = [
+                j / HISTOGRAM_BINS for j in range(HISTOGRAM_BINS + 1)
+            ]
+            for i, c in enumerate(cols):
+                dt = df.schema[c].dataType
+                atomic[c] = not isinstance(
+                    dt, (T.ArrayType, T.MapType, T.StructType)
                 )
-        row = df.agg(*aggs).collect()[0]
-        n = int(row["__rows__"])
-        stats["row_count"] = n
-        colstats: dict = {}
-        for i, c in enumerate(cols):
-            entry = {
-                "null_count": n - int(row[f"nn_{i}"]),
-                "ndv_approx": int(row[f"ndv_{i}"]),
-            }
-            if atomic[c]:
-                mn, mx = row[f"mn_{i}"], row[f"mx_{i}"]
-                entry["min"] = None if mn is None else str(mn)
-                entry["max"] = None if mx is None else str(mx)
-            if numeric[c]:
-                bounds = row[f"hist_{i}"]
-                if bounds is not None:
-                    # equi-height by construction: each of the
-                    # HISTOGRAM_BINS bins holds ~non_null/bins rows;
-                    # a value spanning k>=2 consecutive equal bounds
-                    # therefore holds >=(k-1)/bins of the rows — the
-                    # skew evidence histogram_skewed_values consumes
-                    entry["histogram"] = [float(b) for b in bounds]
-            colstats[c] = entry
-        stats["columns"] = colstats
-        table.stats = stats
-        _audit("succeeded")
-        return dict(stats)
+                numeric[c] = isinstance(dt, T.NumericType)
+                aggs.append(F.count(F.col(c)).alias(f"nn_{i}"))
+                aggs.append(F.approx_count_distinct(F.col(c)).alias(f"ndv_{i}"))
+                if atomic[c]:
+                    aggs.append(F.min(F.col(c)).alias(f"mn_{i}"))
+                    aggs.append(F.max(F.col(c)).alias(f"mx_{i}"))
+                if numeric[c]:
+                    # equi-height histogram bounds (Spark/Athena CBO's
+                    # histogram shape): HISTOGRAM_BINS+1 approximate
+                    # quantiles from the SAME single aggregate pass —
+                    # percentile_approx is one-pass and mergeable like the
+                    # HLL NDV, so histograms add no extra job
+                    aggs.append(
+                        F.percentile_approx(
+                            F.col(c).cast("double"), quantiles, 10000
+                        ).alias(f"hist_{i}")
+                    )
+            row = df.agg(*aggs).collect()[0]
+            n = int(row["__rows__"])
+            stats["row_count"] = n
+            colstats: dict = {}
+            for i, c in enumerate(cols):
+                entry = {
+                    "null_count": n - int(row[f"nn_{i}"]),
+                    "ndv_approx": int(row[f"ndv_{i}"]),
+                }
+                if atomic[c]:
+                    mn, mx = row[f"mn_{i}"], row[f"mx_{i}"]
+                    entry["min"] = None if mn is None else str(mn)
+                    entry["max"] = None if mx is None else str(mx)
+                if numeric[c]:
+                    bounds = row[f"hist_{i}"]
+                    if bounds is not None:
+                        # equi-height by construction: each of the
+                        # HISTOGRAM_BINS bins holds ~non_null/bins rows;
+                        # a value spanning k>=2 consecutive equal bounds
+                        # therefore holds >=(k-1)/bins of the rows — the
+                        # skew evidence histogram_skewed_values consumes
+                        entry["histogram"] = [float(b) for b in bounds]
+                colstats[c] = entry
+            stats["columns"] = colstats
+            table.stats = stats
+            return dict(stats)
 
     def maintain(
         self,
@@ -3280,10 +2924,10 @@ class Engine:
         - ``"evolve_partitioning"`` — change the table's partition
           layout as a metadata commit
           (sources.lake.evolve_partitioning; ``new_partition_by=``
-          required, columns must be on the declared schema and not
-          pending approval). The catalog's declared ``partition_keys``
-          follow the new spec, so later ``compact``/``delete_rows``
-          derive the right layout.
+          required, ``[]`` for unpartitioned; columns must be on the
+          declared schema and not pending approval). The catalog's
+          declared ``partition_keys`` follow the new spec, so later
+          ``compact``/``delete_rows`` derive the right layout.
         - ``"tag"`` / ``"drop_tag"`` — snapshot tags
           (sources.lake.tag_snapshot / drop_tag; ``name=`` required,
           ``to_version=`` optional): a tag PINS retention, so creating
@@ -3339,536 +2983,326 @@ class Engine:
         must resolve under it — a table registered at a mistaken or
         hostile location must not be rewritten.
         """
-        from pathlib import Path
-
-        from .governance import ALL, PermissionDeniedError
-        from .sources.lake import (
-            compact_in_place,
-            delete_rows,
-            delete_rows_mor,
-            evolve_partitioning,
-            expire_scd2_versions,
-            purge_deleted_rows,
-            rollback_table,
-            vacuum_manifests,
-            vacuum_publish_artifacts,
-        )
-
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
-        if action in ("delete_rows", "delete_rows_mor", "update_rows"):
+        name = _principal_name(principal)
+        spec = _MAINTAIN_ACTIONS.get(action)
+        if spec is not None and spec.refuse_mv:
             # derived state: REFRESH maintains it (layout-only actions
             # like optimize/vacuum stay allowed)
-            self._refuse_mv_mutation(qualified, f"maintain({action!r})")
+            self._refuse_mv_mutation(qualified, spec.refuse_mv)
         table = self.catalog.tables[qualified]  # KeyError: fail closed
-
-        # The erasure predicate is recorded VERBATIM in the audit line
-        # (round-7 VERDICT #6): a right-to-be-forgotten trail must show
-        # exactly WHAT was deleted, and a denied attempt must show what
-        # was attempted.
-        predicate = kwargs.get("predicate")
-        audit_suffix = (
-            f" WHERE {predicate}"
-            if action in ("delete_rows", "delete_rows_mor")
-            and predicate is not None
-            else ""
+        complete = spec is not None and all(
+            kwargs.get(k) is not None for k in spec.required
         )
-        if action == "update_rows":
-            sets = ", ".join(
-                f"{c} = {e}" for c, e in (kwargs.get("assignments") or {}).items()
-            )
-            audit_suffix = f" SET {sets}" + (
-                f" WHERE {predicate}" if predicate is not None else ""
-            )
-        if action == "rollback" and "to_version" in kwargs:
-            audit_suffix = f" TO VERSION {kwargs['to_version']}"
-        if action == "optimize_binpack" and kwargs.get("partition_where"):
-            # verbatim-predicate trail, same rule as erasure
-            audit_suffix = f" WHERE {kwargs['partition_where']}"
-        if action == "expire_snapshots":
-            if kwargs.get("older_than") is not None:
-                audit_suffix = f" OLDER THAN {kwargs['older_than']:.3f}"
-            if kwargs.get("dry_run"):
-                audit_suffix += " DRY RUN"
-        if action == "evolve_partitioning" and "new_partition_by" in kwargs:
-            audit_suffix = (
-                f" TO ({', '.join(list(kwargs['new_partition_by'] or []))})"
-            )
-        if action == "rename_column" and {"old", "new"} <= set(kwargs):
-            audit_suffix = f" {kwargs['old']} TO {kwargs['new']}"
-        if action == "drop_column" and "column" in kwargs:
-            audit_suffix = f" {kwargs['column']}"
-        if action in ("add_constraint", "drop_constraint") and "constraint" in kwargs:
-            audit_suffix = f" {kwargs['constraint']}" + (
-                f" CHECK ({kwargs['expr']})" if "expr" in kwargs else ""
-            )
-        if action == "add_files" and "source" in kwargs:
-            audit_suffix = f" '{kwargs['source']}'"
-        if action == "drop_partition" and "spec" in kwargs:
-            # verbatim-spec trail, same rule as erasure: the audit must
-            # show exactly WHICH partition was retired (or attempted)
-            audit_suffix = " PARTITION (" + ", ".join(
-                f"{c} = {v!r}" for c, v in kwargs["spec"]
-            ) + ")" + (" IF EXISTS" if kwargs.get("if_exists") else "")
-        if action == "widen_column" and {"column", "ddl_type"} <= set(kwargs):
-            audit_suffix = f" {kwargs['column']} TYPE {kwargs['ddl_type']}"
-        if action in ("tag", "drop_tag") and "name" in kwargs:
-            audit_suffix = f" {kwargs['name']}" + (
-                f" AT VERSION {kwargs['to_version']}"
-                if kwargs.get("to_version") is not None
-                else ""
-            )
-
-        def _audit(status: str, error: str | None = None):
-            self.catalog.audit.record(
-                principal=name or "<none>",
-                query=f"MAINTAIN {action} {qualified}{audit_suffix}",
-                tables=[qualified],
-                filters_applied=[],
-                status=status,
-                error=error,
-            )
-
-        if self.catalog.governance_enabled and name not in self.catalog.admins:
-            grants = (
-                self.catalog.grants_for(name, table.database, table.name)
-                if name is not None
-                else []
-            )
-            if not any(
-                g.permission == ALL
-                and g.via_filter is None
-                and g.via_tag_exclude is None
-                for g in grants
+        suffix = spec.suffix(kwargs) if complete and spec.suffix else ""
+        with self._governed(
+            name,
+            f"MAINTAIN {action} {qualified}{suffix}",
+            [qualified],
+            owner=(table.database, table.name),
+            denied="maintenance requires admin or ALL grant",
+            refusal=(
+                f"principal {name!r} may not run maintenance on "
+                f"{qualified}: requires admin or an unconditioned ALL "
+                "grant"
+            ),
+            ok="ok",
+        ) as audit:
+            loc = Path(table.location).resolve()
+            if self.catalog.lake_root is None or not loc.is_relative_to(
+                Path(self.catalog.lake_root).resolve()
             ):
-                _audit("denied", "maintenance requires admin or ALL grant")
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not run maintenance on "
-                    f"{qualified}: requires admin or an unconditioned ALL "
-                    "grant"
+                audit("denied", "location outside lake root")
+                raise ValueError(
+                    f"refusing to maintain {loc}: catalog lake_root must be "
+                    "configured and contain the table location (fail-closed "
+                    "guard, same rule as destructive drops)"
                 )
-        loc = Path(table.location).resolve()
-        if self.catalog.lake_root is None or not loc.is_relative_to(
-            Path(self.catalog.lake_root).resolve()
-        ):
-            _audit("denied", "location outside lake root")
-            raise ValueError(
-                f"refusing to maintain {loc}: catalog lake_root must be "
-                "configured and contain the table location (fail-closed "
-                "guard, same rule as destructive drops)"
-            )
+            if spec is None:
+                audit("failed", f"unknown action {action!r}")
+                raise ValueError(f"unknown maintenance action {action!r}")
+            if not complete:
+                need = " and ".join(f"{k}=" for k in spec.required)
+                audit("failed", f"{action} requires {need}")
+                raise ValueError(f"{action} requires {need}")
+            return self._maintain_action(action, table, qualified, kwargs, audit)
 
+    def _maintain_action(
+        self, action: str, table, qualified: str, kwargs: dict, audit
+    ) -> dict:
+        """Run one gated, argument-checked maintain() action."""
+        spark, loc = self.spark, table.location
         if action == "compact":
-            # pass the declared schema down (round-7 ADVICE): a
-            # schema-evolved table's new column lives only in touched
-            # partitions' files, and a schema-inference read before the
-            # atomic full rewrite would drop it permanently
+            # pass the declared schema down: a schema-evolved table's new
+            # column lives only in touched partitions' files, and a
+            # schema-inference read before the atomic full rewrite would
+            # drop it permanently
             kwargs.setdefault("schema", table.schema)
-            before, after = compact_in_place(
-                self.spark,
-                table.location,
-                partition_by=list(table.partition_keys) or None,
+            before, after = _lake.compact_in_place(
+                spark, loc, partition_by=list(table.partition_keys) or None,
                 **kwargs,
             )
-            result = {"files_before": before, "files_after": after}
-        elif action == "optimize_binpack":
-            from .sources.lake import optimize_binpack
-
+            return {"files_before": before, "files_after": after}
+        if action == "optimize_binpack":
             # targeted bin-pack: rewrites only the small-file tail
             # (fail-closed on tombstones/rename/spec evolution — the
             # lake layer names the cure)
-            result = optimize_binpack(self.spark, table.location, **kwargs)
-        elif action == "expire_versions":
+            return _lake.optimize_binpack(spark, loc, **kwargs)
+        if action == "expire_versions":
             # same layout derivation as delete_rows: the catalog knows
-            # the partition keys, so the retention rewrite stays
-            # bounded to partitions containing expired rows
+            # the partition keys, so the retention rewrite stays bounded
+            # to partitions containing expired rows
             if len(table.partition_keys) > 1:
                 # expire's signature is single-col; falling through with
                 # partition_col=None would swap in an UNPARTITIONED full
                 # rewrite, silently destroying the hive layout the
-                # catalog still declares (round-7 ADVICE)
-                _audit("failed", "expire_versions on multi-key table")
+                # catalog still declares
+                audit("failed", "expire_versions on multi-key table")
                 raise ValueError(
                     f"expire_versions supports at most one partition key; "
                     f"{qualified} declares {list(table.partition_keys)}"
                 )
             if len(table.partition_keys) == 1:
                 kwargs.setdefault("partition_col", table.partition_keys[0])
-            result = expire_scd2_versions(self.spark, table.location, **kwargs)
-        elif action == "vacuum_artifacts":
+            return _lake.expire_scd2_versions(spark, loc, **kwargs)
+        if action == "vacuum_artifacts":
             # operational default: never reap an artifact younger than
             # an hour — it may belong to a publish in progress in
             # another process (vacuum_publish_artifacts' contract)
             kwargs.setdefault("min_age_seconds", 3600.0)
-            result = {
-                "removed": vacuum_publish_artifacts(table.location, **kwargs)
-            }
-        elif action == "update_rows":
-            from .sources.lake import update_rows
-
-            if predicate is None or "assignments" not in kwargs:
-                _audit("failed", "update_rows requires assignments= and predicate=")
-                raise ValueError(
-                    "update_rows requires assignments= and predicate="
-                )
-            # fail-closed schema evolution (delete_rows' rule): neither
-            # the WHERE predicate nor any SET target/expression may
-            # touch a pending (evolved, unapproved) column
-            if table.pending_columns:
-                import re as _re
-
-                texts = [
-                    predicate if isinstance(predicate, str) else str(predicate)
-                ]
-                for c, e in kwargs["assignments"].items():
-                    texts.append(c)
-                    texts.append(e if isinstance(e, str) else str(e))
-                struck = sorted(
-                    {
-                        t
-                        for txt in texts
-                        for t in _re.findall(r"[A-Za-z_][A-Za-z0-9_]*", txt)
-                    }
-                    & set(table.pending_columns)
-                )
-                if struck:
-                    _audit("denied", f"update uses pending columns {struck}")
-                    raise PermissionDeniedError(
-                        f"update_rows references pending-approval column(s) "
-                        f"{struck} on {qualified}; approve the evolved "
-                        "columns first (fail-closed schema evolution)"
-                    )
-            kwargs.setdefault(
-                "partition_col", list(table.partition_keys) or None
-            )
-            kwargs.setdefault("schema", table.schema)
-            result = update_rows(self.spark, table.location, **kwargs)
-        elif action in ("delete_rows", "delete_rows_mor"):
-            # Fail-closed schema evolution extends to maintenance
-            # (round-7 VERDICT #6): a pending (evolved, not-yet-
-            # approved) column is invisible to every conditioned read
-            # path — a maintainer must not be able to USE it either,
-            # e.g. to erase rows by a column nobody has classified yet.
-            # The predicate string/Column is tokenized, not parsed: any
+            return {"removed": _lake.vacuum_publish_artifacts(loc, **kwargs)}
+        if action in ("update_rows", "delete_rows", "delete_rows_mor"):
+            # Fail-closed schema evolution extends to maintenance: a
+            # pending (evolved, not-yet-approved) column is invisible to
+            # every conditioned read path — a maintainer must not be
+            # able to USE it either, e.g. to erase rows by a column
+            # nobody has classified yet. The predicate and every SET
+            # target/expression are tokenized, not parsed: any
             # identifier collision with a pending column fails closed.
-            if table.pending_columns and predicate is not None:
-                import re as _re
-
-                ptext = (
-                    predicate if isinstance(predicate, str) else str(predicate)
+            predicate = kwargs.get("predicate")
+            texts = [] if predicate is None else [str(predicate)]
+            for c, e in (kwargs.get("assignments") or {}).items():
+                texts += [c, str(e)]
+            struck = sorted(
+                {
+                    t
+                    for x in texts
+                    for t in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", x)
+                }
+                & set(table.pending_columns)
+            )
+            if struck:
+                if action == "update_rows":
+                    what, verb = "update uses", "update_rows"
+                else:
+                    what, verb = "predicate uses", "delete_rows predicate"
+                audit("denied", f"{what} pending columns {struck}")
+                raise PermissionDeniedError(
+                    f"{verb} references pending-approval column(s) "
+                    f"{struck} on {qualified}; approve the evolved "
+                    "columns first (fail-closed schema evolution)"
                 )
-                struck = sorted(
-                    set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", ptext))
-                    & set(table.pending_columns)
-                )
-                if struck:
-                    _audit("denied", f"predicate uses pending columns {struck}")
-                    raise PermissionDeniedError(
-                        f"delete_rows predicate references pending-approval "
-                        f"column(s) {struck} on {qualified}; approve the "
-                        "evolved columns first (fail-closed schema evolution)"
-                    )
             if action == "delete_rows_mor":
                 # merge-on-read: a metadata-only tombstone commit — NOT
                 # erasure (the audit line carries the predicate either
                 # way; the GDPR trail needs the eager path)
-                result = delete_rows_mor(
-                    self.spark, table.location, **kwargs
-                )
-            else:
-                # the catalog knows the layout — derive partition
-                # pruning from the declared partition keys unless
-                # overridden
-                kwargs.setdefault(
-                    "partition_col", list(table.partition_keys) or None
-                )
-                result = delete_rows(self.spark, table.location, **kwargs)
-        elif action == "purge_deletes":
-            result = purge_deleted_rows(self.spark, table.location, **kwargs)
-        elif action == "expire_snapshots":
+                return _lake.delete_rows_mor(spark, loc, **kwargs)
+            # the catalog knows the layout — derive partition pruning
+            # from the declared partition keys unless overridden
+            kwargs.setdefault("partition_col", list(table.partition_keys) or None)
+            if action == "delete_rows":
+                return _lake.delete_rows(spark, loc, **kwargs)
+            kwargs.setdefault("schema", table.schema)
+            return _lake.update_rows(spark, loc, **kwargs)
+        if action == "purge_deletes":
+            return _lake.purge_deleted_rows(spark, loc, **kwargs)
+        if action == "expire_snapshots":
             kwargs.setdefault("keep_last", 1)
-            result = vacuum_manifests(table.location, **kwargs)
-        elif action == "rollback":
-            if "to_version" not in kwargs:
-                _audit("failed", "rollback requires to_version=")
-                raise ValueError("rollback requires to_version=")
-            result = rollback_table(table.location, kwargs["to_version"])
-        elif action == "evolve_partitioning":
-            if "new_partition_by" not in kwargs:
-                _audit("failed", "evolve_partitioning requires new_partition_by=")
-                raise ValueError(
-                    "evolve_partitioning requires new_partition_by="
-                )
-            new_pb = list(kwargs["new_partition_by"] or [])
-            # fail-closed schema evolution extends here too: a pending
-            # (unclassified) column must not become the table's physical
-            # layout — directory names leak its values to anyone who can
-            # list storage
+            return _lake.vacuum_manifests(loc, **kwargs)
+        if action == "rollback":
+            return _lake.rollback_table(loc, kwargs["to_version"])
+        if action == "evolve_partitioning":
+            new_pb = list(kwargs["new_partition_by"])
+            # a pending (unclassified) column must not become the
+            # table's physical layout — directory names leak its values
+            # to anyone who can list storage
             struck = sorted(set(new_pb) & set(table.pending_columns))
             if struck:
-                _audit("denied", f"layout uses pending columns {struck}")
+                audit("denied", f"layout uses pending columns {struck}")
                 raise PermissionDeniedError(
                     f"new partition columns {struck} on {qualified} are "
                     "pending approval; approve the evolved columns first"
                 )
-            snap = evolve_partitioning(table.location, new_pb)
+            snap = _lake.evolve_partitioning(loc, new_pb)
             # keep the catalog's declared layout in step — compact /
             # delete_rows derive partitioning from it
             table.partition_keys = tuple(new_pb)
-            result = {
-                "version": snap["version"],
-                "partition_by": snap["partition_by"],
-            }
-        elif action in ("tag", "drop_tag"):
-            from .sources.lake import drop_tag, tag_snapshot
-
-            if "name" not in kwargs:
-                _audit("failed", f"{action} requires name=")
-                raise ValueError(f"{action} requires name=")
-            if action == "tag":
-                result = tag_snapshot(
-                    table.location,
-                    kwargs["name"],
-                    version=kwargs.get("to_version"),
-                )
-            else:
-                result = {
-                    "dropped": drop_tag(table.location, kwargs["name"])
-                }
-        elif action in ("create_branch", "fast_forward", "drop_branch"):
-            from .sources.lake import create_branch, drop_branch, fast_forward
-
-            if "name" not in kwargs:
-                _audit("failed", f"{action} requires name=")
-                raise ValueError(f"{action} requires name=")
-            if action == "create_branch":
-                result = create_branch(
-                    table.location,
-                    kwargs["name"],
-                    version=kwargs.get("to_version"),
-                )
-            elif action == "fast_forward":
-                # PUBLISHES the branch chain to every reader — the
-                # state-changing half of the branch lifecycle, which is
-                # exactly why it sits behind the maintain gate + audit
-                snap = fast_forward(table.location, kwargs["name"])
-                result = {"version": snap["version"]}
-            else:
-                result = {
-                    "dropped": drop_branch(table.location, kwargs["name"])
-                }
-        elif action == "retrain_ivf":
+            return {"version": snap["version"], "partition_by": snap["partition_by"]}
+        if action == "tag":
+            return _lake.tag_snapshot(
+                loc, kwargs["name"], version=kwargs.get("to_version")
+            )
+        if action == "drop_tag":
+            return {"dropped": _lake.drop_tag(loc, kwargs["name"])}
+        if action == "create_branch":
+            return _lake.create_branch(
+                loc, kwargs["name"], version=kwargs.get("to_version")
+            )
+        if action == "fast_forward":
+            # PUBLISHES the branch chain to every reader — the
+            # state-changing half of the branch lifecycle, which is
+            # exactly why it sits behind the maintain gate + audit
+            return {"version": _lake.fast_forward(loc, kwargs["name"])["version"]}
+        if action == "drop_branch":
+            return {"dropped": _lake.drop_branch(loc, kwargs["name"])}
+        if action == "retrain_ivf":
             # OPTIMIZE-class centroid rebuild for the incremental IVF
             # index (ann_ivf_index_append freezes the quantizer on the
             # ingest path by design — drift's governed cure lives here)
             from .operators.similarity import retrain_ivf
 
-            result = retrain_ivf(self.spark, table.location, **kwargs)
-        elif action == "rename_column":
-            if not {"old", "new"} <= set(kwargs):
-                _audit("failed", "rename_column requires old= and new=")
-                raise ValueError("rename_column requires old= and new=")
-            # catalog.rename_column commits storage first, then
-            # migrates schema/tags/filters — all-or-nothing from the
-            # caller's view
-            self.catalog.rename_column(
-                qualified, kwargs["old"], kwargs["new"]
-            )
-            result = {"renamed": [kwargs["old"], kwargs["new"]]}
-        elif action == "drop_column":
-            if "column" not in kwargs:
-                _audit("failed", "drop_column requires column=")
-                raise ValueError("drop_column requires column=")
+            return retrain_ivf(spark, loc, **kwargs)
+        if action == "rename_column":
+            # catalog.rename_column commits storage first, then migrates
+            # schema/tags/filters — all-or-nothing from the caller's view
+            self.catalog.rename_column(qualified, kwargs["old"], kwargs["new"])
+            return {"renamed": [kwargs["old"], kwargs["new"]]}
+        if action == "drop_column":
             # metadata-only on schema-on-read; catalog.drop_column
             # fail-closes on every referencing object (views, MVs,
             # data-cells filters, CHECK constraints, partition keys)
             self.catalog.drop_column(qualified, kwargs["column"])
-            result = {"dropped_column": kwargs["column"]}
-        elif action == "msck_repair":
+            return {"dropped_column": kwargs["column"]}
+        if action == "msck_repair":
             # metadata sync, not a rewrite — but indexing a location is
             # an operator action on the table (same admin-or-ALL rule)
-            result = self.catalog.repair_table(qualified)
-        elif action == "truncate":
-            from .sources.lake import truncate_table as _lake_truncate
-
-            self._refuse_mv_mutation(qualified, "TRUNCATE TABLE")
-            # rows_removed counts INSIDE truncate_table's publish lock
-            # (round-15 ADVICE): a concurrent append between a
-            # pre-lock count and the zero-file commit must never make
-            # the report understate what was removed
-            snap = _lake_truncate(table.location, spark=self.spark)
-            result = {
-                "rows_removed": snap["rows_removed"],
-                "version": snap["version"],
-            }
-        elif action == "add_constraint":
-            self._refuse_mv_mutation(qualified, "ALTER TABLE ADD CONSTRAINT")
-            if not {"constraint", "expr"} <= set(kwargs):
-                _audit("failed", "add_constraint requires constraint= and expr=")
-                raise ValueError(
-                    "add_constraint requires constraint= and expr="
-                )
-            from .sources.lake import add_constraint as _lake_add_con
-
+            return self.catalog.repair_table(qualified)
+        if action == "truncate":
+            # rows_removed counts INSIDE truncate_table's publish lock: a
+            # concurrent append between a pre-lock count and the
+            # zero-file commit must never make the report understate
+            # what was removed
+            snap = _lake.truncate_table(loc, spark=spark)
+            return {"rows_removed": snap["rows_removed"], "version": snap["version"]}
+        if action == "add_constraint":
             # existing data validates FIRST (one scan); the commit is
             # metadata-only and every later batch validates against it
-            _lake_add_con(
-                self.spark, table.location, kwargs["constraint"],
-                kwargs["expr"],
-            )
-            result = {"added_constraint": kwargs["constraint"]}
-        elif action == "drop_constraint":
-            self._refuse_mv_mutation(qualified, "ALTER TABLE DROP CONSTRAINT")
-            if "constraint" not in kwargs:
-                _audit("failed", "drop_constraint requires constraint=")
-                raise ValueError("drop_constraint requires constraint=")
-            from .sources.lake import drop_constraint as _lake_drop_con
-
-            _lake_drop_con(table.location, kwargs["constraint"])
-            result = {"dropped_constraint": kwargs["constraint"]}
-        elif action == "drop_partition":
-            self._refuse_mv_mutation(qualified, "ALTER TABLE DROP PARTITION")
-            if "spec" not in kwargs:
-                _audit("failed", "drop_partition requires spec=")
-                raise ValueError("drop_partition requires spec=")
-            from .sources.lake import (
-                adopt_table,
-                hive_partition_relpath,
-                overwrite_partitions,
-            )
-
-            pkeys = list(table.partition_keys)
-            if not pkeys:
-                _audit("failed", "table is unpartitioned")
-                raise ValueError(
-                    f"DROP PARTITION requires a partitioned table — "
-                    f"{qualified} is unpartitioned (a full clear is "
-                    "TRUNCATE TABLE)"
-                )
-            # canonicalize spec names case-insensitively and require
-            # full coverage — the same rules as the static INSERT
-            # OVERWRITE PARTITION spec (one partition = one full tuple)
-            canon = {k.lower(): k for k in pkeys}
-            spec = dict(kwargs["spec"])
-            unknown_p = sorted(
-                k for k in spec if k.lower() not in canon
-            )
-            if unknown_p:
-                _audit("failed", f"non-partition column(s) {unknown_p}")
-                raise ValueError(
-                    f"PARTITION spec names non-partition column(s) "
-                    f"{unknown_p} on {qualified} (partition keys: "
-                    f"{sorted(canon.values())})"
-                )
-            spec = {canon[k.lower()]: v for k, v in spec.items()}
-            if set(spec) != set(canon.values()):
-                _audit("failed", "spec must cover every partition key")
-                raise ValueError(
-                    f"PARTITION spec must cover every partition key of "
-                    f"{qualified} ({sorted(canon.values())})"
-                )
-            if any(v is None for v in spec.values()):
-                _audit("failed", "NULL partition values unsupported")
-                raise ValueError(
-                    "PARTITION spec values must be non-NULL literals"
-                )
-            relpath = hive_partition_relpath(
-                pkeys, tuple(spec[k] for k in pkeys)
-            )
-            cur = adopt_table(
-                table.location, pkeys, self.spark, table.schema
-            ) or {"files": []}
-            # the evolved-layout refusal must come BEFORE the existence
-            # check: rows of the named logical partition may live in
-            # files under a RETIRED spec's directory naming, so both
-            # "exists" and the directory-named drop would be wrong
-            if cur.get("partition_specs"):
-                _audit("failed", "live files on retired partition specs")
-                raise ValueError(
-                    f"table {qualified} has live files on retired "
-                    "partition specs — a directory-named DROP PARTITION "
-                    "would miss rows written under the old layout; run "
-                    "OPTIMIZE to heal to the current spec first"
-                )
-            exists = any(
-                (f.rsplit("/", 1)[0] if "/" in f else "") == relpath
-                for f in cur["files"]
-            )
-            if not exists:
-                if kwargs.get("if_exists"):
-                    result = {
-                        "partition": relpath,
-                        "files_removed": 0,
-                        "rows_removed": 0,
-                        "version": None,
-                    }
-                    _audit("ok")
-                    return result
-                _audit("failed", f"partition {relpath} does not exist")
-                raise ValueError(
-                    f"partition {relpath} does not exist on {qualified} "
-                    "(IF EXISTS makes this a no-op)"
-                )
-            # the retirement itself is the static-overwrite machinery
-            # with an EMPTY batch: one atomic manifest commit under the
-            # publish lock — partition-evolved tables refuse there with
-            # the OPTIMIZE cure, constraints/rename guards re-check,
-            # and time travel keeps the old cut until vacuum
-            empty = self.spark.createDataFrame([], table.schema)
-            snap = overwrite_partitions(
-                self.spark,
-                table.location,
-                empty,
-                pkeys,
-                replace_partitions=[relpath],
-            )
-            result = {
-                "partition": relpath,
-                "files_removed": int(snap["files_replaced"]),
-                "rows_removed": int(snap["rows_replaced"]),
-                "version": int(snap["version"]),
-            }
-        elif action == "add_files":
-            # derived state only changes through refresh — importing
-            # files into an MV state table would silently desync it
-            # from its source watermark (round-14 review)
-            self._refuse_mv_mutation(qualified, "ALTER TABLE ADD FILES")
-            if "source" not in kwargs:
-                _audit("failed", "add_files requires source=")
-                raise ValueError("add_files requires source=")
-            from .sources.lake import add_files as _lake_add_files
-
-            # the import accounting comes from add_files itself,
-            # computed under the publish lock from the files THIS
-            # commit linked (round-15 ADVICE: a pre-lock manifest diff
-            # here would misattribute a concurrent writer's files)
-            snap = _lake_add_files(self.spark, table.location, kwargs["source"])
-            result = {
+            _lake.add_constraint(spark, loc, kwargs["constraint"], kwargs["expr"])
+            return {"added_constraint": kwargs["constraint"]}
+        if action == "drop_constraint":
+            _lake.drop_constraint(loc, kwargs["constraint"])
+            return {"dropped_constraint": kwargs["constraint"]}
+        if action == "drop_partition":
+            return self._drop_partition(table, qualified, kwargs, audit)
+        if action == "add_files":
+            # the import accounting comes from add_files itself, computed
+            # under the publish lock from the files THIS commit linked (a
+            # pre-lock manifest diff here would misattribute a
+            # concurrent writer's files)
+            snap = _lake.add_files(spark, loc, kwargs["source"])
+            return {
                 "files_added": snap["files_added"],
                 "rows_added": snap["rows_added"],
                 "version": snap["version"],
             }
-        elif action == "widen_column":
-            self._refuse_mv_mutation(qualified, "ALTER COLUMN TYPE")
-            if not {"column", "ddl_type"} <= set(kwargs):
-                _audit("failed", "widen_column requires column= and ddl_type=")
-                raise ValueError("widen_column requires column= and ddl_type=")
+        if action == "widen_column":
             # metadata-only safe widening; catalog.widen_column refuses
             # narrowing, cross-family changes, and partition keys
             self.catalog.widen_column(
                 qualified, kwargs["column"], kwargs["ddl_type"]
             )
-            result = {
+            return {
                 "widened_column": kwargs["column"],
                 "new_type": kwargs["ddl_type"],
             }
-        else:
-            _audit("failed", f"unknown action {action!r}")
-            raise ValueError(f"unknown maintenance action {action!r}")
-        _audit("ok")
-        return result
+        raise ValueError(f"unknown maintenance action {action!r}")
 
+    def _drop_partition(self, table, qualified: str, kwargs: dict, audit) -> dict:
+        """ALTER TABLE DROP PARTITION through maintain(): the named
+        partition's files leave the snapshot in one commit."""
+        pkeys = list(table.partition_keys)
+        if not pkeys:
+            audit("failed", "table is unpartitioned")
+            raise ValueError(
+                f"DROP PARTITION requires a partitioned table — "
+                f"{qualified} is unpartitioned (a full clear is "
+                "TRUNCATE TABLE)"
+            )
+        # canonicalize spec names case-insensitively and require full
+        # coverage — the same rules as the static INSERT OVERWRITE
+        # PARTITION spec (one partition = one full tuple)
+        canon = {k.lower(): k for k in pkeys}
+        spec = dict(kwargs["spec"])
+        unknown_p = sorted(k for k in spec if k.lower() not in canon)
+        if unknown_p:
+            audit("failed", f"non-partition column(s) {unknown_p}")
+            raise ValueError(
+                f"PARTITION spec names non-partition column(s) "
+                f"{unknown_p} on {qualified} (partition keys: "
+                f"{sorted(canon.values())})"
+            )
+        spec = {canon[k.lower()]: v for k, v in spec.items()}
+        if set(spec) != set(canon.values()):
+            audit("failed", "spec must cover every partition key")
+            raise ValueError(
+                f"PARTITION spec must cover every partition key of "
+                f"{qualified} ({sorted(canon.values())})"
+            )
+        if any(v is None for v in spec.values()):
+            audit("failed", "NULL partition values unsupported")
+            raise ValueError("PARTITION spec values must be non-NULL literals")
+        relpath = _lake.hive_partition_relpath(
+            pkeys, tuple(spec[k] for k in pkeys)
+        )
+        cur = _lake.adopt_table(
+            table.location, pkeys, self.spark, table.schema
+        ) or {"files": []}
+        # the evolved-layout refusal must come BEFORE the existence
+        # check: rows of the named logical partition may live in files
+        # under a RETIRED spec's directory naming, so both "exists" and
+        # the directory-named drop would be wrong
+        if cur.get("partition_specs"):
+            audit("failed", "live files on retired partition specs")
+            raise ValueError(
+                f"table {qualified} has live files on retired "
+                "partition specs — a directory-named DROP PARTITION "
+                "would miss rows written under the old layout; run "
+                "OPTIMIZE to heal to the current spec first"
+            )
+        exists = any(
+            (f.rsplit("/", 1)[0] if "/" in f else "") == relpath
+            for f in cur["files"]
+        )
+        if not exists:
+            if kwargs.get("if_exists"):
+                return {
+                    "partition": relpath,
+                    "files_removed": 0,
+                    "rows_removed": 0,
+                    "version": None,
+                }
+            audit("failed", f"partition {relpath} does not exist")
+            raise ValueError(
+                f"partition {relpath} does not exist on {qualified} "
+                "(IF EXISTS makes this a no-op)"
+            )
+        # the retirement itself is the static-overwrite machinery with
+        # an EMPTY batch: one atomic manifest commit under the publish
+        # lock — partition-evolved tables refuse there with the
+        # OPTIMIZE cure, constraints/rename guards re-check, and time
+        # travel keeps the old cut until vacuum
+        snap = _lake.overwrite_partitions(
+            self.spark,
+            table.location,
+            self.spark.createDataFrame([], table.schema),
+            pkeys,
+            replace_partitions=[relpath],
+        )
+        return {
+            "partition": relpath,
+            "files_removed": int(snap["files_replaced"]),
+            "rows_removed": int(snap["rows_replaced"]),
+            "version": int(snap["version"]),
+        }
 
     # ------------------------------ multi-table staged publish (r10)
     def stage_and_publish(
@@ -3910,39 +3344,8 @@ class Engine:
         files under unique names); publication cost is O(tables)
         renames regardless of how many commits or TB each branch
         carries."""
-        import uuid as _uuid
 
-        from .sources import lake as _lake
-
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
-        tdefs = {q: self.catalog.tables[q] for q in tables}  # KeyError: closed
-        for q, td in tdefs.items():
-            self._mv_gate(name, td, "STAGE AND PUBLISH", q)
-        span = _uuid.uuid4().hex[:12]
-        branch = f"staged_{span}"
-
-        def _audit(status: str, error: str | None = None):
-            self.catalog.audit.record(
-                principal=name or "<none>",
-                query=(
-                    f"STAGE AND PUBLISH span={span} "
-                    f"tables=({', '.join(tables)})"
-                ),
-                tables=list(tables),
-                filters_applied=[],
-                status=status,
-                error=error,
-            )
-
-        created: list[str] = []
-        published: dict = {}
-        try:
-            for q, td in tdefs.items():
-                _lake.create_branch(td.location, branch)
-                created.append(td.location)
-            writer(PublishStage(self, branch, tdefs))
+        def publish(tdefs, branch, published):
             # the publication window: one pointer rename per table,
             # nothing else — readers see each table flip old->new
             # complete, and the cross-table skew is bounded by the
@@ -3951,22 +3354,18 @@ class Engine:
                 published[q] = _lake.fast_forward(td.location, branch)[
                     "version"
                 ]
-        except Exception as exc:  # noqa: BLE001 — audit then surface
-            if not published:
-                for loc in created:
-                    _lake.drop_branch(loc, branch)
-                _audit("failed", f"nothing published; {exc}")
-            else:
-                _audit(
-                    "failed",
-                    f"published={sorted(published)} before error; "
-                    f"remaining branches kept as {branch!r}; {exc}",
-                )
-            raise
-        for q, td in tdefs.items():
-            _lake.drop_branch(td.location, branch)
-        _audit("ok")
-        return {"span": span, "branch": branch, "versions": published}
+            return {"branch": branch, "versions": published}
+
+        def landed(published, branch):
+            return (
+                f"published={sorted(published)} before error; "
+                f"remaining branches kept as {branch!r}"
+            )
+
+        return self._staged(
+            "STAGE AND PUBLISH", "staged", "published", tables, writer,
+            principal, publish, landed,
+        )
 
     def lake_transaction(
         self,
@@ -3994,76 +3393,87 @@ class Engine:
 
         100 TB: the commit is O(tables) JSON bytes + renames; staging
         stays zero-copy branch commits."""
-        import uuid as _uuid
-
-        from .sources import lake as _lake
         from .sources import txlog as _txlog
 
         if self.catalog.lake_root is None:
             raise ValueError(
                 "lake_transaction needs a catalog lake_root for _txlog"
             )
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
-        tdefs = {q: self.catalog.tables[q] for q in tables}  # KeyError: closed
-        for q, td in tdefs.items():
-            self._mv_gate(name, td, "LAKE TRANSACTION", q)
-        span = _uuid.uuid4().hex[:12]
-        branch = f"txn_{span}"
 
-        def _audit(status: str, error: str | None = None):
-            self.catalog.audit.record(
-                principal=name or "<none>",
-                query=(
-                    f"LAKE TRANSACTION span={span} "
-                    f"tables=({', '.join(tables)})"
-                ),
-                tables=list(tables),
-                filters_applied=[],
-                status=status,
-                error=error,
-            )
-
-        created: list[str] = []
-        rec = None
-        try:
-            for q, td in tdefs.items():
-                _lake.create_branch(td.location, branch)
-                created.append(td.location)
-            writer(PublishStage(self, branch, tdefs))
+        def commit(tdefs, branch, committed):
             pins = {
-                td.location: _lake.branch_head(td.location, branch)[
-                    "version"
-                ]
+                td.location: _lake.branch_head(td.location, branch)["version"]
                 for td in tdefs.values()
             }
             # THE commit point: one record rename pins the whole cut
             # (and propagates the pointers under the tables' locks)
-            rec = _txlog.txlog_commit(self.catalog.lake_root, pins)
-        except Exception as exc:  # noqa: BLE001 — audit then surface
-            if rec is None:
-                for loc in created:
-                    _lake.drop_branch(loc, branch)
-                _audit("failed", f"nothing committed; {exc}")
-            else:  # pragma: no cover — post-commit failure is propagation
-                _audit(
-                    "failed",
-                    f"txlog seq={rec['seq']} committed; propagation "
-                    f"error (heal via txlog_roll_forward); {exc}",
-                )
-            raise
-        for td in tdefs.values():
-            _lake.drop_branch(td.location, branch)
-        _audit("ok")
-        return {
-            "span": span,
-            "seq": rec["seq"],
-            "versions": {
-                q: rec["pins"][_txlog._table_key(td.location)]
-                for q, td in tdefs.items()
-            },
-        }
+            committed["rec"] = rec = _txlog.txlog_commit(
+                self.catalog.lake_root, pins
+            )
+            return {
+                "seq": rec["seq"],
+                "versions": {
+                    q: rec["pins"][_txlog._table_key(td.location)]
+                    for q, td in tdefs.items()
+                },
+            }
+
+        def landed(committed, branch):  # pragma: no cover - propagation
+            return (
+                f"txlog seq={committed['rec']['seq']} committed; "
+                "propagation error (heal via txlog_roll_forward)"
+            )
+
+        return self._staged(
+            "LAKE TRANSACTION", "txn", "committed", tables, writer,
+            principal, commit, landed,
+        )
+
+    def _staged(
+        self, verb: str, prefix: str, done: str, tables: list, writer,
+        principal, commit, landed,
+    ) -> dict:
+        """The staging body :meth:`stage_and_publish` and
+        :meth:`lake_transaction` share: gate every table (admin or
+        unconditioned ALL, before any branch exists), create one staging
+        branch per table, run ``writer(PublishStage)``, then
+        ``commit(tdefs, branch, progress)`` makes the staged heads
+        visible and returns the result fields; the branches are dropped
+        after. Audit: one span line, ``ok`` or ``failed``. A failure
+        before ``commit`` recorded any ``progress`` drops the branches
+        (nothing ``done``, no reader saw anything); after, the line
+        says what ``landed(progress, branch)`` and the branches stay."""
+        name = _principal_name(principal)
+        tdefs = {q: self.catalog.tables[q] for q in tables}  # KeyError: closed
+        for q, td in tdefs.items():
+            self._mv_gate(name, td, verb, q)
+        span = uuid.uuid4().hex[:12]
+        branch = f"{prefix}_{span}"
+        with self._governed(
+            name,
+            f"{verb} span={span} tables=({', '.join(tables)})",
+            list(tables),
+            ok="ok",
+        ) as audit:
+            created: list[str] = []
+            progress: dict = {}
+            try:
+                for td in tdefs.values():
+                    _lake.create_branch(td.location, branch)
+                    created.append(td.location)
+                writer(PublishStage(self, branch, tdefs))
+                result = commit(tdefs, branch, progress)
+            except Exception as exc:  # noqa: BLE001 — audit then surface
+                if not progress:
+                    for loc in created:
+                        _lake.drop_branch(loc, branch)
+                    audit("failed", f"nothing {done}; {exc}")
+                else:
+                    audit("failed", f"{landed(progress, branch)}; {exc}")
+                raise
+            for td in tdefs.values():
+                _lake.drop_branch(td.location, branch)
+        return {"span": span, **result}
 
     def maintain_txlog(
         self,
@@ -4085,39 +3495,30 @@ class Engine:
         to the artifact that outlives any one table. Every invocation
         (including denials) is audited as ``MAINTAIN TXLOG <action>``.
         """
-        from .governance import PermissionDeniedError
         from .sources import txlog as _txlog
 
         if action not in ("roll_forward", "vacuum"):
             raise ValueError(f"unknown txlog maintenance action {action!r}")
         if self.catalog.lake_root is None:
             raise ValueError("maintain_txlog needs a catalog lake_root")
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
-
-        def _audit(status: str, error: str | None = None):
-            self.catalog.audit.record(
-                principal=name or "<none>",
-                query=f"MAINTAIN TXLOG {action}",
-                tables=[],
-                filters_applied=[],
-                status=status,
-                error=error,
-            )
-
-        if self.catalog.governance_enabled and name not in self.catalog.admins:
-            _audit("denied", "txlog maintenance is admin-only")
-            raise PermissionDeniedError(
+        name = _principal_name(principal)
+        with self._governed(
+            name,
+            f"MAINTAIN TXLOG {action}",
+            [],
+            admin_only=True,
+            denied="txlog maintenance is admin-only",
+            refusal=(
                 f"principal {name!r} may not maintain the lake transaction "
                 "log: it spans tables, so only an admin qualifies"
-            )
-        if action == "roll_forward":
-            result = {"tables": _txlog.txlog_roll_forward(self.catalog.lake_root)}
-        else:
-            result = _txlog.txlog_vacuum(self.catalog.lake_root, **kwargs)
-        _audit("ok")
-        return result
+            ),
+            ok="ok",
+        ):
+            if action == "roll_forward":
+                return {
+                    "tables": _txlog.txlog_roll_forward(self.catalog.lake_root)
+                }
+            return _txlog.txlog_vacuum(self.catalog.lake_root, **kwargs)
 
     def table_txn(self, qualified: str, principal=None) -> DataFrame:
         """Governed read through the lake transaction log: the same
@@ -4138,36 +3539,18 @@ class Engine:
         """Same admin-or-unconditioned-ALL rule as maintain(): creating
         or refreshing an MV scans the SOURCE outside row/column
         security, so it is an operator action, audited incl. denials."""
-        from .governance import ALL, PermissionDeniedError
-
-        if (
-            self.catalog.governance_enabled
-            and name not in self.catalog.admins
-        ):
-            grants = (
-                self.catalog.grants_for(name, table.database, table.name)
-                if name is not None
-                else []
-            )
-            if not any(
-                g.permission == ALL
-                and g.via_filter is None
-                and g.via_tag_exclude is None
-                for g in grants
-            ):
-                self.catalog.audit.record(
-                    principal=name or "<none>",
-                    query=f"{verb} {qualified}",
-                    tables=[qualified],
-                    filters_applied=[],
-                    status="denied",
-                    error="requires admin or ALL grant",
-                )
-                raise PermissionDeniedError(
-                    f"principal {name!r} may not {verb} {qualified}: "
-                    "requires admin or an unconditioned ALL grant on the "
-                    "source"
-                )
+        self._gate(
+            name,
+            f"{verb} {qualified}",
+            [qualified],
+            owner=(table.database, table.name),
+            denied="requires admin or ALL grant",
+            refusal=(
+                f"principal {name!r} may not {verb} {qualified}: "
+                "requires admin or an unconditioned ALL grant on the "
+                "source"
+            ),
+        )
 
     # MV state files target ~this many rows each. The toy MVs (tens of
     # groups) stay one file; a 100×-cardinality group key fans the
@@ -4383,10 +3766,8 @@ class Engine:
             return None  # views/unknown names: ordinary path resolves
         if group_by and not set(group_by) <= set(td.partition_keys or ()):
             return None  # only partition columns live in dir names
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
-        if self.catalog.governance_enabled and name not in self.catalog.admins:
+        name = _principal_name(principal)
+        if not self._ungated(name):
             if name is None:
                 return None  # anonymous: let the scan path rule
             # raises implicit deny exactly like the scan would;
@@ -4569,9 +3950,7 @@ class Engine:
             return None
         source, group_by, measures, where, order_by, limit = parsed
 
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
+        name = _principal_name(principal)
         for qmv, mv in sorted(self.catalog.mvs.items()):
             if mv.source != source or mv.enrich is not None:
                 continue
@@ -4599,11 +3978,7 @@ class Engine:
             src_td = self.catalog.tables.get(source)
             if src_td is None:
                 continue
-            if (
-                self.catalog.governance_enabled
-                and name is not None
-                and name not in self.catalog.admins
-            ):
+            if name is not None and not self._ungated(name):
                 # raises implicit deny exactly like the scan would;
                 # conditioned access (row/column security) falls back —
                 # the state aggregates rows the principal may not see
@@ -4728,9 +4103,7 @@ class Engine:
         from .catalog import MaterializedViewDef, TableDef
         from .sources.lake import publish_overwrite, read_manifest, read_table
 
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
+        name = _principal_name(principal)
         src = self.catalog.tables[source]  # KeyError: fail closed
         self._mv_gate(name, src, "CREATE MATERIALIZED VIEW", qualified_mv)
         if qualified_mv in self.catalog.tables or qualified_mv in self.catalog.views:
@@ -4934,9 +4307,7 @@ class Engine:
         drop_table's fail-closed lake_root guard) — the other half of
         the erasure contract's 'drop and re-create' instruction. Gated
         and audited like creation."""
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
+        name = _principal_name(principal)
         mv = self.catalog.mvs[qualified_mv]  # KeyError: fail closed
         src = self.catalog.tables[mv.source]
         self._mv_gate(name, src, "DROP MATERIALIZED VIEW", qualified_mv)
@@ -4979,9 +4350,7 @@ class Engine:
             table_changes,
         )
 
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
+        name = _principal_name(principal)
         mv = self.catalog.mvs[qualified_mv]  # KeyError: fail closed
         src = self.catalog.tables[mv.source]
         self._mv_gate(name, src, "REFRESH MATERIALIZED VIEW", qualified_mv)
@@ -5155,26 +4524,14 @@ class Engine:
         read), but still gated: any principal without SOME grant on the
         table may not learn its commit history (implicit deny, G6).
         Empty list for non-manifest tables."""
-        from .governance import PermissionDeniedError
-        from .sources.lake import read_manifest
-
-        name = (
-            principal.name if isinstance(principal, Principal) else principal
-        )
+        name = _principal_name(principal)
         table = self.catalog.tables[qualified]  # KeyError: fail closed
-        if (
-            self.catalog.governance_enabled
-            and name not in self.catalog.admins
-            and not (
-                name is not None
-                and self.catalog.grants_for(name, table.database, table.name)
-            )
-        ):
+        if not self._visible(name, table.database, table.name):
             raise PermissionDeniedError(
                 f"principal {name!r} is not authorized to access {qualified}"
             )
         out: list[dict] = []
-        m = read_manifest(table.location)
+        m = _lake.read_manifest(table.location)
         while m is not None:
             out.append(
                 {
@@ -5192,7 +4549,7 @@ class Engine:
             if m["parent"] is None:
                 break
             try:
-                m = read_manifest(table.location, m["parent"])
+                m = _lake.read_manifest(table.location, m["parent"])
             except FileNotFoundError:
                 break  # older history vacuumed
         return out

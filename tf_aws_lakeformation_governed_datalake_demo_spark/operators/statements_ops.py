@@ -29,6 +29,13 @@ from .governed import _SALES_CTE
 from .registry import query
 
 
+def _require(cond, msg="invariant violated") -> None:
+    """A builder's self-check: raise instead of ``assert``, which
+    ``python -O`` strips."""
+    if not cond:
+        raise RuntimeError(msg)
+
+
 def _governed_docs(
     spark: SparkSession, sf_dir: str, prefix: str
 ) -> tuple[Engine, str]:
@@ -101,7 +108,7 @@ def sql_update_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WHERE doc_id % 7 = 0",
         "ops",
     ).first()
-    assert res.rows_updated > 0, "driver data must produce matches"
+    _require(res.rows_updated > 0, "driver data must produce matches")
     return eng.sql(
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
         "CAST(sum(n_chars) AS BIGINT) AS total_chars, "
@@ -135,7 +142,7 @@ def sql_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = eng.sql(
         "DELETE FROM db.docs WHERE doc_id % 13 = 0 OR n_chars < 60", "ops"
     ).first()
-    assert res.rows_deleted > 0, "driver data must produce matches"
+    _require(res.rows_deleted > 0, "driver data must produce matches")
     return _final_agg_spark(eng)
 
 
@@ -185,7 +192,7 @@ def sql_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
         "ops",
     ).first()
-    assert res.rows_updated > 0 and res.rows_inserted > 0
+    _require(res.rows_updated > 0 and res.rows_inserted > 0)
     return _final_agg_spark(eng)
 
 
@@ -229,9 +236,9 @@ def sql_optimize_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = Engine(spark, cat)
     files_before = len(read_manifest(loc)["files"])
     o = eng.sql("OPTIMIZE db.docs", "ops").first()
-    assert o.files_after < files_before, (o, files_before)
+    _require(o.files_after < files_before, (o, files_before))
     v = eng.sql("VACUUM db.docs RETAIN 1 SNAPSHOTS", "ops").first()
-    assert v.snapshots_removed >= 1, v
+    _require(v.snapshots_removed >= 1, v)
     return eng.sql(
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
         "CAST(sum(n_chars) AS BIGINT) AS total_chars "
@@ -294,7 +301,7 @@ def sql_refresh_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ops",
     )
     r = eng.sql("REFRESH MATERIALIZED VIEW db.mv", "ops").first()
-    assert r.refreshed
+    _require(r.refreshed)
     return eng.sql(
         "SELECT lang, n_docs, total_chars FROM db.mv", "ops"
     )
@@ -393,7 +400,7 @@ def sql_view_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = Engine(spark, fx.bootstrap(spark, lake))
     # the cleanup verb (README.md:320) — on the bootstrap-made view
     r = eng.sql("DROP VIEW sales_db.sales_masked", "dataadmin").first()
-    assert r.dropped is True
+    _require(r.dropped is True)
     # phase 1: the DDL verbatim from outputs.tf:44-53, new view name
     # (no pre-existing grants — the two-phase flow is the claim)
     eng.sql(
@@ -452,14 +459,14 @@ def sql_insert_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(9000002, 'inserted row two', 'fr', 'manual', 16)",
         "ops",
     ).first()
-    assert r.rows_inserted == 2, r
+    _require(r.rows_inserted == 2, r)
     r = eng.sql(
         "INSERT INTO db.docs SELECT doc_id + 8000000, text, lang, "
         "source, n_chars FROM db.docs "
         "WHERE doc_id % 11 = 5 AND doc_id < 8000000",
         "ops",
     ).first()
-    assert r.rows_inserted > 0, "driver data must produce a slice"
+    _require(r.rows_inserted > 0, "driver data must produce a slice")
     return _final_agg_spark(eng)
 
 
@@ -589,7 +596,7 @@ def sql_script_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
         "REFRESH MATERIALIZED VIEW db.mv;",
         "ops",
     )
-    assert len(results) == 3 and results[2].first().refreshed
+    _require(len(results) == 3 and results[2].first().refreshed)
     return eng.sql("SELECT lang, n_docs, total_chars FROM db.mv", "ops")
 
 
@@ -642,7 +649,7 @@ def governance_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ops",
     )
     r = eng.sql("REFRESH MATERIALIZED VIEW db.docs_mv", "ops").first()
-    assert r.refreshed
+    _require(r.refreshed)
     out = eng.sql(
         "SELECT lang, count(*) AS n_docs, sum(n_chars) AS total_chars, "
         "avg(n_chars) AS avg_chars FROM db.docs GROUP BY lang",
@@ -651,7 +658,7 @@ def governance_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the claim: served from the MV state, source never scanned
     files = out.inputFiles()
-    assert files and all("/_mv/" in f for f in files), files[:3]
+    _require(files and all("/_mv/" in f for f in files), files[:3])
     return out.select(
         "lang",
         F.col("n_docs").cast("long").alias("n_docs"),
@@ -704,7 +711,7 @@ def governance_mv_rewrite_filtered(
         use_mvs=True,
     )
     files = out.inputFiles()
-    assert files and all("/_mv/" in f for f in files), files[:3]
+    _require(files and all("/_mv/" in f for f in files), files[:3])
     return out.select(
         "lang",
         F.col("n_docs").cast("long").alias("n_docs"),
@@ -740,7 +747,7 @@ def sql_create_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     "INSERT is the ordinary partitioned append."""
     eng, lake = _governed_docs(spark, sf_dir, "sqlddl_")
     r = eng.sql("CREATE DATABASE ddl_db COMMENT 'round-13 DDL'", "ops")
-    assert r.first().created
+    _require(r.first().created)
     r = eng.sql(
         "CREATE EXTERNAL TABLE ddl_db.docs2 ("
         "doc_id bigint COMMENT 'document id', text string, "
@@ -749,7 +756,7 @@ def sql_create_table_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"LOCATION '{lake}/docs2'",
         "ops",
     )
-    assert r.first().created
+    _require(r.first().created)
     eng.sql(
         "INSERT INTO ddl_db.docs2 SELECT doc_id, text, source, n_chars, "
         "lang FROM db.docs WHERE doc_id % 3 = 0",
@@ -789,8 +796,8 @@ def sql_count_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT count(*) AS n_docs FROM db.docs", "ops", raise_on_error=True
     )
     out = qe.result
-    assert not out.inputFiles(), "bare count must plan zero files"
-    assert "COUNT_STATS:db.docs" in qe.filters_applied
+    _require(not out.inputFiles(), "bare count must plan zero files")
+    _require("COUNT_STATS:db.docs" in qe.filters_applied)
     return out
 
 
@@ -821,7 +828,7 @@ def sql_count_partitions_metadata(
         "SELECT lang, count(*) AS n_docs FROM db.docs GROUP BY lang",
         "ops",
     )
-    assert not out.inputFiles(), "grouped count must plan zero files"
+    _require(not out.inputFiles(), "grouped count must plan zero files")
     return out
 
 
@@ -857,19 +864,19 @@ def sql_grant_revoke(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("ungranted principal must be denied")
     except PermissionDeniedError:
         pass
-    assert eng.sql(
+    _require(eng.sql(
         "GRANT SELECT ON db.docs TO analyst9", "ops"
-    ).first().granted
+    ).first().granted)
     shown = eng.sql("SHOW GRANTS FOR analyst9 ON db.docs", "ops").collect()
-    assert [(g.principal, g.permission) for g in shown] == [
+    _require([(g.principal, g.permission) for g in shown] == [
         ("analyst9", "SELECT")
-    ], shown
+    ], shown)
     out = eng.sql(agg, "analyst9")
     n_rows = out.count()
-    assert n_rows > 0
-    assert eng.sql(
+    _require(n_rows > 0)
+    _require(eng.sql(
         "REVOKE SELECT ON db.docs FROM analyst9", "ops"
-    ).first().revoked == 1
+    ).first().revoked == 1)
     try:
         eng.sql(agg, "analyst9")
         raise AssertionError("revoked principal must be denied")
@@ -921,7 +928,7 @@ def governance_mv_rewrite_inlist(
         use_mvs=True,
     )
     files = out.inputFiles()
-    assert files and all("/_mv/" in f for f in files), files[:3]
+    _require(files and all("/_mv/" in f for f in files), files[:3])
     return out.select(
         "lang",
         F.col("n_docs").cast("long").alias("n_docs"),
@@ -988,7 +995,7 @@ def governance_materialized_view_distinct(
     )
     append_rows(spark, f"{lake}/docs", batch, partition_by=["lang"])
     out = eng.refresh_materialized_view("db.docs_mv", principal="ops")
-    assert out["refreshed"], out
+    _require(out["refreshed"], out)
     return eng.sql(
         "SELECT lang, n_docs, CAST(n_sources AS BIGINT) AS n_sources "
         "FROM db.docs_mv",
@@ -1047,7 +1054,7 @@ def governance_materialized_view_filtered(
     ).withColumn("n_chars", F.col("n_chars") + 1000)
     merge_into(spark, loc, upd, ["doc_id"], ["lang"], collect_stats=False)
     r = eng.sql("REFRESH MATERIALIZED VIEW db.docs_mv", "ops").first()
-    assert r.refreshed
+    _require(r.refreshed)
     return eng.sql(
         "SELECT lang, n_docs, total_chars FROM db.docs_mv", "ops"
     )
@@ -1125,7 +1132,7 @@ def governance_materialized_view_join(
     )
     merge_into(spark, floc, upd, ["o_orderkey"], collect_stats=False)
     out = eng.refresh_materialized_view("db.seg_mv", principal="ops")
-    assert out["refreshed"], out
+    _require(out["refreshed"], out)
     return eng.sql(
         "SELECT c_mktsegment, n_orders, cents FROM db.seg_mv", "ops"
     )
@@ -1195,7 +1202,7 @@ def lake_multi_table_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         # staging is invisible: main still serves the seed only
-        assert (
+        _require(
             eng.sql("SELECT count(*) AS n FROM db.docs", "ops").first().n
             == seed_total
         )
@@ -1273,7 +1280,7 @@ def governance_materialized_view_avg(
     ).withColumn("n_chars", F.col("n_chars") + 1000)
     merge_into(spark, loc, upd, ["doc_id"], ["lang"], collect_stats=False)
     out = eng.refresh_materialized_view("db.docs_mv", principal="ops")
-    assert out["refreshed"], out
+    _require(out["refreshed"], out)
     return eng.sql(
         "SELECT lang, n_docs, avg_chars FROM db.docs_mv", principal="ops"
     )
@@ -1343,15 +1350,15 @@ def lake_txlog_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage.append("db.docs", b1)
         stage.append("db.stats", stats_of(b1))
         # pre-commit: both read paths still serve the seed cut only
-        assert eng.table_txn("db.docs", "ops").count() == seed_total
-        assert (
+        _require(eng.table_txn("db.docs", "ops").count() == seed_total)
+        _require(
             eng.sql("SELECT count(*) AS n FROM db.docs", "ops").first().n
             == seed_total
         )
 
     out1 = eng.lake_transaction(["db.docs", "db.stats"], writer1, "ops")
     out2 = txn(b2)
-    assert (out1["seq"], out2["seq"]) == (1, 2), (out1, out2)
+    _require((out1["seq"], out2["seq"]) == (1, 2), (out1, out2))
     docs_agg = (
         eng.table_txn("db.docs", "ops")
         .groupBy("lang")
@@ -1419,9 +1426,9 @@ def sql_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FOR COLUMNS doc_id, lang, n_chars, source",
         "ops",
     ).first()
-    assert res.columns_analyzed == 4, res
+    _require(res.columns_analyzed == 4, res)
     st = eng.catalog.tables["db.docs"].stats
-    assert st["snapshot_version"] == 1
+    _require(st["snapshot_version"] == 1)
     rows = [
         (
             c,
@@ -1474,15 +1481,15 @@ def lake_clone_zero_copy(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"WITH (external_location = '{lake}/c')",
         "ops",
     ).first()
-    assert out.cloned_from_version == 1, out
+    _require(out.cloned_from_version == 1, out)
     # zero-copy pin: the clone's v1 manifest carries the source
     # snapshot's recorded stats verbatim (no footer was re-read)
-    assert (
+    _require(
         read_manifest(f"{lake}/c")["file_stats"]
         == read_manifest(f"{lake}/docs")["file_stats"]
     )
     d = eng.sql("DELETE FROM db.c WHERE doc_id % 13 = 0", "ops").first()
-    assert d.rows_deleted > 0
+    _require(d.rows_deleted > 0)
     return eng.sql(
         "SELECT 'src' AS tbl, lang, CAST(count(*) AS BIGINT) AS n_docs, "
         "CAST(sum(n_chars) AS BIGINT) AS total_chars "
@@ -1533,8 +1540,8 @@ def sql_insert_overwrite_static(
         "source, n_chars FROM db.docs WHERE lang = 'en'",
         "ops",
     ).first()
-    assert out.partitions_replaced == 1, out
-    assert out.rows_inserted > 0
+    _require(out.partitions_replaced == 1, out)
+    _require(out.rows_inserted > 0)
     return eng.sql(
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
         "CAST(sum(doc_id) AS BIGINT) AS id_sum, "
@@ -1582,8 +1589,8 @@ def sql_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source, n_chars FROM db.docs WHERE lang = 'de'",
         "ops",
     ).first()
-    assert out.partitions_replaced == 1, out
-    assert out.rows_inserted > 0
+    _require(out.partitions_replaced == 1, out)
+    _require(out.rows_inserted > 0)
     return eng.sql(
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
         "CAST(sum(doc_id) AS BIGINT) AS id_sum, "
@@ -1646,10 +1653,10 @@ def sql_alter_column_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     eng = Engine(spark, cat)
     # the seed files really are narrow: one old footer reads int32
     first_file = sorted(read_manifest(loc)["files"])[0]
-    assert isinstance(
+    _require(isinstance(
         spark.read.parquet(f"{loc}/{first_file}").schema["n_chars"].dataType,
         T.IntegerType,
-    )
+    ))
     # narrowing fails closed
     try:
         eng.sql(
@@ -1661,7 +1668,7 @@ def sql_alter_column_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = eng.sql(
         "ALTER TABLE db.docs ALTER COLUMN n_chars TYPE bigint", "ops"
     ).first()
-    assert out.new_type == "bigint", out
+    _require(out.new_type == "bigint", out)
     # the widened domain is real: values beyond int32 land through the
     # governed INSERT and aggregate with the old-vintage int32 footers
     eng.sql(
@@ -1676,7 +1683,7 @@ def sql_alter_column_widen(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM db.docs GROUP BY lang",
         "ops",
     )
-    assert dict(res.dtypes)["max_chars"] == "bigint"
+    _require(dict(res.dtypes)["max_chars"] == "bigint")
     return res
 
 
@@ -1741,14 +1748,14 @@ def sql_add_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = eng.sql(f"ALTER TABLE db.docs ADD FILES '{landing}'", "ops").first()
     after = read_manifest(loc)
     # O(new files) commit: every carried file identical, import count exact
-    assert before <= set(after["files"]), "carried files must be untouched"
-    assert out.files_added == n_landed == len(set(after["files"]) - before)
-    assert out.rows_added > 0
+    _require(before <= set(after["files"]), "carried files must be untouched")
+    _require(out.files_added == n_landed == len(set(after["files"]) - before))
+    _require(out.rows_added > 0)
     # imported rows serve from the metadata-only COUNT (zero files)
     total = eng.sql("SELECT count(*) AS n FROM db.docs", "ops")
-    assert not total.inputFiles(), "COUNT must serve from statistics"
-    assert total.first().n == d.count()
-    assert count_rows(loc)["rows"] == d.count()
+    _require(not total.inputFiles(), "COUNT must serve from statistics")
+    _require(total.first().n == d.count())
+    _require(count_rows(loc)["rows"] == d.count())
     return eng.sql(
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
         "CAST(sum(doc_id) AS BIGINT) AS id_sum, "
@@ -1795,13 +1802,13 @@ def sql_truncate_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ops",
     )
     out = eng.sql("TRUNCATE TABLE db.docs", "ops").first()
-    assert out.rows_removed == pre > 0, out
-    assert eng.sql("SELECT count(*) AS n FROM db.docs", "ops").first().n == 0
+    _require(out.rows_removed == pre > 0, out)
+    _require(eng.sql("SELECT count(*) AS n FROM db.docs", "ops").first().n == 0)
     # mutation, not erasure: the pre-truncate snapshot still serves
     tt = eng.sql(
         "SELECT count(*) AS n FROM db.docs FOR VERSION AS OF 1", "ops"
     ).first()
-    assert tt.n == pre
+    _require(tt.n == pre)
     # the next insert lands exactly as it would have (layout carried)
     eng.sql("INSERT INTO db.docs SELECT * FROM db.stash", "ops")
     return eng.sql(
@@ -1856,8 +1863,8 @@ def sql_drop_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = eng.sql(
         "ALTER TABLE db.docs DROP PARTITION (lang = 'fr')", "ops"
     ).first()
-    assert out.files_removed > 0 and out.rows_removed == pre_fr > 0, out
-    assert (
+    _require(out.files_removed > 0 and out.rows_removed == pre_fr > 0, out)
+    _require(
         eng.sql(
             "SELECT count(*) AS n FROM db.docs WHERE lang = 'fr'", "ops"
         )
@@ -1871,13 +1878,13 @@ def sql_drop_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WHERE lang = 'fr'",
         "ops",
     ).first()
-    assert tt.n == pre_fr
+    _require(tt.n == pre_fr)
     # IF EXISTS: a missing partition is a no-op, not an error…
     noop = eng.sql(
         "ALTER TABLE db.docs DROP IF EXISTS PARTITION (lang = 'xx')",
         "ops",
     ).first()
-    assert noop.files_removed == 0 and noop.rows_removed == 0
+    _require(noop.files_removed == 0 and noop.rows_removed == 0)
     # …and without IF EXISTS it refuses loudly
     try:
         eng.sql("ALTER TABLE db.docs DROP PARTITION (lang = 'xx')", "ops")
@@ -1947,34 +1954,34 @@ def sql_vacuum_age(spark: SparkSession, sf_dir: str) -> DataFrame:
         "VACUUM db.docs RETAIN 1 SNAPSHOTS OLDER THAN INTERVAL '1' DAY",
         "ops",
     ).first()
-    assert u.snapshots_removed == 0, u
-    assert _v1_count() == pre
+    _require(u.snapshots_removed == 0, u)
+    _require(_v1_count() == pre)
     # a tag pins the snapshot past ANY age horizon
     tag_snapshot(loc, "audit", 1)
     p = eng.sql(
         "VACUUM db.docs OLDER THAN INTERVAL '0' SECONDS", "ops"
     ).first()
-    assert p.snapshots_removed == 0, p
-    assert _v1_count() == pre
+    _require(p.snapshots_removed == 0, p)
+    _require(_v1_count() == pre)
     drop_tag(loc, "audit")
     # DRY RUN reports exactly what the real run would expire — and
     # moves nothing
     d = eng.sql(
         "VACUUM db.docs OLDER THAN INTERVAL '0' SECONDS DRY RUN", "ops"
     ).first()
-    assert d.snapshots_removed == 1 and d.dry_run, d
-    assert _v1_count() == pre
+    _require(d.snapshots_removed == 1 and d.dry_run, d)
+    _require(_v1_count() == pre)
     # the real age vacuum: pre-horizon history expires, head survives
     r = eng.sql(
         "VACUUM db.docs OLDER THAN INTERVAL '0' SECONDS", "ops"
     ).first()
-    assert r.snapshots_removed == 1, r
+    _require(r.snapshots_removed == 1, r)
     refused = False
     try:
         _v1_count()
     except Exception:
         refused = True
-    assert refused, "pre-horizon time travel must refuse after age vacuum"
+    _require(refused, "pre-horizon time travel must refuse after age vacuum")
     return eng.sql(
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
         "CAST(sum(doc_id) AS BIGINT) AS id_sum, "
@@ -2026,30 +2033,30 @@ def sql_msck_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     eng = Engine(spark, cat)
     out = eng.sql("MSCK REPAIR TABLE db.docs", "ops").first()
-    assert out.partitions == 4 and out.rows_indexed > 0, out
+    _require(out.partitions == 4 and out.rows_indexed > 0, out)
     # the indexed count serves with zero files planned
     c1 = eng.sql("SELECT count(*) AS n FROM db.docs", "ops")
-    assert not c1.inputFiles(), "post-repair COUNT must serve from index"
-    assert c1.first().n == out.rows_indexed
+    _require(not c1.inputFiles(), "post-repair COUNT must serve from index")
+    _require(c1.first().n == out.rows_indexed)
     # drift: land MORE data out-of-band -> the count falls OPEN (scan),
     # stays exact, and never serves the stale index
     d.filter(F.col("lang") == "zh").write.mode("append").partitionBy(
         "lang"
     ).parquet(loc)
     c2 = eng.sql("SELECT count(*) AS n FROM db.docs", "ops")
-    assert c2.inputFiles(), "drifted index must fall open to the scan"
-    assert c2.first().n == d.count()
+    _require(c2.inputFiles(), "drifted index must fall open to the scan")
+    _require(c2.first().n == d.count())
     # incremental re-repair: only the new files pay footer reads
     out2 = eng.sql("MSCK REPAIR TABLE db.docs", "ops").first()
-    assert out2.partitions == 5 and out2.new_files > 0
-    assert out2.files_indexed == out.files_indexed + out2.new_files
+    _require(out2.partitions == 5 and out2.new_files > 0)
+    _require(out2.files_indexed == out.files_indexed + out2.new_files)
     c3 = eng.sql("SELECT count(*) AS n FROM db.docs", "ops")
-    assert not c3.inputFiles() and c3.first().n == d.count()
+    _require(not c3.inputFiles() and c3.first().n == d.count())
     # per-partition counts serve from the index too
     per = eng.sql(
         "SELECT lang, count(*) AS n FROM db.docs GROUP BY lang", "ops"
     )
-    assert not per.inputFiles()
+    _require(not per.inputFiles())
     return eng.sql(
         "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
         "CAST(sum(doc_id) AS BIGINT) AS id_sum, "
@@ -2081,13 +2088,13 @@ def sql_describe_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit already pays."""
     eng, _ = _governed_docs(spark, sf_dir, "sqldf_")
     files = eng.sql("DESCRIBE FILES db.docs", "ops")
-    assert not files.inputFiles(), "file inventory must not scan data"
+    _require(not files.inputFiles(), "file inventory must not scan data")
     rows = files.collect()
-    assert rows and all(
+    _require(rows and all(
         r.rows is not None and r.size_bytes > 0 and r.added_version == 1
         for r in rows
-    ), rows[:3]
-    assert all(r.partition.startswith("lang=") for r in rows)
+    ), rows[:3])
+    _require(all(r.partition.startswith("lang=") for r in rows))
     return (
         files.groupBy(
             F.regexp_replace("partition", "^lang=", "").alias("lang")
@@ -2136,7 +2143,7 @@ def sql_add_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CHECK (n_chars < 600)",
         "ops",
     ).first()
-    assert out.status == "added", out
+    _require(out.status == "added", out)
     # a compliant batch lands
     eng.sql(
         "INSERT INTO db.docs SELECT doc_id + 8000000 AS doc_id, text, "
@@ -2156,7 +2163,7 @@ def sql_add_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("violating batch must refuse")
     except ConstraintViolationError:
         pass
-    assert read_manifest(loc)["version"] == v_before
+    _require(read_manifest(loc)["version"] == v_before)
     # dropping the contract admits the same batch
     eng.sql("ALTER TABLE db.docs DROP CONSTRAINT chars_bound", "ops")
     eng.sql(

@@ -125,7 +125,8 @@ def _find_keyword(text: str, word: str) -> int:
 def _balanced_paren_span(text: str, start: int) -> int:
     """``text[start]`` must be '('; return the index just past its
     matching ')'. Literal-aware."""
-    assert text[start] == "("
+    if text[start] != "(":
+        raise RuntimeError("a balanced span must start at '('")
     depth = 0
     i = start
     n = len(text)
