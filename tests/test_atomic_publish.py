@@ -12,8 +12,9 @@ die with work on disk:
 - after the move-in, before the pointer replace: new files sit in the
   live tree but no snapshot references them;
 
-over every rewrite-shaped mutator, each starting from a plain (never
-written) directory, and prove readers see exactly the pre-state, the
+over every rewrite-shaped mutator plus append and dynamic partition
+overwrite (which share the same stage-and-commit path), each starting
+from a plain (never written) directory, and prove readers see exactly the pre-state, the
 table verifies clean, the leftovers are reclaimable, and a re-run
 converges.
 """
@@ -114,7 +115,9 @@ def test_crash_during_staged_write_unpartitioned(spark, nation_table):
 def _expected(rows, op):
     if op == "publish_overwrite":
         return sorted((k, nm, r, "v2") for k, nm, r, _ in rows)
-    if op == "update_rows":
+    if op == "append_rows":
+        return sorted([*rows, *((k, nm, r, "new") for k, nm, r, _ in rows if r == 2)])
+    if op in ("update_rows", "overwrite_partitions"):
         return sorted((k, nm, r, "v2" if r == 2 else v) for k, nm, r, v in rows)
     if op == "delete_rows":
         return sorted(t for t in rows if t[0] % 2)
@@ -135,6 +138,19 @@ def _run(spark, path, n, op):
         lk.delete_rows(
             spark, path, "n_nationkey % 2 = 0", partition_col="n_regionkey"
         )
+    elif op in ("append_rows", "overwrite_partitions"):
+        # a batch read from the table itself carries its recorded types
+        region2 = lk.read_table(spark, path).filter(F.col("n_regionkey") == 2)
+        if op == "append_rows":
+            lk.append_rows(
+                spark, path, region2.withColumn("note", F.lit("new")),
+                ["n_regionkey"],
+            )
+        else:
+            lk.overwrite_partitions(
+                spark, path, region2.withColumn("note", F.lit("v2")),
+                ["n_regionkey"],
+            )
     else:
         upd = n.filter(F.col("n_regionkey") == 2).withColumn(
             "note", F.lit("merged")
@@ -144,7 +160,14 @@ def _run(spark, path, n, op):
         )
 
 
-OPS = ("publish_overwrite", "update_rows", "delete_rows", "merge_into")
+OPS = (
+    "publish_overwrite",
+    "update_rows",
+    "delete_rows",
+    "merge_into",
+    "append_rows",
+    "overwrite_partitions",
+)
 
 
 @pytest.mark.parametrize("crash_at", ["staged_write", "after_move_in"])

@@ -352,3 +352,34 @@ def test_maintain_txlog_gate_and_actions(spark, lake_pair, monkeypatch):
         if e["query"].startswith("MAINTAIN TXLOG")
     ]
     assert [a["status"] for a in audited] == ["denied", "ok", "ok"]
+
+
+def test_txlog_takes_the_swapped_publish_lock(
+    spark, lake_pair, monkeypatch
+):
+    """``lake.publish_lock`` is the pluggable commit lock (an
+    object-store deployment swaps in a CAS lease); the txlog commit,
+    roll-forward and vacuum must take the swapped one, not the default
+    captured at import."""
+    import os
+    from contextlib import contextmanager
+    from pathlib import Path
+
+    _, lake = lake_pair
+    docs = os.path.abspath(f"{lake}/docs")
+    calls = []
+
+    @contextmanager
+    def recording_lock(live_dir):
+        calls.append(str(live_dir))
+        with lk._flock_publish_lock(live_dir):
+            yield
+
+    monkeypatch.setattr(lk, "publish_lock", recording_lock)
+    version = lk.read_manifest(docs)["version"]
+    tx.txlog_commit(lake, {docs: version})
+    assert tx.txlog_roll_forward(lake) == {docs: "current"}
+    tx.txlog_vacuum(lake, keep_last=1)
+    txlog_dir = str(Path(lake) / "_txlog")
+    assert calls == [txlog_dir, docs, docs, txlog_dir]
+

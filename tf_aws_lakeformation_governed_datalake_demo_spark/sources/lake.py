@@ -11,6 +11,7 @@ parallelism scales with data, not file count.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -293,25 +294,33 @@ def publish_overwrite(
        :func:`vacuum_publish_artifacts` reclaims crashed staging.
 
     ``partition_by`` must equal the table's committed layout (``None``
-    on a partitioned table included) unless ``full_rewrite=True``
-    declares ``result`` to be the whole table. Touched partitions whose
-    rewrite produced ZERO rows have no staged directory — a
-    deletion-capable caller names them in ``drop_missing_partitions``
-    so their files leave the snapshot instead of being carried.
+    on a partitioned table included; checked before staging) unless
+    ``full_rewrite=True`` declares ``result`` to be the whole table.
+    Touched partitions whose rewrite produced ZERO rows have no staged
+    directory — a deletion-capable caller names them in
+    ``drop_missing_partitions`` so their files leave the snapshot
+    instead of being carried.
 
-    The commit critical section is serialized by the pluggable
-    :data:`publish_lock` (default: single-host flock; see its multi-host
-    CAS note). With ``expected_version`` the commit fails with
-    :class:`ConcurrentLakeModificationError` when the current snapshot
-    is no longer the one the writer read — optimistic concurrency, the
-    Delta/Iceberg commit-conflict model. Every rewrite-shaped mutator
-    passes the version it read; plain appends (:func:`append_rows`)
-    commute and need no check.
+    Every lake writer shares these steps through two helpers:
+    :func:`_stage` (step 2, plus the CHECK-constraint scan of the staged
+    files) and :func:`_commit` (steps 3-4 under the pluggable
+    :data:`publish_lock` — default: single-host flock; see its
+    multi-host CAS note). :func:`_commit` applies the lake's one
+    conflict rule (:func:`_check_conflict`) and raises
+    :class:`ConcurrentLakeModificationError` before any file moves:
+
+    - with ``expected_version`` (every rewrite-shaped mutator passes
+      the version it read) the commit conflicts when the current
+      snapshot is another one — optimistic concurrency, the
+      Delta/Iceberg commit-conflict model;
+    - without it the commit conflicts only when a concurrent commit
+      changed the table definition this write was staged against
+      (layout, CHECK constraints, rename mapping, schema). Writes that
+      leave the definition alone, such as appends, commute.
 
     ``manifest`` is accepted for callers written against the earlier
     two-protocol signature; the manifest commit is the only protocol,
     so any value other than True raises."""
-    import uuid as _uuid
     from pathlib import Path
 
     if manifest is not True:
@@ -326,7 +335,6 @@ def publish_overwrite(
         partition_by,
         compression,
         drop_missing_partitions,
-        _uuid.uuid4().hex,
         bloom_cols=bloom_cols,
         expected_version=expected_version,
         full_rewrite=full_rewrite,
@@ -641,8 +649,6 @@ def fast_forward(path: str, name: str) -> dict:
     from the new main and replay, exactly commit_publish's contract).
     The branch pointer survives (now merely an alias of main) until
     :func:`drop_branch`."""
-    import json
-    import os
     from pathlib import Path
 
     live = Path(path)
@@ -655,31 +661,45 @@ def fast_forward(path: str, name: str) -> dict:
         head = branch_head(path, name)
         if head["version"] == current["version"]:
             return head  # nothing to publish
-        # ancestry walk: main's head must be on the branch chain
-        m = head
-        on_chain = False
-        while m is not None:
-            if m["version"] == current["version"]:
-                on_chain = True
-                break
-            if m["parent"] is None or m["parent"] < current["version"]:
-                break  # walked past main's version — divergence
-            try:
-                m = read_manifest(path, m["parent"])
-            except FileNotFoundError:
-                break  # intermediate vacuumed while unpublished
-        if not on_chain:
+        if not _is_ancestor(path, current["version"], head):
             raise ConcurrentLakeModificationError(
                 f"table at {path} is at v{current['version']}, which is "
                 f"not an ancestor of branch {name!r}'s head v"
                 f"{head['version']} — main advanced since the fork; "
                 "re-branch and replay"
             )
-        data = json.dumps(head, sort_keys=True)
-        tmp = live / f"._manifest_tmp_ff_{name}"
-        tmp.write_text(data)
-        os.replace(tmp, live / "_manifest.json")
+        _write_pointer(live, head)
     return head
+
+
+def _is_ancestor(path: str, ancestor_version: int, m: dict) -> bool:
+    """True when ``ancestor_version`` lies on ``m``'s parent chain
+    (inclusive) — the fast-forward test of :func:`fast_forward` and the
+    lake transaction log. Missing (vacuumed) intermediates end the
+    walk."""
+    while m is not None:
+        if m["version"] == ancestor_version:
+            return True
+        if m["parent"] is None or m["parent"] < ancestor_version:
+            return False  # walked past it — divergence
+        try:
+            m = read_manifest(path, m["parent"])
+        except FileNotFoundError:
+            return False
+    return False
+
+
+def _write_pointer(live, m: dict) -> None:
+    """Atomically point the table's ``_manifest.json`` at snapshot
+    ``m`` (one rename). The caller holds the table's
+    :data:`publish_lock` and has checked that ``m`` may follow the
+    current pointer."""
+    import json
+    import os
+
+    tmp = live / f"._manifest_tmp_{m['txid']}"
+    tmp.write_text(json.dumps(m, sort_keys=True))
+    os.replace(tmp, live / "_manifest.json")
 
 
 def _branch_pinned_manifests(path: str) -> list[dict]:
@@ -1392,23 +1412,19 @@ def _commit_manifest(
         column_mapping = (parent or {}).get("column_mapping", {})
     if column_mapping:
         snap["column_mapping"] = dict(column_mapping)
-    data = json.dumps(snap, sort_keys=True)
     tmp = mdir / f".tmp_{txid}"
-    tmp.write_text(data)
+    tmp.write_text(json.dumps(snap, sort_keys=True))
     os.replace(tmp, mdir / f"v{version:010d}.json")
     if update_pointer:
-        tmp2 = live / f"._manifest_tmp_{txid}"
-        tmp2.write_text(data)
-        os.replace(tmp2, live / "_manifest.json")
+        _write_pointer(live, snap)
     return snap
 
 
 def _move_staged_in(live, staged, staged_files) -> list[str]:
     """Move a staged tree's files into the live tree under their
-    (globally unique) part names — the shared commit step of
-    :func:`_publish_manifest_commit` and :func:`append_rows`. Old files
-    are never touched; a name collision means the same staged tree is
-    being committed twice."""
+    (globally unique) part names — the move-in step of :func:`_commit`
+    and :func:`begin_publish`. Old files are never touched; a name
+    collision means the same staged tree is being committed twice."""
     new_files = []
     for rel in staged_files:
         dst = live / rel
@@ -1420,13 +1436,190 @@ def _move_staged_in(live, staged, staged_files) -> list[str]:
     return new_files
 
 
+@contextmanager
+def _stage(live, df, partition_by, base, compression="snappy"):
+    """Stage a batch invisibly under ``<live>/_staged_<txid>`` — the
+    staged write every lake writer shares. ``df`` arrives under logical
+    column names and is written under ``base``'s frozen physical ones
+    (:func:`rename_column`); a callable instead fills the directory
+    itself (:func:`add_files` links landed files, :func:`optimize_binpack`
+    packs per directory). The staged files are then checked against
+    ``base``'s CHECK constraints. Yields ``(dir, files, txid)`` and
+    removes the directory on exit, whether or not the commit moved its
+    files in; a failure while filling it leaves it, like a crash would,
+    for :func:`vacuum_publish_artifacts`."""
+    import shutil
+    import uuid as _uuid
+    from types import SimpleNamespace
+
+    base = base or {}
+    txid = _uuid.uuid4().hex
+    staged = live / f"_staged_{txid}"
+    if callable(df):
+        df(staged)
+    else:
+        writer = (
+            _to_physical_df(df, base)
+            .write.mode("overwrite")
+            .option("compression", compression)
+        )
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(str(staged))
+    try:
+        files = sorted(
+            p.relative_to(staged)
+            for p in staged.rglob("*.parquet")
+            if p.is_file()
+        )
+        if files and base.get("constraints"):
+            _enforce_constraints(
+                _active_spark() if callable(df) else df.sparkSession,
+                staged,
+                base["constraints"],
+                mapping=base.get("column_mapping"),
+            )
+        yield SimpleNamespace(dir=staged, files=files, txid=txid)
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
+
+
+#: The table definition a staged batch is checked against: snapshot key
+#: -> (the :func:`_commit_manifest` argument that records it, the words
+#: a conflict message uses for it).
+_DEFINITION = {
+    "partition_by": ("partition_by", "partition layout"),
+    "partition_specs": ("partition_specs", "partition layout"),
+    "constraints": ("constraints", "CHECK constraints"),
+    "column_mapping": ("column_mapping", "renamed columns"),
+    "schema": ("table_schema", "schema"),
+}
+
+
+def _column_types(schema: dict | None) -> dict | None:
+    """``{name: type}`` of a recorded JSON schema — what a batch must
+    match (nullability and metadata do not count)."""
+    if schema is None:
+        return None
+    return {f["name"]: f["type"] for f in schema["fields"]}
+
+
+def _check_batch_schema(verb: str, snap: dict | None, df: DataFrame) -> None:
+    """Fail fast on schema drift (merge_into's contract): a typo'd or
+    missing column in a batch must not land a mixed-schema file set.
+    Snapshots record the writer's schema; batches must match it
+    name-for-name and type-for-type (nullability/metadata ignored).
+    Pre-recording snapshots (older tables) skip the check."""
+    want = _column_types((snap or {}).get("schema"))
+    have = _column_types(df.schema.jsonValue())
+    if want is None or want == have:
+        return
+    raise ValueError(
+        f"{verb} batch schema does not match the table's committed "
+        f"schema (extra={sorted(set(have) - set(want))}, "
+        f"missing={sorted(set(want) - set(have))}, retyped="
+        f"{sorted(n for n in set(want) & set(have) if want[n] != have[n])})"
+        " — evolve the table through merge_into(evolve_schema=True) first"
+    )
+
+
+def _definition(m: dict | None) -> dict:
+    """A snapshot's :data:`_DEFINITION` parts, empty values normalized."""
+    m = m or {}
+    return {
+        "partition_by": list(m.get("partition_by") or []),
+        "partition_specs": m.get("partition_specs") or {},
+        "constraints": m.get("constraints") or {},
+        "column_mapping": m.get("column_mapping") or {},
+        "schema": _column_types(m.get("schema")),
+    }
+
+
+def _check_conflict(live, base, current, expected_version, commit) -> None:
+    """The lake's one conflict rule, Delta's: concurrent appends
+    commute, and a change to the table definition conflicts with every
+    concurrent write.
+
+    - A rewrite (``expected_version`` given) was computed from that
+      snapshot's rows: it conflicts when any commit landed since.
+    - Any other write was staged against ``base``'s definition
+      (:data:`_DEFINITION`): it conflicts when a concurrent commit
+      changed a part of it to something this commit does not record
+      itself. ``commit`` holds this commit's :func:`_commit_manifest`
+      arguments; one left None carries the current value and so
+      records nothing of its own."""
+    if expected_version is not None:
+        actual = current["version"] if current else 0
+        if actual != expected_version:
+            raise ConcurrentLakeModificationError(
+                f"table at {live} is at snapshot v{actual}, but this "
+                f"write was computed against v{expected_version} — "
+                "committing would drop the intervening writer's "
+                "changes; re-run against the current snapshot"
+            )
+        return
+    claimed = {k: commit.get(arg) for k, (arg, _) in _DEFINITION.items()}
+    was, now, ours = _definition(base), _definition(current), _definition(claimed)
+    moved = [
+        k
+        for k in _DEFINITION
+        if now[k] != was[k] and (claimed[k] is None or now[k] != ours[k])
+    ]
+    if moved:
+        what = " and ".join(dict.fromkeys(_DEFINITION[k][1] for k in moved))
+        raise ConcurrentLakeModificationError(
+            f"table at {live} changed its {what} while this write was "
+            "staging — the batch was checked against the old table "
+            "definition; re-run"
+        )
+
+
+def _commit(live, base, build, *, expected_version=None, staged=None, branch=None):
+    """The commit step every lake write shares. Under :data:`publish_lock`
+    it re-reads the current snapshot (the main pointer, or ``branch``'s
+    head), calls ``build(current, new_files)`` for this commit's
+    :func:`_commit_manifest` arguments past the parent, applies the
+    conflict rule (:func:`_check_conflict`) against ``base`` — the
+    snapshot the writer read — moves the ``staged`` files in and
+    commits. A conflict raises before any file moves, so the live tree
+    stays byte-identical. ``build`` returns None to commit nothing (a
+    replayed batch); this returns None then, else the new snapshot. A
+    branch commit advances the branch pointer and leaves
+    ``_manifest.json`` alone."""
+    import uuid as _uuid
+
+    with publish_lock(live):
+        if branch is not None:
+            current = branch_head(str(live), branch)
+        else:
+            current = read_manifest(str(live))
+        new_files = [str(f) for f in staged.files] if staged else []
+        commit = build(current, new_files)
+        if commit is None:
+            return None
+        _check_conflict(live, base, current, expected_version, commit)
+        if staged:
+            _move_staged_in(live, staged.dir, staged.files)
+        snap = _commit_manifest(
+            live,
+            parent=current,
+            txid=staged.txid if staged else _uuid.uuid4().hex,
+            update_pointer=branch is None,
+            **commit,
+        )
+        if branch is not None:
+            branches = list_branches(str(live))
+            branches[branch]["head"] = snap["version"]
+            _write_branches(live, branches)
+        return snap
+
+
 def _publish_manifest_commit(
     live,
     result: DataFrame,
     partition_by: list[str] | None,
     compression: str,
     drop_missing_partitions: list[str] | None,
-    txid: str,
     bloom_cols: list[str] | None = None,
     expected_version: int | None = None,
     full_rewrite: bool = False,
@@ -1437,148 +1630,80 @@ def _publish_manifest_commit(
     WATERMARK atomically with the state it describes — the MV refresh
     records the source snapshot its stored aggregates reflect in the
     same pointer replace (the Delta ``txn`` pattern on a rewrite).
-    stage, move files in under unique names (old files retained), then
-    commit with one atomic pointer replace. A conflict raise
-    (``expected_version`` mismatch) happens BEFORE any file moves, so
-    a failed optimistic commit leaves the live tree byte-identical.
 
     ``full_rewrite=True`` (compact_in_place / OPTIMIZE) declares that
     ``result`` IS the complete table: nothing is carried even on a
-    partitioned layout. It is also the one rewrite allowed on a
-    partition-evolved table — a partial (replaced-partitions) rewrite
-    there is refused, because files written under a retired spec live
-    in directories the new spec's staged tree can never replace, so
-    rows of a "touched" logical partition would silently survive in
-    old-spec files."""
-    import shutil
+    partitioned layout, and the files are written under the logical
+    names, so a rename mapping heals away. It is also the one rewrite
+    allowed on a partition-evolved table — a partial (replaced-
+    partitions) rewrite there is refused, because files written under a
+    retired spec live in directories the new spec's staged tree can
+    never replace, so rows of a "touched" logical partition would
+    silently survive in old-spec files."""
     from pathlib import Path
 
     pre = read_manifest(str(live)) or {}
-    pre_constraints = pre.get("constraints", {})
-    pre_mapping = pre.get("column_mapping", {})
-    # the recorded schema is always LOGICAL; files carry the frozen
-    # physical names (rename_column). A full rewrite writes fresh files
-    # under the logical names — the rename's OPTIMIZE-style migration,
-    # after which the mapping heals away (committed below)
-    logical_schema = result.schema.jsonValue()
-    if pre_mapping and not full_rewrite:
-        result = _to_physical_df(result, pre)
-    staged = live / f"_staged_{txid}"
-    writer = result.write.mode("overwrite").option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(staged))
-    staged_files = sorted(
-        p.relative_to(staged)
-        for p in staged.rglob("*.parquet")
-        if p.is_file()
-    )
-    try:
-        if staged_files:
-            _enforce_constraints(
-                result.sparkSession,
-                staged,
-                pre_constraints,
-                mapping={} if full_rewrite else pre_mapping,
+    pb = list(partition_by or [])
+    if pre and pre.get("partition_by", []) != pb and (pb or not full_rewrite):
+        if not pb:
+            raise ValueError(
+                f"table at {live} is hive-partitioned by "
+                f"{pre['partition_by']} but no partition columns were "
+                "given: refusing the unpartitioned rewrite that would "
+                "destroy the layout — pass the partition column(s)"
             )
-    except ConstraintViolationError:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
-    if bloom_cols and pre_mapping and not full_rewrite:
-        # staged files carry physical names; bitmaps key on them too
-        bloom_cols = [pre_mapping.get(c, c) for c in bloom_cols]
-    new_blooms = (
-        _staged_file_blooms(result.sparkSession, staged, bloom_cols)
-        if bloom_cols
-        else {}
-    )
-    try:
-        with publish_lock(live):
-            current = read_manifest(str(live))
-            if (current or {}).get("constraints", {}) != pre_constraints:
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} changed its CHECK constraints while "
-                    "this publish was staging — the batch was validated "
-                    "against the old set; re-run"
-                )
-            if (current or {}).get("column_mapping", {}) != pre_mapping:
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} renamed columns while this publish "
-                    "was staging — the batch was written under the old "
-                    "physical names; re-run"
-                )
-            if expected_version is not None:
-                actual = current["version"] if current else 0
-                if actual != expected_version:
-                    raise ConcurrentLakeModificationError(
-                        f"table at {live} is at snapshot v{actual}, but "
-                        f"this rewrite was computed against v"
-                        f"{expected_version} — committing would drop the "
-                        "intervening writer's changes; re-run against "
-                        "the current snapshot"
-                    )
-            if current is not None:
-                cur_pb = current.get("partition_by", [])
-                pb = list(partition_by or [])
-                if cur_pb != pb and (pb or not full_rewrite):
-                    if not pb:
-                        raise ValueError(
-                            f"table at {live} is hive-partitioned by "
-                            f"{cur_pb} but no partition columns were "
-                            "given: refusing the unpartitioned rewrite "
-                            "that would destroy the layout — pass the "
-                            "partition column(s)"
-                        )
-                    raise ValueError(
-                        f"publish partition_by {pb} does not match the "
-                        f"table's committed layout {cur_pb} — change "
-                        "layouts with evolve_partitioning()"
-                    )
-                if (
-                    partition_by
-                    and current.get("partition_specs")
-                    and not full_rewrite
-                ):
-                    raise ValueError(
-                        f"table at {live} is partition-evolved (files "
-                        "under retired spec(s) remain): a partial "
-                        "rewrite cannot replace old-spec files' "
-                        "directories — compact_in_place() it first to "
-                        "migrate every file to the current spec"
-                    )
-            prev_files = current["files"] if current is not None else []
-            new_files = _move_staged_in(live, staged, staged_files)
-            if full_rewrite:
-                carried = []  # result IS the whole table
-            elif partition_by:
+        raise ValueError(
+            f"publish partition_by {pb} does not match the table's "
+            f"committed layout {pre['partition_by']} — change layouts "
+            "with evolve_partitioning()"
+        )
+    if pb and pre.get("partition_specs") and not full_rewrite:
+        raise ValueError(
+            f"table at {live} is partition-evolved (files under retired "
+            "spec(s) remain): a partial rewrite cannot replace old-spec "
+            "files' directories — compact_in_place() it first to "
+            "migrate every file to the current spec"
+        )
+    # the recorded schema is always LOGICAL
+    logical_schema = result.schema.jsonValue()
+    staged_as = {**pre, "column_mapping": {}} if full_rewrite else pre
+    with _stage(live, result, partition_by, staged_as, compression) as st:
+        new_blooms = (
+            _staged_file_blooms(
+                result.sparkSession,
+                st.dir,
+                # staged files carry physical names; bitmaps key on them
+                [_phys_name(staged_as, c) for c in bloom_cols],
+            )
+            if bloom_cols
+            else {}
+        )
+
+        def build(current, new_files):
+            carried = []  # a full or unpartitioned publish is the table
+            if pb and not full_rewrite:
                 # partitions present in the staged tree are REPLACED;
                 # ones the caller names as emptied are DROPPED;
                 # everything else is carried forward untouched
-                replaced = {str(Path(f).parent) for f in new_files}
-                dropped = set(drop_missing_partitions or [])
+                gone = {str(Path(f).parent) for f in new_files}
+                gone |= set(drop_missing_partitions or [])
                 carried = [
                     f
-                    for f in prev_files
-                    if str(Path(f).parent) not in replaced
-                    and str(Path(f).parent) not in dropped
+                    for f in (current or {}).get("files", [])
+                    if str(Path(f).parent) not in gone
                 ]
-            else:
-                carried = []  # whole-table publish
-            _commit_manifest(
-                live,
-                [*carried, *new_files],
-                partition_by,
-                current,
-                txid,
+            return dict(
+                files=[*carried, *new_files],
+                partition_by=partition_by,
                 app_versions=app_versions,
                 file_blooms=new_blooms,
                 table_schema=logical_schema,
-                # a full rewrite just wrote every live file under the
-                # logical names — the rename mapping heals away
                 column_mapping={} if full_rewrite else None,
             )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+
+        _commit(
+            live, pre, build, expected_version=expected_version, staged=st
+        )
 
 
 def read_table(
@@ -2011,54 +2136,24 @@ def append_rows(
     ``_manifest.json`` — and every main reader — stays untouched.
     Publish the chain with :func:`fast_forward`.
     """
-    import shutil
-    import uuid as _uuid
     from pathlib import Path
 
     if (stream_id is None) != (batch_id is None):
         raise ValueError("stream_id and batch_id must be given together")
     live = Path(path)
-
-    def _parent() -> dict | None:
-        # branch commits chain on the branch head (KeyError surfaces
-        # an unknown branch); main commits on the live pointer
-        return branch_head(str(live), branch) if branch else read_manifest(
-            str(live)
-        )
-
     # branches fork from a committed snapshot, so only main can still
     # be a plain directory
-    current = _parent() if branch else adopt_table(path, partition_by, spark)
+    if branch:
+        current = branch_head(path, branch)
+    else:
+        current = adopt_table(path, partition_by, spark)
     pb = list(partition_by or [])
     if current is not None and current["partition_by"] != pb:
         raise ValueError(
             f"partition_by {pb} does not match the table's committed "
             f"layout {current['partition_by']}"
         )
-    # Fail fast on schema drift (merge_into's contract): a typo'd or
-    # missing column in a streaming batch must not silently land a
-    # mixed-schema file set into the chain. Snapshots record the
-    # writer's schema; batches must match it name-for-name and
-    # type-for-type (nullability/metadata ignored). Pre-recording
-    # snapshots (older tables) skip the check.
-    recorded = (current or {}).get("schema")
-    if recorded is not None:
-        want = {f["name"]: f["type"] for f in recorded["fields"]}
-        have = {
-            f["name"]: f["type"] for f in rows.schema.jsonValue()["fields"]
-        }
-        if want != have:
-            extra = sorted(set(have) - set(want))
-            missing = sorted(set(want) - set(have))
-            retyped = sorted(
-                n for n in set(want) & set(have) if want[n] != have[n]
-            )
-            raise ValueError(
-                f"append batch schema does not match the table's "
-                f"committed schema (extra={extra}, missing={missing}, "
-                f"retyped={retyped}) — evolve the table through "
-                "merge_into(evolve_schema=True) first"
-            )
+    _check_batch_schema("append", current, rows)
 
     def _committed(snap: dict | None) -> bool:
         return (
@@ -2069,91 +2164,31 @@ def append_rows(
 
     if _committed(current):
         return None  # cheap pre-check; authoritative one is under the lock
-    txid = _uuid.uuid4().hex
-    live.mkdir(parents=True, exist_ok=True)
-    staged = live / f"_staged_{txid}"
     logical_schema = rows.schema.jsonValue()
-    pre_mapping = (current or {}).get("column_mapping", {})
-    if pre_mapping:
-        # batches arrive under LOGICAL names; files carry the frozen
-        # physical ones (rename_column)
-        rows = _to_physical_df(rows, current)
-    writer = rows.write.mode("overwrite").option("compression", compression)
-    if pb:
-        writer = writer.partitionBy(*pb)
-    writer.parquet(str(staged))
-    staged_files = sorted(
-        p.relative_to(staged) for p in staged.rglob("*.parquet") if p.is_file()
-    )
-    pre_constraints = (current or {}).get("constraints", {})
-    try:
-        if staged_files:
-            _enforce_constraints(
-                spark, staged, pre_constraints, mapping=pre_mapping
+    with _stage(live, rows, pb, current, compression) as st:
+        new_blooms = (
+            _staged_file_blooms(
+                spark, st.dir, [_phys_name(current or {}, c) for c in bloom_cols]
             )
-    except ConstraintViolationError:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
-    if bloom_cols and pre_mapping:
-        bloom_cols = [pre_mapping.get(c, c) for c in bloom_cols]
-    new_blooms = (
-        _staged_file_blooms(spark, staged, bloom_cols)
-        if bloom_cols and staged_files
-        else {}
-    )
-    try:
-        with publish_lock(live):
-            current = _parent()  # re-read under the lock
-            if (current or {}).get("constraints", {}) != pre_constraints:
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} changed its CHECK constraints while "
-                    "this append was staging — the batch was validated "
-                    "against the old set; re-run"
-                )
-            if (current or {}).get("column_mapping", {}) != pre_mapping:
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} renamed columns while this append "
-                    "was staging — the batch was written under the old "
-                    "physical names; re-run"
-                )
-            if current is not None and current.get("partition_by", []) != pb:
-                # mirror of _publish_manifest_commit's layout guard: a
-                # concurrent evolve_partitioning committed while this
-                # batch was staging; committing pb here would silently
-                # revert the table's default spec (the retired spec is
-                # still in partition_specs, so _commit_manifest would
-                # resolve it without error)
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} evolved its partition layout to "
-                    f"{current.get('partition_by', [])} while this append "
-                    f"was staging under {pb} — re-run"
-                )
-            if _committed(current):
+            if bloom_cols and st.files
+            else {}
+        )
+
+        def build(parent, new_files):
+            if _committed(parent):
                 return None  # raced with our own replay — batch already in
-            new_files = _move_staged_in(live, staged, staged_files)
-            ledger = dict((current or {}).get("app_versions", {}))
+            ledger = dict((parent or {}).get("app_versions", {}))
             if stream_id is not None:
                 ledger[stream_id] = batch_id
-            snap = _commit_manifest(
-                live,
-                [*(current["files"] if current else []), *new_files],
-                pb,
-                current,
-                txid,
+            return dict(
+                files=[*(parent["files"] if parent else []), *new_files],
+                partition_by=pb,
                 app_versions=ledger,
                 file_blooms=new_blooms,
                 table_schema=logical_schema,
-                update_pointer=branch is None,
             )
-            if branch is not None:
-                # advance the branch pointer under the same lock —
-                # main's _manifest.json was deliberately not touched
-                branches = list_branches(str(live))
-                branches[branch]["head"] = snap["version"]
-                _write_branches(live, branches)
-            return snap
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+
+        return _commit(live, current, build, staged=st, branch=branch)
 
 
 def overwrite_partitions(
@@ -2213,8 +2248,6 @@ def overwrite_partitions(
 
     Returns the committed snapshot dict plus ``files_replaced`` /
     ``partitions_replaced``; ``None`` for a skipped replay."""
-    import shutil
-    import uuid as _uuid
     from pathlib import Path
 
     if (stream_id is None) != (batch_id is None):
@@ -2250,131 +2283,68 @@ def overwrite_partitions(
             "under the old layout; run OPTIMIZE to heal to the current "
             "spec first"
         )
-    recorded = current.get("schema")
-    if recorded is not None:
-        want = {f["name"]: f["type"] for f in recorded["fields"]}
-        have = {
-            f["name"]: f["type"] for f in rows.schema.jsonValue()["fields"]
-        }
-        if want != have:
-            extra = sorted(set(have) - set(want))
-            missing = sorted(set(want) - set(have))
-            retyped = sorted(
-                n for n in set(want) & set(have) if want[n] != have[n]
-            )
-            raise ValueError(
-                f"overwrite batch schema does not match the table's "
-                f"committed schema (extra={extra}, missing={missing}, "
-                f"retyped={retyped})"
-            )
-    txid = _uuid.uuid4().hex
-    staged = live / f"_staged_{txid}"
+    _check_batch_schema("overwrite", current, rows)
     logical_schema = rows.schema.jsonValue()
-    pre_mapping = current.get("column_mapping", {})
-    if pre_mapping:
-        rows = _to_physical_df(rows, current)
-    (
-        rows.write.mode("overwrite")
-        .option("compression", compression)
-        .partitionBy(*pb)
-        .parquet(str(staged))
-    )
-    staged_files = sorted(
-        p.relative_to(staged) for p in staged.rglob("*.parquet") if p.is_file()
-    )
-    if not staged_files and replace_partitions is None:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise ValueError(
-            "overwrite_partitions refuses an empty batch: dynamic "
-            "overwrite derives the replacement set from the data, so an "
-            "empty batch would silently replace nothing — if clearing "
-            "partitions is intended, use delete_rows or the static "
-            "PARTITION (...) form (replace_partitions=)"
-        )
-    # the replacement set: hive partition dirs present in the batch
-    # (same partitionBy writer encoding as the table's own files)
-    touched = {str(f.parent) for f in staged_files}
-    if replace_partitions is not None:
-        named = set(replace_partitions)
-        stray = sorted(touched - named)
-        if stray:
-            shutil.rmtree(staged, ignore_errors=True)
+    with _stage(live, rows, pb, current, compression) as st:
+        if not st.files and replace_partitions is None:
             raise ValueError(
-                f"static overwrite batch contains rows outside the "
-                f"named partition set {sorted(named)}: {stray} — the "
-                "PARTITION spec is a blast-radius declaration; rows "
-                "must fall inside it"
+                "overwrite_partitions refuses an empty batch: dynamic "
+                "overwrite derives the replacement set from the data, so "
+                "an empty batch would silently replace nothing — if "
+                "clearing partitions is intended, use delete_rows or the "
+                "static PARTITION (...) form (replace_partitions=)"
             )
-        # hive static semantics: the NAMED set is replaced even when
-        # the batch is empty (truncate) or covers only part of it
-        touched = named
-    pre_constraints = current.get("constraints", {})
-    try:
-        _enforce_constraints(
-            spark, staged, pre_constraints, mapping=pre_mapping
-        )
-    except ConstraintViolationError:
-        shutil.rmtree(staged, ignore_errors=True)
-        raise
-    try:
-        with publish_lock(live):
-            current = read_manifest(str(live)) or {}  # re-read under the lock
-            if current.get("constraints", {}) != pre_constraints:
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} changed its CHECK constraints while "
-                    "this overwrite was staging — re-run"
+        # the replacement set: hive partition dirs present in the batch
+        # (same partitionBy writer encoding as the table's own files)
+        touched = {str(f.parent) for f in st.files}
+        if replace_partitions is not None:
+            named = set(replace_partitions)
+            stray = sorted(touched - named)
+            if stray:
+                raise ValueError(
+                    f"static overwrite batch contains rows outside the "
+                    f"named partition set {sorted(named)}: {stray} — the "
+                    "PARTITION spec is a blast-radius declaration; rows "
+                    "must fall inside it"
                 )
-            if current.get("column_mapping", {}) != pre_mapping:
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} renamed columns while this "
-                    "overwrite was staging — re-run"
-                )
-            if current.get("partition_by", pb) != pb or current.get(
-                "partition_specs"
-            ):
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} evolved its partition layout while "
-                    "this overwrite was staging — re-run"
-                )
-            if _committed(current):
+            # hive static semantics: the NAMED set is replaced even when
+            # the batch is empty (truncate) or covers only part of it
+            touched = named
+        replaced: dict = {}
+
+        def build(parent, new_files):
+            parent = parent or {}
+            if _committed(parent):
                 return None  # raced with our own replay
-            new_files = _move_staged_in(live, staged, staged_files)
-            prev_files = current.get("files", [])
-            kept = [
+            prev_files = parent.get("files", [])
+            gone = {
                 f
                 for f in prev_files
-                if (f.rsplit("/", 1)[0] if "/" in f else "") not in touched
-            ]
-            replaced = len(prev_files) - len(kept)
-            ledger = dict(current.get("app_versions", {}))
+                if (f.rsplit("/", 1)[0] if "/" in f else "") in touched
+            }
+            # lock-accurate removed-row accounting (the TRUNCATE
+            # precedent): counted from the manifest read under the
+            # commit lock, so a concurrent append can never make the
+            # report understate what was replaced
+            replaced.update(
+                files_replaced=len(gone),
+                rows_replaced=sum(
+                    int(parent.get("file_rows", {}).get(f, 0)) for f in gone
+                ),
+                partitions_replaced=sorted(touched),
+            )
+            ledger = dict(parent.get("app_versions", {}))
             if stream_id is not None:
                 ledger[stream_id] = batch_id
-            snap = _commit_manifest(
-                live,
-                [*kept, *new_files],
-                pb,
-                current or None,
-                txid,
+            return dict(
+                files=[*(f for f in prev_files if f not in gone), *new_files],
+                partition_by=pb,
                 app_versions=ledger,
                 table_schema=logical_schema,
             )
-            kept_set = set(kept)
-            return {
-                **snap,
-                "files_replaced": replaced,
-                # lock-accurate removed-row accounting (the TRUNCATE
-                # precedent): counted from the manifest read under the
-                # commit lock, so a concurrent append can never make
-                # the report understate what was replaced
-                "rows_replaced": sum(
-                    int(current.get("file_rows", {}).get(f, 0))
-                    for f in prev_files
-                    if f not in kept_set
-                ),
-                "partitions_replaced": sorted(touched),
-            }
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+
+        snap = _commit(live, current, build, staged=st)
+    return None if snap is None else {**snap, **replaced}
 
 
 def rollback_table(path: str, version: int) -> dict:
@@ -2391,13 +2361,12 @@ def rollback_table(path: str, version: int) -> dict:
     state (keep_last=1), so a rollback can never resurrect erased rows
     — the pre-erasure snapshot files are already unreferenced and its
     manifests gone; this raises FileNotFoundError instead."""
-    import uuid as _uuid
-
     from pathlib import Path
 
     live = Path(path)
     target = read_manifest(path, version)  # FileNotFoundError if vacuumed
-    if read_manifest(path) is None:
+    base = read_manifest(path)
+    if base is None:
         raise FileNotFoundError(
             f"table at {path} is not manifest-committed — nothing to roll back"
         )
@@ -2407,20 +2376,13 @@ def rollback_table(path: str, version: int) -> dict:
             f"snapshot v{version} references {len(missing)} vacuumed data "
             f"file(s) (first: {missing[0]}) — cannot restore"
         )
-    with publish_lock(live):
-        current = read_manifest(path)  # re-read under the commit lock
+
+    def build(current, _new):
         if current["version"] == version:
-            return {
-                "rolled_back_to": version,
-                "new_version": current["version"],
-                "n_files": len(current["files"]),
-            }
-        snap = _commit_manifest(
-            live,
-            target["files"],
-            target["partition_by"],
-            current,
-            _uuid.uuid4().hex,
+            return None  # already there
+        return dict(
+            files=target["files"],
+            partition_by=target["partition_by"],
             # restore really IS metadata-only: the target snapshot
             # already recorded its files' stats/blooms/schema — inherit
             # them instead of dropping the blooms and re-reading every
@@ -2448,6 +2410,8 @@ def rollback_table(path: str, version: int) -> dict:
             file_spec=target.get("file_spec") or {},
             column_mapping=target.get("column_mapping", {}),
         )
+
+    snap = _commit(live, base, build) or target
     return {
         "rolled_back_to": version,
         "new_version": snap["version"],
@@ -2590,29 +2554,20 @@ def rename_column(path: str, old: str, new: str) -> dict:
     rename, fails loudly. ``table_changes`` across a rename boundary
     raises rather than mis-aligning columns."""
     import re as _re
-    import uuid as _uuid
     from pathlib import Path
 
-    live = Path(path)
-    if adopt_table(path) is None:
+    base = adopt_table(path)
+    if base is None:
         raise ValueError(f"table at {path} holds no data — nothing to rename")
-    with publish_lock(live):
-        current = read_manifest(path)
-        recorded = current.get("schema")
-        if recorded is None:
-            raise ValueError(
-                f"table at {path} has no recorded writer schema — "
-                "re-publish once to record it"
-            )
+
+    def build(current, _new):
+        recorded = _recorded_schema(path, current)
         names = [f["name"] for f in recorded["fields"]]
         if old not in names:
             raise ValueError(f"no column {old!r} on {names}")
         if new in names:
             raise ValueError(f"column {new!r} already exists on {names}")
-        part_cols = set(current.get("partition_by") or [])
-        for spec in (current.get("partition_specs") or {}).values():
-            part_cols.update(spec)
-        if old in part_cols:
+        if old in _partition_columns(current):
             raise ValueError(
                 f"column {old!r} is a partition column — directory "
                 "names are load-bearing; evolve_partitioning() away "
@@ -2635,22 +2590,45 @@ def rename_column(path: str, old: str, new: str) -> dict:
         phys = mapping.pop(old, old)
         if phys != new:
             mapping[new] = phys
-        schema = {
-            **recorded,
-            "fields": [
-                {**f, "name": new} if f["name"] == old else f
-                for f in recorded["fields"]
-            ],
-        }
-        return _commit_manifest(
-            live,
-            current["files"],
-            current.get("partition_by") or None,
-            current,
-            _uuid.uuid4().hex,
-            table_schema=schema,
+        return dict(
+            _unchanged(current),
+            table_schema={
+                **recorded,
+                "fields": [
+                    {**f, "name": new} if f["name"] == old else f
+                    for f in recorded["fields"]
+                ],
+            },
             column_mapping=mapping,
         )
+
+    return _commit(Path(path), base, build)
+
+
+def _recorded_schema(path: str, m: dict) -> dict:
+    """The snapshot's recorded writer schema, which every metadata-only
+    schema change edits."""
+    if m.get("schema") is None:
+        raise ValueError(
+            f"table at {path} has no recorded writer schema — "
+            "re-publish once to record it"
+        )
+    return m["schema"]
+
+
+def _partition_columns(m: dict) -> set:
+    """Every column a live file's directory names encode: the current
+    layout plus any retired spec's."""
+    cols = set(m.get("partition_by") or [])
+    for spec in (m.get("partition_specs") or {}).values():
+        cols.update(spec)
+    return cols
+
+
+def _unchanged(m: dict) -> dict:
+    """The :func:`_commit_manifest` arguments of a metadata-only commit
+    that keeps ``m``'s files and layout."""
+    return {"files": m["files"], "partition_by": m.get("partition_by") or None}
 
 
 _WIDEN_CHAIN = ("byte", "short", "integer", "long")
@@ -2757,34 +2735,28 @@ def truncate_table(path: str, spark: SparkSession | None = None) -> dict:
     file has a recorded footer count and no tombstone is in force,
     one exact scan otherwise (pass ``spark=``; without a session the
     fallback reports ``None``, never a wrong number)."""
-    import uuid as _uuid
     from pathlib import Path
 
-    live = Path(path)
-    if adopt_table(path, spark=spark) is None:
+    base = adopt_table(path, spark=spark)
+    if base is None:
         raise ValueError(f"table at {path} holds no data — nothing to truncate")
-    with publish_lock(live):
-        current = read_manifest(path)
+    removed: dict = {}
+
+    def build(current, _new):
         file_rows = current.get("file_rows") or {}
         if not current.get("delete_predicates") and all(
             f in file_rows for f in current["files"]
         ):
-            rows_removed = sum(int(file_rows[f]) for f in current["files"])
+            removed["rows_removed"] = sum(
+                int(file_rows[f]) for f in current["files"]
+            )
         elif spark is not None:
-            rows_removed = read_table(spark, path).count()
+            removed["rows_removed"] = read_table(spark, path).count()
         else:
-            rows_removed = None
-        snap = _commit_manifest(
-            live,
-            [],
-            current.get("partition_by") or None,
-            current,
-            _uuid.uuid4().hex,
-            delete_predicates=[],
-        )
-        out = dict(snap)
-        out["rows_removed"] = rows_removed
-        return out
+            removed["rows_removed"] = None
+        return dict(_unchanged(current), files=[], delete_predicates=[])
+
+    return {**_commit(Path(path), base, build), **removed}
 
 
 def add_files(spark: SparkSession, path: str, source_dir: str) -> dict:
@@ -2835,12 +2807,12 @@ def add_files(spark: SparkSession, path: str, source_dir: str) -> dict:
     data), the price of making the import trustworthy."""
     import os
     import shutil
-    import uuid as _uuid
     from pathlib import Path
 
     live = Path(path)
     src = Path(source_dir)
-    if adopt_table(path, spark=spark) is None:
+    current = adopt_table(path, spark=spark)
+    if current is None:
         raise ValueError(
             f"table at {path} holds no data — ADD FILES imports into an "
             "existing table's committed layout"
@@ -2854,13 +2826,7 @@ def add_files(spark: SparkSession, path: str, source_dir: str) -> dict:
     )
     if not rels:
         raise ValueError(f"no parquet files under {source_dir}")
-    current = read_manifest(path)
-    recorded = current.get("schema")
-    if recorded is None:
-        raise ValueError(
-            f"table at {path} has no recorded writer schema — "
-            "re-publish once to record it"
-        )
+    recorded = _recorded_schema(path, current)
     if current.get("column_mapping"):
         raise ValueError(
             f"table at {path} has an active column rename mapping — "
@@ -2980,13 +2946,10 @@ def add_files(spark: SparkSession, path: str, source_dir: str) -> dict:
                     "shortcut admitted this schema but Spark's reader "
                     "refuses it)"
                 )
-    constraints = current.get("constraints") or {}
-    if constraints:
-        # verify over the NEW data only, before anything links
-        _enforce_constraints(spark, src, constraints, mapping={})
-    txid = _uuid.uuid4().hex
-    staged = live / f"_staged_{txid}"
-    try:
+    # the import links under globally unique names; CHECK constraints
+    # verify over the NEW files only, before any commit
+    def _link(staged):
+        txid = staged.name.removeprefix("_staged_")
         for i, rel in enumerate(rels):
             dst = staged / rel.parent / f"part-import-{txid}-{i:05d}.parquet"
             dst.parent.mkdir(parents=True, exist_ok=True)
@@ -2994,66 +2957,34 @@ def add_files(spark: SparkSession, path: str, source_dir: str) -> dict:
                 os.link(src / rel, dst)
             except OSError:
                 shutil.copy2(src / rel, dst)
-        staged_files = sorted(
-            p.relative_to(staged)
-            for p in staged.rglob("*.parquet")
-            if p.is_file()
+
+    with _stage(live, _link, pb, current) as st:
+        snap = _commit(
+            live,
+            current,
+            lambda parent, new_files: dict(
+                files=[*parent["files"], *new_files], partition_by=pb or None
+            ),
+            staged=st,
         )
-        with publish_lock(live):
-            current = read_manifest(path)  # re-read under the lock
-            if (current.get("partition_by") or []) != pb:
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} evolved its partition layout "
-                    "while this import was staging — re-run"
-                )
-            if (current.get("constraints") or {}) != constraints:
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} changed its CHECK constraints "
-                    "while this import was staging — re-run"
-                )
-            if current.get("column_mapping"):
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} renamed columns while this "
-                    "import was staging — re-run"
-                )
-            if current.get("schema") != recorded:
-                # the batch validated against the OLD writer schema; a
-                # concurrent overwrite/widen must not admit mixed-
-                # schema files (same rule as the other three re-checks)
-                raise ConcurrentLakeModificationError(
-                    f"table at {live} changed its recorded schema "
-                    "while this import was staging — re-run"
-                )
-            new_files = _move_staged_in(live, staged, staged_files)
-            snap = _commit_manifest(
-                live,
-                [*current["files"], *new_files],
-                pb or None,
-                current,
-                txid,
-            )
-            # Import accounting from the files THIS commit linked,
-            # computed under the lock (round-15 ADVICE: a pre-lock
-            # manifest diff in the caller would misattribute a
-            # concurrent writer's files to this import).
-            out = dict(snap)
-            out["files_added"] = len(new_files)
-            out["rows_added"] = sum(
-                int(snap.get("file_rows", {}).get(f, 0))
-                for f in new_files
-            )
-            # Freeze the imported files read-only AFTER the commit
-            # succeeds (never mutate the user's landing files on an
-            # aborted import). Best-effort: a filesystem that refuses
-            # chmod keeps the documented aliasing caveat instead.
-            for f in new_files:
-                try:
-                    os.chmod(live / f, 0o444)
-                except OSError:
-                    pass
-            return out
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    # import accounting from the files THIS commit linked (a manifest
+    # diff would misattribute a concurrent writer's files to it)
+    new_files = [str(f) for f in st.files]
+    out = dict(snap)
+    out["files_added"] = len(new_files)
+    out["rows_added"] = sum(
+        int(snap.get("file_rows", {}).get(f, 0)) for f in new_files
+    )
+    # Freeze the imported files read-only AFTER the commit succeeds
+    # (never mutate the user's landing files on an aborted import).
+    # Best-effort: a filesystem that refuses chmod keeps the documented
+    # aliasing caveat instead.
+    for f in new_files:
+        try:
+            os.chmod(live / f, 0o444)
+        except OSError:
+            pass
+    return out
 
 
 def widen_column_type(path: str, col: str, new_type: str) -> dict:
@@ -3074,27 +3005,18 @@ def widen_column_type(path: str, col: str, new_type: str) -> dict:
     directory names with the declared type and the dir encoding is
     load-bearing. Merge-on-read tombstones and CHECK constraints stay
     valid under a widening (values are unchanged), so neither blocks."""
-    import uuid as _uuid
     from pathlib import Path
 
-    live = Path(path)
-    if adopt_table(path) is None:
+    base = adopt_table(path)
+    if base is None:
         raise ValueError(f"table at {path} holds no data — nothing to widen")
-    with publish_lock(live):
-        current = read_manifest(path)
-        recorded = current.get("schema")
-        if recorded is None:
-            raise ValueError(
-                f"table at {path} has no recorded writer schema — "
-                "re-publish once to record it"
-            )
+
+    def build(current, _new):
+        recorded = _recorded_schema(path, current)
         by_name = {f["name"]: f for f in recorded["fields"]}
         if col not in by_name:
             raise ValueError(f"no column {col!r} on {list(by_name)}")
-        part_cols = set(current.get("partition_by") or [])
-        for spec in (current.get("partition_specs") or {}).values():
-            part_cols.update(spec)
-        if col in part_cols:
+        if col in _partition_columns(current):
             raise ValueError(
                 f"column {col!r} is a partition column — directory "
                 "encodings fix its type; evolve_partitioning() away "
@@ -3107,21 +3029,18 @@ def widen_column_type(path: str, col: str, new_type: str) -> dict:
                 "widening (allowed: byte->short->integer->long, "
                 "float->double, decimal scale/precision-up)"
             )
-        schema = {
-            **recorded,
-            "fields": [
-                {**f, "type": new_type} if f["name"] == col else f
-                for f in recorded["fields"]
-            ],
-        }
-        return _commit_manifest(
-            live,
-            current["files"],
-            current.get("partition_by") or None,
-            current,
-            _uuid.uuid4().hex,
-            table_schema=schema,
+        return dict(
+            _unchanged(current),
+            table_schema={
+                **recorded,
+                "fields": [
+                    {**f, "type": new_type} if f["name"] == col else f
+                    for f in recorded["fields"]
+                ],
+            },
         )
+
+    return _commit(Path(path), base, build)
 
 
 def evolve_partitioning(path: str, new_partition_by: list[str] | None) -> dict:
@@ -3157,25 +3076,18 @@ def evolve_partitioning(path: str, new_partition_by: list[str] | None) -> dict:
     (old data ages out through retention while new data enjoys the new
     layout). Requires a recorded writer schema (every round-8 commit
     records one) so mixed-spec scans are declared, never inferred."""
-    import uuid as _uuid
     from pathlib import Path
 
-    live = Path(path)
-    if adopt_table(path) is None:
+    base = adopt_table(path)
+    if base is None:
         raise ValueError(
             f"table at {path} holds no data — nothing to repartition"
         )
     new = list(new_partition_by or [])
-    with publish_lock(live):
-        current = read_manifest(path)  # re-read under the commit lock
-        recorded = current.get("schema")
-        if recorded is None:
-            raise ValueError(
-                f"table at {path} has no recorded writer schema — "
-                "mixed-spec scans must be declared; re-publish once to "
-                "record it"
-            )
-        names = [f["name"] for f in recorded["fields"]]
+
+    def build(current, _new):
+        # mixed-spec scans must be declared, never inferred
+        names = [f["name"] for f in _recorded_schema(path, current)["fields"]]
         missing = [c for c in new if c not in names]
         if missing:
             raise ValueError(
@@ -3193,7 +3105,7 @@ def evolve_partitioning(path: str, new_partition_by: list[str] | None) -> dict:
                 "logical names"
             )
         if current["partition_by"] == new:
-            return current  # already this layout — nothing to commit
+            return None  # already this layout — nothing to commit
         specs = {
             k: list(v)
             for k, v in (current.get("partition_specs") or {}).items()
@@ -3206,15 +3118,14 @@ def evolve_partitioning(path: str, new_partition_by: list[str] | None) -> dict:
         if sid is None:
             sid = str(max(int(k) for k in specs) + 1)
             specs[sid] = new
-        return _commit_manifest(
-            live,
-            current["files"],
-            new,
-            current,
-            _uuid.uuid4().hex,
+        return dict(
+            files=current["files"],
+            partition_by=new,
             partition_specs=specs,
             file_spec=fspec,
         )
+
+    return _commit(Path(path), base, build) or read_manifest(path)
 
 
 def _enforce_constraints(
@@ -3271,11 +3182,9 @@ def add_constraint(
     :class:`ConstraintViolationError` and leaves the table untouched).
     Constraints survive rollback (RESTORE restores the target
     snapshot's set) and are carried by every commit."""
-    import uuid as _uuid
-    from pathlib import Path as _P
+    from pathlib import Path
 
     F.expr(sql)  # fail fast on unparseable SQL
-    live = _P(path)
     m = adopt_table(path, spark=spark)
     if m is None:
         raise ValueError(
@@ -3292,47 +3201,35 @@ def add_constraint(
             f"cannot add CHECK constraint {name!r} ({sql}): {existing} "
             "existing row(s) violate it"
         )
-    with publish_lock(live):
-        current = read_manifest(path)
-        if current is None or current["version"] != m["version"]:
-            raise ConcurrentLakeModificationError(
-                f"table at {path} moved past snapshot v{m['version']} "
-                "while existing data was being validated — re-run"
-            )
-        cons = {**current.get("constraints", {}), name: sql}
-        return _commit_manifest(
-            live,
-            current["files"],
-            current["partition_by"],
-            current,
-            _uuid.uuid4().hex,
-            constraints=cons,
-        )
+    # the existing rows were validated at snapshot m: any commit since
+    # is a conflict
+    return _commit(
+        Path(path),
+        m,
+        lambda current, _new: dict(
+            _unchanged(current),
+            constraints={**current.get("constraints", {}), name: sql},
+        ),
+        expected_version=m["version"],
+    )
 
 
 def drop_constraint(path: str, name: str) -> dict:
     """DROP a named CHECK constraint — a metadata-only commit."""
-    import uuid as _uuid
-    from pathlib import Path as _P
+    from pathlib import Path
 
-    live = _P(path)
-    adopt_table(path)
-    with publish_lock(live):
-        current = read_manifest(path)
-        if current is None:
-            raise ValueError(f"table at {path} holds no data")
+    base = adopt_table(path)
+    if base is None:
+        raise ValueError(f"table at {path} holds no data")
+
+    def build(current, _new):
         cons = dict(current.get("constraints", {}))
         if name not in cons:
             raise KeyError(f"table at {path} has no constraint {name!r}")
         del cons[name]
-        return _commit_manifest(
-            live,
-            current["files"],
-            current["partition_by"],
-            current,
-            _uuid.uuid4().hex,
-            constraints=cons,
-        )
+        return dict(_unchanged(current), constraints=cons)
+
+    return _commit(Path(path), base, build)
 
 
 def begin_publish(
@@ -3367,12 +3264,10 @@ def begin_publish(
 
     Returns the candidate dict (pass it to the other WAP calls)."""
     import json
-    import shutil
+    import os
     import time
-    import uuid as _uuid
     from pathlib import Path
 
-    txid = _uuid.uuid4().hex
     live = Path(path)
     current = adopt_table(path, partition_by, spark=spark)
     if current is not None and current["partition_by"] != list(
@@ -3388,34 +3283,15 @@ def begin_publish(
             "replaced-partitions semantics cannot see old-spec files' "
             "directories — compact_in_place() it first"
         )
-    pre_mapping = (current or {}).get("column_mapping", {})
     cand_schema = result.schema.jsonValue()  # logical, like every commit
-    if pre_mapping:
-        result = _to_physical_df(result, current)
-    staged = live / f"_staged_{txid}"
-    writer = result.write.mode("overwrite").option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(str(staged))
-    staged_files = sorted(
-        p.relative_to(staged) for p in staged.rglob("*.parquet") if p.is_file()
-    )
-    try:
-        # candidates face the same CHECK gate as direct commits: WAP is
-        # for bespoke audits, not a constraint bypass (a constraint
-        # added between begin and commit is caught by commit_publish's
-        # base_version check — constraint changes are commits, and so
-        # are renames)
-        if staged_files:
-            _enforce_constraints(
-                spark,
-                staged,
-                (current or {}).get("constraints", {}),
-                mapping=pre_mapping,
-            )
-        new_files = _move_staged_in(live, staged, staged_files)
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    # candidates face the same CHECK gate as direct commits: WAP is for
+    # bespoke audits, not a constraint bypass (a constraint added
+    # between begin and commit is caught by commit_publish's
+    # base_version check — constraint changes are commits, and so are
+    # renames)
+    with _stage(live, result, partition_by, current, compression) as st:
+        new_files = _move_staged_in(live, st.dir, st.files)
+    txid = st.txid
     prev_files = current["files"] if current else []
     if partition_by:
         replaced = {str(Path(f).parent) for f in new_files}
@@ -3431,15 +3307,13 @@ def begin_publish(
         "files": sorted([*carried, *new_files]),
         "new_files": sorted(new_files),
         "schema": cand_schema,
-        "column_mapping": dict(pre_mapping),
+        "column_mapping": dict((current or {}).get("column_mapping", {})),
         "created_at": time.time(),
     }
     cpath = live / "_manifests"
     cpath.mkdir(parents=True, exist_ok=True)
     tmp = cpath / f".tmp_cand_{txid}"
     tmp.write_text(json.dumps(cand, sort_keys=True))
-    import os
-
     os.replace(tmp, cpath / f"candidate_{txid}.json")
     return cand
 
@@ -3495,27 +3369,19 @@ def commit_publish(path: str, candidate: dict) -> dict:
     promotion would produce, so this raises
     :class:`ConcurrentLakeModificationError` (re-stage and re-audit).
     The candidate marker is consumed."""
-    import uuid as _uuid
     from pathlib import Path
 
     live = Path(path)
-    with publish_lock(live):
-        current = read_manifest(path)
-        actual = current["version"] if current else 0
-        if actual != candidate["base_version"]:
-            raise ConcurrentLakeModificationError(
-                f"table at {path} is at snapshot v{actual}, but this "
-                f"candidate was staged and audited against v"
-                f"{candidate['base_version']} — abort and re-stage"
-            )
-        snap = _commit_manifest(
-            live,
-            candidate["files"],
-            candidate["partition_by"] or None,
-            current,
-            _uuid.uuid4().hex,
+    snap = _commit(
+        live,
+        None,
+        lambda _current, _new: dict(
+            files=candidate["files"],
+            partition_by=candidate["partition_by"] or None,
             table_schema=candidate.get("schema"),
-        )
+        ),
+        expected_version=candidate["base_version"],
+    )
     cpath = live / "_manifests" / f"candidate_{candidate['candidate']}.json"
     cpath.unlink(missing_ok=True)
     return snap
@@ -3536,6 +3402,16 @@ def abort_publish(path: str, candidate: dict) -> dict:
             removed += 1
         except OSError:
             continue
+    _prune_empty_dirs(live)
+    (
+        live / "_manifests" / f"candidate_{candidate['candidate']}.json"
+    ).unlink(missing_ok=True)
+    return {"files_removed": removed}
+
+
+def _prune_empty_dirs(live) -> None:
+    """Remove emptied partition directories bottom-up (the ``_`` and
+    ``.`` trees — manifests, staging — are left alone)."""
     for d in sorted(
         (
             p
@@ -3553,10 +3429,6 @@ def abort_publish(path: str, candidate: dict) -> dict:
             d.rmdir()  # only succeeds when empty
         except OSError:
             pass
-    (
-        live / "_manifests" / f"candidate_{candidate['candidate']}.json"
-    ).unlink(missing_ok=True)
-    return {"files_removed": removed}
 
 
 def verify_table(path: str, deep: bool = False) -> dict:
@@ -3796,25 +3668,8 @@ def vacuum_manifests(
             files_removed += 1
         except OSError:
             continue
-    # prune now-empty partition dirs (bottom-up; _manifests etc. excluded
-    # by the underscore guard); a dry run must not even sweep these
-    for d in [] if dry_run else sorted(
-        (
-            p
-            for p in live.rglob("*")
-            if p.is_dir()
-            and not any(
-                part.startswith(("_", "."))
-                for part in p.relative_to(live).parts
-            )
-        ),
-        key=lambda p: len(p.parts),
-        reverse=True,
-    ):
-        try:
-            d.rmdir()  # only succeeds when empty
-        except OSError:
-            pass
+    if not dry_run:  # a dry run must not even sweep empty dirs
+        _prune_empty_dirs(live)
     manifests_removed = 0
     for mp in (live / "_manifests").glob("v*.json"):
         if not mp.stem[1:].isdigit():
@@ -4264,6 +4119,75 @@ def scd2_as_of(
     )
 
 
+def _touched_slice(spark, path, predicate, partition_col, schema, set_cols=()):
+    """The slice a row-level rewrite (:func:`delete_rows`,
+    :func:`update_rows`) must replace, shared by both. Returns ``pred``
+    (the NULL-safe match), ``part_cols``, ``pre`` (the adopted snapshot
+    the rewrite is computed against), ``base`` (the touched partitions'
+    rows, or the whole table when unpartitioned), ``matched`` (the
+    matched-row count) and ``touched`` (the touched partition value
+    tuples; None when unpartitioned). ``set_cols`` are the columns an
+    UPDATE assigns: each must exist and none may be a partition
+    column."""
+    from types import SimpleNamespace
+
+    # Three-valued logic: rows where the predicate is NULL are NOT
+    # matched — and must therefore be KEPT. A bare ``~pred`` keep-filter
+    # would silently destroy them (NULL lands in neither side); coalesce
+    # makes the match/keep pair a true partition of every row.
+    raw = F.expr(predicate) if isinstance(predicate, str) else predicate
+    pred = F.coalesce(raw.cast("boolean"), F.lit(False))
+    part_cols = (
+        [partition_col] if isinstance(partition_col, str) else partition_col
+    )
+    struck = sorted(set(set_cols) & set(part_cols or []))
+    if struck:
+        raise ValueError(
+            f"SET targets partition column(s) {struck}: the updated "
+            "row would belong in a different directory than this "
+            "rewrite replaces — move rows via delete+append or a "
+            "keyed merge_into instead"
+        )
+    # optimistic concurrency (merge_into's note); an unpartitioned
+    # rewrite of a partitioned table is refused by the publish's layout
+    # guard
+    pre = adopt_table(path, part_cols, spark=spark, schema=schema)
+    cur = read_table(spark, path, schema)
+    unknown = sorted(set(set_cols) - set(cur.columns))
+    if unknown:
+        raise ValueError(f"SET targets unknown column(s) {unknown}")
+    out = SimpleNamespace(
+        pred=pred, part_cols=part_cols, pre=pre, base=cur, touched=None
+    )
+    matched = cur.filter(pred)
+    if not part_cols:
+        out.matched = matched.count()
+        return out
+    missing = [c for c in part_cols if c not in cur.columns]
+    if missing:
+        raise ValueError(f"table at {path} has no partition columns {missing}")
+    # r17 (guide §2.4): ONE aggregation job answers the matched count
+    # and the touched-partition list together — the matched slice was
+    # scanned twice to answer two questions one per-partition rollup
+    # answers. O(#touched) collect.
+    per_part = (
+        matched.groupBy(*part_cols).agg(F.count(F.lit(1)).alias("__n")).collect()
+    )
+    out.matched = sum(r["__n"] for r in per_part)
+    out.touched = [tuple(r)[: len(part_cols)] for r in per_part]
+    if out.touched:
+        # explicit schema: a NULL partition value (the Hive default
+        # partition) must not break type inference
+        out.base = _restrict_to_partitions(
+            cur,
+            spark.createDataFrame(
+                out.touched, matched.select(*part_cols).schema
+            ),
+            part_cols,
+        )
+    return out
+
+
 def delete_rows(
     spark: SparkSession,
     path: str,
@@ -4290,67 +4214,22 @@ def delete_rows(
     from the committed files, not tombstoned. Idempotent: re-running
     deletes nothing and rewrites nothing.
     """
-    # Three-valued logic: rows where the predicate is NULL are NOT
-    # matched — and must therefore be KEPT. A bare ``~pred`` keep-filter
-    # would silently destroy them (NULL lands in neither side); coalesce
-    # makes the match/keep pair a true partition of every row.
-    raw = F.expr(predicate) if isinstance(predicate, str) else predicate
-    pred = F.coalesce(raw.cast("boolean"), F.lit(False))
-    part_cols = (
-        [partition_col] if isinstance(partition_col, str) else partition_col
-    )
-    # optimistic concurrency (merge_into's note); an unpartitioned
-    # rewrite of a partitioned table is refused by the publish's layout
-    # guard
-    pre = adopt_table(path, part_cols, spark=spark, schema=schema)
-    cur = read_table(spark, path, schema)
-    if part_cols:
-        missing = [c for c in part_cols if c not in cur.columns]
-        if missing:
-            raise ValueError(
-                f"table at {path} has no partition columns {missing}"
-            )
-    matched = cur.filter(pred)
-    if part_cols:
-        # r17 (guide §2.4): ONE aggregation job replaces the former
-        # matched.count() + touched-distinct-collect pair — the matched
-        # slice was scanned twice to answer two questions one per-
-        # partition rollup answers together. O(#touched) collect: the
-        # values double as the drop-list for partitions the deletion
-        # EMPTIES — their staged rewrite has zero rows, so publish must
-        # remove their old directories.
-        per_part = (
-            matched.groupBy(*part_cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        n_deleted = sum(r["__n"] for r in per_part)
-        if n_deleted == 0:
-            return {"rows_deleted": 0, "partitions_rewritten": 0}
-        touched_rows = [tuple(r)[: len(part_cols)] for r in per_part]
-        # explicit schema: a NULL partition value (the Hive default
-        # partition) must not break type inference
-        touched = spark.createDataFrame(
-            touched_rows, matched.select(*part_cols).schema
-        )
-        base = _restrict_to_partitions(cur, touched, part_cols)
-        n_partitions = len(touched_rows)
-        drop = [hive_partition_relpath(part_cols, r) for r in touched_rows]
-    else:
-        n_deleted = matched.count()
-        if n_deleted == 0:
-            return {"rows_deleted": 0, "partitions_rewritten": 0}
-        base = cur
-        n_partitions = -1  # full rewrite
-        drop = None
-    keep = base.filter(~pred)
+    s = _touched_slice(spark, path, predicate, partition_col, schema)
+    if s.matched == 0:
+        return {"rows_deleted": 0, "partitions_rewritten": 0}
     publish_overwrite(
         spark,
         path,
-        keep,
-        part_cols,
-        drop_missing_partitions=drop,
-        expected_version=pre["version"] if pre else 0,
+        s.base.filter(~s.pred),
+        s.part_cols,
+        # partitions the deletion EMPTIES have no staged rewrite; the
+        # publish drops their old files by name
+        drop_missing_partitions=(
+            [hive_partition_relpath(s.part_cols, r) for r in s.touched]
+            if s.part_cols
+            else None
+        ),
+        expected_version=s.pre["version"] if s.pre else 0,
     )
     # Erasure dominates time travel (vacuum_manifests' GDPR note): the
     # rewrite produced a clean CURRENT snapshot, but matched rows still
@@ -4359,7 +4238,10 @@ def delete_rows(
     # version= readers too. drop_tags: erasure dominates tag pinning the
     # same way it dominates time travel.
     vacuum_manifests(path, keep_last=1, drop_tags=True)
-    return {"rows_deleted": n_deleted, "partitions_rewritten": n_partitions}
+    return {
+        "rows_deleted": s.matched,
+        "partitions_rewritten": len(s.touched) if s.part_cols else -1,
+    }
 
 
 def update_rows(
@@ -4403,86 +4285,44 @@ def update_rows(
     (``expected_version`` on manifest tables) is what prevents a
     double-submit from racing another writer.
     """
-    raw = F.expr(predicate) if isinstance(predicate, str) else predicate
-    pred = F.coalesce(raw.cast("boolean"), F.lit(False))
-    part_cols = (
-        [partition_col] if isinstance(partition_col, str) else partition_col
-    )
     set_map = {
         c: (F.expr(e) if isinstance(e, str) else e)
         for c, e in assignments.items()
     }
     if not set_map:
         raise ValueError("update_rows needs at least one SET assignment")
-    if part_cols:
-        struck = sorted(set(set_map) & set(part_cols))
-        if struck:
-            raise ValueError(
-                f"SET targets partition column(s) {struck}: the updated "
-                "row would belong in a different directory than this "
-                "rewrite replaces — move rows via delete+append or a "
-                "keyed merge_into instead"
-            )
-    # optimistic concurrency and layout guard: delete_rows' notes
-    pre = adopt_table(path, part_cols, spark=spark, schema=schema)
-    cur = read_table(spark, path, schema)
-    unknown = sorted(set(set_map) - set(cur.columns))
-    if unknown:
-        raise ValueError(f"SET targets unknown column(s) {unknown}")
-    if part_cols:
-        missing = [c for c in part_cols if c not in cur.columns]
-        if missing:
-            raise ValueError(
-                f"table at {path} has no partition columns {missing}"
-            )
-    matched = cur.filter(pred)
-    if part_cols:
-        # one rollup answers count + touched list together (delete_rows'
-        # r17 note)
-        per_part = (
-            matched.groupBy(*part_cols)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .collect()
-        )
-        n_updated = sum(r["__n"] for r in per_part)
-        if n_updated == 0:
-            return {"rows_updated": 0, "partitions_rewritten": 0}
-        touched_rows = [tuple(r)[: len(part_cols)] for r in per_part]
-        touched = spark.createDataFrame(
-            touched_rows, matched.select(*part_cols).schema
-        )
-        base = _restrict_to_partitions(cur, touched, part_cols)
-        n_partitions = len(touched_rows)
-    else:
-        n_updated = matched.count()
-        if n_updated == 0:
-            return {"rows_updated": 0, "partitions_rewritten": 0}
-        base = cur
-        n_partitions = -1  # full rewrite
+    s = _touched_slice(
+        spark, path, predicate, partition_col, schema, set_cols=set_map
+    )
+    if s.matched == 0:
+        return {"rows_updated": 0, "partitions_rewritten": 0}
     # one pass over the touched slice: SET expressions evaluate against
     # OLD values simultaneously (CASE WHEN pred THEN expr ELSE col), and
     # column order/types are pinned to the table schema so the staged
     # files are drop-in replacements
-    out = base.select(
+    out = s.base.select(
         *[
             (
-                F.when(pred, set_map[c].cast(base.schema[c].dataType))
+                F.when(s.pred, set_map[c].cast(s.base.schema[c].dataType))
                 .otherwise(F.col(c))
                 .alias(c)
                 if c in set_map
                 else F.col(c)
             )
-            for c in base.columns
+            for c in s.base.columns
         ]
     )
     publish_overwrite(
         spark,
         path,
         out,
-        part_cols,
-        expected_version=pre["version"] if pre else 0,
+        s.part_cols,
+        expected_version=s.pre["version"] if s.pre else 0,
     )
-    return {"rows_updated": n_updated, "partitions_rewritten": n_partitions}
+    return {
+        "rows_updated": s.matched,
+        "partitions_rewritten": len(s.touched) if s.part_cols else -1,
+    }
 
 
 def delete_rows_mor(
@@ -4525,8 +4365,7 @@ def delete_rows_mor(
     ``count=False`` skips the matched-row count scan — the commit
     itself never needs one. Returns ``{"rows_deleted", "version",
     "tombstones"}`` (``rows_deleted`` None when uncounted)."""
-    import uuid as _uuid
-    from pathlib import Path as _P
+    from pathlib import Path
 
     if not isinstance(predicate, str):
         raise TypeError(
@@ -4534,7 +4373,6 @@ def delete_rows_mor(
             "pass a SQL string, not a Column"
         )
     F.expr(predicate)  # fail fast on unparseable SQL
-    live = _P(path)
     m = adopt_table(path, spark=spark)
     if m is None:
         raise ValueError(f"table at {path} holds no data — nothing to delete")
@@ -4546,26 +4384,19 @@ def delete_rows_mor(
             .filter(F.coalesce(raw, F.lit(False)))
             .count()
         )
-    with publish_lock(live):
-        current = read_manifest(path)
-        if current is None or current["version"] != m["version"]:
-            raise ConcurrentLakeModificationError(
-                f"table at {path} moved past snapshot v{m['version']} "
-                "while the delete was being prepared — re-run against "
-                "the current snapshot"
-            )
-        tomb = {"pred": predicate, "scope": current["version"]}
-        snap = _commit_manifest(
-            live,
-            current["files"],
-            current["partition_by"],
-            current,
-            _uuid.uuid4().hex,
+    # the count and the tombstone's scope describe snapshot m
+    snap = _commit(
+        Path(path),
+        m,
+        lambda current, _new: dict(
+            _unchanged(current),
             delete_predicates=[
                 *current.get("delete_predicates", []),
-                tomb,
+                {"pred": predicate, "scope": current["version"]},
             ],
-        )
+        ),
+        expected_version=m["version"],
+    )
     return {
         "rows_deleted": rows_deleted,
         "version": snap["version"],
@@ -4596,11 +4427,8 @@ def purge_deleted_rows(
 
     Returns ``{"files_rewritten", "files_written",
     "tombstones_cleared", "version"}`` (version None on no-op)."""
-    import shutil
-    import uuid as _uuid
-    from pathlib import Path as _P
+    from pathlib import Path
 
-    live = _P(path)
     m = read_manifest(path)
     if m is None:
         raise ValueError(
@@ -4620,39 +4448,26 @@ def purge_deleted_rows(
         T.StructType.fromJson(m["schema"]) if m.get("schema") else None
     )
     part_by = list(m.get("partition_by") or [])
-    df = _masked_scan(spark, path, m, covered, schema)
-    # the masked scan returns LOGICAL names; staged files must carry the
-    # frozen physical ones like every other write path, or the carried
-    # mapping would NULL-fill the renamed column on the next read
-    df = _to_physical_df(df, m)
-    txid = _uuid.uuid4().hex
-    staged = live / f"_staged_{txid}"
-    writer = df.write.mode("overwrite").option("compression", compression)
-    if part_by:
-        writer = writer.partitionBy(*part_by)
-    writer.parquet(str(staged))
-    staged_files = sorted(
-        p.relative_to(staged) for p in staged.rglob("*.parquet") if p.is_file()
-    )
-    try:
-        with publish_lock(live):
-            current = read_manifest(path)
-            if current is None or current["version"] != m["version"]:
-                raise ConcurrentLakeModificationError(
-                    f"table at {path} moved past snapshot v{m['version']} "
-                    "while the purge rewrite ran — re-run against the "
-                    "current snapshot"
-                )
-            new_files = _move_staged_in(live, staged, staged_files)
-            snap = _commit_manifest(
-                live,
-                [*uncovered, *new_files],
-                part_by or None,
-                current,
-                txid,
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
+    # the masked scan returns LOGICAL names; staging writes them under
+    # the frozen physical ones. The kept rows already satisfy the
+    # table's CHECK constraints, so the staged rewrite skips the scan.
+    live = Path(path)
+    with _stage(
+        live,
+        _masked_scan(spark, path, m, covered, schema),
+        part_by,
+        {**m, "constraints": {}},
+        compression,
+    ) as st:
+        snap = _commit(
+            live,
+            m,
+            lambda _current, new_files: dict(
+                files=[*uncovered, *new_files], partition_by=part_by or None
+            ),
+            expected_version=m["version"],
+            staged=st,
+        )
     if snap.get("delete_predicates"):
         raise RuntimeError(
             f"purge committed v{snap['version']} with tombstones still in "
@@ -4660,7 +4475,7 @@ def purge_deleted_rows(
         )
     return {
         "files_rewritten": len(covered),
-        "files_written": len(new_files),
+        "files_written": len(st.files),
         "tombstones_cleared": n_tomb,
         "version": snap["version"],
     }
@@ -4768,8 +4583,6 @@ def optimize_binpack(
     Returns ``{"files_before", "files_after", "files_rewritten",
     "version"}`` (version None when nothing needed packing)."""
     import math
-    import shutil
-    import uuid as _uuid
     from collections import defaultdict
     from pathlib import Path
 
@@ -4852,11 +4665,8 @@ def optimize_binpack(
             "files_rewritten": 0,
             "version": None,
         }
-    txid = _uuid.uuid4().hex
-    staged = live / f"_staged_{txid}"
-    try:
+    def _pack(staged):
         for d, files, n_out in plans:
-            out_dir = staged if d == "." else staged / d
             # mergeSchema: a partition dir can legitimately hold pre-
             # and post-schema-evolution files; the packed file carries
             # the union with nulls — exactly what a declared-schema
@@ -4867,33 +4677,24 @@ def optimize_binpack(
                 .coalesce(n_out)
                 .write.mode("overwrite")
                 .option("compression", compression)
-                .parquet(str(out_dir))
+                .parquet(str(staged if d == "." else staged / d))
             )
-        staged_files = sorted(
-            p.relative_to(staged)
-            for p in staged.rglob("*.parquet")
-            if p.is_file()
+
+    picked_set = set(picked)
+    keep = [f for f in m["files"] if f not in picked_set]
+    # packed rows already satisfy the constraints: no base to check
+    # them against
+    with _stage(live, _pack, None, None) as st:
+        snap = _commit(
+            live,
+            m,
+            lambda _current, new_files: dict(
+                files=[*keep, *new_files],
+                partition_by=m["partition_by"] or None,
+            ),
+            expected_version=m["version"],
+            staged=st,
         )
-        with publish_lock(live):
-            current = read_manifest(path)
-            if current is None or current["version"] != m["version"]:
-                raise ConcurrentLakeModificationError(
-                    f"table at {path} advanced past v{m['version']} while "
-                    "this bin-pack was staging — re-plan against the "
-                    "current snapshot"
-                )
-            new_files = _move_staged_in(live, staged, staged_files)
-            picked_set = set(picked)
-            keep = [f for f in m["files"] if f not in picked_set]
-            snap = _commit_manifest(
-                live,
-                [*keep, *new_files],
-                m["partition_by"] or None,
-                current,
-                txid,
-            )
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
     # the packed inputs stay referenced by RETAINED history only;
     # vacuum_manifests reclaims them past the horizon like any rewrite
     return {

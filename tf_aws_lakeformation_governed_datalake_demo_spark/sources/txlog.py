@@ -44,9 +44,11 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import lake as _lake
 from .lake import (
     ConcurrentLakeModificationError,
-    publish_lock,
+    _is_ancestor,
+    _write_pointer,
     read_manifest,
     read_table,
 )
@@ -81,30 +83,6 @@ def txlog_current(lake_root: str) -> dict | None:
     return recs[-1] if recs else None
 
 
-def _is_ancestor(table_path: str, ancestor_version: int, m: dict) -> bool:
-    """True when ``ancestor_version`` lies on ``m``'s parent chain
-    (inclusive). Missing (vacuumed) intermediates end the walk."""
-    while m is not None:
-        if m["version"] == ancestor_version:
-            return True
-        if m["parent"] is None or m["parent"] < ancestor_version:
-            return False
-        try:
-            m = read_manifest(table_path, m["parent"])
-        except FileNotFoundError:
-            return False
-    return False
-
-
-def _write_pointer(table_path: str, m: dict) -> None:
-    """Move a table's main pointer to manifest ``m`` — caller holds the
-    table's publish lock and has verified ancestry."""
-    live = Path(table_path)
-    tmp = live / "._manifest_tmp_txlog"
-    tmp.write_text(json.dumps(m, sort_keys=True))
-    os.replace(tmp, live / "_manifest.json")
-
-
 def txlog_commit(lake_root: str, pins: dict[str, int]) -> dict:
     """Commit a consistent cut: pin every table in ``pins`` to the
     given manifest version, atomically (ONE record rename), then roll
@@ -132,9 +110,9 @@ def txlog_commit(lake_root: str, pins: dict[str, int]) -> dict:
     d.mkdir(parents=True, exist_ok=True)
     with ExitStack() as locks:
         # sorted-path lock order prevents deadlock between transactions
-        locks.enter_context(publish_lock(d))
+        locks.enter_context(_lake.publish_lock(d))
         for key in sorted(keyed):
-            locks.enter_context(publish_lock(Path(key)))
+            locks.enter_context(_lake.publish_lock(Path(key)))
         staged: dict[str, dict] = {}
         for key, v in keyed.items():
             try:
@@ -171,7 +149,7 @@ def txlog_commit(lake_root: str, pins: dict[str, int]) -> dict:
             cur = read_manifest(key)
             if cur is not None and cur["version"] >= m["version"]:
                 continue  # already there (idempotent replay)
-            _write_pointer(key, m)
+            _write_pointer(Path(key), m)
     return rec
 
 
@@ -222,7 +200,7 @@ def txlog_roll_forward(lake_root: str) -> dict[str, str]:
         return {}
     out: dict[str, str] = {}
     for key, v in rec["pins"].items():
-        with publish_lock(Path(key)):
+        with _lake.publish_lock(Path(key)):
             cur = read_manifest(key)
             if cur is not None and cur["version"] >= v:
                 out[key] = "current"
@@ -235,7 +213,7 @@ def txlog_roll_forward(lake_root: str) -> dict[str, str]:
             if cur is not None and not _is_ancestor(key, cur["version"], m):
                 out[key] = "diverged"
                 continue
-            _write_pointer(key, m)
+            _write_pointer(Path(key), m)
             out[key] = "rolled"
     return out
 
@@ -258,7 +236,7 @@ def txlog_vacuum(lake_root: str, keep_last: int = 20) -> dict:
     d = _txlog_dir(lake_root)
     if not d.is_dir():
         return {"deleted": 0, "kept": 0}
-    with publish_lock(d):
+    with _lake.publish_lock(d):
         recs = txlog_records(lake_root)
         deletable = recs[:-keep_last] if len(recs) > keep_last else []
         deleted = 0
