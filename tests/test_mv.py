@@ -225,6 +225,37 @@ def test_mv_watermark_is_atomic_with_state(spark, tmp_path):
     assert got == _recompute(spark, loc)
 
 
+def test_rename_column_matches_mv_columns_case_insensitively(
+    spark, tmp_path
+):
+    """SQL identifiers are case-insensitive: an MV grouping by "GRP"
+    reads column grp, so RENAME COLUMN refuses exactly as DROP COLUMN
+    does instead of breaking the MV's next refresh."""
+    lake = str(tmp_path / "lake")
+    cat = GovernedCatalog(spark, lake_root=lake)
+    cat.create_database("db")
+    cat.set_admins(["ops"])
+    loc = f"{lake}/docs"
+    df = spark.createDataFrame(
+        [(i, "ab"[i % 2], i * 10, i % 3) for i in range(12)],
+        "id long, grp string, v long, part int",
+    )
+    publish_overwrite(spark, loc, df, ["part"])
+    cat.register_table(
+        TableDef("db", "docs", loc, schema=df.schema, partition_keys=("part",))
+    )
+    eng = Engine(spark, cat)
+    eng.create_materialized_view(
+        "db.mv", "db.docs", ["GRP"], {"n": ("count", None)}, principal="ops"
+    )
+    with pytest.raises(ValueError, match="aggregates"):
+        eng.sql("ALTER TABLE db.docs RENAME COLUMN grp TO grp2", "ops")
+    with pytest.raises(ValueError, match="materialized view"):
+        eng.sql("ALTER TABLE db.docs DROP COLUMN grp", "ops")
+    assert cat.tables["db.docs"].schema.names == df.schema.names
+    eng.refresh_materialized_view("db.mv", principal="ops")
+
+
 def test_mv_fail_closed_interactions(spark, tmp_path):
     """Catalog objects cannot silently invalidate an MV: renaming an
     aggregated column refuses, dropping the source refuses, and

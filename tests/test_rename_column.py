@@ -365,6 +365,35 @@ def test_filter_rewrite_is_literal_safe(spark, tmp_path):
     assert flt.row_filter == "text = 'n_chars' OR char_count > 5"
 
 
+def test_rename_migrates_filter_columns_case_insensitively(spark, tmp_path):
+    """A data-cells filter allowlist naming "N_CHARS" covers column
+    n_chars, so the rename migrates it; left behind, it would name a
+    column the table no longer has."""
+    from tf_aws_lakeformation_governed_datalake_demo_spark import (
+        GovernedCatalog,
+        TableDef,
+    )
+    from tf_aws_lakeformation_governed_datalake_demo_spark.governance import (
+        DataCellsFilter,
+    )
+
+    path = str(tmp_path / "t")
+    publish_overwrite(spark, path, _seed(spark), ["lang"])
+    cat = GovernedCatalog(spark)
+    cat.create_database("db")
+    cat.register_table(
+        TableDef(
+            "db", "t", path, schema=_seed(spark).schema,
+            partition_keys=("lang",),
+        )
+    )
+    cat.create_data_cells_filter(
+        DataCellsFilter("f", "db", "t", columns=("DOC_ID", "N_CHARS"))
+    )
+    cat.rename_column("db.t", "n_chars", "char_count")
+    assert cat.filters["f"].columns == ("DOC_ID", "char_count")
+
+
 def test_wap_audit_fails_loudly_on_rename_race(spark, tmp_path):
     """Review fix: a rename committed between begin_publish and the
     audit read makes read_candidate raise instead of NULL-filling the

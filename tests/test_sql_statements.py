@@ -1328,6 +1328,22 @@ def test_inline_time_travel_governed(spark, tmp_path_factory):
         )
 
 
+def test_inline_timestamp_refusal_names_the_clause(spark, tmp_path):
+    """A malformed FOR TIMESTAMP AS OF instant is a grammar refusal that
+    names the clause, parsed by the same rule as VACUUM OLDER THAN
+    TIMESTAMP."""
+    from tf_aws_lakeformation_governed_datalake_demo_spark.catalog import (
+        GovernedCatalog,
+    )
+
+    eng = Engine(spark, GovernedCatalog(spark, lake_root=str(tmp_path)))
+    with pytest.raises(UnsupportedStatementError, match="FOR TIMESTAMP AS OF"):
+        eng.sql(
+            "SELECT count(*) FROM db.t FOR TIMESTAMP AS OF 'not-a-time'",
+            "ops",
+        )
+
+
 def test_parse_vacuum_age_forms():
     """Round-15 age-based retention grammar: OLDER THAN INTERVAL
     (relative, resolved at execution) and OLDER THAN TIMESTAMP

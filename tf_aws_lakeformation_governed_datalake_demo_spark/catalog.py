@@ -616,6 +616,37 @@ class GovernedCatalog:
             status="ok",
         )
 
+    def _column_references(self, qualified: str, col: str):
+        """Yield ``(object, how)`` for every view and materialized view
+        that names column ``col`` of ``qualified`` — the MV's source
+        columns and its enrich join included — matched case-insensitively,
+        as SQL identifiers are: a view written "SELECT LANG FROM
+        db.DOCS" is a working view. Rename and drop both refuse on the
+        first one."""
+        low = col.lower()
+        token = re.compile(rf"\b{re.escape(col)}\b", re.I)
+        name = re.compile(
+            rf"\b{re.escape(self.tables[qualified].name)}\b", re.I
+        )
+        for vq, v in sorted(self.views.items()):
+            if token.search(v.sql) and name.search(v.sql):
+                yield f"view {vq}", "references"
+        for mq, m in sorted(self.mvs.items()):
+            group = {g.lower() for g in m.group_by}
+            if m.source == qualified and (
+                low in group
+                or any(c is not None and c.lower() == low
+                       for _, c in m.measures.values())
+                or (m.where is not None and token.search(m.where))
+            ):
+                yield f"materialized view {mq}", "aggregates"
+            if m.enrich is not None and m.enrich["table"] == qualified and (
+                low in group
+                or low in {c.lower() for c in m.enrich["on"].values()}
+                or low in {c.lower() for c in m.enrich["select"] or ()}
+            ):
+                yield f"materialized view {mq}", "enriches through"
+
     def rename_column(self, qualified: str, old: str, new: str) -> None:
         """ALTER TABLE ... RENAME COLUMN with POLICY MIGRATION — the
         piece Glue/LF lacks (a Glue rename is drop+add: tags, comments,
@@ -657,42 +688,17 @@ class GovernedCatalog:
                 f"column {old!r} is a partition key of {qualified} — "
                 "evolve partitioning away from it first"
             )
-        # case-insensitive scan (SQL identifiers are): "SELECT AMOUNT"
-        # must block a rename of amount exactly like "SELECT amount"
+        # a view or MV naming the old column would brick at its next
+        # read or refresh (table_changes refuses across a rename
+        # boundary anyway) — refuse now, at the rename, with the cure
+        # named
+        for what, how in self._column_references(qualified, old):
+            raise ValueError(
+                f"{what} {how} {qualified}.{old} — drop or re-create it "
+                "under the new name first (fail-closed: rewriting view "
+                "SQL or an MV definition is not identity-preserving)"
+            )
         token = _re.compile(rf"\b{_re.escape(old)}\b", _re.I)
-        _name_token = _re.compile(rf"\b{_re.escape(table.name)}\b", _re.I)
-        for vq, v in sorted(self.views.items()):
-            if token.search(v.sql) and _name_token.search(v.sql):
-                raise ValueError(
-                    f"view {vq} references {qualified}.{old} — recreate "
-                    "the view under the new name first (fail-closed: "
-                    "rewriting arbitrary view SQL is not "
-                    "identity-preserving)"
-                )
-        # materialized views are FAIL-CLOSED the same way: a def whose
-        # group_by/measures name the old column would brick at the next
-        # refresh (table_changes refuses across a rename boundary
-        # anyway) — refuse now, at the rename, with the cure named
-        for mq, m in sorted(self.mvs.items()):
-            if m.source == qualified and (
-                old in m.group_by
-                or any(col == old for _, col in m.measures.values())
-                or (m.where is not None and token.search(m.where))
-            ):
-                raise ValueError(
-                    f"materialized view {mq} aggregates {qualified}.{old} "
-                    "— drop and re-create it under the new name first"
-                )
-            if m.enrich is not None and m.enrich["table"] == qualified and (
-                old in m.enrich["on"].values()
-                or old in (m.enrich["select"] or [])
-                or old in m.group_by
-            ):
-                raise ValueError(
-                    f"materialized view {mq} enriches through "
-                    f"{qualified}.{old} — drop and re-create it under "
-                    "the new name first"
-                )
         # storage first: the manifest commit has its own refusals
         # (tombstones, constraints, partition columns) and the catalog
         # must stay untouched when it raises
@@ -716,8 +722,10 @@ class GovernedCatalog:
             if (flt.database, flt.table) != (table.database, table.name):
                 continue
             cols = flt.columns
-            if cols and old in cols:
-                cols = tuple(new if c == old else c for c in cols)
+            if cols:
+                cols = tuple(
+                    new if c.lower() == old.lower() else c for c in cols
+                )
             rf = flt.row_filter
             if rf:
                 # literal-safe: the old column NAME appearing inside a
@@ -781,40 +789,12 @@ class GovernedCatalog:
                 f"column {col!r} is a partition key of {qualified} — "
                 "evolve partitioning away from it first"
             )
-        # case-insensitive throughout: SQL identifiers are — a view
-        # written "SELECT LANG FROM db.DOCS" is a working view and must
-        # still block the drop
+        for what, how in self._column_references(qualified, col):
+            raise ValueError(
+                f"{what} {how} {qualified}.{col} — drop or re-create it "
+                "first"
+            )
         token = _re.compile(rf"\b{_re.escape(col)}\b", _re.I)
-        name_token = _re.compile(rf"\b{_re.escape(table.name)}\b", _re.I)
-        for vq, v in sorted(self.views.items()):
-            if token.search(v.sql) and name_token.search(v.sql):
-                raise ValueError(
-                    f"view {vq} references {qualified}.{col} — drop or "
-                    "recreate the view first"
-                )
-        for mq, m in sorted(self.mvs.items()):
-            if m.source == qualified and (
-                col.lower() in {g.lower() for g in m.group_by}
-                or any(
-                    c is not None and c.lower() == col.lower()
-                    for _, c in m.measures.values()
-                )
-                or (m.where is not None and token.search(m.where))
-            ):
-                raise ValueError(
-                    f"materialized view {mq} references {qualified}."
-                    f"{col} — drop the MV first"
-                )
-            if m.enrich is not None and m.enrich["table"] == qualified and (
-                col.lower()
-                in {c.lower() for c in m.enrich["on"].values()}
-                or col.lower()
-                in {c.lower() for c in (m.enrich["select"] or [])}
-            ):
-                raise ValueError(
-                    f"materialized view {mq} enriches through "
-                    f"{qualified}.{col} — drop the MV first"
-                )
         for fname, flt in sorted(self.filters.items()):
             if (flt.database, flt.table) != (table.database, table.name):
                 continue

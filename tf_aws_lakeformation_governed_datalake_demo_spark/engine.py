@@ -427,15 +427,14 @@ class Engine:
         against the source (``mv_allow_stale=True`` explicitly accepts
         the stale state instead). AS OF maps disable the rewrite (the
         MV state carries no history of the source's versions)."""
-        from .statements import extract_as_of
+        from .statements import _parse_instant, extract_as_of
 
         clean_sql, inline = extract_as_of(sql)
         if inline:
             # inline Athena/Iceberg time-travel syntax: FOR VERSION AS
             # OF n / FOR TIMESTAMP AS OF '<ts>' — merged into the AS OF
             # maps (naming a table in both is the usual double-AS-OF
-            # error). Naive ISO timestamps are UTC; quoted epoch
-            # seconds are accepted.
+            # error)
             sql = clean_sql
             as_of_versions = dict(as_of_versions or {})
             as_of_timestamps = dict(as_of_timestamps or {})
@@ -454,16 +453,9 @@ class Engine:
                 if kind == "version":
                     as_of_versions[q] = val
                 else:
-                    from datetime import datetime, timezone
-
-                    try:
-                        ts = float(val)
-                    except ValueError:
-                        dt = datetime.fromisoformat(val)
-                        if dt.tzinfo is None:
-                            dt = dt.replace(tzinfo=timezone.utc)
-                        ts = dt.timestamp()
-                    as_of_timestamps[q] = ts
+                    as_of_timestamps[q] = _parse_instant(
+                        val, "FOR TIMESTAMP AS OF"
+                    )
         if as_of_timestamps or as_of_tags or as_of_branches:
             from .sources.lake import (
                 branch_head,

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from .. import fixtures as fx
 from ..engine import Engine
 from ..scratch import scratch_dir
-from .registry import query
+from .registry import _require, query
 
 # Weak keys: the cache entry dies with the SparkSession object, so a new
 # session allocated at a recycled id() can never alias a stale Engine
@@ -245,7 +245,7 @@ def governance_catalog_reload(spark: SparkSession, sf_dir: str) -> DataFrame:
     cat1.save()
     # -- process 2: load-from-disk, enforce ----------------------------
     cat2 = GovernedCatalog.load(spark, lake)
-    assert cat2.governance_fingerprint() == cat1.governance_fingerprint()
+    _require(cat2.governance_fingerprint() == cat1.governance_fingerprint())
     eng = Engine(spark, cat2)
     return eng.sql(
         "SELECT * FROM sales_db.sales ORDER BY customer_id",
@@ -394,7 +394,7 @@ def governance_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merge_into(spark, loc, upd, ["doc_id"], ["lang"], collect_stats=False)
     out = eng.refresh_materialized_view("db.docs_mv", principal="ops")
-    assert out["refreshed"], out
+    _require(out["refreshed"], out)
     return eng.sql(
         "SELECT lang, n_docs, total_chars FROM db.docs_mv", principal="ops"
     )

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load
-from .registry import query
+from .registry import _require, query
 
 K = 8
 N_ITER = 5
@@ -470,7 +470,7 @@ def pca_fit(v: DataFrame, k: int):
     import numpy as np
 
     parts = _reduced_partials(v)
-    assert len(parts) <= 1, "partials must reduce in Spark before collect"
+    _require(len(parts) <= 1, "partials must reduce in Spark before collect")
     if not parts:
         raise ValueError("pca_fit requires at least one row")
     n = parts[0].n

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..scratch import scratch_dir
 from ..sources import load
-from .registry import query
+from .registry import _require, query
 
 
 _TABLE_DIFF_ORACLE = """
@@ -261,7 +261,7 @@ def lake_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = table_changes(spark, path, 1, 2)
     # the O(delta) contract, enforced: only the touched partition's
     # files (old and new) ever enter the plan
-    assert all("lang=de/" in f for f in tc.inputFiles()), tc.inputFiles()
+    _require(all("lang=de/" in f for f in tc.inputFiles()), tc.inputFiles())
     return tc.select(
         "doc_id",
         F.col("_change_type").alias("change_type"),

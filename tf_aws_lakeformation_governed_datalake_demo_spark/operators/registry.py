@@ -34,6 +34,13 @@ class QuerySpec:
 REGISTRY: dict[str, QuerySpec] = {}
 
 
+def _require(cond, msg="invariant violated") -> None:
+    """A builder's self-check: raise instead of ``assert``, which
+    ``python -O`` strips."""
+    if not cond:
+        raise RuntimeError(msg)
+
+
 def query(
     name: str,
     oracle: str | None,

@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 
 from ..scratch import scratch_dir
 from ..sources import load, read_table, write_partitioned
-from .registry import query
+from .registry import _require, query
 
 
 @query(
@@ -780,7 +780,7 @@ def lake_delete_user_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = delete_rows(
         spark, path, "user_id % 8 = 3", partition_col="bucket"
     )
-    assert stats["partitions_rewritten"] == 1, stats
+    _require(stats["partitions_rewritten"] == 1, stats)
     return (
         read_table(spark, path)
         .groupBy(F.col("bucket").cast("long").alias("bucket"))
@@ -913,9 +913,8 @@ def lake_manifest_skip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, hi = 200, 300
     pruned = read_table(spark, path, d.schema, prune={"n_chars": (lo, hi)})
     n_all = len(read_table(spark, path, d.schema).inputFiles())
-    assert len(pruned.inputFiles()) < n_all, (
-        len(pruned.inputFiles()),
-        n_all,
+    _require(
+        len(pruned.inputFiles()) < n_all, (len(pruned.inputFiles()), n_all)
     )
     return (
         pruned.filter(F.col("n_chars").between(lo, hi))
@@ -1023,9 +1022,10 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         bo, bli["l_orderkey"] == bo["o_orderkey"]
     )
     plan = physical_plan(joined)
-    assert "SortMergeJoin" in plan, plan[:2000]
-    assert "Exchange" not in plan, (
-        "bucketed join should not shuffle:\n" + plan[:2000]
+    _require("SortMergeJoin" in plan, plan[:2000])
+    _require(
+        "Exchange" not in plan,
+        "bucketed join should not shuffle:\n" + plan[:2000],
     )
     return joined.groupBy(F.col("o_orderpriority").alias("priority")).agg(
         F.count(F.lit(1)).alias("n_items"),
@@ -1090,7 +1090,7 @@ def lake_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = read_table(spark, path, e.schema, prune={"user_id": uid})
     n_all = len(read_table(spark, path, e.schema).inputFiles())
     n_pruned = len(pruned.inputFiles())
-    assert n_pruned < n_all, (n_pruned, n_all)
+    _require(n_pruned < n_all, (n_pruned, n_all))
     return (
         pruned.filter(F.col("user_id") == uid)
         .groupBy("event_type")
@@ -1156,7 +1156,7 @@ def lake_rollback_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema=d.schema, collect_stats=False,
     )
     out = rollback_table(path, 1)
-    assert out["rolled_back_to"] == 1 and out["new_version"] == 3, out
+    _require(out["rolled_back_to"] == 1 and out["new_version"] == 3, out)
 
     def profile(df: DataFrame, tag: str) -> DataFrame:
         return df.groupBy("lang").agg(
@@ -1229,8 +1229,8 @@ def lake_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete_rows_mor(spark, path, "n_chars < 200", count=False)
     delete_rows_mor(spark, path, "nullif(lang, 'en') = 'de'", count=False)
     after = read_manifest(path)
-    assert after["files"] == before["files"], "tombstone commit moved data"
-    assert len(after["delete_predicates"]) == 2, after
+    _require(after["files"] == before["files"], "tombstone commit moved data")
+    _require(len(after["delete_predicates"]) == 2, after)
     batch = d.filter(F.col("n_chars") < 180).withColumn(
         "doc_id", F.col("doc_id") + 10_000_000
     )
@@ -1311,8 +1311,8 @@ def lake_mor_purge_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("cdf_delete").alias("stage"), "*")
     )
     stats = purge_deleted_rows(spark, path)
-    assert stats["tombstones_cleared"] == 2, stats
-    assert not read_manifest(path).get("delete_predicates")
+    _require(stats["tombstones_cleared"] == 2, stats)
+    _require(not read_manifest(path).get("delete_predicates"))
     post = (
         read_table(spark, path)
         .groupBy("lang")
@@ -1392,17 +1392,18 @@ def lake_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     violations = (
         read_candidate(spark, path, cand).filter(F.col("n_chars") < 0).count()
     )
-    assert violations > 0, "audit should catch the corrupt batch"
+    _require(violations > 0, "audit should catch the corrupt batch")
     abort_publish(path, cand)
-    assert read_manifest(path)["version"] == v1, "abort must not commit"
+    _require(read_manifest(path)["version"] == v1, "abort must not commit")
     after_abort = profile(read_table(spark, path), "after_abort")
 
     good = d.withColumn("n_chars", F.col("n_chars") + 10)
     cand2 = begin_publish(spark, path, good, ["lang"])
-    assert (
+    _require(
         read_candidate(spark, path, cand2).filter(F.col("n_chars") < 0).count()
-        == 0
-    ), "good batch must audit clean"
+        == 0,
+        "good batch must audit clean",
+    )
     commit_publish(path, cand2)
     after_commit = profile(read_table(spark, path), "after_commit")
     return after_abort.unionByName(after_commit)
@@ -1463,7 +1464,7 @@ def lake_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError("violating batch must be refused")
     except ConstraintViolationError:
         pass
-    assert read_manifest(path) == m_before, "refused batch left a commit"
+    _require(read_manifest(path) == m_before, "refused batch left a commit")
     good = (
         d.filter(F.col("n_chars") >= 300)
         .withColumn("doc_id", F.col("doc_id") + 10_000_000)
@@ -1520,7 +1521,7 @@ def lake_optimize_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     band = {"n_chars": (200, 300)}
     files_before = len(read_table(spark, path, prune=band).inputFiles())
     n_total = len(read_manifest(path)["files"])
-    assert files_before == n_total, (files_before, n_total)
+    _require(files_before == n_total, (files_before, n_total))
     total_bytes = sum(
         (Path(path) / f).stat().st_size for f in read_manifest(path)["files"]
     )
@@ -1532,8 +1533,8 @@ def lake_optimize_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pruned = read_table(spark, path, prune=band)
     files_after = len(pruned.inputFiles())
-    assert files_after < n_total, (files_after, n_total)
-    assert read_table(spark, path, version=1).count() == d.count()
+    _require(files_after < n_total, (files_after, n_total))
+    _require(read_table(spark, path, version=1).count() == d.count())
     return (
         pruned.filter(F.col("n_chars").between(200, 300))
         .groupBy("lang")
@@ -1588,7 +1589,7 @@ def lake_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, d.filter(F.col("doc_id") % 5 == 0), ["source"]
     )
     m = read_manifest(path)
-    assert sorted(m["partition_specs"].values()) == [["lang"], ["source"]]
+    _require(sorted(m["partition_specs"].values()) == [["lang"], ["source"]])
     return (
         read_table(spark, path)
         .groupBy("lang", "source")
@@ -1638,7 +1639,7 @@ def lake_count_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     append_rows(spark, path, d.filter(F.col("doc_id") % 3 == 0), ["lang"])
     meta = count_rows(path)
-    assert meta is not None and meta["partition_by"] == ["lang"]
+    _require(meta is not None and meta["partition_by"] == ["lang"])
     rows = [
         (dirname.split("=", 1)[1], int(n))
         for dirname, n in sorted(meta["partitions"].items())
@@ -1687,7 +1688,9 @@ def lake_rename_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_chars", "char_count"
     )
     append_rows(spark, path, batch, ["lang"])
-    assert read_manifest(path)["column_mapping"] == {"char_count": "n_chars"}
+    _require(
+        read_manifest(path)["column_mapping"] == {"char_count": "n_chars"}
+    )
     return (
         read_table(spark, path)
         .groupBy("lang")
@@ -1844,10 +1847,10 @@ def lake_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_rows(spark, path, b1, ["lang"], branch="backfill")
     append_rows(spark, path, b2, ["lang"], branch="backfill")
     # main is still the seed while the branch carries both commits
-    assert read_manifest(path)["version"] == 1
+    _require(read_manifest(path)["version"] == 1)
     before = read_table(spark, path, version=1)
     fast_forward(path, "backfill")
-    assert read_manifest(path)["version"] > 1
+    _require(read_manifest(path)["version"] > 1)
 
     def profile(df: DataFrame, snap: str) -> DataFrame:
         return df.groupBy("lang").agg(
@@ -1903,11 +1906,12 @@ def lake_optimize_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     append_rows(spark, path, d.filter(F.col("doc_id") % 5 == 4), ["lang"])
     before = read_manifest(path)
     out = optimize_binpack(spark, path, target_rows=1_000_000)
-    assert out["files_after"] < out["files_before"], out
-    assert out["files_rewritten"] == out["files_before"], out  # all small
+    _require(out["files_after"] < out["files_before"], out)
+    _require(out["files_rewritten"] == out["files_before"], out)  # all small
     # the pre-OPTIMIZE snapshot is ordinary retained history
-    assert read_table(spark, path, version=before["version"]).count() == (
-        read_table(spark, path).count()
+    _require(
+        read_table(spark, path, version=before["version"]).count()
+        == read_table(spark, path).count()
     )
     return (
         read_table(spark, path)

@@ -26,14 +26,7 @@ from ..engine import Engine
 from ..scratch import scratch_dir
 from ..sources import load, publish_overwrite
 from .governed import _SALES_CTE
-from .registry import query
-
-
-def _require(cond, msg="invariant violated") -> None:
-    """A builder's self-check: raise instead of ``assert``, which
-    ``python -O`` strips."""
-    if not cond:
-        raise RuntimeError(msg)
+from .registry import _require, query
 
 
 def _governed_docs(

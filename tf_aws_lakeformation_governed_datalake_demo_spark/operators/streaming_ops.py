@@ -16,7 +16,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming import events as se
-from .registry import query
+from .registry import _require, query
 
 _COUNTER = itertools.count()
 
@@ -897,9 +897,12 @@ def stream_lake_append_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, e.filter(F.col("event_id") % 4 == 0),
         partition_by=["event_type"], stream_id="ingest", batch_id=0,
     )
-    assert replay is None, "replayed batch was committed twice"
+    _require(replay is None, "replayed batch was committed twice")
     snap = read_manifest(path)
-    assert snap["version"] == 4 and snap["app_versions"]["ingest"] == 3, snap
+    _require(
+        snap["version"] == 4 and snap["app_versions"]["ingest"] == 3,
+        snap,
+    )
 
     return (
         read_table(spark, path, schema=e.schema)
@@ -1062,10 +1065,10 @@ def stream_branch_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint=f"{base}/ckpt", branch="ingest",
     )
     # main is still the seed; the branch ledger holds the high-water mark
-    assert read_manifest(path)["version"] == 1
+    _require(read_manifest(path)["version"] == 1)
     before = read_table(spark, path, schema=e.schema, version=1)
     snap = fast_forward(path, "ingest")
-    assert snap["app_versions"]["staged"] == 2, snap
+    _require(snap["app_versions"]["staged"] == 2, snap)
 
     def profile(df: DataFrame, snap_name: str) -> DataFrame:
         return df.groupBy("event_type").agg(
@@ -1168,11 +1171,11 @@ def stream_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_id="mv_ingest",
         batch_id=0,
     )
-    assert replay is None, "replayed batch was committed twice"
+    _require(replay is None, "replayed batch was committed twice")
     r = eng.refresh_materialized_view("db.docs_mv", principal="ops")
-    assert not r["refreshed"], r
+    _require(not r["refreshed"], r)
     snap = read_manifest(loc)
-    assert snap["app_versions"]["mv_ingest"] == 2, snap
+    _require(snap["app_versions"]["mv_ingest"] == 2, snap)
 
     return eng.sql(
         "SELECT lang, n_docs, total_chars FROM db.docs_mv", "ops"
@@ -1265,9 +1268,9 @@ def stream_txlog_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nothing, the transaction is a no-op cut, table versions hold
     v_before = read_manifest(f"{base}/facts")["version"]
     sink(e.filter(F.col("event_id") % 3 == 0), 0)
-    assert read_manifest(f"{base}/facts")["version"] == v_before
+    _require(read_manifest(f"{base}/facts")["version"] == v_before)
     rec = txlog_current(base)
-    assert rec is not None and rec["seq"] == 4, rec  # 3 batches + no-op
+    _require(rec is not None and rec["seq"] == 4, rec)  # 3 batches + no-op
 
     facts = (
         eng.table_txn("db.facts", "ops")
@@ -1385,9 +1388,12 @@ def stream_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(F.col("lang") == targets[0]), ["lang"],
         stream_id="reproc", batch_id=0,
     )
-    assert replay is None, "replayed epoch was committed twice"
+    _require(replay is None, "replayed epoch was committed twice")
     snap = read_manifest(path)
-    assert snap["version"] == 4 and snap["app_versions"]["reproc"] == 2, snap
+    _require(
+        snap["version"] == 4 and snap["app_versions"]["reproc"] == 2,
+        snap,
+    )
 
     return (
         read_table(spark, path, schema=d.schema)

@@ -31,10 +31,11 @@ def assert_pushed_filter(df: DataFrame, column: str) -> None:
     """The filter on `column` must reach the parquet reader."""
     plan = physical_plan(df)
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
-    assert m and column in m.group(1), (
-        f"no pushed filter on {column!r}; PushedFilters="
-        f"{m.group(1) if m else '<absent>'}"
-    )
+    if not (m and column in m.group(1)):
+        raise AssertionError(
+            f"no pushed filter on {column!r}; PushedFilters="
+            f"{m.group(1) if m else '<absent>'}"
+        )
 
 
 def assert_read_schema_pruned(df: DataFrame, max_columns: int) -> None:
@@ -42,23 +43,24 @@ def assert_read_schema_pruned(df: DataFrame, max_columns: int) -> None:
     plan = physical_plan(df)
     for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan):
         ncols = len([c for c in m.group(1).split(",") if ":" in c])
-        assert ncols <= max_columns, (
-            f"scan reads {ncols} columns (> {max_columns}): {m.group(1)}"
-        )
+        if ncols > max_columns:
+            raise AssertionError(
+                f"scan reads {ncols} columns (> {max_columns}): {m.group(1)}"
+            )
 
 
 def assert_broadcast_join(df: DataFrame) -> None:
     """At least one join must be broadcast (no shuffle of the big side)."""
     plan = physical_plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, (
-        "expected a broadcast join in:\n" + plan[:2000]
-    )
+    if not ("BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan):
+        raise AssertionError("expected a broadcast join in:\n" + plan[:2000])
 
 
 def assert_top_k(df: DataFrame) -> None:
     """ORDER BY + LIMIT must plan as TakeOrderedAndProject (heap top-k),
     never a global sort materialization."""
     plan = physical_plan(df)
-    assert "TakeOrderedAndProject" in plan, (
-        "expected TakeOrderedAndProject in:\n" + plan[:2000]
-    )
+    if "TakeOrderedAndProject" not in plan:
+        raise AssertionError(
+            "expected TakeOrderedAndProject in:\n" + plan[:2000]
+        )

@@ -13,13 +13,16 @@ run here unchanged.
 
 Design decisions:
 
-- **Restricted grammar, loud failures.** Each verb accepts exactly the
+- **One grammar table, loud failures.** ``_GRAMMAR`` maps each verb to
+  its forms: the form text shown to users, one pattern, and a builder
+  that returns the statement dataclass. Each form accepts exactly the
   shape the governed implementation supports (e.g. MERGE requires
   ``WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` —
   replace-by-key, which is :func:`sources.lake.merge_into`'s
   semantics). Anything else raises :class:`UnsupportedStatementError`
-  naming the supported form. A statement the engine half-understands
-  must never silently execute something else.
+  listing the verb's form texts from the same table, so a refusal
+  never drifts from what the parser accepts. A statement the engine
+  half-understands must never silently execute something else.
 - **Parse only; no execution here.** The module returns frozen
   statement dataclasses; ``Engine._run_statement`` owns dispatch, so
   every gate/audit stays in one place (the engine).
@@ -38,7 +41,9 @@ string never splits a clause); comments are blanked before parsing.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
+from datetime import datetime, timezone
+from typing import Callable, NamedTuple
 
 
 class UnsupportedStatementError(ValueError):
@@ -638,21 +643,8 @@ Statement = (
 
 
 # ------------------------------------------------------------- parsers
-def _parse_merge(text: str) -> MergeStatement:
-    grammar = (
-        "MERGE INTO <db.table> [AS <t>] USING (<select>) [AS <s>] "
-        "ON <t.col = s.col [AND ...]> "
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-    )
-    m = re.match(
-        rf"merge\s+into\s+({_QUALIFIED})\s*(?:as\s+)?({_IDENT})?\s*using\s*",
-        text,
-        re.I,
-    )
-    if not m:
-        raise UnsupportedStatementError(f"supported MERGE form: {grammar}")
-    target, t_alias = m.group(1), m.group(2)
-    rest = text[m.end() :].lstrip()
+def _parse_merge(m: re.Match) -> MergeStatement:
+    target, t_alias, rest = m["target"], m["alias"], m["rest"]
     if rest.startswith("("):
         end = _balanced_paren_span(rest, 0)
         source_sql = rest[1 : end - 1].strip()
@@ -660,19 +652,17 @@ def _parse_merge(text: str) -> MergeStatement:
     else:
         ms = re.match(rf"({_QUALIFIED})", rest)
         if not ms:
-            raise UnsupportedStatementError(f"supported MERGE form: {grammar}")
+            raise _refusal("merge")
         source_sql = f"SELECT * FROM {ms.group(1)}"
         rest = rest[ms.end() :].lstrip()
     ma = re.match(rf"(?:as\s+)?({_IDENT})\s+on\s+", rest, re.I)
     if not ma:
-        raise UnsupportedStatementError(
-            f"MERGE source needs an alias before ON; supported form: {grammar}"
-        )
+        raise _refusal("merge", "MERGE source needs an alias before ON")
     s_alias = ma.group(1)
     rest = rest[ma.end() :]
     when_at = _find_keyword(rest, "when")
     if when_at < 0:
-        raise UnsupportedStatementError(f"supported MERGE form: {grammar}")
+        raise _refusal("merge")
     cond, clauses = rest[:when_at].strip(), rest[when_at:].strip()
     if not re.fullmatch(
         r"when\s+matched\s+then\s+update\s+set\s*\*\s*"
@@ -716,15 +706,8 @@ def _parse_merge(text: str) -> MergeStatement:
     return MergeStatement(target, source_sql, tuple(keys))
 
 
-def _parse_update(text: str) -> UpdateStatement:
-    m = re.match(rf"update\s+({_QUALIFIED})\s+set\s+", text, re.I)
-    if not m:
-        raise UnsupportedStatementError(
-            "supported UPDATE form: UPDATE <db.table> SET col = expr"
-            "[, ...] WHERE <predicate>"
-        )
-    target = m.group(1)
-    rest = text[m.end() :]
+def _parse_update(m: re.Match) -> UpdateStatement:
+    target, rest = m["target"], m["rest"]
     where_at = _find_keyword(rest, "where")
     if where_at < 0:
         raise UnsupportedStatementError(
@@ -748,51 +731,34 @@ def _parse_update(text: str) -> UpdateStatement:
     return UpdateStatement(target, tuple(assignments), predicate)
 
 
-def _parse_create_mv(text: str) -> CreateMVStatement:
-    grammar = (
-        "CREATE MATERIALIZED VIEW <db.mv> AS SELECT <group cols>, "
-        "count(*) AS a [, sum(col) AS b, avg(col) AS c, "
-        "approx_count_distinct(col) AS d ...] "
-        "FROM <db.table> [WHERE <predicate>] GROUP BY <group cols>"
-    )
-    m = re.match(
-        rf"create\s+materialized\s+view\s+({_QUALIFIED})\s+as\s+select\s+",
-        text,
-        re.I,
-    )
-    if not m:
-        raise UnsupportedStatementError(f"supported form: {grammar}")
-    mv = m.group(1)
-    rest = text[m.end() :]
+def _parse_create_mv(m: re.Match) -> CreateMVStatement:
+    mv, rest = m["mv"], m["rest"]
     from_at = _find_keyword(rest, "from")
     if from_at < 0:
-        raise UnsupportedStatementError(f"supported form: {grammar}")
+        raise _refusal("create")
     select_list = rest[:from_at]
     rest = rest[from_at + 4 :].strip()
     mf = re.match(rf"({_QUALIFIED})\s+", rest)
     if not mf:
-        raise UnsupportedStatementError(
-            f"MV source must be one table with GROUP BY; supported form: "
-            f"{grammar}"
-        )
+        raise _refusal("create", "MV source must be one table with GROUP BY")
     source = mf.group(1)
     tail = rest[mf.end() :]
     gb_at = _find_keyword(tail, "group")
     if gb_at < 0:
-        raise UnsupportedStatementError(
-            f"MV needs GROUP BY; supported form: {grammar}"
-        )
+        raise _refusal("create", "MV needs GROUP BY")
     where_clause = None
     head_part = tail[:gb_at].strip()
     if head_part:
         mw = re.match(r"where\s+(.+)$", head_part, re.I | re.S)
         if not mw:
-            raise UnsupportedStatementError(
-                f"unrecognized clause {head_part!r} between FROM and "
-                f"GROUP BY; supported form: {grammar}"
+            raise _refusal(
+                "create",
+                f"unrecognized clause {head_part!r} between FROM and GROUP BY",
             )
         where_clause = mw.group(1).strip()
     mg = re.match(r"group\s+by\s+(.+)$", tail[gb_at:], re.I | re.S)
+    if not mg:
+        raise _refusal("create", "MV needs GROUP BY <cols>")
     group_by = tuple(
         g.strip() for g in _split_top(mg.group(1)) if g.strip()
     )
@@ -896,27 +862,14 @@ def _partition_prop(pby) -> tuple:
     return pby
 
 
-def _parse_ctas(text: str) -> CtasStatement:
-    grammar = (
-        "CREATE TABLE <db.table> WITH (external_location = '<path>'"
-        "[, format = 'PARQUET', partitioned_by = ARRAY['col', ...]]) "
-        "AS <select>"
-    )
-    m = re.match(
-        rf"create\s+table\s+({_QUALIFIED})\s+with\s*", text, re.I
-    )
-    if not m:
-        raise UnsupportedStatementError(f"supported CTAS form: {grammar}")
-    target = m.group(1)
-    rest = text[m.end() :].lstrip()
-    if not rest.startswith("("):
-        raise UnsupportedStatementError(f"supported CTAS form: {grammar}")
+def _parse_ctas(m: re.Match) -> CtasStatement:
+    target, rest = m["target"], m["rest"]
     end = _balanced_paren_span(rest, 0)
     props = _parse_props(rest[1 : end - 1])
     rest = rest[end:].strip()
     ma = re.match(r"as\s+(.+)$", rest, re.I | re.S)
     if not ma:
-        raise UnsupportedStatementError(f"supported CTAS form: {grammar}")
+        raise _refusal("create")
     location = props.pop("external_location", None)
     if not location:
         raise UnsupportedStatementError(
@@ -993,48 +946,23 @@ def _parse_column_list(body: str, context: str) -> list[tuple]:
     return cols
 
 
-def _parse_create_table(text: str) -> CreateTableStatement:
+def _parse_create_table(m: re.Match) -> CreateTableStatement:
     """Column-list CREATE [EXTERNAL] TABLE (the reference's own table
     DDL — main.tf:303-372 declares exactly this object; README.md's
-    Athena flow pastes it). The caller has already established the
-    statement is NOT a CTAS/CLONE (no WITH props, no AS select)."""
-    grammar = (
-        "CREATE [EXTERNAL] TABLE [IF NOT EXISTS] <db.table> "
-        "(col type [COMMENT '<text>'], ...) "
-        "[PARTITIONED BY (col type, ...)] [STORED AS PARQUET] "
-        "LOCATION '<path>'"
-    )
-    m = re.match(
-        rf"create\s+(?:external\s+)?table\s+(if\s+not\s+exists\s+)?"
-        rf"({_QUALIFIED})\s*",
-        text,
-        re.I,
-    )
-    if not m:
-        raise UnsupportedStatementError(f"supported form: {grammar}")
-    if_not_exists = bool(m.group(1))
-    target = m.group(2)
-    rest = text[m.end() :].lstrip()
-    if not rest.startswith("("):
-        raise UnsupportedStatementError(f"supported form: {grammar}")
-    end = _balanced_paren_span(rest, 0)
-    cols = _parse_column_list(rest[1 : end - 1], "CREATE TABLE column")
-    tail = rest[end:].strip()
+    Athena flow pastes it)."""
+    body, tail = _paren_body(m["rest"], "CREATE TABLE", trailing=True)
+    cols = _parse_column_list(body, "CREATE TABLE column")
     pby: list[tuple] = []
     mp = re.match(r"partitioned\s+by\s*", tail, re.I)
     if mp:
-        prest = tail[mp.end() :]
-        if not prest.startswith("("):
-            raise UnsupportedStatementError(f"supported form: {grammar}")
-        pend = _balanced_paren_span(prest, 0)
         # hive-style: partition columns are declared OUTSIDE the data
         # column list, with types (main.tf would put sales_region here
         # if the reference partitioned); comments allowed, same item
         # grammar
-        pby = _parse_column_list(
-            prest[1 : pend - 1], "PARTITIONED BY"
+        body, tail = _paren_body(
+            tail[mp.end() :], "PARTITIONED BY", trailing=True
         )
-        tail = prest[pend:].strip()
+        pby = _parse_column_list(body, "PARTITIONED BY")
     ms = re.match(r"stored\s+as\s+(\w+)\s*", tail, re.I)
     if ms:
         if ms.group(1).lower() != "parquet":
@@ -1046,9 +974,10 @@ def _parse_create_table(text: str) -> CreateTableStatement:
         tail = tail[ms.end() :].strip()
     ml = re.fullmatch(r"location\s+'([^']+)'", tail, re.I)
     if not ml:
-        raise UnsupportedStatementError(
-            f"CREATE TABLE requires a LOCATION '<path>' tail (external "
-            f"schema-on-read tables only); supported form: {grammar}"
+        raise _refusal(
+            "create",
+            "CREATE TABLE requires a LOCATION '<path>' tail (external "
+            "schema-on-read tables only)",
         )
     names = [c[0].lower() for c in cols] + [p[0].lower() for p in pby]
     if len(set(names)) != len(names):
@@ -1056,11 +985,11 @@ def _parse_create_table(text: str) -> CreateTableStatement:
             "duplicate column name in CREATE TABLE"
         )
     return CreateTableStatement(
-        target,
+        m["target"],
         tuple(cols),
         ml.group(1),
         tuple(pby),
-        if_not_exists,
+        m["if_not_exists"] is not None,
     )
 
 
@@ -1412,8 +1341,9 @@ def _require_query(body: str, context: str) -> str:
     return body
 
 
-def _parse_literal(text: str):
-    """One EXECUTE ... USING parameter: a SQL literal only — numbers,
+def _parse_literal(text: str, what: str = "EXECUTE parameter"):
+    """One EXECUTE ... USING parameter or PARTITION value (``what``
+    names it in the refusal): a SQL literal only — numbers,
     '...'-quoted strings ('' escapes), TRUE/FALSE/NULL. Expressions are
     refused: parameters are VALUES, and keeping them values is what
     makes the prepared-statement surface injection-proof (the filled
@@ -1432,67 +1362,69 @@ def _parse_literal(text: str):
     if re.fullmatch(r"[+-]?(\d+\.\d*|\.\d+|\d+)(e[+-]?\d+)?", t, re.I):
         return float(t)
     raise UnsupportedStatementError(
-        f"EXECUTE parameter {t!r} is not a literal (number, 'string', "
+        f"{what} {t!r} is not a literal (number, 'string', "
         "TRUE/FALSE, NULL)"
     )
 
 
-def _parse_insert(text: str) -> InsertStatement:
-    grammar = (
-        "INSERT INTO <db.table> [(col, ...)] <select | VALUES (...), ...> "
-        "| INSERT OVERWRITE [TABLE] <db.table> <select | VALUES ...>"
-    )
-    m = re.match(
-        rf"insert\s+overwrite\s+(?:table\s+)?({_QUALIFIED})\s*", text, re.I
-    )
-    if m:
-        # dynamic-partition overwrite: whole rows only — a column list
-        # would imply NULL-filling unnamed columns into REPLACED
-        # partitions, which is almost never what an overwrite means
-        rest = text[m.end() :].lstrip()
-        static: tuple = ()
-        mp = re.match(r"partition\s*", rest, re.I)
-        if mp:
-            # static-partition form (hive/Athena): PARTITION
-            # (col='val', ...) — literals only, the select supplies
-            # the remaining columns
-            prest = rest[mp.end() :]
-            if not prest.startswith("("):
-                raise UnsupportedStatementError(
-                    "PARTITION takes a parenthesized (col = <literal>, "
-                    "...) spec"
-                )
-            pend = _balanced_paren_span(prest, 0)
-            items = []
-            for it in _split_top(prest[1 : pend - 1]):
-                ms = re.fullmatch(
-                    rf"({_IDENT})\s*=\s*(.+)", it.strip(), re.S
-                )
-                if not ms:
-                    raise UnsupportedStatementError(
-                        f"PARTITION item {it!r} is not col = <literal>"
-                    )
-                items.append(
-                    (ms.group(1), _parse_literal(ms.group(2).strip()))
-                )
-            if not items:
-                raise UnsupportedStatementError("empty PARTITION spec")
-            names = [c.lower() for c, _v in items]
-            if len(set(names)) != len(names):
-                raise UnsupportedStatementError(
-                    "duplicate column in PARTITION spec"
-                )
-            static = tuple(items)
-            rest = prest[pend:].lstrip()
-        body = _require_query(rest, "the INSERT source")
-        return InsertStatement(
-            m.group(1), (), body, overwrite=True, static_partition=static
+def _paren_body(rest: str, form: str, trailing: bool = False):
+    """``rest`` must open with a balanced, non-empty ``(...)``: return
+    ``(body, text after the ')')``, both stripped. Text after the span
+    refuses unless the form continues (``trailing``)."""
+    if not rest.startswith("("):
+        raise UnsupportedStatementError(
+            f"{form} must be followed by a parenthesized (...) list"
         )
-    m = re.match(rf"insert\s+into\s+({_QUALIFIED})\s*", text, re.I)
-    if not m:
-        raise UnsupportedStatementError(f"supported INSERT form: {grammar}")
-    target = m.group(1)
-    rest = text[m.end() :].lstrip()
+    end = _balanced_paren_span(rest, 0)
+    body, after = rest[1 : end - 1].strip(), rest[end:].strip()
+    if after and not trailing:
+        raise UnsupportedStatementError(
+            f"unexpected trailing text after {form} (...)"
+        )
+    if not body:
+        raise UnsupportedStatementError(f"empty {form} (...)")
+    return body, after
+
+
+def _partition_spec(inner: str) -> tuple:
+    """The ``col = <literal>, ...`` items of a PARTITION (...) spec —
+    one grammar for the static INSERT OVERWRITE and DROP PARTITION."""
+    items = []
+    for it in _split_top(inner):
+        ms = re.fullmatch(rf"({_IDENT})\s*=\s*(.+)", it, re.S)
+        if not ms:
+            raise UnsupportedStatementError(
+                f"PARTITION item {it!r} is not col = <literal>"
+            )
+        items.append(
+            (ms.group(1), _parse_literal(ms.group(2), "PARTITION value"))
+        )
+    names = [c.lower() for c, _v in items]
+    if len(set(names)) != len(names):
+        raise UnsupportedStatementError("duplicate column in PARTITION spec")
+    return tuple(items)
+
+
+def _parse_insert_overwrite(m: re.Match) -> InsertStatement:
+    # dynamic-partition overwrite: whole rows only — a column list
+    # would imply NULL-filling unnamed columns into REPLACED
+    # partitions, which is almost never what an overwrite means
+    rest = m["rest"]
+    static: tuple = ()
+    mp = re.match(r"partition\s*", rest, re.I)
+    if mp:
+        # static-partition form (hive/Athena): PARTITION (col='val',
+        # ...) — literals only, the select supplies the remaining columns
+        spec, rest = _paren_body(rest[mp.end() :], "PARTITION", trailing=True)
+        static = _partition_spec(spec)
+    body = _require_query(rest, "the INSERT source")
+    return InsertStatement(
+        m["target"], (), body, overwrite=True, static_partition=static
+    )
+
+
+def _parse_insert(m: re.Match) -> InsertStatement:
+    rest = m["rest"]
     columns: tuple = ()
     if rest.startswith("("):
         # a leading paren is EITHER a column list or a parenthesized
@@ -1509,7 +1441,7 @@ def _parse_insert(text: str) -> InsertStatement:
                 )
             rest = rest[end:].lstrip()
     body = _require_query(rest, "the INSERT source")
-    return InsertStatement(target, columns, body)
+    return InsertStatement(m["target"], columns, body)
 
 
 _AS_OF_CLAUSE = re.compile(
@@ -1586,13 +1518,594 @@ def split_statements(script: str) -> list[str]:
     return [p.strip() for p in parts if p.strip()]
 
 
+# ------------------------------------------------------------- grammar
+def _parse_instant(raw: str, clause: str) -> float:
+    """Epoch seconds from a quoted instant: epoch seconds, or an ISO
+    datetime (naive means UTC)."""
+    try:
+        return float(raw)
+    except ValueError:
+        pass
+    try:
+        dt = datetime.fromisoformat(raw)
+    except ValueError as exc:
+        raise UnsupportedStatementError(
+            f"{clause} takes an ISO datetime or epoch seconds (got {raw!r})"
+        ) from exc
+    if dt.tzinfo is None:
+        dt = dt.replace(tzinfo=timezone.utc)
+    return dt.timestamp()
+
+
+def _fields(cls, **convert) -> Callable:
+    """Builder for a form whose named groups are ``cls``'s fields. A
+    flag field (default ``False``) is set when its group matched;
+    ``convert[name]`` maps a matched group's text."""
+    flags = {f.name for f in fields(cls) if f.default is False}
+
+    def build(m: re.Match):
+        kw = {}
+        for name, val in m.groupdict().items():
+            if name in flags:
+                val = val is not None
+            elif val is not None and name in convert:
+                val = convert[name](val)
+            kw[name] = val
+        return cls(**kw)
+
+    return build
+
+
+def _explain(m: re.Match) -> ExplainStatement:
+    # Athena returns the plan as result rows; the plan shown is of the
+    # REWRITTEN query (engine.explain), so a principal sees exactly
+    # what their governed scan reads
+    head = re.match(r"[A-Za-z]+", m["query_sql"])
+    if not head or head.group(0).lower() not in _QUERY_VERBS:
+        raise UnsupportedStatementError(
+            "EXPLAIN supports queries only (SELECT/WITH/VALUES); "
+            "statements execute through their own audited verbs"
+        )
+    return ExplainStatement(m["query_sql"], (m["mode"] or "formatted").lower())
+
+
+def _add_constraint(m: re.Match) -> AddConstraintStatement:
+    expr, _ = _paren_body(m["rest"], "CHECK")
+    return AddConstraintStatement(m["target"], m["name"], expr)
+
+
+def _drop_partition(m: re.Match) -> DropPartitionStatement:
+    spec, _ = _paren_body(m["rest"], "PARTITION")
+    return DropPartitionStatement(
+        m["target"], _partition_spec(spec), m["if_exists"] is not None
+    )
+
+
+def _add_columns(m: re.Match) -> AddColumnsStatement:
+    # the Athena/Glue schema-evolution verb — routes to the catalog's
+    # fail-closed evolution (new columns land PENDING)
+    body, _ = _paren_body(m["rest"], "ADD COLUMNS")
+    cols = _parse_column_list(body, "ADD COLUMNS")
+    names = [c[0].lower() for c in cols]
+    if len(set(names)) != len(names):
+        raise UnsupportedStatementError("duplicate column in ADD COLUMNS")
+    return AddColumnsStatement(m["target"], tuple(cols))
+
+
+def _optimize_cluster(m: re.Match) -> OptimizeStatement:
+    cols = tuple(c.strip() for c in m["cluster_by"].split(","))
+    if not all(re.fullmatch(_IDENT, c) for c in cols):
+        raise UnsupportedStatementError("CLUSTER BY takes plain column names")
+    return OptimizeStatement(m["target"], "cluster", cols)
+
+
+_SECONDS = {
+    "second": 1.0,
+    "minute": 60.0,
+    "hour": 3600.0,
+    "day": 86400.0,
+    "week": 604800.0,
+}
+
+
+def _vacuum(m: re.Match) -> VacuumStatement:
+    if m["keep"] is None and m["interval"] is None and m["instant"] is None:
+        # a bare VACUUM would default to keep_last=1 and silently
+        # expire ALL time-travel history in one statement; the most
+        # destructive setting must be asked for explicitly — the same
+        # fail-closed posture as UPDATE's mandatory WHERE. OLDER THAN
+        # alone is an equally explicit scope: it keeps the head
+        # snapshot plus everything at-or-after the horizon.
+        raise UnsupportedStatementError(
+            "VACUUM requires an explicit retention scope: RETAIN "
+            "<n> SNAPSHOTS and/or OLDER THAN <interval/timestamp> "
+            "(destructive retention must be asked for)"
+        )
+    keep = int(m["keep"]) if m["keep"] is not None else 1
+    if keep < 1:
+        raise UnsupportedStatementError(
+            "VACUUM RETAIN must keep at least 1 snapshot"
+        )
+    return VacuumStatement(
+        m["target"],
+        keep,
+        m["dry_run"] is not None,
+        older_than_seconds=(
+            float(m["interval"]) * _SECONDS[m["unit"].lower()]
+            if m["interval"] is not None
+            else None
+        ),
+        older_than_epoch=(
+            _parse_instant(m["instant"], "VACUUM OLDER THAN TIMESTAMP")
+            if m["instant"] is not None
+            else None
+        ),
+    )
+
+
+def _execute(m: re.Match) -> ExecuteStatement:
+    raw = m["params"]
+    params = () if raw is None else tuple(map(_parse_literal, _split_top(raw)))
+    return ExecuteStatement(m["name"], params)
+
+
+def _clone(m: re.Match) -> CloneStatement:
+    rest = m["rest"]
+    version = None
+    mv = re.match(r"version\s+as\s+of\s+(\d+)\s*", rest, re.I)
+    if mv:
+        version = int(mv.group(1))
+        rest = rest[mv.end() :]
+    mw = re.fullmatch(r"with\s*\((.*)\)", rest, re.I | re.S)
+    if not mw:
+        raise _refusal("create")
+    props = _parse_props(mw.group(1))
+    location = props.pop("external_location", None)
+    if not location:
+        raise UnsupportedStatementError(
+            "CLONE requires external_location = '<path>' (clone "
+            "tables are external, like CTAS results)"
+        )
+    if props:
+        raise UnsupportedStatementError(
+            f"unsupported CLONE propert(ies) {sorted(props)}"
+        )
+    return CloneStatement(m["target"], m["source"], version, location)
+
+
+def _unload(m: re.Match) -> UnloadStatement:
+    select_sql, tail = _paren_body(m["rest"], "UNLOAD", trailing=True)
+    mt = re.fullmatch(
+        r"to\s+'([^']+)'\s*(?:with\s*\((.*)\))?", tail, re.I | re.S
+    )
+    if not mt:
+        raise _refusal("unload")
+    props = _parse_props(mt.group(2) or "")
+    fmt = (props.pop("format", "parquet") or "parquet").lower()
+    pby = _partition_prop(props.pop("partitioned_by", ()))
+    if props:
+        raise UnsupportedStatementError(
+            f"unsupported UNLOAD propert(ies) {sorted(props)}"
+        )
+    return UnloadStatement(select_sql, mt.group(1), fmt, pby)
+
+
+def _analyze(m: re.Match) -> AnalyzeStatement:
+    tail = m["columns"]
+    if tail is None:
+        return AnalyzeStatement(m["target"])
+    if re.fullmatch(r"all\s+columns", tail, re.I):
+        return AnalyzeStatement(m["target"], ("*",))
+    cols = tuple(_split_top(re.sub(r"^columns\s+", "", tail, flags=re.I)))
+    if not all(re.fullmatch(_IDENT, c) for c in cols):
+        raise UnsupportedStatementError("FOR COLUMNS takes plain column names")
+    if len({c.lower() for c in cols}) != len(cols):
+        raise UnsupportedStatementError("duplicate column in FOR COLUMNS")
+    return AnalyzeStatement(m["target"], cols)
+
+
+class _Form(NamedTuple):
+    text: str  # the form as shown to users in refusals
+    pattern: re.Pattern  # must match the whole (normalised) statement
+    build: Callable  # match -> statement dataclass; may refuse
+
+
+def _form(text: str, pattern: str, build: Callable) -> _Form:
+    return _Form(text, re.compile(pattern, re.I | re.S), build)
+
+
+# pattern pieces shared by many forms; a form whose builder parses the
+# tail of the statement itself captures it as the ``rest`` group
+_T = rf"(?P<target>{_QUALIFIED})"
+_REST = r"(?P<rest>.*)"
+_ALTER = rf"alter\s+table\s+{_T}\s+"
+_DESC = r"(?:describe|desc)\s+"
+
+# verb -> its forms, tried in order; the first whose pattern matches
+# the whole statement owns it
+_GRAMMAR: dict[str, tuple[_Form, ...]] = {
+    "explain": (
+        _form(
+            "EXPLAIN ANALYZE <query>",
+            r"explain\s+(?P<analyze>analyze)\s+(?P<query_sql>.+)",
+            _fields(ExplainStatement),
+        ),
+        _form(
+            "EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST|SIMPLE] <query>",
+            r"explain\s+(?:(?P<mode>formatted|extended|codegen|cost|simple)"
+            r"\s+)?(?P<query_sql>.+)",
+            _explain,
+        ),
+    ),
+    "msck": (
+        _form(
+            "MSCK REPAIR TABLE <db.table>",
+            rf"msck\s+repair\s+table\s+{_T}",
+            _fields(MsckRepairStatement),
+        ),
+    ),
+    "truncate": (
+        _form(
+            "TRUNCATE TABLE <db.table>",
+            rf"truncate\s+table\s+{_T}",
+            _fields(TruncateTableStatement),
+        ),
+    ),
+    "alter": (
+        _form(
+            "ALTER TABLE <db.table> RENAME COLUMN <old> TO <new>",
+            rf"{_ALTER}rename\s+column\s+(?P<old>{_IDENT})\s+to\s+"
+            rf"(?P<new>{_IDENT})",
+            _fields(RenameColumnStatement),
+        ),
+        _form(
+            "ALTER TABLE <db.table> DROP COLUMN <col>",
+            rf"{_ALTER}drop\s+column\s+(?P<column>{_IDENT})",
+            _fields(DropColumnStatement),
+        ),
+        _form(
+            "ALTER TABLE <db.table> ADD FILES '<dir>'",
+            rf"{_ALTER}add\s+files\s+'(?P<location>[^']+)'",
+            _fields(AddFilesStatement),
+        ),
+        _form(
+            "ALTER TABLE <db.table> ADD CONSTRAINT <name> CHECK (<expr>)",
+            rf"{_ALTER}add\s+constraint\s+(?P<name>{_IDENT})\s+check\s*"
+            rf"(?P<rest>\(.*)",
+            _add_constraint,
+        ),
+        _form(
+            "ALTER TABLE <db.table> DROP CONSTRAINT <name>",
+            rf"{_ALTER}drop\s+constraint\s+(?P<name>{_IDENT})",
+            _fields(DropConstraintStatement),
+        ),
+        _form(
+            "ALTER TABLE <db.table> DROP [IF EXISTS] PARTITION "
+            "(col = <literal>, ...)",
+            rf"{_ALTER}drop\s+(?P<if_exists>if\s+exists\s+)?partition\s*"
+            rf"(?P<rest>\(.*)",
+            _drop_partition,
+        ),
+        _form(
+            "ALTER TABLE <db.table> ALTER COLUMN <col> TYPE <type>",
+            # the type text is validated by Spark's own DDL parser at
+            # dispatch (catalog.widen_column), same as ADD COLUMNS
+            rf"{_ALTER}alter\s+column\s+(?P<column>{_IDENT})\s+"
+            r"(?:type|set\s+data\s+type)\s+(?P<ddl_type>.+)",
+            _fields(WidenColumnStatement),
+        ),
+        _form(
+            "ALTER TABLE <db.table> ADD COLUMNS "
+            "(<col> <type> [COMMENT '<text>'], ...)",
+            rf"{_ALTER}add\s+columns\s*(?P<rest>\(.*)",
+            _add_columns,
+        ),
+    ),
+    "merge": (
+        _form(
+            "MERGE INTO <db.table> [AS <t>] USING (<select>) [AS <s>] "
+            "ON <t.col = s.col [AND ...]> "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+            rf"merge\s+into\s+{_T}\s*(?:as\s+)?(?P<alias>{_IDENT})?\s*"
+            rf"using\s*{_REST}",
+            _parse_merge,
+        ),
+    ),
+    "update": (
+        _form(
+            "UPDATE <db.table> SET col = expr[, ...] WHERE <predicate>",
+            rf"update\s+{_T}\s+set\s+{_REST}",
+            _parse_update,
+        ),
+    ),
+    "delete": (
+        _form(
+            "DELETE FROM <db.table> WHERE <predicate>",
+            rf"delete\s+from\s+{_T}\s+where\s+(?P<predicate>.+)",
+            _fields(DeleteStatement),
+        ),
+    ),
+    "optimize": (
+        _form(
+            "OPTIMIZE <db.table> [REWRITE DATA USING BIN_PACK] "
+            "[WHERE <partition predicate>]",
+            rf"optimize\s+{_T}"
+            r"(?:\s+rewrite\s+data\s+using\s+bin_pack|\s+binpack)?"
+            r"(?:\s+where\s+(?P<where>.+))?",
+            lambda m: OptimizeStatement(
+                m["target"], "binpack", where=m["where"]
+            ),
+        ),
+        _form(
+            "OPTIMIZE <db.table> CLUSTER BY (col, ...)",
+            rf"optimize\s+{_T}\s+cluster\s+by\s*\((?P<cluster_by>[^)]+)\)",
+            _optimize_cluster,
+        ),
+    ),
+    "vacuum": (
+        _form(
+            "VACUUM <db.table> [RETAIN <n> SNAPSHOTS] [OLDER THAN "
+            "INTERVAL '<n>' <unit> | OLDER THAN TIMESTAMP "
+            "'<iso-or-epoch>'] [DRY RUN]",
+            rf"vacuum\s+{_T}(?:\s+retain\s+(?P<keep>\d+)\s+snapshots)?"
+            r"(?:\s+older\s+than\s+(?:interval\s+'(?P<interval>\d+)'\s+"
+            r"(?P<unit>second|minute|hour|day|week)s?"
+            r"|timestamp\s+'(?P<instant>[^']+)'))?"
+            r"(?P<dry_run>\s+dry\s+run)?",
+            _vacuum,
+        ),
+    ),
+    "insert": (
+        _form(
+            "INSERT OVERWRITE [TABLE] <db.table> "
+            "[PARTITION (col = <literal>, ...)] <query>",
+            rf"insert\s+overwrite\s+(?:table\s+)?{_T}\s*{_REST}",
+            _parse_insert_overwrite,
+        ),
+        _form(
+            "INSERT INTO <db.table> [(col, ...)] <query>",
+            rf"insert\s+into\s+{_T}\s*{_REST}",
+            _parse_insert,
+        ),
+    ),
+    "prepare": (
+        _form(
+            "PREPARE <name> FROM <statement>",
+            rf"prepare\s+(?P<name>{_IDENT})\s+from\s+(?P<statement_sql>.+)",
+            _fields(PrepareStatement),
+        ),
+    ),
+    "execute": (
+        _form(
+            "EXECUTE <name> [USING <literal>, ...]",
+            rf"execute\s+(?P<name>{_IDENT})(?:\s+using\s+(?P<params>.+))?",
+            _execute,
+        ),
+    ),
+    "create": (
+        _form(
+            "CREATE DATABASE|SCHEMA [IF NOT EXISTS] <name> "
+            "[COMMENT '<text>']",
+            r"create\s+(?:database|schema)\s+"
+            rf"(?P<if_not_exists>if\s+not\s+exists\s+)?(?P<name>{_IDENT})"
+            r"(?:\s+comment\s+'(?P<comment>(?:[^']|'')*)')?",
+            _fields(
+                CreateDatabaseStatement,
+                comment=lambda c: c.replace("''", "'"),
+            ),
+        ),
+        _form(
+            "CREATE MATERIALIZED VIEW <db.mv> AS SELECT <group cols>, "
+            "count(*) AS a [, sum(col) AS b, avg(col) AS c, "
+            "approx_count_distinct(col) AS d ...] "
+            "FROM <db.table> [WHERE <predicate>] GROUP BY <group cols>",
+            rf"create\s+materialized\s+view\s+(?P<mv>{_QUALIFIED})\s+as\s+"
+            rf"select\s+{_REST}",
+            _parse_create_mv,
+        ),
+        _form(
+            # the reference's masked-view flow is exactly this DDL
+            # pasted into Athena (outputs.tf:44-53, README.md:159-197)
+            "CREATE [OR REPLACE] VIEW <db.view> AS <query>",
+            r"create\s+(?P<or_replace>or\s+replace\s+)?view\s+"
+            rf"(?P<view>{_QUALIFIED})\s+as\s+(?P<select_sql>.*)",
+            _fields(
+                CreateViewStatement,
+                select_sql=lambda b: _require_query(b, "the view body"),
+            ),
+        ),
+        _form(
+            "CREATE TABLE <db.table> CLONE <db.source> [VERSION AS OF <n>] "
+            "WITH (external_location = '<path>')",
+            rf"create\s+table\s+{_T}\s+clone\s+(?P<source>{_QUALIFIED})\s*"
+            rf"{_REST}",
+            _clone,
+        ),
+        _form(
+            "CREATE [EXTERNAL] TABLE [IF NOT EXISTS] <db.table> "
+            "LIKE <db.source> LOCATION '<path>'",
+            r"create\s+(?:external\s+)?table\s+"
+            rf"(?P<if_not_exists>if\s+not\s+exists\s+)?{_T}\s+like\s+"
+            rf"(?P<source>{_QUALIFIED})\s+location\s+'(?P<location>[^']+)'",
+            _fields(CreateTableLikeStatement),
+        ),
+        _form(
+            "CREATE [EXTERNAL] TABLE [IF NOT EXISTS] <db.table> "
+            "(col type [COMMENT '<text>'], ...) "
+            "[PARTITIONED BY (col type, ...)] [STORED AS PARQUET] "
+            "LOCATION '<path>'",
+            r"create\s+(?:external\s+)?table\s+"
+            rf"(?P<if_not_exists>if\s+not\s+exists\s+)?{_T}\s*"
+            r"(?P<rest>\(.*)",
+            _parse_create_table,
+        ),
+        _form(
+            "CREATE TABLE <db.table> WITH (external_location = '<path>'"
+            "[, format = 'PARQUET', partitioned_by = ARRAY['col', ...]]) "
+            "AS <query>",
+            rf"create\s+table\s+{_T}\s+with\s*(?P<rest>\(.*)",
+            _parse_ctas,
+        ),
+    ),
+    "unload": (
+        _form(
+            "UNLOAD (<query>) TO '<path>' [WITH (format = "
+            "'PARQUET'|'CSV'|'JSON'|'ORC'[, partitioned_by = "
+            "ARRAY['col', ...]])]",
+            r"unload\s*(?P<rest>\(.*)",
+            _unload,
+        ),
+    ),
+    "refresh": (
+        _form(
+            "REFRESH MATERIALIZED VIEW <db.mv>",
+            rf"refresh\s+materialized\s+view\s+(?P<mv>{_QUALIFIED})",
+            _fields(RefreshMVStatement),
+        ),
+    ),
+    "drop": (
+        _form(
+            "DROP MATERIALIZED VIEW <db.mv> [PURGE]",
+            rf"drop\s+materialized\s+view\s+(?P<mv>{_QUALIFIED})"
+            r"(?P<purge>\s+purge)?",
+            _fields(DropMVStatement),
+        ),
+        _form(
+            # the reference's cleanup step (README.md:320)
+            "DROP VIEW [IF EXISTS] <db.view>",
+            r"drop\s+view\s+(?P<if_exists>if\s+exists\s+)?"
+            rf"(?P<view>{_QUALIFIED})",
+            _fields(DropViewStatement),
+        ),
+        _form(
+            "DROP TABLE [IF EXISTS] <db.table>",
+            rf"drop\s+table\s+(?P<if_exists>if\s+exists\s+)?{_T}",
+            _fields(DropTableStatement),
+        ),
+    ),
+    "show": (
+        _form(
+            "SHOW CREATE TABLE <db.table>",
+            rf"show\s+create\s+table\s+{_T}",
+            _fields(ShowCreateTableStatement),
+        ),
+        _form(
+            "SHOW COLUMNS IN|FROM <db.table>",
+            rf"show\s+columns\s+(?:in|from)\s+{_T}",
+            _fields(ShowColumnsStatement),
+        ),
+        _form(
+            "SHOW TABLES [IN <db>]",
+            rf"show\s+tables(?:\s+in\s+(?P<database>{_IDENT}))?",
+            _fields(ShowTablesStatement),
+        ),
+        _form(
+            "SHOW VIEWS [IN <db>]",
+            rf"show\s+views(?:\s+in\s+(?P<database>{_IDENT}))?",
+            _fields(ShowViewsStatement),
+        ),
+        _form(
+            "SHOW DATABASES|SCHEMAS",
+            r"show\s+(?:databases|schemas)",
+            _fields(ShowDatabasesStatement),
+        ),
+        _form(
+            "SHOW PARTITIONS <db.table>",
+            rf"show\s+partitions\s+{_T}",
+            _fields(ShowPartitionsStatement),
+        ),
+        _form(
+            "SHOW STATS [FOR] <db.table>",
+            rf"show\s+stats\s+(?:for\s+)?{_T}",
+            _fields(ShowStatsStatement),
+        ),
+        _form(
+            "SHOW GRANTS [FOR <principal>] ON <db.table>",
+            rf"show\s+grants(?:\s+for\s+(?P<principal>{_IDENT}))?\s+on\s+{_T}",
+            _fields(ShowGrantsStatement),
+        ),
+    ),
+    "grant": (
+        _form(
+            # conditioned grants (data-cells filters, tag excludes)
+            # attach through the catalog API, which names the filter
+            "GRANT SELECT|ALL ON [TABLE] <db.obj> TO <principal>",
+            r"grant\s+(?P<permission>select|all)\s+on\s+(?:table\s+)?"
+            rf"{_T}\s+to\s+(?P<principal>{_IDENT})",
+            _fields(GrantStatement, permission=str.upper),
+        ),
+    ),
+    "revoke": (
+        _form(
+            # omitting the permission revokes every grant the principal
+            # holds on the object
+            "REVOKE [SELECT|ALL] ON [TABLE] <db.obj> FROM <principal>",
+            r"revoke\s+(?:(?P<permission>select|all)\s+)?on\s+(?:table\s+)?"
+            rf"{_T}\s+from\s+(?P<principal>{_IDENT})",
+            _fields(RevokeStatement, permission=str.upper),
+        ),
+    ),
+    "analyze": (
+        _form(
+            "ANALYZE TABLE <db.table> COMPUTE STATISTICS "
+            "[FOR COLUMNS <col>, ... | FOR ALL COLUMNS]",
+            rf"analyze\s+table\s+{_T}\s+compute\s+statistics"
+            r"(?:\s+for\s+(?P<columns>all\s+columns|columns\s+.+))?",
+            _analyze,
+        ),
+    ),
+    "describe": (
+        _form(
+            "DESCRIBE DATABASE|SCHEMA <db>",
+            rf"{_DESC}(?:database|schema)\s+(?P<name>{_IDENT})",
+            _fields(DescribeDatabaseStatement),
+        ),
+        _form(
+            "DESCRIBE HISTORY <db.table>",
+            rf"{_DESC}history\s+{_T}",
+            _fields(DescribeHistoryStatement),
+        ),
+        _form(
+            "DESCRIBE DETAIL <db.table>",
+            rf"{_DESC}detail\s+{_T}",
+            _fields(DescribeDetailStatement),
+        ),
+        _form(
+            "DESCRIBE FILES <db.table>",
+            rf"{_DESC}files\s+{_T}",
+            _fields(DescribeFilesStatement),
+        ),
+        _form(
+            "DESCRIBE [TABLE] <db.table>",
+            rf"{_DESC}(?:table\s+)?{_T}",
+            _fields(DescribeStatement),
+        ),
+    ),
+}
+_GRAMMAR["desc"] = _GRAMMAR["describe"]
+
+_ALL_FORMS = " | ".join(
+    dict.fromkeys(f.text for forms in _GRAMMAR.values() for f in forms)
+)
+
+
+def _refusal(verb: str, detail: str = "") -> UnsupportedStatementError:
+    """The refusal for a ``verb`` statement outside its forms; every
+    form text comes from its ``_GRAMMAR`` row."""
+    forms = " | ".join(f.text for f in _GRAMMAR[verb])
+    return UnsupportedStatementError(
+        f"{detail + '; ' if detail else ''}supported {verb.upper()} forms: "
+        f"{forms}"
+    )
+
+
 def parse_statement(sql: str):
     """Parse a governed statement.
 
     Returns ``None`` when ``sql`` is a query (SELECT / WITH / VALUES /
     parenthesized query) — those flow through the governance rewrite.
-    Returns a statement dataclass for the supported verbs. Raises
-    :class:`UnsupportedStatementError` for any other verb: letting an
+    Returns a statement dataclass for the forms in ``_GRAMMAR``. Raises
+    :class:`UnsupportedStatementError` for anything else: letting an
     unrecognized mutation fall through to raw ``spark.sql`` would run
     it UNGOVERNED against the session catalog (fail closed).
     """
@@ -1603,649 +2116,17 @@ def parse_statement(sql: str):
         raise UnsupportedStatementError("empty statement")
     head = re.match(r"[A-Za-z]+", text)
     verb = head.group(0).lower() if head else ""
-    if text.startswith("(") or verb in ("select", "with", "values", "table"):
+    if text.startswith("(") or verb in (*_QUERY_VERBS, "table"):
         return None
-
-    if verb == "explain":
-        # EXPLAIN <query> — Athena returns the plan as result rows; the
-        # plan shown is of the REWRITTEN query (engine.explain), so a
-        # principal sees exactly what their governed scan reads
-        m = re.match(r"explain\s+analyze\s+(.+)$", text, re.I | re.S)
-        if m:
-            return ExplainStatement(m.group(1).strip(), "formatted", True)
-        m = re.match(
-            r"explain\s+(?:(formatted|extended|codegen|cost|simple)\s+)?(.+)$",
-            text,
-            re.I | re.S,
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: EXPLAIN [FORMATTED|EXTENDED|CODEGEN|COST|"
-                "SIMPLE] <query>"
-            )
-        inner = m.group(2).strip()
-        ih = re.match(r"[A-Za-z]+", inner)
-        if not ih or ih.group(0).lower() not in ("select", "with", "values"):
-            raise UnsupportedStatementError(
-                "EXPLAIN supports queries only (SELECT/WITH/VALUES); "
-                "statements execute through their own audited verbs"
-            )
-        return ExplainStatement(inner, (m.group(1) or "formatted").lower())
-    if verb == "msck":
-        m = re.fullmatch(
-            rf"msck\s+repair\s+table\s+({_QUALIFIED})", text, re.I
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: MSCK REPAIR TABLE <db.table>"
-            )
-        return MsckRepairStatement(m.group(1))
-    if verb == "truncate":
-        m = re.fullmatch(rf"truncate\s+table\s+({_QUALIFIED})", text, re.I)
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: TRUNCATE TABLE <db.table>"
-            )
-        return TruncateTableStatement(m.group(1))
-    if verb == "alter":
-        m = re.fullmatch(
-            rf"alter\s+table\s+({_QUALIFIED})\s+rename\s+column\s+"
-            rf"({_IDENT})\s+to\s+({_IDENT})",
-            text,
-            re.I,
-        )
-        if m:
-            return RenameColumnStatement(m.group(1), m.group(2), m.group(3))
-        m = re.fullmatch(
-            rf"alter\s+table\s+({_QUALIFIED})\s+drop\s+column\s+({_IDENT})",
-            text,
-            re.I,
-        )
-        if m:
-            return DropColumnStatement(m.group(1), m.group(2))
-        m = re.fullmatch(
-            rf"alter\s+table\s+({_QUALIFIED})\s+add\s+files\s+'([^']+)'",
-            text,
-            re.I,
-        )
-        if m:
-            return AddFilesStatement(m.group(1), m.group(2))
-        m = re.match(
-            rf"alter\s+table\s+({_QUALIFIED})\s+add\s+constraint\s+"
-            rf"({_IDENT})\s+check\s*",
-            text,
-            re.I,
-        )
-        if m:
-            rest = text[m.end() :].lstrip()
-            if not rest.startswith("("):
-                raise UnsupportedStatementError(
-                    "supported form: ALTER TABLE <db.table> ADD "
-                    "CONSTRAINT <name> CHECK (<expr>)"
-                )
-            end = _balanced_paren_span(rest, 0)
-            if rest[end:].strip():
-                raise UnsupportedStatementError(
-                    "unexpected trailing text after CHECK (...)"
-                )
-            expr = rest[1 : end - 1].strip()
-            if not expr:
-                raise UnsupportedStatementError("empty CHECK expression")
-            return AddConstraintStatement(m.group(1), m.group(2), expr)
-        m = re.fullmatch(
-            rf"alter\s+table\s+({_QUALIFIED})\s+drop\s+constraint\s+"
-            rf"({_IDENT})",
-            text,
-            re.I,
-        )
-        if m:
-            return DropConstraintStatement(m.group(1), m.group(2))
-        m = re.match(
-            rf"alter\s+table\s+({_QUALIFIED})\s+drop\s+"
-            rf"(if\s+exists\s+)?partition\s*",
-            text,
-            re.I,
-        )
-        if m:
-            # hive/Athena partition retirement: same (col = <literal>,
-            # ...) item grammar as the static INSERT OVERWRITE spec
-            rest = text[m.end() :].lstrip()
-            if not rest.startswith("("):
-                raise UnsupportedStatementError(
-                    "supported form: ALTER TABLE <db.table> DROP "
-                    "[IF EXISTS] PARTITION (col = <literal>, ...)"
-                )
-            end = _balanced_paren_span(rest, 0)
-            if rest[end:].strip():
-                raise UnsupportedStatementError(
-                    "unexpected trailing text after PARTITION (...) — "
-                    "one partition spec per statement"
-                )
-            inner = rest[1 : end - 1].strip()
-            if not inner:
-                raise UnsupportedStatementError("empty PARTITION spec")
-            items = []
-            for it in _split_top(inner):
-                ms = re.fullmatch(
-                    rf"({_IDENT})\s*=\s*(.+)", it.strip(), re.S
-                )
-                if not ms:
-                    raise UnsupportedStatementError(
-                        f"PARTITION item {it!r} is not col = <literal>"
-                    )
-                items.append(
-                    (ms.group(1), _parse_literal(ms.group(2).strip()))
-                )
-            names = [c.lower() for c, _v in items]
-            if len(set(names)) != len(names):
-                raise UnsupportedStatementError(
-                    "duplicate column in PARTITION spec"
-                )
-            return DropPartitionStatement(
-                m.group(1), tuple(items), bool(m.group(2))
-            )
-        m = re.fullmatch(
-            rf"alter\s+table\s+({_QUALIFIED})\s+alter\s+column\s+"
-            rf"({_IDENT})\s+(?:type|set\s+data\s+type)\s+(.+)",
-            text,
-            re.I | re.S,
-        )
-        if m:
-            # the type text is validated by Spark's own DDL parser at
-            # dispatch (catalog.widen_column), same as ADD COLUMNS
-            return WidenColumnStatement(
-                m.group(1), m.group(2), m.group(3).strip()
-            )
-        m = re.match(
-            rf"alter\s+table\s+({_QUALIFIED})\s+add\s+columns\s*",
-            text,
-            re.I,
-        )
-        if m:
-            # the Athena/Glue schema-evolution verb — routes to the
-            # catalog's fail-closed evolution (new columns land PENDING)
-            rest = text[m.end() :].lstrip()
-            if not rest.startswith("("):
-                raise UnsupportedStatementError(
-                    "supported form: ALTER TABLE <db.table> ADD COLUMNS "
-                    "(<col> <type> [COMMENT '<text>'], ...)"
-                )
-            end = _balanced_paren_span(rest, 0)
-            if rest[end:].strip():
-                raise UnsupportedStatementError(
-                    "unexpected trailing text after ADD COLUMNS (...)"
-                )
-            # one column-item grammar for the whole statement surface
-            # (CREATE TABLE / PARTITIONED BY / ADD COLUMNS share it)
-            cols = _parse_column_list(rest[1 : end - 1], "ADD COLUMNS")
-            names = [c[0].lower() for c in cols]
-            if len(set(names)) != len(names):
-                raise UnsupportedStatementError(
-                    "duplicate column in ADD COLUMNS"
-                )
-            return AddColumnsStatement(m.group(1), tuple(cols))
+    forms = _GRAMMAR.get(verb)
+    if forms is None:
         raise UnsupportedStatementError(
-            "ALTER through engine.sql supports ALTER TABLE <db.table> "
-            "RENAME COLUMN <old> TO <new> (the metadata-only rename), "
-            "ALTER TABLE <db.table> DROP COLUMN <col> (metadata-only; "
-            "referencing views/MVs/filters/constraints refuse), "
-            "ALTER TABLE <db.table> ALTER COLUMN <col> TYPE <wider> "
-            "(safe type widening; narrowing refuses), "
-            "ALTER TABLE <db.table> ADD FILES '<dir>' (O(new files) "
-            "import into the manifest layout), "
-            "ALTER TABLE <db.table> DROP [IF EXISTS] PARTITION "
-            "(col = <literal>, ...) (atomic partition retirement), and "
-            "ALTER TABLE <db.table> ADD COLUMNS (col type [COMMENT ...], "
-            "...) (fail-closed schema evolution); other ALTERs go through "
-            "the catalog API"
+            f"statement verb {verb.upper()!r} is outside the governed "
+            f"grammar (supported: SELECT/WITH/VALUES queries | {_ALL_FORMS})"
+            "; raw DDL does not run through the governed engine"
         )
-    if verb == "merge":
-        return _parse_merge(text)
-    if verb == "update":
-        return _parse_update(text)
-    if verb == "delete":
-        m = re.fullmatch(
-            rf"delete\s+from\s+({_QUALIFIED})\s+where\s+(.+)", text, re.I | re.S
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported DELETE form: DELETE FROM <db.table> WHERE "
-                "<predicate> (WHERE TRUE for the whole table — erasure "
-                "must be asked for explicitly)"
-            )
-        return DeleteStatement(m.group(1), m.group(2).strip())
-    if verb == "optimize":
-        m = re.fullmatch(
-            rf"optimize\s+({_QUALIFIED})"
-            r"(?:\s+rewrite\s+data\s+using\s+bin_pack|\s+binpack)?"
-            r"(?:\s+where\s+(.+))?",
-            text,
-            re.I | re.S,
-        )
+    for form in forms:
+        m = form.pattern.fullmatch(text)
         if m:
-            where = m.group(2).strip() if m.group(2) else None
-            return OptimizeStatement(m.group(1), "binpack", where=where)
-        m = re.fullmatch(
-            rf"optimize\s+({_QUALIFIED})\s+cluster\s+by\s*\(([^)]+)\)",
-            text,
-            re.I,
-        )
-        if m:
-            cols = tuple(c.strip() for c in m.group(2).split(","))
-            if not all(re.fullmatch(_IDENT, c) for c in cols):
-                raise UnsupportedStatementError(
-                    "CLUSTER BY takes plain column names"
-                )
-            return OptimizeStatement(m.group(1), "cluster", cols)
-        raise UnsupportedStatementError(
-            "supported OPTIMIZE forms: OPTIMIZE <db.table> [REWRITE DATA "
-            "USING BIN_PACK] [WHERE <partition predicate>] | "
-            "OPTIMIZE <db.table> CLUSTER BY (col, ...)"
-        )
-    if verb == "vacuum":
-        m = re.fullmatch(
-            rf"vacuum\s+({_QUALIFIED})(?:\s+retain\s+(\d+)\s+snapshots)?"
-            r"(?:\s+older\s+than\s+(?:"
-            r"interval\s+'(\d+)'\s+(second|minute|hour|day|week)s?"
-            r"|timestamp\s+'([^']+)'))?"
-            r"(\s+dry\s+run)?",
-            text,
-            re.I,
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported VACUUM forms: VACUUM <db.table> RETAIN <n> "
-                "SNAPSHOTS [OLDER THAN ...] | VACUUM <db.table> OLDER "
-                "THAN INTERVAL '<n>' <unit> | VACUUM <db.table> OLDER "
-                "THAN TIMESTAMP '<iso-or-epoch>' (each with optional "
-                "DRY RUN)"
-            )
-        has_age = m.group(3) is not None or m.group(5) is not None
-        if m.group(2) is None and not has_age:
-            # a bare VACUUM would default to keep_last=1 and silently
-            # expire ALL time-travel history in one statement; the most
-            # destructive setting must be asked for explicitly — the
-            # same fail-closed posture as UPDATE's mandatory WHERE
-            # (round-10 ADVICE). The round-15 age form is an equally
-            # explicit scope: OLDER THAN alone keeps the head snapshot
-            # plus everything at-or-after the horizon.
-            raise UnsupportedStatementError(
-                "VACUUM requires an explicit retention scope: RETAIN "
-                "<n> SNAPSHOTS and/or OLDER THAN <interval/timestamp> "
-                "(destructive retention must be asked for)"
-            )
-        keep = int(m.group(2)) if m.group(2) is not None else 1
-        if keep < 1:
-            raise UnsupportedStatementError(
-                "VACUUM RETAIN must keep at least 1 snapshot"
-            )
-        older_seconds = older_epoch = None
-        if m.group(3) is not None:
-            unit = {
-                "second": 1.0,
-                "minute": 60.0,
-                "hour": 3600.0,
-                "day": 86400.0,
-                "week": 604800.0,
-            }[m.group(4).lower()]
-            older_seconds = float(m.group(3)) * unit
-        elif m.group(5) is not None:
-            raw = m.group(5)
-            try:
-                older_epoch = float(raw)
-            except ValueError:
-                from datetime import datetime, timezone
-
-                try:
-                    dt = datetime.fromisoformat(raw)
-                except ValueError as exc:
-                    raise UnsupportedStatementError(
-                        "VACUUM OLDER THAN TIMESTAMP takes an ISO "
-                        "datetime or epoch seconds"
-                    ) from exc
-                if dt.tzinfo is None:
-                    # naive timestamps are UTC — the same convention as
-                    # FOR TIMESTAMP AS OF time travel
-                    dt = dt.replace(tzinfo=timezone.utc)
-                older_epoch = dt.timestamp()
-        return VacuumStatement(
-            m.group(1),
-            keep,
-            bool(m.group(6)),
-            older_than_seconds=older_seconds,
-            older_than_epoch=older_epoch,
-        )
-    if verb == "insert":
-        return _parse_insert(text)
-    if verb == "prepare":
-        m = re.match(
-            rf"prepare\s+({_IDENT})\s+from\s+(.+)$", text, re.I | re.S
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: PREPARE <name> FROM <statement>"
-            )
-        return PrepareStatement(m.group(1), m.group(2).strip())
-    if verb == "execute":
-        m = re.match(
-            rf"execute\s+({_IDENT})(?:\s+using\s+(.+))?$", text, re.I | re.S
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: EXECUTE <name> [USING <literal>, ...]"
-            )
-        raw = m.group(2)
-        params = (
-            tuple(_parse_literal(p) for p in _split_top(raw))
-            if raw is not None
-            else ()
-        )
-        return ExecuteStatement(m.group(1), params)
-    if verb == "create":
-        m = re.match(
-            rf"create\s+(?:database|schema)\s+(if\s+not\s+exists\s+)?"
-            rf"({_IDENT})\s*",
-            text,
-            re.I,
-        )
-        if m:
-            rest = text[m.end() :].strip()
-            comment = None
-            if rest:
-                mc = re.fullmatch(r"comment\s+'((?:[^']|'')*)'", rest, re.I)
-                if not mc:
-                    raise UnsupportedStatementError(
-                        "supported form: CREATE DATABASE [IF NOT EXISTS] "
-                        "<name> [COMMENT '<text>']"
-                    )
-                comment = mc.group(1).replace("''", "'")
-            return CreateDatabaseStatement(
-                m.group(2), bool(m.group(1)), comment
-            )
-        if re.match(r"create\s+materialized\s+view\b", text, re.I):
-            return _parse_create_mv(text)
-        m = re.match(
-            rf"create\s+(or\s+replace\s+)?view\s+({_QUALIFIED})\s+as\s+",
-            text,
-            re.I,
-        )
-        if m:
-            # the reference's masked-view flow is exactly this DDL
-            # pasted into Athena (outputs.tf:44-53, README.md:159-197)
-            body = _require_query(text[m.end() :], "the view body")
-            return CreateViewStatement(m.group(2), body, bool(m.group(1)))
-        m = re.match(
-            rf"create\s+table\s+({_QUALIFIED})\s+clone\s+({_QUALIFIED})\s*",
-            text,
-            re.I,
-        )
-        if m:
-            clone_grammar = (
-                "CREATE TABLE <db.table> CLONE <db.source> [VERSION AS "
-                "OF <n>] WITH (external_location = '<path>')"
-            )
-            rest = text[m.end() :].strip()
-            version = None
-            mv = re.match(r"version\s+as\s+of\s+(\d+)\s*", rest, re.I)
-            if mv:
-                version = int(mv.group(1))
-                rest = rest[mv.end() :].strip()
-            mw = re.fullmatch(r"with\s*\((.*)\)", rest, re.I | re.S)
-            if not mw:
-                raise UnsupportedStatementError(
-                    f"supported CLONE form: {clone_grammar}"
-                )
-            props = _parse_props(mw.group(1))
-            location = props.pop("external_location", None)
-            if not location:
-                raise UnsupportedStatementError(
-                    "CLONE requires external_location = '<path>' (clone "
-                    "tables are external, like CTAS results)"
-                )
-            if props:
-                raise UnsupportedStatementError(
-                    f"unsupported CLONE propert(ies) {sorted(props)}"
-                )
-            return CloneStatement(m.group(1), m.group(2), version, location)
-        m = re.fullmatch(
-            rf"create\s+(?:external\s+)?table\s+(if\s+not\s+exists\s+)?"
-            rf"({_QUALIFIED})\s+like\s+({_QUALIFIED})\s+"
-            rf"location\s+'([^']+)'",
-            text,
-            re.I,
-        )
-        if m:
-            return CreateTableLikeStatement(
-                m.group(2), m.group(3), m.group(4), bool(m.group(1))
-            )
-        if re.match(
-            rf"create\s+(?:external\s+)?table\s+"
-            rf"(?:if\s+not\s+exists\s+)?{_QUALIFIED}\s*\(",
-            text,
-            re.I,
-        ) or re.match(r"create\s+external\s+table\b", text, re.I):
-            # a column list (or the EXTERNAL keyword) marks the plain
-            # DDL form (round-13); CTAS/CLONE have WITH/CLONE after
-            # the name instead
-            return _parse_create_table(text)
-        if re.match(r"create\s+table\b", text, re.I):
-            return _parse_ctas(text)
-        raise UnsupportedStatementError(
-            "CREATE through engine.sql supports CREATE DATABASE, "
-            "CREATE [OR REPLACE] VIEW <db.view> AS <select>, CREATE "
-            "MATERIALIZED VIEW, CREATE [EXTERNAL] TABLE <db.t> (col "
-            "type, ...) ... LOCATION '<path>', CREATE TABLE ... WITH "
-            "(external_location=...) AS <select> (Athena CTAS), and "
-            "CREATE TABLE <db.t> CLONE <db.src> [VERSION AS OF n] WITH "
-            "(external_location=...)"
-        )
-    if verb == "unload":
-        m = re.match(r"unload\s*", text, re.I)
-        rest = text[m.end() :]
-        if not rest.startswith("("):
-            raise UnsupportedStatementError(
-                "supported form: UNLOAD (<select>) TO '<path>' WITH "
-                "(format = 'PARQUET'|'CSV'|'JSON'|'ORC'[, partitioned_by "
-                "= ARRAY['col', ...]])"
-            )
-        end = _balanced_paren_span(rest, 0)
-        select_sql = rest[1 : end - 1].strip()
-        tail = rest[end:].strip()
-        mt = re.fullmatch(
-            r"to\s+'([^']+)'\s*(?:with\s*\((.*)\))?", tail, re.I | re.S
-        )
-        if not mt:
-            raise UnsupportedStatementError(
-                "UNLOAD needs TO '<path>' [WITH (format = ..., "
-                "partitioned_by = ...)]"
-            )
-        props = _parse_props(mt.group(2) or "")
-        fmt = (props.pop("format", "parquet") or "parquet").lower()
-        pby = _partition_prop(props.pop("partitioned_by", ()))
-        if props:
-            raise UnsupportedStatementError(
-                f"unsupported UNLOAD propert(ies) {sorted(props)}"
-            )
-        return UnloadStatement(select_sql, mt.group(1), fmt, pby)
-    if verb == "refresh":
-        m = re.fullmatch(
-            rf"refresh\s+materialized\s+view\s+({_QUALIFIED})", text, re.I
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: REFRESH MATERIALIZED VIEW <db.mv>"
-            )
-        return RefreshMVStatement(m.group(1))
-    if verb == "drop":
-        m = re.fullmatch(
-            rf"drop\s+materialized\s+view\s+({_QUALIFIED})(\s+purge)?",
-            text,
-            re.I,
-        )
-        if m:
-            return DropMVStatement(m.group(1), bool(m.group(2)))
-        m = re.fullmatch(
-            rf"drop\s+view\s+(if\s+exists\s+)?({_QUALIFIED})", text, re.I
-        )
-        if m:
-            # the reference's cleanup step (README.md:320)
-            return DropViewStatement(m.group(2), bool(m.group(1)))
-        m = re.fullmatch(
-            rf"drop\s+table\s+(if\s+exists\s+)?({_QUALIFIED})", text, re.I
-        )
-        if m:
-            return DropTableStatement(m.group(2), bool(m.group(1)))
-        raise UnsupportedStatementError(
-            "DROP through engine.sql supports DROP MATERIALIZED VIEW "
-            "<db.mv> [PURGE], DROP VIEW [IF EXISTS] <db.view>, and "
-            "DROP TABLE [IF EXISTS] <db.table>"
-        )
-    if verb == "show":
-        m = re.fullmatch(
-            rf"show\s+create\s+table\s+({_QUALIFIED})", text, re.I
-        )
-        if m:
-            return ShowCreateTableStatement(m.group(1))
-        m = re.fullmatch(
-            rf"show\s+columns\s+(?:in|from)\s+({_QUALIFIED})", text, re.I
-        )
-        if m:
-            return ShowColumnsStatement(m.group(1))
-        m = re.fullmatch(rf"show\s+tables(?:\s+in\s+({_IDENT}))?", text, re.I)
-        if m:
-            return ShowTablesStatement(m.group(1))
-        m = re.fullmatch(rf"show\s+views(?:\s+in\s+({_IDENT}))?", text, re.I)
-        if m:
-            return ShowViewsStatement(m.group(1))
-        if re.fullmatch(r"show\s+(databases|schemas)", text, re.I):
-            return ShowDatabasesStatement()
-        m = re.fullmatch(rf"show\s+partitions\s+({_QUALIFIED})", text, re.I)
-        if m:
-            return ShowPartitionsStatement(m.group(1))
-        m = re.fullmatch(
-            rf"show\s+stats\s+(?:for\s+)?({_QUALIFIED})", text, re.I
-        )
-        if m:
-            return ShowStatsStatement(m.group(1))
-        m = re.fullmatch(
-            rf"show\s+grants(?:\s+for\s+({_IDENT}))?\s+on\s+({_QUALIFIED})",
-            text,
-            re.I,
-        )
-        if m:
-            return ShowGrantsStatement(m.group(2), m.group(1))
-        raise UnsupportedStatementError(
-            "supported SHOW forms: SHOW DATABASES | SHOW TABLES [IN <db>] "
-            "| SHOW VIEWS [IN <db>] | SHOW PARTITIONS <db.table> | "
-            "SHOW STATS [FOR] <db.table> | "
-            "SHOW GRANTS [FOR <principal>] ON <db.table> | "
-            "SHOW CREATE TABLE <db.table> | SHOW COLUMNS IN <db.table>"
-        )
-    if verb == "grant":
-        m = re.fullmatch(
-            rf"grant\s+(select|all)\s+on\s+(?:table\s+)?({_QUALIFIED})"
-            rf"\s+to\s+({_IDENT})",
-            text,
-            re.I,
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: GRANT SELECT|ALL ON [TABLE] <db.obj> "
-                "TO <principal> (conditioned grants — data-cells "
-                "filters, tag excludes — attach through the catalog "
-                "API, which names the filter object)"
-            )
-        return GrantStatement(m.group(1).upper(), m.group(2), m.group(3))
-    if verb == "revoke":
-        m = re.fullmatch(
-            rf"revoke\s+(?:(select|all)\s+)?on\s+(?:table\s+)?"
-            rf"({_QUALIFIED})\s+from\s+({_IDENT})",
-            text,
-            re.I,
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: REVOKE [SELECT|ALL] ON [TABLE] "
-                "<db.obj> FROM <principal> (omitting the permission "
-                "revokes every grant the principal holds on the object)"
-            )
-        perm = m.group(1).upper() if m.group(1) else None
-        return RevokeStatement(perm, m.group(2), m.group(3))
-    if verb == "analyze":
-        m = re.fullmatch(
-            rf"analyze\s+table\s+({_QUALIFIED})\s+compute\s+statistics"
-            r"(?:\s+for\s+(all\s+columns|columns\s+.+))?",
-            text,
-            re.I | re.S,
-        )
-        if not m:
-            raise UnsupportedStatementError(
-                "supported form: ANALYZE TABLE <db.table> COMPUTE "
-                "STATISTICS [FOR COLUMNS <col>, ... | FOR ALL COLUMNS]"
-            )
-        tail = m.group(2)
-        if tail is None:
-            cols: tuple = ()
-        elif re.fullmatch(r"all\s+columns", tail, re.I):
-            cols = ("*",)
-        else:
-            items = _split_top(re.sub(r"^columns\s+", "", tail, flags=re.I))
-            if not items or not all(
-                re.fullmatch(_IDENT, c.strip()) for c in items
-            ):
-                raise UnsupportedStatementError(
-                    "FOR COLUMNS takes plain column names"
-                )
-            cols = tuple(c.strip() for c in items)
-            if len({c.lower() for c in cols}) != len(cols):
-                raise UnsupportedStatementError(
-                    "duplicate column in FOR COLUMNS"
-                )
-        return AnalyzeStatement(m.group(1), cols)
-    if verb in ("describe", "desc"):
-        m = re.fullmatch(
-            rf"(?:describe|desc)\s+(?:database|schema)\s+({_IDENT})",
-            text,
-            re.I,
-        )
-        if m:
-            return DescribeDatabaseStatement(m.group(1))
-        m = re.fullmatch(
-            rf"(?:describe|desc)\s+history\s+({_QUALIFIED})", text, re.I
-        )
-        if m:
-            return DescribeHistoryStatement(m.group(1))
-        m = re.fullmatch(
-            rf"(?:describe|desc)\s+detail\s+({_QUALIFIED})", text, re.I
-        )
-        if m:
-            return DescribeDetailStatement(m.group(1))
-        m = re.fullmatch(
-            rf"(?:describe|desc)\s+files\s+({_QUALIFIED})", text, re.I
-        )
-        if m:
-            return DescribeFilesStatement(m.group(1))
-        m = re.fullmatch(
-            rf"(?:describe|desc)\s+(?:table\s+)?({_QUALIFIED})", text, re.I
-        )
-        if m:
-            return DescribeStatement(m.group(1))
-        raise UnsupportedStatementError(
-            "supported DESCRIBE forms: DESCRIBE [TABLE] <db.table> | "
-            "DESCRIBE HISTORY <db.table> | DESCRIBE DETAIL <db.table> | "
-            "DESCRIBE FILES <db.table> | "
-            "DESCRIBE DATABASE <db>"
-        )
-    raise UnsupportedStatementError(
-        f"statement verb {verb.upper()!r} is outside the governed grammar "
-        "(supported: SELECT/WITH/VALUES queries, EXPLAIN <query>, MERGE "
-        "INTO, INSERT INTO, UPDATE, DELETE FROM, OPTIMIZE, VACUUM, "
-        "TRUNCATE TABLE, MSCK REPAIR TABLE, "
-        "CREATE DATABASE, CREATE [EXTERNAL] TABLE, DROP TABLE, "
-        "GRANT/REVOKE, CREATE/REFRESH/DROP MATERIALIZED VIEW, CREATE "
-        "[OR REPLACE] VIEW, DROP VIEW, PREPARE/EXECUTE, ALTER TABLE "
-        "RENAME/DROP/ADD COLUMN(S) / ALTER COLUMN TYPE / ADD FILES / "
-        "ADD-DROP CONSTRAINT, SHOW DATABASES/TABLES/VIEWS/"
-        "PARTITIONS/GRANTS, DESCRIBE [HISTORY|DETAIL|FILES], ANALYZE "
-        "TABLE); raw DDL does not run through the governed engine"
-    )
+            return form.build(m)
+    raise _refusal(verb)
