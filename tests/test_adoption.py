@@ -5,14 +5,12 @@ Spark writes them.
 
 Each writer runs on a plain directory that already holds data. It must
 leave a ``_manifest.json`` whose v1 file list equals the directory's
-visible data files minus any staged write-audit-publish candidate's
-files, and its result must equal the same operation computed in plain
-Python.
+visible data files, and its result must equal the same operation
+computed in plain Python.
 """
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 import pytest
@@ -29,20 +27,11 @@ DDL = "id long, v int, grp string"
 
 
 def _plain_dir(spark, tmp_path) -> tuple[str, list[str]]:
-    """A hive-partitioned plain directory plus one staged WAP candidate
-    file inside it; returns (path, the files adoption must record)."""
+    """A hive-partitioned plain directory; returns (path, the files
+    adoption must record)."""
     path = str(tmp_path / "t")
     spark.createDataFrame(BASE, DDL).write.partitionBy("grp").parquet(path)
-    live = Path(path)
-    visible = lk._data_file_relpaths(live)
-    # a candidate's file sits in the visible tree but is not table data
-    cand_rel = "grp=a/part-candidate.parquet"
-    (live / cand_rel).write_bytes((live / visible[0]).read_bytes())
-    (live / "_manifests").mkdir()
-    (live / "_manifests" / "candidate_x.json").write_text(
-        json.dumps({"candidate": "x", "new_files": [cand_rel]})
-    )
-    return path, visible
+    return path, lk._data_file_relpaths(Path(path))
 
 
 def _rows(spark, path, cols=("id", "v", "grp")) -> list[tuple]:

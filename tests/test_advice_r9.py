@@ -87,7 +87,8 @@ def test_first_publish_does_not_adopt_wap_candidate(spark, tmp_path):
         _mk(spark, [(1, "a", "cand"), (2, "b", "cand")]),
         ["grp"],
     )
-    assert read_manifest(path) is None  # candidate is invisible
+    # main holds only the empty v1 the candidate forked from
+    assert read_manifest(path)["files"] == []
     # first committed publish covers only partition 'a' — pre-fix, the
     # candidate's 'b' files would ride in as carried "pre-existing data"
     publish_overwrite(
@@ -132,7 +133,7 @@ def test_verify_table_counts_tag_pinned_snapshots(spark, tmp_path):
 
 def test_vacuum_default_grace_protects_fresh_candidate(spark, tmp_path):
     """Routine retention (no min_age) must not destroy a mid-audit WAP
-    candidate: candidates get their own >=1h default grace."""
+    candidate: the candidate is a branch, and its pin protects it."""
     path = str(tmp_path / "t")
     publish_overwrite(
         spark, path, _mk(spark, [(1, "a", "v1")]), ["grp"]
@@ -140,23 +141,15 @@ def test_vacuum_default_grace_protects_fresh_candidate(spark, tmp_path):
     cand = begin_publish(
         spark, path, _mk(spark, [(1, "a", "v2")]), ["grp"]
     )
-    marker = Path(path, "_manifests", f"candidate_{cand['candidate']}.json")
     # the round-8 hazard: min_age_seconds defaults to 0 -> cutoff=now,
-    # which used to reclaim the marker AND its files immediately
-    out = vacuum_manifests(path, keep_last=1)
-    assert out["candidates_removed"] == 0
-    assert marker.exists()
+    # which used to reclaim the candidate's files immediately
+    vacuum_manifests(path, keep_last=1)
     for rel in cand["new_files"]:
         assert Path(path, rel).exists()
-    # the audit still sees the candidate as pending, not as debris
+    # the audit sees the candidate's files as referenced, not as debris
     rep = verify_table(path)
-    assert set(cand["new_files"]) <= set(rep["candidate_files"])
+    assert rep["ok"]
     assert not set(cand["new_files"]) & set(rep["orphans"])
-    # explicit override reclaims it (disaster cleanup)
-    out = vacuum_manifests(path, keep_last=1, candidate_min_age_seconds=0.0)
-    assert out["candidates_removed"] == 1
-    assert not marker.exists()
-    # promotion is still possible... no — the marker is gone; the files
-    # were younger than the data-file cutoff so they linger until aged,
-    # but no snapshot references them
     assert read_table(spark, path).count() == 1
+    commit_publish(path, cand)
+    assert [r.v for r in read_table(spark, path).collect()] == ["v2"]

@@ -12,11 +12,12 @@ die with work on disk:
 - after the move-in, before the pointer replace: new files sit in the
   live tree but no snapshot references them;
 
-over every rewrite-shaped mutator plus append and dynamic partition
-overwrite (which share the same stage-and-commit path), each starting
-from a plain (never written) directory, and prove readers see exactly the pre-state, the
-table verifies clean, the leftovers are reclaimable, and a re-run
-converges.
+over every rewrite-shaped mutator plus append, dynamic partition
+overwrite and write-audit-publish (which share the same
+stage-and-commit path), each starting from a plain (never written)
+directory, and prove readers see exactly the pre-state, the table
+verifies clean, the leftovers are reclaimable, and a re-run converges.
+A clone that dies after its move-in is checked the same way.
 """
 
 from __future__ import annotations
@@ -113,7 +114,7 @@ def test_crash_during_staged_write_unpartitioned(spark, nation_table):
 
 
 def _expected(rows, op):
-    if op == "publish_overwrite":
+    if op in ("publish_overwrite", "begin_publish"):
         return sorted((k, nm, r, "v2") for k, nm, r, _ in rows)
     if op == "append_rows":
         return sorted([*rows, *((k, nm, r, "new") for k, nm, r, _ in rows if r == 2)])
@@ -129,6 +130,11 @@ def _run(spark, path, n, op):
         lk.publish_overwrite(
             spark, path, n.withColumn("note", F.lit("v2")), ["n_regionkey"]
         )
+    elif op == "begin_publish":
+        cand = lk.begin_publish(
+            spark, path, n.withColumn("note", F.lit("v2")), ["n_regionkey"]
+        )
+        lk.commit_publish(path, cand)
     elif op == "update_rows":
         lk.update_rows(
             spark, path, {"note": "'v2'"}, "n_regionkey = 2",
@@ -167,6 +173,7 @@ OPS = (
     "merge_into",
     "append_rows",
     "overwrite_partitions",
+    "begin_publish",
 )
 
 
@@ -203,6 +210,7 @@ def test_crash_matrix_on_adopted_directory(
     # the pre-state through the adopted snapshot
     m = lk.read_manifest(path)
     assert m is not None and m["version"] == 1
+    assert not lk.list_branches(path)  # no write-audit-publish leftover
     assert _rows(spark, path) == rows
     report = lk.verify_table(path)
     assert report["ok"], report
@@ -220,6 +228,42 @@ def test_crash_matrix_on_adopted_directory(
     _run(spark, path, n, op)
     assert _rows(spark, path) == _expected(rows, op)
     assert lk.verify_table(path)["ok"]
+
+
+def test_clone_crash_after_move_in(spark, nation_table, monkeypatch):
+    """A clone that dies after linking its files into the target, before
+    the pointer replace: the source is untouched, the target holds no
+    snapshot, a re-run into it refuses, and once the target is
+    reclaimed the re-run converges."""
+    import shutil
+
+    path, n = nation_table
+    lk.adopt_table(path)
+    rows = _rows(spark, path)
+    dst = str(Path(path).parent / "clone")
+    real_move = lk._move_staged_in
+
+    def crashing_move(*a, **k):
+        real_move(*a, **k)
+        raise RuntimeError("injected crash before the pointer replace")
+
+    monkeypatch.setattr(lk, "_move_staged_in", crashing_move)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        lk.clone_table(path, dst)
+    monkeypatch.undo()
+
+    assert lk.read_manifest(path)["version"] == 1
+    assert _rows(spark, path) == rows
+    report = lk.verify_table(path)
+    assert report["ok"] and not report["orphans"], report
+    assert lk.read_manifest(dst) is None
+    assert not list(Path(dst).glob("_staged_*"))
+    with pytest.raises(FileExistsError, match="already holds"):
+        lk.clone_table(path, dst)
+    shutil.rmtree(dst)
+    lk.clone_table(path, dst)
+    assert _rows(spark, dst) == rows
+    assert lk.verify_table(dst)["ok"]
 
 
 def test_merge_crash_then_rerun_converges(spark, nation_table):

@@ -178,3 +178,28 @@ def test_conflict_message_names_what_moved(spark, tmp_path):
             expected_version=1,
         )
     assert lk.read_table(spark, path).filter(F.col("val") == "x").count() == 1
+
+
+def test_clone_racing_a_first_write_at_its_target_conflicts(spark, tmp_path):
+    """A first write that lands at a clone's target while the clone
+    commits wins: the clone raises instead of committing a parentless
+    snapshot over it and orphaning the write's files."""
+    src = _seed(spark, tmp_path)
+    dst = str(tmp_path / "dst")
+    after = {}
+
+    def other():
+        lk.publish_overwrite(
+            spark, dst, spark.createDataFrame([(9, "c", "w")], DDL), ["grp"]
+        )
+        after["manifest"] = lk.read_manifest(dst)
+
+    with _racing(other) as fired:
+        with pytest.raises(lk.ConcurrentLakeModificationError):
+            lk.clone_table(src, dst)
+    assert fired
+    assert lk.read_manifest(dst) == after["manifest"]
+    assert _rows(spark, dst) == [(9, "c", "w")]
+    report = lk.verify_table(dst)
+    assert report["ok"] and not report["orphans"], report
+    assert not list(Path(dst).glob("_staged_*"))

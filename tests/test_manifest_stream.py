@@ -218,3 +218,19 @@ def test_stream_refuses_mor_tombstones_unless_ignore_changes(spark, tmp_path):
     got = spark.read.schema(df.schema).parquet(out)
     # the new file streamed; previously-emitted rows stay emitted
     assert got.filter("id = 3").count() == 1
+
+
+def test_batch_reader_refuses_mor_tombstones(spark, tmp_path):
+    """The batch reader reads files raw, so a snapshot whose rows a
+    merge-on-read delete hid is refused, pointing at read_table."""
+    from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
+        delete_rows_mor,
+    )
+
+    path = str(tmp_path / "t")
+    df = _mk(spark, [(i, i % 3, "v%d" % i) for i in range(10)])
+    publish_overwrite(spark, path, df, ["bucket"])
+    delete_rows_mor(spark, path, "id < 5", count=False)
+    assert read_table(spark, path).count() == 5
+    with pytest.raises(Exception, match="read_table"):
+        spark.read.format("lake_manifest").schema(df.schema).load(path).collect()

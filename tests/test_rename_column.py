@@ -395,11 +395,13 @@ def test_rename_migrates_filter_columns_case_insensitively(spark, tmp_path):
 
 
 def test_wap_audit_fails_loudly_on_rename_race(spark, tmp_path):
-    """Review fix: a rename committed between begin_publish and the
-    audit read makes read_candidate raise instead of NULL-filling the
-    audited column."""
+    """A rename committed between begin_publish and promotion: the
+    audit read still returns the staged values under the branch's own
+    mapping (no NULL-fill), and commit_publish refuses — main moved
+    since the candidate forked."""
     from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
         begin_publish,
+        commit_publish,
         read_candidate,
     )
     from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
@@ -415,5 +417,7 @@ def test_wap_audit_fails_loudly_on_rename_race(spark, tmp_path):
         ["lang"],
     )
     rename_column(path, "n_chars", "char_count")
-    with pytest.raises(ConcurrentLakeModificationError, match="renamed"):
-        read_candidate(spark, path, cand)
+    audited = read_candidate(spark, path, cand).filter("lang = 'en'")
+    assert [r.n_chars for r in audited.collect()] == [0] * 5
+    with pytest.raises(ConcurrentLakeModificationError):
+        commit_publish(path, cand)

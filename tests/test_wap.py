@@ -1,13 +1,13 @@
 """Write-audit-publish (begin_publish / read_candidate /
-commit_publish / abort_publish): a candidate snapshot is staged
-invisibly, audited at full parallelism, then promoted with one atomic
-pointer commit — or discarded without the live table ever changing.
+commit_publish / abort_publish): a candidate is committed onto its own
+audit branch, audited at full parallelism, then published with one
+fast-forward pointer replace — or discarded without the live table
+ever changing.
 Reference analog: validate.sh's upload-then-query flow gets its safety
 from S3 atomic PUTs; WAP is the multi-file transactional version."""
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from pathlib import Path
@@ -21,13 +21,16 @@ from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
     append_rows,
     begin_publish,
     commit_publish,
+    delete_rows,
     delete_rows_mor,
+    list_branches,
     load,
     publish_overwrite,
     read_candidate,
     read_manifest,
     read_table,
     vacuum_manifests,
+    verify_table,
 )
 
 
@@ -64,8 +67,8 @@ def test_candidate_invisible_until_commit(spark, nation_manifest):
     got = read_table(spark, path)
     assert got.count() == n.count()
     assert got.filter(F.col("n_name") != F.lower("n_name")).count() == 0
-    # marker consumed
-    assert not list(Path(path, "_manifests").glob("candidate_*.json"))
+    # no wap_ branch left
+    assert not [b for b in list_branches(path) if b.startswith("wap_")]
 
 
 def test_abort_leaves_live_byte_identical(spark, nation_manifest):
@@ -155,22 +158,21 @@ def test_vacuum_reclaims_abandoned_candidate_but_protects_fresh(
     cand = begin_publish(
         spark, path, n.withColumn("n_name", F.upper("n_name")), ["n_regionkey"]
     )
-    marker = Path(path, "_manifests", f"candidate_{cand['candidate']}.json")
-    assert marker.exists()
-    # fresh candidate is protected by the age guard
-    out = vacuum_manifests(path, keep_last=1, min_age_seconds=3600)
-    assert out["candidates_removed"] == 0
-    assert marker.exists()
-    for rel in cand["new_files"]:
-        assert Path(path, rel).exists()
-    # age it: an abandoned begin is reclaimed, marker and files both
+    # a pending candidate is a branch: pinned however old it is
     old = time.time() - 7200
-    os.utime(marker, (old, old))
     for rel in cand["new_files"]:
         os.utime(Path(path, rel), (old, old))
+    head = list_branches(path)[cand["candidate"]]["head"]
     out = vacuum_manifests(path, keep_last=1, min_age_seconds=3600)
-    assert out["candidates_removed"] == 1
-    assert not marker.exists()
+    assert head in out["kept_versions"]
+    for rel in cand["new_files"]:
+        assert Path(path, rel).exists()
+    # abort_publish unpins it; the next vacuum reclaims its snapshot
+    out = abort_publish(path, cand)
+    assert out["files_removed"] == len(cand["new_files"])
+    out = vacuum_manifests(path, keep_last=1)
+    assert head not in out["kept_versions"]
+    assert not Path(path, "_manifests", f"v{head:010d}.json").exists()
     for rel in cand["new_files"]:
         assert not Path(path, rel).exists()
     # live table unaffected throughout
@@ -181,3 +183,42 @@ def test_begin_refuses_layout_mismatch(spark, nation_manifest):
     path, n = nation_manifest
     with pytest.raises(ValueError, match="layout"):
         begin_publish(spark, path, n, None)
+
+
+def test_wap_on_never_written_path(spark, sf_dir, tmp_path):
+    """The candidate forks from an empty v1 committed with the batch's
+    layout and schema; main reads empty until the publish."""
+    n = load(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    )
+    path = str(tmp_path / "fresh")
+    cand = begin_publish(spark, path, n, ["n_regionkey"])
+    v1 = read_manifest(path)
+    assert (v1["version"], v1["files"], v1["partition_by"]) == (
+        1, [], ["n_regionkey"]
+    )
+    assert cand["base_version"] == 1
+    assert read_table(spark, path).count() == 0
+    assert _rows(read_candidate(spark, path, cand)) == _rows(n)
+    commit_publish(path, cand)
+    assert _rows(read_table(spark, path)) == _rows(n)
+    assert not list_branches(path)
+    assert verify_table(path)["ok"]
+
+
+def test_erasure_drops_pending_candidate(spark, nation_manifest):
+    """An erasure drops every branch, a pending candidate included: the
+    candidate, staged from data before the erasure, cannot outlive it."""
+    path, n = nation_manifest
+    cand = begin_publish(
+        spark, path, n.withColumn("n_name", F.upper("n_name")), ["n_regionkey"]
+    )
+    delete_rows(spark, path, "n_nationkey = 0", partition_col="n_regionkey")
+    assert cand["candidate"] not in list_branches(path)
+    for rel in cand["new_files"]:
+        assert not Path(path, rel).exists()
+    with pytest.raises(KeyError, match="no branch"):
+        commit_publish(path, cand)
+    got = read_table(spark, path)
+    assert got.filter(F.col("n_nationkey") == 0).count() == 0
+    assert _rows(got) == _rows(n.filter(F.col("n_nationkey") != 0))

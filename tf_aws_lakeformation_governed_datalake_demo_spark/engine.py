@@ -457,42 +457,23 @@ class Engine:
                         val, "FOR TIMESTAMP AS OF"
                     )
         if as_of_timestamps or as_of_tags or as_of_branches:
-            from .sources.lake import (
-                branch_head,
-                list_tags,
-                version_at_timestamp,
-            )
+            from .sources import lake as _lake
 
             as_of_versions = dict(as_of_versions or {})
-            for q, ts in (as_of_timestamps or {}).items():
-                if q in as_of_versions:
-                    raise ValueError(
-                        f"{q} given in both as_of_versions and "
-                        "as_of_timestamps"
+            for given, selector, pins in (
+                ("as_of_timestamps", "as_of_timestamp", as_of_timestamps),
+                ("as_of_tags", "tag", as_of_tags),
+                ("as_of_branches", "branch", as_of_branches),
+            ):
+                for q, value in (pins or {}).items():
+                    if q in as_of_versions:
+                        raise ValueError(
+                            f"{q} given in both {given} and another AS OF map"
+                        )
+                    table = self.catalog.tables[q]  # KeyError: fail closed
+                    as_of_versions[q] = _lake.resolve_version(
+                        table.location, **{selector: value}
                     )
-                table = self.catalog.tables[q]  # KeyError: fail closed
-                as_of_versions[q] = version_at_timestamp(table.location, ts)
-            for q, tagname in (as_of_tags or {}).items():
-                if q in as_of_versions:
-                    raise ValueError(
-                        f"{q} given in as_of_tags and another AS OF map"
-                    )
-                table = self.catalog.tables[q]  # KeyError: fail closed
-                tags = list_tags(table.location)
-                if tagname not in tags:
-                    raise ValueError(
-                        f"no tag {tagname!r} on {q} (tags: {sorted(tags)})"
-                    )
-                as_of_versions[q] = tags[tagname]
-            for q, brname in (as_of_branches or {}).items():
-                if q in as_of_versions:
-                    raise ValueError(
-                        f"{q} given in as_of_branches and another AS OF map"
-                    )
-                table = self.catalog.tables[q]  # KeyError: fail closed
-                as_of_versions[q] = branch_head(table.location, brname)[
-                    "version"
-                ]
         qe = self._execute(
             sql,
             principal,

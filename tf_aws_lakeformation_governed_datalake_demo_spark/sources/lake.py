@@ -427,7 +427,7 @@ def version_at_timestamp(path: str, ts: float) -> int:
     newest RETAINED snapshot on the committed parent chain whose
     ``committed_at`` is <= ``ts`` (epoch seconds). Walks the chain from
     the current pointer (commit times are monotone along it — each
-    child commits after its parent), so orphan candidates and crashed
+    child commits after its parent), so branch commits and crashed
     commits outside the chain are never selected. Raises when ``ts``
     predates the oldest retained snapshot (vacuumed history must fail
     loudly, never silently serve the oldest survivor)."""
@@ -475,33 +475,12 @@ def tag_snapshot(path: str, name: str, version: int | None = None) -> dict:
     ``version=None`` tags the current snapshot. The version must be on
     the committed parent chain (orphan snapshots from crashed commits
     are not taggable)."""
-    import json
-    import os
     from pathlib import Path
 
-    if not _TAG_NAME.match(name or ""):
-        raise ValueError(f"invalid tag name {name!r} (want {_TAG_NAME.pattern})")
     live = Path(path)
     with publish_lock(live):
-        current = read_manifest(path)
-        if current is None:
-            raise ValueError(
-                f"table at {path} is not manifest-committed — nothing to tag"
-            )
-        if version is None:
-            version = current["version"]
-        chain = [m["version"] for m in _retained_chain(path, current)]
-        if version not in chain:
-            raise ValueError(
-                f"v{version} is not a retained committed snapshot of "
-                f"{path} (chain: {chain})"
-            )
-        tags = list_tags(path)
-        tags[name] = version
-        tf = live / "_manifests" / "_tags.json"
-        tmp = live / "_manifests" / ".tmp_tags"
-        tmp.write_text(json.dumps(tags, sort_keys=True))
-        os.replace(tmp, tf)
+        version = _named_version(path, "tag", name, version)
+        _write_refs(live, "_tags.json", {**list_tags(path), name: version})
     return {"name": name, "version": version}
 
 
@@ -509,19 +488,14 @@ def drop_tag(path: str, name: str) -> bool:
     """Remove a snapshot tag; the snapshot it pinned becomes ordinary
     history (reclaimed by the next :func:`vacuum_manifests` past the
     horizon). Returns whether the tag existed."""
-    import json
-    import os
     from pathlib import Path
 
     live = Path(path)
     with publish_lock(live):
         tags = list_tags(path)
         existed = tags.pop(name, None) is not None
-        tf = live / "_manifests" / "_tags.json"
         if existed:
-            tmp = live / "_manifests" / ".tmp_tags"
-            tmp.write_text(json.dumps(tags, sort_keys=True))
-            os.replace(tmp, tf)
+            _write_refs(live, "_tags.json", tags)
     return existed
 
 
@@ -543,15 +517,46 @@ def list_branches(path: str) -> dict[str, dict]:
         return {}
 
 
-def _write_branches(live, branches: dict) -> None:
+def _write_refs(live, name: str, refs: dict) -> None:
+    """Atomically replace ``_manifests/<name>`` (the tag or branch
+    table) with ``refs``. The caller holds :data:`publish_lock`."""
     import json
     import os
 
     mdir = live / "_manifests"
     mdir.mkdir(parents=True, exist_ok=True)
-    tmp = mdir / ".tmp_branches"
-    tmp.write_text(json.dumps(branches, sort_keys=True))
-    os.replace(tmp, mdir / "_branches.json")
+    tmp = mdir / f".tmp{name}"
+    tmp.write_text(json.dumps(refs, sort_keys=True))
+    os.replace(tmp, mdir / name)
+
+
+def _write_branches(live, branches: dict) -> None:
+    _write_refs(live, "_branches.json", branches)
+
+
+def _named_version(path: str, what: str, name: str, version: int | None) -> int:
+    """Check a tag or branch ``name`` and resolve ``version`` (None: the
+    current snapshot), which must be on the committed parent chain
+    (orphan snapshots from crashed commits are not taggable or
+    branchable). The caller holds :data:`publish_lock`."""
+    if not _TAG_NAME.match(name or ""):
+        raise ValueError(
+            f"invalid {what} name {name!r} (want {_TAG_NAME.pattern})"
+        )
+    current = read_manifest(path)
+    if current is None:
+        raise ValueError(
+            f"table at {path} is not manifest-committed — nothing to {what}"
+        )
+    if version is None:
+        version = current["version"]
+    chain = [m["version"] for m in _retained_chain(path, current)]
+    if version not in chain:
+        raise ValueError(
+            f"v{version} is not a retained committed snapshot of "
+            f"{path} (chain: {chain})"
+        )
+    return version
 
 
 def branch_head(path: str, name: str) -> dict:
@@ -589,28 +594,11 @@ def create_branch(path: str, name: str, version: int | None = None) -> dict:
     table, transactional, and zero-copy. Refuses an existing name
     (drop it first — branches are not retargetable, unlike tags:
     silently moving a branch would orphan its committed chain)."""
-    if not _TAG_NAME.match(name or ""):
-        raise ValueError(
-            f"invalid branch name {name!r} (want {_TAG_NAME.pattern})"
-        )
     from pathlib import Path
 
     live = Path(path)
     with publish_lock(live):
-        current = read_manifest(path)
-        if current is None:
-            raise ValueError(
-                f"table at {path} is not manifest-committed — nothing to "
-                "branch"
-            )
-        if version is None:
-            version = current["version"]
-        chain = [m["version"] for m in _retained_chain(path, current)]
-        if version not in chain:
-            raise ValueError(
-                f"v{version} is not a retained committed snapshot of "
-                f"{path} (chain: {chain})"
-            )
+        version = _named_version(path, "branch", name, version)
         branches = list_branches(path)
         if name in branches:
             raise ValueError(
@@ -724,6 +712,29 @@ def _branch_pinned_manifests(path: str) -> list[dict]:
     return out
 
 
+def _with_pins(path: str, snaps: list[dict]) -> list[dict]:
+    """``snaps`` plus every snapshot a tag or a branch pins — THE
+    retention definition :func:`vacuum_manifests` keeps and
+    :func:`verify_table` audits. A tagged snapshot stays retained once
+    vacuum has removed the parent chain around it; a branch pins its
+    whole unpublished chain (an in-progress backfill, a mid-audit
+    write-audit-publish candidate). A dangling tag (pre-existing
+    damage) pins nothing."""
+    out = list(snaps)
+    seen = {m["version"] for m in out}
+    for v in sorted(set(list_tags(path).values()) - seen):
+        try:
+            out.append(read_manifest(path, v))
+        except FileNotFoundError:
+            continue
+        seen.add(v)
+    for m in _branch_pinned_manifests(path):
+        if m["version"] not in seen:
+            out.append(m)
+            seen.add(m["version"])
+    return out
+
+
 def count_rows(path: str, version: int | None = None) -> dict | None:
     """Metadata-only COUNT — answer ``count(*)`` (total and per
     hive-partition) from the manifest's recorded per-file footer row
@@ -778,27 +789,6 @@ def _data_file_relpaths(live) -> list[str]:
     )
 
 
-def _candidate_file_relpaths(live) -> set[str]:
-    """Data files belonging to staged-but-uncommitted write-audit-publish
-    candidates (their ``new_files`` — carried files belong to committed
-    snapshots). These live in the visible tree but are NOT table data:
-    first-commit file adoption and "has data but no manifest" checks
-    must ignore them, or a concurrent first write would adopt a
-    never-audited candidate's files into the committed snapshot."""
-    import json as _json
-
-    out: set[str] = set()
-    mdir = live / "_manifests"
-    if not mdir.is_dir():
-        return out
-    for cp in mdir.glob("candidate_*.json"):
-        try:
-            out |= set(_json.loads(cp.read_text())["new_files"])
-        except (OSError, ValueError, KeyError):
-            continue
-    return out
-
-
 def _unescape_path_name(s: str) -> str:
     return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), s)
 
@@ -846,34 +836,30 @@ def adopt_table(
     so that all writes commit through one protocol and every rewrite
     has a base version for its ``expected_version`` check.
 
-    Snapshot v1 records the directory's visible data files minus any
-    staged write-audit-publish candidate's files (unaudited data never
-    rides an adoption into the table). The partition layout is read
-    from the hive ``k=v`` directory names and must match a non-empty
+    Snapshot v1 records the directory's visible data files (a write
+    staged under ``_staged_<txid>`` is invisible and never rides an
+    adoption into the table). The partition layout is read from the
+    hive ``k=v`` directory names and must match a non-empty
     ``partition_by``; files at mixed depths are refused. The recorded
     schema is ``schema`` when given (the catalog's declared schema),
     else the one a mergeSchema read of those files infers.
 
-    Idempotent and race-safe: it runs under :data:`publish_lock` and
-    does nothing on a table that already has a manifest. Returns the
+    Idempotent and race-safe: it commits through :func:`_commit`, whose
+    ``build`` commits nothing once a snapshot exists, and a table that
+    already has a manifest returns before taking the lock. Returns the
     current snapshot, or None when the path holds no data (the first
     commit then creates v1 itself). After adoption the table is
     transactional: files landed in its directory out of band are read
     only once imported with :func:`add_files`."""
-    import uuid as _uuid
     from pathlib import Path
 
     live = Path(path)
     current = read_manifest(path)
     if current is not None or not live.is_dir():
         return current
-    with publish_lock(live):
-        current = read_manifest(path)
-        if current is not None:
-            return current
-        files = sorted(
-            set(_data_file_relpaths(live)) - _candidate_file_relpaths(live)
-        )
+
+    def build(current, _new):
+        files = [] if current is not None else _data_file_relpaths(live)
         if not files:
             return None
         layout = _hive_layout(path, files)
@@ -883,23 +869,23 @@ def adopt_table(
                 f"{list(partition_by)}: its files are laid out under "
                 f"{layout}"
             )
-        if schema is None:
-            spark = spark or _active_spark()
-            if spark is not None:
-                schema = (
-                    _reader(spark, None)
+        found = schema
+        if found is None:
+            session = spark or _active_spark()
+            if session is not None:
+                found = (
+                    _reader(session, None)
                     .option("basePath", path)
                     .parquet(*[str(live / f) for f in files])
                     .schema
                 )
-        return _commit_manifest(
-            live,
-            files,
-            layout,
-            None,
-            _uuid.uuid4().hex,
-            table_schema=schema.jsonValue() if schema is not None else None,
+        return dict(
+            files=files,
+            partition_by=layout,
+            table_schema=found.jsonValue() if found is not None else None,
         )
+
+    return _commit(live, None, build) or read_manifest(path)
 
 
 #: String min/max longer than this are not recorded in manifest file
@@ -1422,9 +1408,9 @@ def _commit_manifest(
 
 def _move_staged_in(live, staged, staged_files) -> list[str]:
     """Move a staged tree's files into the live tree under their
-    (globally unique) part names — the move-in step of :func:`_commit`
-    and :func:`begin_publish`. Old files are never touched; a name
-    collision means the same staged tree is being committed twice."""
+    (globally unique) part names — the move-in step of :func:`_commit`.
+    Old files are never touched; a name collision means the same staged
+    tree is being committed twice."""
     new_files = []
     for rel in staged_files:
         dst = live / rel
@@ -1575,7 +1561,8 @@ def _check_conflict(live, base, current, expected_version, commit) -> None:
 
 
 def _commit(live, base, build, *, expected_version=None, staged=None, branch=None):
-    """The commit step every lake write shares. Under :data:`publish_lock`
+    """The commit step every lake write shares, and the only code that
+    moves files into a table or writes a snapshot. Under :data:`publish_lock`
     it re-reads the current snapshot (the main pointer, or ``branch``'s
     head), calls ``build(current, new_files)`` for this commit's
     :func:`_commit_manifest` arguments past the parent, applies the
@@ -1624,8 +1611,12 @@ def _publish_manifest_commit(
     expected_version: int | None = None,
     full_rewrite: bool = False,
     app_versions: dict | None = None,
-) -> None:
-    """The body of :func:`publish_overwrite` (see its contract):
+    branch: str | None = None,
+) -> dict | None:
+    """The body of :func:`publish_overwrite` (see its contract), which
+    returns the new snapshot. ``branch`` commits onto that branch's
+    head instead of main (:func:`begin_publish`); the layout,
+    partition-evolution and CHECK refusals apply unchanged.
     ``app_versions`` (None = carry the parent's) lets a caller commit a
     WATERMARK atomically with the state it describes — the MV refresh
     records the source snapshot its stored aggregates reflect in the
@@ -1642,7 +1633,10 @@ def _publish_manifest_commit(
     silently survive in old-spec files."""
     from pathlib import Path
 
-    pre = read_manifest(str(live)) or {}
+    if branch is not None:
+        pre = branch_head(str(live), branch)
+    else:
+        pre = read_manifest(str(live)) or {}
     pb = list(partition_by or [])
     if pre and pre.get("partition_by", []) != pb and (pb or not full_rewrite):
         if not pb:
@@ -1701,9 +1695,55 @@ def _publish_manifest_commit(
                 column_mapping={} if full_rewrite else None,
             )
 
-        _commit(
-            live, pre, build, expected_version=expected_version, staged=st
+        return _commit(
+            live,
+            pre,
+            build,
+            expected_version=expected_version,
+            staged=st,
+            branch=branch,
         )
+
+
+def resolve_version(
+    path: str,
+    *,
+    version: int | None = None,
+    as_of_timestamp: float | None = None,
+    tag: str | None = None,
+    branch: str | None = None,
+) -> int | None:
+    """The snapshot version one time-travel selector names: ``version``
+    itself, the newest retained snapshot committed at or before
+    ``as_of_timestamp`` (:func:`version_at_timestamp`), the snapshot a
+    ``tag`` pins, or a ``branch``'s head (KeyError for an unknown
+    branch). None (no selector) means the current snapshot. Giving
+    more than one selector raises."""
+    given = [
+        name
+        for name, value in (
+            ("version=", version),
+            ("as_of_timestamp=", as_of_timestamp),
+            ("tag=", tag),
+            ("branch=", branch),
+        )
+        if value is not None
+    ]
+    if len(given) > 1:
+        raise ValueError(
+            "pass one of version=/as_of_timestamp=/tag=/branch= alone, "
+            f"not both {given[0]} and {given[1]}"
+        )
+    if branch is not None:
+        return branch_head(path, branch)["version"]
+    if tag is not None:
+        tags = list_tags(path)
+        if tag not in tags:
+            raise ValueError(f"no tag {tag!r} on {path} (tags: {sorted(tags)})")
+        return tags[tag]
+    if as_of_timestamp is not None:
+        return version_at_timestamp(path, as_of_timestamp)
+    return version
 
 
 def read_table(
@@ -1762,32 +1802,13 @@ def read_table(
             df = df.select(*schema.names)
         return df
 
-    if branch is not None:
-        if version is not None or as_of_timestamp is not None or tag is not None:
-            raise ValueError(
-                "pass branch= alone, not with version=/as_of_timestamp=/tag="
-            )
-        version = branch_head(path, branch)["version"]  # KeyError if unknown
-    if tag is not None:
-        if version is not None or as_of_timestamp is not None:
-            raise ValueError(
-                "pass tag= alone, not with version=/as_of_timestamp="
-            )
-        tags = list_tags(path)
-        if tag not in tags:
-            raise ValueError(
-                f"no tag {tag!r} on {path} (tags: {sorted(tags)})"
-            )
-        version = tags[tag]
-    if as_of_timestamp is not None:
-        # TIMESTAMP AS OF: resolve to the newest retained snapshot
-        # committed at or before the instant, then read it exactly like
-        # VERSION AS OF (tombstones, stats, schema all snapshot-scoped)
-        if version is not None:
-            raise ValueError(
-                "pass version= or as_of_timestamp=, not both"
-            )
-        version = version_at_timestamp(path, as_of_timestamp)
+    version = resolve_version(
+        path,
+        version=version,
+        as_of_timestamp=as_of_timestamp,
+        tag=tag,
+        branch=branch,
+    )
     m = read_manifest(path, version)
     if m is None:
         if version is not None:
@@ -2451,16 +2472,20 @@ def clone_table(src: str, dst: str, version: int | None = None) -> dict:
     replayed batches a sink owes a new table).
 
     Concurrency: committed snapshot JSONs are immutable, so no source
-    lock is taken (same posture as vacuum). If a concurrent vacuum
-    expires the snapshot mid-clone, a link raises FileNotFoundError and
-    the clone fails LOUDLY with no manifest at ``dst`` — nothing
-    partial is ever visible; re-run against a retained snapshot.
+    lock is taken (same posture as vacuum). The links are staged under
+    ``dst``'s invisible ``_staged_<txid>`` directory and committed as
+    ``dst``'s first snapshot through :func:`_commit`: a write that
+    lands at ``dst`` first wins, and the clone raises
+    :class:`ConcurrentLakeModificationError` with nothing moved in. If
+    a concurrent vacuum expires the source snapshot mid-clone, a link
+    raises FileNotFoundError and the clone fails LOUDLY with no
+    manifest at ``dst`` — nothing partial is ever visible; re-run
+    against a retained snapshot.
 
     ``version=None`` clones the current snapshot. The source must be
     manifest-committed; ``dst`` must be empty of data and manifests."""
     import os
     import shutil
-    import uuid as _uuid
     from pathlib import Path
 
     src_live = Path(src).resolve()
@@ -2487,23 +2512,28 @@ def clone_table(src: str, dst: str, version: int | None = None) -> dict:
             f"clone target {dst} already holds a table — refusing to "
             "adopt or overwrite"
         )
-    dst_live.mkdir(parents=True, exist_ok=True)
-    for f in m["files"]:
-        target = dst_live / f
-        target.parent.mkdir(parents=True, exist_ok=True)
-        try:
-            os.link(src_live / f, target)
-        except OSError:
-            # cross-device (or FS without hardlinks): fall back to a
-            # real copy — still a correct clone, just not zero-byte
-            shutil.copy2(src_live / f, target)
-    with publish_lock(dst_live):
-        snap = _commit_manifest(
-            dst_live,
-            m["files"],
-            m["partition_by"],
-            None,
-            _uuid.uuid4().hex,
+
+    def link(staged):
+        for f in m["files"]:
+            target = staged / f
+            target.parent.mkdir(parents=True, exist_ok=True)
+            try:
+                os.link(src_live / f, target)
+            except OSError:
+                # cross-device (or FS without hardlinks): fall back to a
+                # real copy — still a correct clone, just not zero-byte
+                shutil.copy2(src_live / f, target)
+
+    def build(_current, new_files):
+        if sorted(new_files) != sorted(m["files"]):
+            raise ValueError(
+                f"clone of {src} v{m['version']} staged {len(new_files)} "
+                f"of its {len(m['files'])} file(s) — a clone links only "
+                "*.parquet data files"
+            )
+        return dict(
+            files=m["files"],
+            partition_by=m["partition_by"],
             app_versions={},
             file_stats_hints=m.get("file_stats"),
             file_rows_hints=m.get("file_rows"),
@@ -2518,6 +2548,10 @@ def clone_table(src: str, dst: str, version: int | None = None) -> dict:
             file_spec=m.get("file_spec") or {},
             column_mapping=m.get("column_mapping", {}),
         )
+
+    dst_live.mkdir(parents=True, exist_ok=True)
+    with _stage(dst_live, link, None, None) as st:
+        snap = _commit(dst_live, None, build, expected_version=0, staged=st)
     return {
         "cloned_from_version": m["version"],
         "new_version": snap["version"],
@@ -3239,83 +3273,60 @@ def begin_publish(
     partition_by: list[str] | None = None,
     compression: str = "snappy",
 ) -> dict:
-    """Write-audit-publish, step 1 (the Iceberg WAP pattern): stage a
-    candidate snapshot WITHOUT committing it. The rewrite is written
-    and its files moved into the live tree under globally unique part
-    names — exactly a manifest publish — but the manifest POINTER is
-    untouched; instead the would-be file set is recorded as
-    ``_manifests/candidate_<txid>.json``. Readers cannot observe any
-    of it. Audit the candidate with :func:`read_candidate` (data
-    quality gates, row counts, constraint checks), then promote it
-    with :func:`commit_publish` — one atomic pointer commit — or
-    discard it with :func:`abort_publish`.
+    """Write-audit-publish, step 1 (the Iceberg WAP pattern): commit a
+    candidate onto its own audit branch ``wap_<txid>``
+    (:func:`create_branch`), leaving main and every main reader
+    untouched. Audit it with :func:`read_candidate` (data quality
+    gates, row counts, constraint checks), then publish it with
+    :func:`commit_publish` — one :func:`fast_forward` pointer replace —
+    or discard it with :func:`abort_publish`.
 
-    Same replace semantics as ``publish_overwrite``:
-    partitions present in ``result`` are replaced, the rest carried.
+    The branch commit is a :func:`publish_overwrite` commit: partitions
+    present in ``result`` are replaced, the rest carried, and the same
+    layout, partition-evolution and CHECK refusals apply. On a path no
+    writer has touched, an empty v1 (the batch's layout and schema) is
+    committed first so the branch has a base to fork from.
 
     100 TB design: the expensive Spark job (the staged write) happens
-    entirely outside the commit path and outside any lock; audits read
-    the candidate at full scan parallelism; promotion costs one JSON
-    pointer replace no matter how much data the candidate carries. A
-    crashed/abandoned candidate is invisible forever and reclaimed by
-    :func:`vacuum_manifests` once older than its
-    ``candidate_min_age_seconds`` grace (>= 1 hour by default — pass
-    an age longer than your longest audit).
+    outside any lock; audits read the candidate at full scan
+    parallelism; promotion is one pointer replace no matter how much
+    data the candidate carries. A pending candidate is a branch, so
+    :func:`vacuum_manifests` keeps its files until :func:`abort_publish`
+    or :func:`drop_branch` unpins them; an erasure (:func:`delete_rows`)
+    drops it like every other branch.
 
-    Returns the candidate dict (pass it to the other WAP calls)."""
-    import json
-    import os
-    import time
+    Returns ``{"candidate": <branch>, "base_version", "new_files"}``
+    (pass it to the other WAP calls)."""
+    import uuid as _uuid
     from pathlib import Path
 
     live = Path(path)
-    current = adopt_table(path, partition_by, spark=spark)
-    if current is not None and current["partition_by"] != list(
-        partition_by or []
-    ):
-        raise ValueError(
-            f"partition_by {list(partition_by or [])} does not match the "
-            f"table's committed layout {current['partition_by']}"
+    if adopt_table(path, partition_by, spark=spark) is None:
+        _commit(
+            live,
+            None,
+            lambda _current, _new: dict(
+                files=[],
+                partition_by=partition_by,
+                table_schema=result.schema.jsonValue(),
+            ),
+            expected_version=0,
         )
-    if current is not None and current.get("partition_specs"):
-        raise ValueError(
-            f"table at {path} is partition-evolved: a candidate's "
-            "replaced-partitions semantics cannot see old-spec files' "
-            "directories — compact_in_place() it first"
+    name = f"wap_{_uuid.uuid4().hex}"
+    base = create_branch(path, name)["base"]
+    try:
+        snap = _publish_manifest_commit(
+            live, result, partition_by, compression, None, branch=name
         )
-    cand_schema = result.schema.jsonValue()  # logical, like every commit
-    # candidates face the same CHECK gate as direct commits: WAP is for
-    # bespoke audits, not a constraint bypass (a constraint added
-    # between begin and commit is caught by commit_publish's
-    # base_version check — constraint changes are commits, and so are
-    # renames)
-    with _stage(live, result, partition_by, current, compression) as st:
-        new_files = _move_staged_in(live, st.dir, st.files)
-    txid = st.txid
-    prev_files = current["files"] if current else []
-    if partition_by:
-        replaced = {str(Path(f).parent) for f in new_files}
-        carried = [
-            f for f in prev_files if str(Path(f).parent) not in replaced
-        ]
-    else:
-        carried = []
-    cand = {
-        "candidate": txid,
-        "base_version": current["version"] if current else 0,
-        "partition_by": list(partition_by or []),
-        "files": sorted([*carried, *new_files]),
-        "new_files": sorted(new_files),
-        "schema": cand_schema,
-        "column_mapping": dict((current or {}).get("column_mapping", {})),
-        "created_at": time.time(),
+    except BaseException:
+        drop_branch(path, name)
+        raise
+    added = snap["file_added"]
+    return {
+        "candidate": name,
+        "base_version": base,
+        "new_files": sorted(f for f in added if added[f] == snap["version"]),
     }
-    cpath = live / "_manifests"
-    cpath.mkdir(parents=True, exist_ok=True)
-    tmp = cpath / f".tmp_cand_{txid}"
-    tmp.write_text(json.dumps(cand, sort_keys=True))
-    os.replace(tmp, cpath / f"candidate_{txid}.json")
-    return cand
 
 
 def read_candidate(
@@ -3324,88 +3335,41 @@ def read_candidate(
     candidate: dict,
     schema: T.StructType | None = None,
 ) -> DataFrame:
-    """Read the table AS IF the candidate snapshot were committed — the
-    audit-side read of write-audit-publish. Carried files keep the
-    current snapshot's merge-on-read tombstones (the candidate's new
-    files are clean by construction), exactly the visibility
-    :func:`commit_publish` would produce."""
-    current = read_manifest(path) or {}
-    if schema is None and candidate.get("schema"):
-        schema = T.StructType.fromJson(candidate["schema"])
-    synth = {
-        "files": candidate["files"],
-        "file_added": {
-            **current.get("file_added", {}),
-            # new files postdate every existing tombstone scope
-            **{
-                f: current.get("version", 0) + 1
-                for f in candidate["new_files"]
-            },
-        },
-        "delete_predicates": current.get("delete_predicates", []),
-        # the mapping the candidate was STAGED under, not the live one:
-        # a rename committed mid-audit must fail loudly (below) rather
-        # than silently NULL-fill the audited column
-        "column_mapping": candidate.get("column_mapping", {}),
-    }
-    if current.get("column_mapping", {}) != candidate.get(
-        "column_mapping", {}
-    ):
-        raise ConcurrentLakeModificationError(
-            f"table at {path} renamed columns since this candidate was "
-            "staged — the audit would read wrong data; abort and re-stage"
-        )
-    df = _masked_scan(spark, path, synth, candidate["files"], schema)
-    if schema is not None and df.columns != list(schema.names):
-        df = df.select(*schema.names)
-    return df
+    """Read the table AS IF the candidate were published — the audit
+    read of write-audit-publish: the candidate branch's head, with the
+    visibility (tombstones, rename mapping) :func:`commit_publish`
+    would publish."""
+    return read_table(spark, path, schema, branch=candidate["candidate"])
 
 
 def commit_publish(path: str, candidate: dict) -> dict:
-    """Write-audit-publish, step 3: atomically promote an audited
-    candidate. Optimistic concurrency against the base the candidate
-    was staged from — if any writer committed since
-    :func:`begin_publish`, the audit no longer describes what
-    promotion would produce, so this raises
-    :class:`ConcurrentLakeModificationError` (re-stage and re-audit).
-    The candidate marker is consumed."""
-    from pathlib import Path
-
-    live = Path(path)
-    snap = _commit(
-        live,
-        None,
-        lambda _current, _new: dict(
-            files=candidate["files"],
-            partition_by=candidate["partition_by"] or None,
-            table_schema=candidate.get("schema"),
-        ),
-        expected_version=candidate["base_version"],
-    )
-    cpath = live / "_manifests" / f"candidate_{candidate['candidate']}.json"
-    cpath.unlink(missing_ok=True)
+    """Write-audit-publish, step 3: atomically publish an audited
+    candidate with :func:`fast_forward`, then drop its branch. If any
+    writer committed to main since :func:`begin_publish`, the audit no
+    longer describes what promotion would produce, so this raises
+    :class:`ConcurrentLakeModificationError` (abort, re-stage and
+    re-audit). Returns the published snapshot."""
+    snap = fast_forward(path, candidate["candidate"])
+    drop_branch(path, candidate["candidate"])
     return snap
 
 
 def abort_publish(path: str, candidate: dict) -> dict:
-    """Write-audit-publish abort: delete the candidate's moved-in
-    files (only its NEW files — carried files belong to committed
-    snapshots) and its marker. The live table was never touched."""
+    """Write-audit-publish abort: drop the candidate's branch and delete
+    its NEW files (carried files belong to committed snapshots). Main
+    was never touched."""
     from pathlib import Path
 
     live = Path(path)
+    drop_branch(path, candidate["candidate"])
     removed = 0
     for rel in candidate["new_files"]:
-        p = live / rel
         try:
-            p.unlink()
+            (live / rel).unlink()
             removed += 1
         except OSError:
             continue
     _prune_empty_dirs(live)
-    (
-        live / "_manifests" / f"candidate_{candidate['candidate']}.json"
-    ).unlink(missing_ok=True)
     return {"files_removed": removed}
 
 
@@ -3448,9 +3412,9 @@ def verify_table(path: str, deep: bool = False) -> dict:
     footer read each when deep), no data scan; runs safely against a
     live table (publishes never delete committed files). Returns
     ``{"ok", "snapshots_checked", "files_checked", "missing", "empty",
-    "stat_mismatches", "orphans", "candidate_files"}`` — ``ok`` ignores
-    orphans; staged write-audit-publish candidates' files are listed
-    under ``candidate_files`` (pending audit), never as orphans."""
+    "stat_mismatches", "orphans"}`` — ``ok`` ignores orphans. A pending
+    write-audit-publish candidate is a branch, so its files are
+    referenced, never orphans."""
     from pathlib import Path
 
     live = Path(path)
@@ -3459,28 +3423,10 @@ def verify_table(path: str, deep: bool = False) -> dict:
         raise ValueError(
             f"table at {path} is not manifest-committed — nothing to verify"
         )
-    chain: list[dict] = [current]
-    while chain[-1]["parent"] is not None:
-        try:
-            chain.append(read_manifest(path, chain[-1]["parent"]))
-        except FileNotFoundError:
-            break  # older history vacuumed
-    # tag-pinned snapshots are retained (vacuum_manifests keeps them)
-    # even once vacuum has removed the intermediate parent chain — the
-    # audit must use vacuum's retention definition, or a tagged
-    # training corpus' files get reported as vacuumable orphans and
-    # deep stat checks skip them
-    for v in sorted(set(list_tags(path).values()) - {m["version"] for m in chain}):
-        try:
-            chain.append(read_manifest(path, v))
-        except FileNotFoundError:
-            continue  # dangling tag — pre-existing damage, not new debris
-    # ... and so are branch-pinned chains (unpublished backfills)
-    seen = {m["version"] for m in chain}
-    for m in _branch_pinned_manifests(path):
-        if m["version"] not in seen:
-            chain.append(m)
-            seen.add(m["version"])
+    # the audit must use vacuum's retention definition, or a tagged
+    # training corpus' files get reported as vacuumable orphans and deep
+    # stat checks skip them
+    chain = _with_pins(path, list(_retained_chain(path, current)))
     referenced: dict[str, dict] = {}
     for m in chain:
         for f in m["files"]:
@@ -3505,13 +3451,7 @@ def verify_table(path: str, deep: bool = False) -> dict:
                              "recorded": bounds,
                              "actual": actual.get(col)}
                         )
-    # staged WAP candidates' files are pending-audit data, not debris:
-    # report them separately so an operator doesn't "clean up" a
-    # candidate mid-audit (vacuum_manifests protects fresh ones too)
-    cand_files = _candidate_file_relpaths(live)
-    orphans = sorted(
-        set(_data_file_relpaths(live)) - set(referenced) - cand_files
-    )
+    orphans = sorted(set(_data_file_relpaths(live)) - set(referenced))
     return {
         "ok": not (missing or empty or mismatches),
         "snapshots_checked": [m["version"] for m in chain],
@@ -3520,7 +3460,6 @@ def verify_table(path: str, deep: bool = False) -> dict:
         "empty": empty,
         "stat_mismatches": mismatches,
         "orphans": orphans,
-        "candidate_files": sorted(cand_files - set(referenced)),
     }
 
 
@@ -3529,7 +3468,6 @@ def vacuum_manifests(
     keep_last: int = 1,
     min_age_seconds: float = 0.0,
     drop_tags: bool = False,
-    candidate_min_age_seconds: float | None = None,
     dry_run: bool = False,
     older_than: float | None = None,
 ) -> dict:
@@ -3540,10 +3478,9 @@ def vacuum_manifests(
     analog is S3 lifecycle rules on noncurrent object versions
     (main.tf:25-30). ``min_age_seconds`` protects a concurrent
     publish's moved-but-uncommitted files (same contract as
-    vacuum_publish_artifacts); write-audit-publish candidates get
-    ``candidate_min_age_seconds`` (default: at least one hour) so a
-    routine retention run cannot destroy a candidate mid-audit.
-    Returns counts.
+    vacuum_publish_artifacts). Branches, write-audit-publish candidates
+    included, pin their chains, so a routine retention run cannot
+    destroy a candidate mid-audit. Returns counts.
 
     ``older_than`` (epoch seconds; round-15 — the
     ``vacuum_max_snapshot_age_seconds`` analog, and the shape of the
@@ -3580,7 +3517,6 @@ def vacuum_manifests(
         return {
             "manifests_removed": 0,
             "files_removed": 0,
-            "candidates_removed": 0,
             "kept_versions": [],
         }
     keep: list[dict] = []
@@ -3599,59 +3535,18 @@ def vacuum_manifests(
             keep.append(m)
         elif older_than is None:
             break  # count-only: the chain is newest-first, all done
-    # tags PIN retention (tag_snapshot): tagged snapshots and their
-    # files survive any keep_last horizon. drop_tags=True is the
-    # erasure override — delete_rows passes it so a right-to-be-
-    # forgotten truncation cannot be pinned around.
+    # tags and branches PIN retention (tag_snapshot, create_branch):
+    # their snapshots and files survive any keep_last horizon.
+    # drop_tags=True is the erasure override — delete_rows passes it so
+    # a right-to-be-forgotten truncation cannot be pinned around.
     if drop_tags and not dry_run:
         (live / "_manifests" / "_tags.json").unlink(missing_ok=True)
         (live / "_manifests" / "_branches.json").unlink(missing_ok=True)
     elif not drop_tags:
-        kept_now = {m["version"] for m in keep}
-        for v in sorted(set(list_tags(path).values()) - kept_now):
-            try:
-                keep.append(read_manifest(path, v))
-            except FileNotFoundError:
-                continue  # dangling tag (pre-existing damage): nothing to pin
-        # branches pin their whole unpublished chain (head -> fork base):
-        # an in-progress multi-commit backfill must survive routine
-        # retention exactly like a mid-audit WAP candidate does
-        kept_now = {m["version"] for m in keep}
-        for m in _branch_pinned_manifests(path):
-            if m["version"] not in kept_now:
-                keep.append(m)
-                kept_now.add(m["version"])
+        keep = _with_pins(path, keep)
     kept_versions = [m["version"] for m in keep]
     referenced = {f for m in keep for f in m["files"]}
     cutoff = time.time() - min_age_seconds
-    # in-flight write-audit-publish candidates younger than the age
-    # guard protect their files (an audit may be reading them); older
-    # markers are abandoned begins — drop the marker and let the
-    # unreferenced-file sweep below reclaim their data. Candidates get
-    # their OWN grace period, never below one hour by default: the
-    # routine retention call is vacuum_manifests(keep_last=N) with no
-    # min_age (cutoff = now), and a mid-audit candidate must survive
-    # that — destroying a live candidate is data loss for the WAP
-    # writer. Pass candidate_min_age_seconds explicitly to override
-    # (0.0 reclaims everything, for disaster cleanup).
-    cand_cutoff = time.time() - (
-        candidate_min_age_seconds
-        if candidate_min_age_seconds is not None
-        else max(min_age_seconds, 3600.0)
-    )
-    import json as _json
-
-    candidates_removed = 0
-    for cp in (live / "_manifests").glob("candidate_*.json"):
-        try:
-            if cp.stat().st_mtime > cand_cutoff:
-                referenced |= set(_json.loads(cp.read_text())["files"])
-            else:
-                if not dry_run:
-                    cp.unlink()
-                candidates_removed += 1
-        except (OSError, ValueError, KeyError):
-            continue
     files_removed = 0
     for rel in _data_file_relpaths(live):
         if rel in referenced:
@@ -3688,7 +3583,6 @@ def vacuum_manifests(
     return {
         "manifests_removed": manifests_removed,
         "files_removed": files_removed,
-        "candidates_removed": candidates_removed,
         "kept_versions": kept_versions,
         "dry_run": dry_run,
     }

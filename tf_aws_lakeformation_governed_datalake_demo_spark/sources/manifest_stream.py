@@ -238,6 +238,15 @@ class LakeManifestBatchReader(_ManifestReaderMixin, DataSourceReader):
             raise FileNotFoundError(
                 f"table at {self._path} is not manifest-committed"
             )
+        if m.get("delete_predicates"):
+            # files are read raw: rows a merge-on-read delete hid would
+            # come back
+            raise ValueError(
+                f"snapshot v{m['version']} of {self._path} carries "
+                f"{len(m['delete_predicates'])} merge-on-read delete "
+                "tombstone(s) that a raw file read would ignore — read "
+                "it with read_table, or purge_deleted_rows first"
+            )
         return [_FilePartition(f) for f in m["files"]]
 
 
