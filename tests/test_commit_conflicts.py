@@ -203,3 +203,35 @@ def test_clone_racing_a_first_write_at_its_target_conflicts(spark, tmp_path):
     report = lk.verify_table(dst)
     assert report["ok"] and not report["orphans"], report
     assert not list(Path(dst).glob("_staged_*"))
+
+
+def test_retrain_ivf_racing_an_append_conflicts(spark, tmp_path):
+    """An append that commits while an IVF retrain is staged wins: the
+    retrain replaces every file of the snapshot it read, so it raises
+    instead of committing over the append and dropping its vectors."""
+    from tf_aws_lakeformation_governed_datalake_demo_spark.operators.similarity import (
+        retrain_ivf,
+    )
+
+    ddl = "vec_id long, embedding array<double>, label int"
+    path = str(tmp_path / "ivf")
+    seed = [(i, [1.0, float(i)], i % 2) for i in range(6)]
+    lk.publish_overwrite(spark, path, spark.createDataFrame(seed, ddl), ["label"])
+    after = {}
+
+    def other():
+        lk.append_rows(
+            spark, path, spark.createDataFrame([(99, [0.0, 1.0], 0)], ddl), ["label"]
+        )
+        after["manifest"] = lk.read_manifest(path)
+
+    with _racing(other) as fired:
+        with pytest.raises(lk.ConcurrentLakeModificationError):
+            retrain_ivf(spark, path)
+    assert fired
+    assert lk.read_manifest(path) == after["manifest"]
+    ids = sorted(r.vec_id for r in lk.read_table(spark, path).collect())
+    assert ids == [*range(6), 99]
+    report = lk.verify_table(path)
+    assert report["ok"] and not report["orphans"], report
+    assert not list(Path(path).glob("_staged_*"))

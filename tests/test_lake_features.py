@@ -123,65 +123,6 @@ def test_load_events_in_foreign_session(spark, sf_dir):
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
 
 
-def test_compact_parquet_small_files(spark, sf_dir, tmp_path):
-    from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
-        compact_parquet, load,
-    )
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    li = load(spark, sf_dir, "lineitem")
-    li.repartition(64).write.parquet(src)  # simulate drip ingest
-    before, after = compact_parquet(spark, src, dst)
-    assert before == 64
-    assert after <= 2  # sf0.001 lineitem is far below one target file
-    a = spark.read.parquet(src).agg(F.count("*"), F.sum("l_quantity")).first()
-    b = spark.read.parquet(dst).agg(F.count("*"), F.sum("l_quantity")).first()
-    assert tuple(a) == tuple(b)
-
-
-def test_compact_parquet_partitioned(spark, sf_dir, tmp_path):
-    from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
-        compact_parquet, load,
-    )
-
-    src = str(tmp_path / "frag_part")
-    dst = str(tmp_path / "comp_part")
-    o = load(spark, sf_dir, "orders")
-    o.repartition(32).write.partitionBy("o_orderpriority").parquet(src)
-    before, after = compact_parquet(spark, src, dst, partition_by=["o_orderpriority"])
-    assert after < before
-    assert spark.read.parquet(dst).count() == o.count()
-    # hive layout preserved
-    import pathlib
-    assert any("o_orderpriority=" in p.name for p in pathlib.Path(dst).iterdir())
-
-
-def test_compact_parquet_partitioned_bounds_hot_partition(spark, sf_dir, tmp_path):
-    # A tiny target_file_bytes must split a hot partition into several
-    # files (maxRecordsPerFile), not leave one file per partition value
-    # (round-2 ADVICE: the option was documented but never set).
-    import pathlib
-
-    from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
-        compact_parquet, load,
-    )
-
-    src = str(tmp_path / "frag_hot")
-    dst = str(tmp_path / "comp_hot")
-    o = load(spark, sf_dir, "orders")
-    o.repartition(8).write.partitionBy("o_orderpriority").parquet(src)
-    compact_parquet(
-        spark, src, dst, target_file_bytes=16 << 10,
-        partition_by=["o_orderpriority"],
-    )
-    part_dirs = [p for p in pathlib.Path(dst).iterdir() if "=" in p.name]
-    files_per_part = {
-        p.name: len(list(p.glob("*.parquet"))) for p in part_dirs
-    }
-    assert max(files_per_part.values()) > 1
-
-
 def test_merge_into_partitioned_upsert(spark, sf_dir):
     # Delta-MERGE semantics on plain parquet: replaced + inserted rows
     # land, untouched rows survive, and ONLY touched partitions rewrite.
@@ -786,6 +727,34 @@ def test_compact_in_place_preserves_rows(spark, sf_dir, tmp_path):
     n_before, n_after = compact_in_place(spark, path, partition_by=["bucket"])
     assert n_after < n_before
     assert sorted(map(tuple, read_table(spark, path).collect())) == before
+
+
+def test_compact_in_place_refuses_a_different_layout(spark, tmp_path):
+    """compact_in_place keeps the committed layout like every other
+    rewrite: ``partition_by=None`` on a partitioned table, or another
+    column, is refused before anything is staged, never a silent
+    re-layout."""
+    from pathlib import Path
+
+    from tf_aws_lakeformation_governed_datalake_demo_spark.sources.lake import (
+        compact_in_place,
+        publish_overwrite,
+        read_manifest,
+    )
+
+    path = str(tmp_path / "t")
+    publish_overwrite(
+        spark,
+        path,
+        spark.createDataFrame([(1, "a"), (2, "b")], "id long, grp string"),
+        ["grp"],
+    )
+    m = read_manifest(path)
+    for wrong in (None, ["id"]):
+        with pytest.raises(ValueError, match="committed layout"):
+            compact_in_place(spark, path, partition_by=wrong)
+    assert read_manifest(path) == m
+    assert not list(Path(path).glob("_staged_*"))
 
 
 def test_scd2_as_of_prunes_future_month_partitions(spark, sf_dir, tmp_path):

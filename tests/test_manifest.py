@@ -1516,9 +1516,11 @@ def test_engine_sql_tag_as_of_governed(spark, tmp_path):
 def test_optimize_binpack_partial_rewrite_and_guards(spark, tmp_path):
     """Bin-packing rewrites ONLY the small-file tail: a big file keeps
     its exact relpath (and inherited stats/sequence number); small
-    siblings pack; the guards fail closed on tombstoned, renamed, and
-    spec-evolved tables with the designated cure in the message."""
-    import pytest as _pytest
+    siblings pack. Tombstoned, renamed and spec-evolved tables pack
+    too, reading back the same rows: packed rows leave the deleted
+    ones out, packed files keep the physical column names, and packed
+    retired-spec files land under the current spec."""
+    import pyarrow.parquet as pq
 
     from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
         append_rows,
@@ -1531,6 +1533,9 @@ def test_optimize_binpack_partial_rewrite_and_guards(spark, tmp_path):
 
     def mk(rows):
         return spark.createDataFrame(rows, "id long, grp string, v long")
+
+    def rows_of(p):
+        return sorted(map(tuple, read_table(spark, p).collect()))
 
     path = str(tmp_path / "t")
     # one BIG file per partition (above target) + small appended files
@@ -1552,20 +1557,65 @@ def test_optimize_binpack_partial_rewrite_and_guards(spark, tmp_path):
     again = optimize_binpack(spark, path, target_rows=40)
     assert again["version"] is None and again["files_rewritten"] == 0
 
-    # guards, each naming its cure
+    # tombstoned: packing every covered file clears the tombstone
     delete_rows_mor(spark, path, "id = 0")
-    with _pytest.raises(ValueError, match="purge_deleted_rows"):
-        optimize_binpack(spark, path)
+    before = rows_of(path)
+    out = optimize_binpack(spark, path)
+    assert out["files_rewritten"] == 2 and out["files_after"] == 1
+    assert rows_of(path) == before
+    assert not read_manifest(path).get("delete_predicates")
+    # renamed: grp=a packs, grp=b is carried, the mapping stays
     p2 = str(tmp_path / "t2")
-    publish_overwrite(spark, p2, mk([(1, "a", 1)]), ["grp"])
+    publish_overwrite(spark, p2, mk([(1, "a", 1), (3, "b", 3)]), ["grp"])
+    append_rows(spark, p2, mk([(2, "a", 2)]), ["grp"])
     rename_column(p2, "v", "val")
-    with _pytest.raises(ValueError, match="compact_in_place"):
-        optimize_binpack(spark, p2)
+    before, mapping = rows_of(p2), read_manifest(p2)["column_mapping"]
+    assert optimize_binpack(spark, p2)["files_rewritten"] == 2
+    m = read_manifest(p2)
+    assert m["column_mapping"] == mapping == {"val": "v"}
+    for f in m["files"]:
+        assert "v" in pq.ParquetFile(f"{p2}/{f}").schema_arrow.names
+    assert rows_of(p2) == before
+    # spec-evolved: the retired-spec grp=a files pack under the current
+    # (unpartitioned) spec, so every live file is on it and it heals
     p3 = str(tmp_path / "t3")
     publish_overwrite(spark, p3, mk([(1, "a", 1)]), ["grp"])
+    append_rows(spark, p3, mk([(2, "a", 2)]), ["grp"])
     evolve_partitioning(p3, [])
-    with _pytest.raises(ValueError, match="compact_in_place"):
-        optimize_binpack(spark, p3)
+    append_rows(spark, p3, mk([(3, "b", 3)]).coalesce(1))  # carried
+    m_before, before = read_manifest(p3), rows_of(p3)
+    assert "partition_specs" in m_before
+    assert optimize_binpack(spark, p3)["files_rewritten"] == 2
+    m = read_manifest(p3)
+    packed = set(m["files"]) - set(m_before["files"])
+    assert packed and not any("=" in f for f in packed)
+    assert "partition_specs" not in m and m["partition_by"] == []
+    assert rows_of(p3) == before
+
+
+def test_optimize_binpack_caps_files_at_target_rows(spark, tmp_path):
+    """A packed partition directory is split into files of at most
+    ``target_rows`` rows, not written as one file per directory."""
+    from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
+        append_rows,
+        optimize_binpack,
+    )
+
+    path = str(tmp_path / "t")
+    for k in range(4):
+        append_rows(
+            spark,
+            path,
+            spark.createDataFrame(
+                [(10 * k + i, "a", i) for i in range(10)],
+                "id long, grp string, v long",
+            ).coalesce(1),
+            ["grp"],
+        )
+    out = optimize_binpack(spark, path, target_rows=25)
+    assert out["files_rewritten"] == 4 and out["files_after"] == 2
+    assert sorted(read_manifest(path)["file_rows"].values()) == [15, 25]
+    assert read_table(spark, path).count() == 40
 
 
 def test_expire_snapshots_age_horizon_and_union(spark, tmp_path):

@@ -2853,10 +2853,15 @@ class Engine:
           (sources.lake.optimize_binpack): rewrites only the
           below-target tail per partition dir, carries everything
           else by name; the maintenance-cadence op between full
-          compactions.
+          compactions. Works on tombstoned, renamed and
+          partition-evolved tables: packed files leave deleted rows
+          out, keep physical column names and take the current spec.
         - ``"compact"`` — in-place small-file compaction
-          (sources.lake.compact_in_place; ``target_file_bytes=`` kwarg),
-          partitioned by the table's declared partition keys;
+          (sources.lake.compact_in_place; ``target_file_bytes=`` kwarg)
+          of every file, partitioned by the table's declared partition
+          keys, which must match the committed layout; it also purges
+          tombstones, heals a rename mapping and migrates retired
+          partition specs.
         - ``"expire_versions"`` — SCD2 retention
           (sources.lake.expire_scd2_versions; ``before=`` required,
           plus its column kwargs);
@@ -3017,8 +3022,6 @@ class Engine:
             return {"files_before": before, "files_after": after}
         if action == "optimize_binpack":
             # targeted bin-pack: rewrites only the small-file tail
-            # (fail-closed on tombstones/rename/spec evolution — the
-            # lake layer names the cure)
             return _lake.optimize_binpack(spark, loc, **kwargs)
         if action == "expire_versions":
             # same layout derivation as delete_rows: the catalog knows

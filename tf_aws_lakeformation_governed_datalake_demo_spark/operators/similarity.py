@@ -88,7 +88,9 @@ def retrain_ivf(
     recomputes the quantizer from the CURRENT index contents
     (spherical-k-means Lloyd iterations seeded from the per-cell
     means), reassigns every vector to its nearest retrained centroid,
-    and rewrites the cell-partitioned index atomically.
+    and rewrites the cell-partitioned index atomically. A write that
+    commits to the index during the retrain makes it raise
+    ``ConcurrentLakeModificationError`` instead of dropping that write.
 
     The index contract is the family's at-rest layout: a manifest (or
     plain) table with columns ``(vec_id, embedding, label)``
@@ -102,11 +104,12 @@ def retrain_ivf(
     the rewrite is one partitioned atomic publish — the same cost
     class as OPTIMIZE cluster_by, run on the maintenance cadence, not
     the ingest path. Returns ``{"cells", "moved", "rows"}``."""
-    from ..sources.lake import adopt_table, publish_overwrite, read_table
+    from ..sources.lake import _replace_files, adopt_table, read_table
 
-    if adopt_table(path, ["label"], spark=spark) is None:
+    m = adopt_table(path, ["label"], spark=spark)
+    if m is None:
         raise ValueError(f"IVF index at {path} holds no data")
-    cur = read_table(spark, path)
+    cur = read_table(spark, path, version=m["version"])
     need = {"vec_id", "embedding", "label"}
     if not need <= set(cur.columns):
         raise ValueError(
@@ -148,9 +151,10 @@ def retrain_ivf(
         .filter(F.col("label") != F.col("old_label"))
         .count()
     )
-    # full_rewrite: the reassigned frame IS the whole index — cells a
-    # vector vacated must drop their stale rows, never be carried
-    publish_overwrite(spark, path, cells, ["label"], full_rewrite=True)
+    # the reassigned frame replaces every file: cells a vector vacated
+    # drop its stale rows, and a commit since m raises instead of being
+    # overwritten
+    _replace_files(path, m, m["files"], cells)
     return {
         "cells": cells.select("label").distinct().count(),
         "moved": moved,

@@ -1501,7 +1501,7 @@ def lake_optimize_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact_in_place cluster_by): at 100 TB, clustering at OPTIMIZE
     time is what keeps band queries from scanning every file of every
     partition. Doubles as the merge-on-read tombstone purge (the
-    rewrite reads the masked table)."""
+    rewrite reads the masked table and replaces every file)."""
     from pathlib import Path
 
     from ..sources import (
@@ -1874,9 +1874,10 @@ def lake_branch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "Targeted small-file OPTIMIZE (round-9, the Delta bin-packing "
     "semantics): a fragmented table (16-way-shuffled seed publish + "
-    "three appends) is bin-packed per partition directory — ONLY files "
-    "below the row target rewrite, every untouched file is carried by "
-    "name, and the commit is one snapshot. The body asserts the file "
+    "four appends) is bin-packed: ONLY files below the row target "
+    "rewrite, read once and written once under the current layout, "
+    "every untouched file is carried by name, and the commit is one "
+    "snapshot. The body asserts the file "
     "count collapsed, the rewrite touched only the small tail, and the "
     "pre-OPTIMIZE snapshot stays readable; the oracle is the plain "
     "per-language profile (layout changes I/O, never results).",
@@ -1885,11 +1886,10 @@ def lake_optimize_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale: planning is O(#files) arithmetic on the manifest's own
     recorded row counts (zero I/O); the rewrite reads only small-file
     bytes — at 100 TB that is the streaming-append tail, not the
-    table. compact_in_place stays the FULL-rewrite migration tool
-    (spec evolution, rename healing, clustering); this is the
-    maintenance-cadence op between those migrations. Fail-closed
-    interactions (tombstones, rename mapping, spec evolution) are
-    pinned in tests/test_manifest.py."""
+    table. compact_in_place is the same file replacement over EVERY
+    file (rename healing, clustering); this is the maintenance-cadence
+    op between those. Packing on tombstoned, renamed and spec-evolved
+    tables is pinned in tests/test_manifest.py."""
     from ..sources import append_rows, optimize_binpack, publish_overwrite
     from ..sources.lake import read_manifest, read_table
 

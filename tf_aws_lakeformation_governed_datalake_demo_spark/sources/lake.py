@@ -78,56 +78,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_bytes: int = 128 << 20,
-    partition_by: list[str] | None = None,
-    compression: str = "snappy",
-) -> tuple[int, int]:
-    """Small-file compaction: rewrite ``src`` into ~target-size files at
-    ``dst``. Returns (files_before, files_after).
-
-    The 100 TB failure mode this fixes: streaming/incremental ingest
-    leaves thousands of KB-scale files per partition, and every scan pays
-    per-file open/footer costs that dwarf the read itself. Sizing the
-    repartition by observed bytes (not row counts) keeps output files
-    near the scan-optimal ``spark.sql.files.maxPartitionBytes``.
-    """
-    import math
-    from pathlib import Path
-
-    files = [p for p in Path(src).rglob("*.parquet") if p.is_file()]
-    total = sum(p.stat().st_size for p in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(src)
-    if partition_by:
-        # One shuffle task per partition value would leave a hot partition
-        # as one giant file; maxRecordsPerFile (derived from the observed
-        # bytes/row of the source) rolls each task's output into
-        # ~target-size files instead. count() on parquet is metadata-only.
-        n_rows = df.count()
-        bytes_per_row = max(1.0, total / max(1, n_rows))
-        max_records = max(1, int(target_file_bytes / bytes_per_row))
-        writer = (
-            df.repartition(*partition_by)
-            .write.mode("overwrite")
-            .option("compression", compression)
-            .option("maxRecordsPerFile", max_records)
-            .partitionBy(*partition_by)
-        )
-    else:
-        writer = (
-            df.repartition(n_out)
-            .write.mode("overwrite")
-            .option("compression", compression)
-        )
-    writer.parquet(dst)
-    n_after = sum(1 for p in Path(dst).rglob("*.parquet") if p.is_file())
-    return len(files), n_after
-
-
 def _reader(spark: SparkSession, schema: T.StructType | None):
     """Lake read path shared by merge/SCD2/as-of: a declared schema (the
     catalog-backed at-scale path — ZERO footer reads) when given, else a
@@ -260,12 +210,11 @@ def publish_overwrite(
     manifest: bool = True,
     bloom_cols: list[str] | None = None,
     expected_version: int | None = None,
-    full_rewrite: bool = False,
     app_versions: dict | None = None,
 ) -> None:
     """Atomic (slice) rewrite of a lake table as one manifest commit —
     the commit protocol under merge_into / scd2_apply / delete_rows /
-    update_rows / compact_in_place and every full-table publish.
+    update_rows and every full-table publish.
 
     The reference's lake inherits S3's atomic object PUT + bucket
     versioning (main.tf:25-30), so its readers never observe a torn
@@ -294,9 +243,8 @@ def publish_overwrite(
        :func:`vacuum_publish_artifacts` reclaims crashed staging.
 
     ``partition_by`` must equal the table's committed layout (``None``
-    on a partitioned table included; checked before staging) unless
-    ``full_rewrite=True`` declares ``result`` to be the whole table.
-    Touched partitions whose rewrite produced ZERO rows have no staged
+    on a partitioned table included; checked before staging). Touched
+    partitions whose rewrite produced ZERO rows have no staged
     directory — a deletion-capable caller names them in
     ``drop_missing_partitions`` so their files leave the snapshot
     instead of being carried.
@@ -337,7 +285,6 @@ def publish_overwrite(
         drop_missing_partitions,
         bloom_cols=bloom_cols,
         expected_version=expected_version,
-        full_rewrite=full_rewrite,
         app_versions=app_versions,
     )
 
@@ -1195,6 +1142,16 @@ def _masked_scan(
     return out
 
 
+def _read_files(spark: SparkSession, path: str, m: dict, files: list[str]):
+    """``files`` of snapshot ``m`` as the table reads them: under its
+    recorded schema and column order, tombstones applied
+    (:func:`_masked_scan`) — what a file rewrite stages."""
+    if not m.get("schema"):
+        return _masked_scan(spark, path, m, files, None)
+    schema = T.StructType.fromJson(m["schema"])
+    return _masked_scan(spark, path, m, files, schema).select(*schema.names)
+
+
 def _commit_manifest(
     live,
     files: list[str],
@@ -1423,14 +1380,15 @@ def _move_staged_in(live, staged, staged_files) -> list[str]:
 
 
 @contextmanager
-def _stage(live, df, partition_by, base, compression="snappy"):
+def _stage(live, df, partition_by, base, compression="snappy", **options):
     """Stage a batch invisibly under ``<live>/_staged_<txid>`` — the
     staged write every lake writer shares. ``df`` arrives under logical
     column names and is written under ``base``'s frozen physical ones
-    (:func:`rename_column`); a callable instead fills the directory
-    itself (:func:`add_files` links landed files, :func:`optimize_binpack`
-    packs per directory). The staged files are then checked against
-    ``base``'s CHECK constraints. Yields ``(dir, files, txid)`` and
+    (:func:`rename_column`), with ``options`` as extra parquet writer
+    options; a callable instead fills the directory itself
+    (:func:`add_files` and :func:`clone_table` link files). The staged
+    files are then checked against ``base``'s CHECK constraints. Yields
+    ``(dir, files, txid)`` and
     removes the directory on exit, whether or not the commit moved its
     files in; a failure while filling it leaves it, like a crash would,
     for :func:`vacuum_publish_artifacts`."""
@@ -1448,6 +1406,7 @@ def _stage(live, df, partition_by, base, compression="snappy"):
             _to_physical_df(df, base)
             .write.mode("overwrite")
             .option("compression", compression)
+            .options(**options)
         )
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -1601,6 +1560,54 @@ def _commit(live, base, build, *, expected_version=None, staged=None, branch=Non
         return snap
 
 
+def _replace_files(
+    path: str,
+    m: dict,
+    files: list[str],
+    rows: DataFrame,
+    compression: str = "snappy",
+    **options,
+) -> dict:
+    """Replace ``files`` of snapshot ``m`` with ``rows`` — the one file
+    rewrite under OPTIMIZE, compaction, tombstone purge and IVF
+    retrain. ``rows`` (logical column names) is staged under ``m``'s
+    current layout and committed as ``m``'s other files plus the staged
+    ones, or :class:`ConcurrentLakeModificationError` when any commit
+    landed since ``m``. Staged files are new to the snapshot, so they
+    take the current partition spec and a sequence number past every
+    tombstone (:func:`_commit_manifest`): ``rows`` must already have the
+    tombstones applied, as :func:`_read_files` does. When ``files`` is
+    every live file, ``rows`` is the whole table: it is written under
+    logical names and its schema is recorded, which clears a rename
+    mapping. Returns the new snapshot."""
+    from pathlib import Path
+
+    live = Path(path)
+    drop = set(files)
+    keep = [f for f in m["files"] if f not in drop]
+    whole = not keep
+    replaced = (
+        {"column_mapping": {}, "table_schema": rows.schema.jsonValue()}
+        if whole
+        else {}
+    )
+    base = {**m, "column_mapping": {}} if whole else m
+    with _stage(
+        live, rows, m["partition_by"], base, compression, **options
+    ) as st:
+        return _commit(
+            live,
+            m,
+            lambda _current, new_files: dict(
+                files=[*keep, *new_files],
+                partition_by=m["partition_by"],
+                **replaced,
+            ),
+            expected_version=m["version"],
+            staged=st,
+        )
+
+
 def _publish_manifest_commit(
     live,
     result: DataFrame,
@@ -1609,7 +1616,6 @@ def _publish_manifest_commit(
     drop_missing_partitions: list[str] | None,
     bloom_cols: list[str] | None = None,
     expected_version: int | None = None,
-    full_rewrite: bool = False,
     app_versions: dict | None = None,
     branch: str | None = None,
 ) -> dict | None:
@@ -1622,15 +1628,12 @@ def _publish_manifest_commit(
     records the source snapshot its stored aggregates reflect in the
     same pointer replace (the Delta ``txn`` pattern on a rewrite).
 
-    ``full_rewrite=True`` (compact_in_place / OPTIMIZE) declares that
-    ``result`` IS the complete table: nothing is carried even on a
-    partitioned layout, and the files are written under the logical
-    names, so a rename mapping heals away. It is also the one rewrite
-    allowed on a partition-evolved table — a partial (replaced-
-    partitions) rewrite there is refused, because files written under a
-    retired spec live in directories the new spec's staged tree can
-    never replace, so rows of a "touched" logical partition would
-    silently survive in old-spec files."""
+    A partitioned publish is refused on a partition-evolved table:
+    files written under a retired spec live in directories the new
+    spec's staged tree can never replace, so rows of a "touched"
+    logical partition would silently survive in old-spec files.
+    :func:`compact_in_place` rewrites every file under the current
+    spec first."""
     from pathlib import Path
 
     if branch is not None:
@@ -1638,7 +1641,7 @@ def _publish_manifest_commit(
     else:
         pre = read_manifest(str(live)) or {}
     pb = list(partition_by or [])
-    if pre and pre.get("partition_by", []) != pb and (pb or not full_rewrite):
+    if pre and pre.get("partition_by", []) != pb:
         if not pb:
             raise ValueError(
                 f"table at {live} is hive-partitioned by "
@@ -1651,7 +1654,7 @@ def _publish_manifest_commit(
             f"committed layout {pre['partition_by']} — change layouts "
             "with evolve_partitioning()"
         )
-    if pb and pre.get("partition_specs") and not full_rewrite:
+    if pb and pre.get("partition_specs"):
         raise ValueError(
             f"table at {live} is partition-evolved (files under retired "
             "spec(s) remain): a partial rewrite cannot replace old-spec "
@@ -1660,22 +1663,21 @@ def _publish_manifest_commit(
         )
     # the recorded schema is always LOGICAL
     logical_schema = result.schema.jsonValue()
-    staged_as = {**pre, "column_mapping": {}} if full_rewrite else pre
-    with _stage(live, result, partition_by, staged_as, compression) as st:
+    with _stage(live, result, partition_by, pre, compression) as st:
         new_blooms = (
             _staged_file_blooms(
                 result.sparkSession,
                 st.dir,
                 # staged files carry physical names; bitmaps key on them
-                [_phys_name(staged_as, c) for c in bloom_cols],
+                [_phys_name(pre, c) for c in bloom_cols],
             )
             if bloom_cols
             else {}
         )
 
         def build(current, new_files):
-            carried = []  # a full or unpartitioned publish is the table
-            if pb and not full_rewrite:
+            carried = []  # an unpartitioned publish is the table
+            if pb:
                 # partitions present in the staged tree are REPLACED;
                 # ones the caller names as emptied are DROPPED;
                 # everything else is carried forward untouched
@@ -1692,7 +1694,6 @@ def _publish_manifest_commit(
                 app_versions=app_versions,
                 file_blooms=new_blooms,
                 table_schema=logical_schema,
-                column_mapping={} if full_rewrite else None,
             )
 
         return _commit(
@@ -4321,8 +4322,6 @@ def purge_deleted_rows(
 
     Returns ``{"files_rewritten", "files_written",
     "tombstones_cleared", "version"}`` (version None on no-op)."""
-    from pathlib import Path
-
     m = read_manifest(path)
     if m is None:
         raise ValueError(
@@ -4337,31 +4336,9 @@ def purge_deleted_rows(
             "tombstones_cleared": 0,
             "version": None,
         }
-    uncovered = [f for f in m["files"] if not _applicable_tombstones(m, f)]
-    schema = (
-        T.StructType.fromJson(m["schema"]) if m.get("schema") else None
+    snap = _replace_files(
+        path, m, covered, _read_files(spark, path, m, covered), compression
     )
-    part_by = list(m.get("partition_by") or [])
-    # the masked scan returns LOGICAL names; staging writes them under
-    # the frozen physical ones. The kept rows already satisfy the
-    # table's CHECK constraints, so the staged rewrite skips the scan.
-    live = Path(path)
-    with _stage(
-        live,
-        _masked_scan(spark, path, m, covered, schema),
-        part_by,
-        {**m, "constraints": {}},
-        compression,
-    ) as st:
-        snap = _commit(
-            live,
-            m,
-            lambda _current, new_files: dict(
-                files=[*uncovered, *new_files], partition_by=part_by or None
-            ),
-            expected_version=m["version"],
-            staged=st,
-        )
     if snap.get("delete_predicates"):
         raise RuntimeError(
             f"purge committed v{snap['version']} with tombstones still in "
@@ -4369,7 +4346,7 @@ def purge_deleted_rows(
         )
     return {
         "files_rewritten": len(covered),
-        "files_written": len(st.files),
+        "files_written": len(snap["files"]) - len(m["files"]) + len(covered),
         "tombstones_cleared": n_tomb,
         "version": snap["version"],
     }
@@ -4436,8 +4413,10 @@ def optimize_binpack(
 ) -> dict:
     """Targeted small-file OPTIMIZE on a manifest table: rewrite ONLY
     the small-file tail (files whose recorded row count is below
-    ``target_rows``), bin-packed per partition directory, committed as
-    one manifest snapshot carrying every untouched file by name. The
+    ``target_rows``) of each partition directory where packing reduces
+    the file count, read once and written once under the current
+    layout in files of at most ``target_rows`` rows, committed as one
+    manifest snapshot carrying every untouched file by name. The
     Delta ``OPTIMIZE`` bin-packing semantics — and the operation that
     actually matters at 100 TB, where :func:`compact_in_place`'s full
     rewrite is a cluster-day but the streaming-append tail is a few
@@ -4445,18 +4424,15 @@ def optimize_binpack(
     O(table bytes).
 
     Uses the manifest's own per-file row counts (recorded at every
-    commit for metadata-only COUNT) to pick files — zero I/O planning.
-    Fail-closed on state it would corrupt, with the designated cure:
-
-    - partition-spec evolved (retired-spec files remain) → a partial
-      rewrite cannot preserve old-spec directories; ``compact_in_place``
-      migrates and heals.
-    - live rename mapping → files carry frozen physical names and this
-      rewrite round-trips raw files; ``compact_in_place`` migrates.
-    - merge-on-read tombstones → new files get a fresh sequence number
-      outside every tombstone's scope, so covered rows would RESURRECT;
-      :func:`purge_deleted_rows` first.
-    - missing row counts (pre-recording snapshots) → re-publish once.
+    commit for metadata-only COUNT) to pick files — zero I/O planning;
+    a snapshot missing them (pre-recording) is refused until
+    re-published once. The picked files are read like any table read
+    (:func:`_read_files`: declared schema, merge-on-read tombstones
+    applied, physical names mapped) and rewritten by
+    :func:`_replace_files`: packed rows of a tombstoned file are already
+    filtered, packed files of a renamed table keep the physical names,
+    and packed files of a retired partition spec land under the current
+    one.
 
     Bin-packed files get fresh footer stats at commit (the same read
     that records their row counts); they drop any per-file bloom their
@@ -4480,27 +4456,9 @@ def optimize_binpack(
     from collections import defaultdict
     from pathlib import Path
 
-    live = Path(path)
     m = adopt_table(path, spark=spark)
     if m is None:
         raise ValueError(f"table at {path} holds no data — nothing to optimize")
-    if m.get("partition_specs"):
-        raise ValueError(
-            f"table at {path} is partition-evolved — compact_in_place() "
-            "migrates retired-spec files; a partial bin-pack cannot"
-        )
-    if m.get("column_mapping"):
-        raise ValueError(
-            f"table at {path} has a live rename mapping — "
-            "compact_in_place() migrates physical names; a raw-file "
-            "bin-pack cannot"
-        )
-    if m.get("delete_predicates"):
-        raise ValueError(
-            f"table at {path} carries merge-on-read tombstones — "
-            "purge_deleted_rows() first (bin-packed files would escape "
-            "every tombstone's sequence scope and resurrect deleted rows)"
-        )
     file_rows = m.get("file_rows", {})
     missing = [f for f in m["files"] if f not in file_rows]
     if missing:
@@ -4508,9 +4466,9 @@ def optimize_binpack(
             f"table at {path} lacks recorded row counts for "
             f"{len(missing)} file(s) — re-publish once to record them"
         )
+    pb = m["partition_by"]
     allowed_dirs: set | None = None
     if partition_where is not None:
-        pb = list(m.get("partition_by") or [])
         if not pb:
             raise ValueError(
                 "OPTIMIZE ... WHERE requires a partitioned table — the "
@@ -4540,55 +4498,29 @@ def optimize_binpack(
             continue
         by_dir[d].append(f)
     picked: list[str] = []
-    plans: list[tuple[str, list[str], int]] = []  # (dir, files, n_out)
-    for d, files in sorted(by_dir.items()):
+    n_out = 0
+    for _d, files in sorted(by_dir.items()):
         small = [f for f in files if file_rows[f] < target_rows]
-        if len(small) < 2:
-            continue  # nothing to pack here
-        n_out = max(
-            1, math.ceil(sum(file_rows[f] for f in small) / target_rows)
-        )
-        if n_out >= len(small):
-            continue  # packing would not reduce the file count
-        picked.extend(small)
-        plans.append((d, small, n_out))
-    if not plans:
+        n = max(1, math.ceil(sum(file_rows[f] for f in small) / target_rows))
+        if n < len(small):  # packing reduces this directory's file count
+            picked.extend(small)
+            n_out += n
+    if not picked:
         return {
             "files_before": len(m["files"]),
             "files_after": len(m["files"]),
             "files_rewritten": 0,
             "version": None,
         }
-    def _pack(staged):
-        for d, files, n_out in plans:
-            # mergeSchema: a partition dir can legitimately hold pre-
-            # and post-schema-evolution files; the packed file carries
-            # the union with nulls — exactly what a declared-schema
-            # read of those rows produces
-            (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*[str(live / f) for f in files])
-                .coalesce(n_out)
-                .write.mode("overwrite")
-                .option("compression", compression)
-                .parquet(str(staged if d == "." else staged / d))
-            )
-
-    picked_set = set(picked)
-    keep = [f for f in m["files"] if f not in picked_set]
-    # packed rows already satisfy the constraints: no base to check
-    # them against
-    with _stage(live, _pack, None, None) as st:
-        snap = _commit(
-            live,
-            m,
-            lambda _current, new_files: dict(
-                files=[*keep, *new_files],
-                partition_by=m["partition_by"] or None,
-            ),
-            expected_version=m["version"],
-            staged=st,
-        )
+    packed = _read_files(spark, path, m, picked)
+    snap = _replace_files(
+        path,
+        m,
+        picked,
+        packed.repartition(*pb) if pb else packed.coalesce(n_out),
+        compression,
+        maxRecordsPerFile=target_rows,
+    )
     # the packed inputs stay referenced by RETAINED history only;
     # vacuum_manifests reclaims them past the horizon like any rewrite
     return {
@@ -4608,20 +4540,27 @@ def compact_in_place(
     schema: T.StructType | None = None,
     cluster_by: list | None = None,
 ) -> tuple[int, int]:
-    """In-place small-file compaction, published atomically. The
-    companion to :func:`compact_parquet` for tables that incremental
-    writers (CDC merge batches, scd2 applies, expires) have fragmented
-    and whose location is pinned by a catalog entry — readers keep the
-    same path and, thanks to :func:`publish_overwrite`, never observe a
-    half-compacted state. Returns (files_before, files_after).
+    """In-place small-file compaction, published atomically: every live
+    file of the current snapshot is rewritten into ~``target_file_bytes``
+    files by :func:`_replace_files`, for tables that incremental writers
+    (CDC merge batches, scd2 applies, expires) have fragmented and whose
+    location is pinned by a catalog entry — readers keep the same path
+    and never observe a half-compacted state. Returns (files_before,
+    files_after).
 
-    Reads via :func:`_reader` like every other lake rewrite path
-    (round-7 ADVICE): on a schema-evolved table the new column exists
-    only in touched partitions' files, so a bare inference read can
-    take its schema from an OLD file and the atomic full rewrite would
-    make the column loss permanent. Pass the catalog's declared
-    ``schema`` to skip the footer scan entirely; without one the
-    mergeSchema fallback still sees every column.
+    ``partition_by`` must equal the table's committed layout (``None``
+    on a partitioned table included), as for every other rewrite;
+    :func:`evolve_partitioning` changes layouts. Because the rewrite
+    replaces every file it is also the migration tool: files of a
+    retired partition spec move to the current one, a rename mapping
+    heals to logical names, and merge-on-read tombstones are purged
+    (the rewrite reads the masked table). History keeps the
+    pre-compaction layout readable.
+
+    Reads via :func:`read_table`: pass the catalog's declared
+    ``schema`` to pin the rewrite's schema; without one the snapshot's recorded schema is
+    used, so a schema-evolved column living only in some files is never
+    lost to an old file's footer.
 
     ``cluster_by`` (columns or Column expressions, e.g. a Morton
     ``zorder_value``) turns compaction into OPTIMIZE-with-clustering:
@@ -4632,9 +4571,7 @@ def compact_in_place(
     from opportunistic to engineered. On a hive-partitioned table the
     range runs over (partition keys, cluster keys), so every partition
     directory's files split the cluster range instead of one fat file
-    per partition. On a manifest table this is also the tombstone
-    purge (the rewrite reads the masked table; coverage pruning clears
-    the tombstones) and history keeps the pre-OPTIMIZE layout readable."""
+    per partition."""
     import math
     from pathlib import Path
 
@@ -4642,35 +4579,28 @@ def compact_in_place(
     m = adopt_table(path, partition_by, spark=spark, schema=schema)
     if m is None:
         raise ValueError(f"table at {path} holds no data — nothing to compact")
-    # only the CURRENT snapshot's files are compacted (history keeps its
-    # own files until vacuum)
-    files = [live / f for f in m["files"]]
-    total = sum(p.stat().st_size for p in files)
-    df = read_table(spark, path, schema)
+    pb = list(partition_by or [])
+    if pb != m["partition_by"]:
+        raise ValueError(
+            f"compact partition_by {pb} does not match the table's "
+            f"committed layout {m['partition_by']} — change layouts with "
+            "evolve_partitioning()"
+        )
+    total = sum((live / f).stat().st_size for f in m["files"])
+    df = read_table(spark, path, schema, version=m["version"])
     n_out = max(1, math.ceil(total / target_file_bytes))
     if cluster_by:
         exprs = [F.col(c) if isinstance(c, str) else c for c in cluster_by]
-        lead = [F.col(c) for c in (partition_by or [])]
+        lead = [F.col(c) for c in pb]
         df = df.repartitionByRange(n_out, *lead, *exprs).sortWithinPartitions(
             *lead, *exprs
         )
-    elif partition_by:
-        df = df.repartition(*partition_by)
+    elif pb:
+        df = df.repartition(*pb)
     else:
         df = df.repartition(n_out)
-    publish_overwrite(
-        spark,
-        path,
-        df,
-        partition_by,
-        compression=compression,
-        expected_version=m["version"],
-        # compaction reads the WHOLE table and rewrites it — declaring
-        # that lets the publish carry nothing, which is also what
-        # migrates a partition-evolved table back to a single spec
-        full_rewrite=True,
-    )
-    return len(files), len(read_manifest(path)["files"])
+    snap = _replace_files(path, m, m["files"], df, compression)
+    return len(m["files"]), len(snap["files"])
 
 
 def write_partitioned(
