@@ -19,6 +19,7 @@ from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
     merge_into,
     read_manifest,
     read_table,
+    verify_table,
 )
 
 
@@ -97,6 +98,26 @@ def test_empty_batch_advances_high_water_mark(spark, tmp_path):
         is None
     )
     assert read_table(spark, path).count() == 1
+
+
+def test_zero_row_part_files_are_never_committed(spark, tmp_path):
+    """A 1-row frame spread over several Spark partitions writes an
+    empty part file beside the full one; the commit leaves it out, and
+    a zero-row write commits no file while its schema still reads."""
+    path = str(tmp_path / "t")
+    for i in (1, 2):
+        append_rows(spark, path, _mk(spark, [(i, "a", "x")]).repartition(4))
+    m = read_manifest(path)
+    assert len(m["files"]) == 2
+    assert sorted(m["file_rows"].values()) == [1, 1]
+    assert sorted(r.id for r in read_table(spark, path).collect()) == [1, 2]
+    report = verify_table(path)
+    assert report["ok"] and not report["orphans"]
+    empty_path = str(tmp_path / "e")
+    snap = append_rows(spark, empty_path, _mk(spark, []))
+    assert snap["files"] == [] and verify_table(empty_path)["ok"]
+    empty = read_table(spark, empty_path)
+    assert empty.columns == ["id", "grp", "v"] and empty.count() == 0
 
 
 def test_append_refuses_layout_drift_and_unmanifested_data(spark, tmp_path):

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import statements as _st
 from .catalog import GovernedCatalog
 from .governance import ALL, PermissionDeniedError, Principal
+from .session import local_frame
 from .sources import lake as _lake
 
 # Equi-height histogram resolution for ANALYZE ... FOR COLUMNS
@@ -70,8 +71,9 @@ class QueryExecution:
     results_path: str | None = None
     tables: list[str] = field(default_factory=list)
     filters_applied: list[str] = field(default_factory=list)
-    # lazily-pinned snapshot that all result pages read from (never the
-    # live plan — see Engine.results_page)
+    # what result pages read from: the result itself when it is a local
+    # relation, else a lazily-pinned snapshot (never the live plan — see
+    # Engine.results_page)
     page_source: DataFrame | None = None
     # query id this execution's result was reused from (L7 result reuse)
     reused_from: str | None = None
@@ -103,22 +105,6 @@ def _structure_copy(src, database: str, name: str, location: str):
         column_tags={c: dict(v) for c, v in src.column_tags.items()},
         partition_keys=tuple(src.partition_keys),
         pending_columns=set(src.pending_columns),
-    )
-
-
-def _local_df(spark, rows, schema):
-    """Driver-local result rows as a ONE-partition DataFrame.
-
-    A plain ``createDataFrame`` parallelizes over defaultParallelism
-    (32) slices, so a consumer's ``.first()``/``noop`` write pays a
-    take ramp / 32 near-empty tasks hunting rows that live on the
-    driver (the round-14 bisect of the lake_multi_table_publish
-    elevation: the metadata-served count cost MORE jobs than the scan
-    it replaced). Statement results are O(rows already built on the
-    driver) -- one partition is the right physical shape.
-    """
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(list(rows), 1), schema
     )
 
 
@@ -312,14 +298,20 @@ class Engine:
         The token is a plain row offset, applied as ``offset().limit()``
         so only one page ever collects to the client. Pages never read the
         LIVE plan — an unordered plan re-executed per page can duplicate
-        or skip rows across pages (round-3 ADVICE). Pages always read a
-        one-time ``localCheckpoint`` of the result pinned on first fetch,
-        never the persisted CSV: a CSV round-trip is lossy at the edges
+        or skip rows across pages (round-3 ADVICE). Pages read a one-time
+        ``localCheckpoint`` of the result pinned on first fetch, never
+        the persisted CSV: a CSV round-trip is lossy at the edges
         (embedded newlines split rows unless multiLine is set; empty
         string vs NULL collapse under the default nullValue — round-4
         ADVICE), while the checkpoint is bit-exact and every page sees
         the same frozen row order. The CSV stays what it is in Athena:
         the durable result artifact (S5), not the paging source.
+
+        A result whose optimized plan is a ``LocalRelation`` (a
+        statement result or a metadata answer, built on the driver by
+        :func:`~.session.local_frame`) is served without the pin: its
+        rows already sit on the driver in a fixed order, and a page
+        over them runs no Spark job.
         """
         qe = self.executions[query_id]
         if qe.state is not QueryState.SUCCEEDED or qe.result is None:
@@ -327,7 +319,12 @@ class Engine:
                 f"query {query_id} is {qe.state.value}: {qe.state_change_reason}"
             )
         if qe.page_source is None:
-            qe.page_source = qe.result.localCheckpoint(eager=False)
+            plan = qe.result._jdf.queryExecution().optimizedPlan()
+            qe.page_source = (
+                qe.result
+                if plan.getClass().getSimpleName() == "LocalRelation"
+                else qe.result.localCheckpoint(eager=False)
+            )
         offset = int(next_token) if next_token is not None else 0
         # fetch one extra row to learn whether another page exists without
         # a separate count() job over the full result
@@ -568,17 +565,20 @@ class Engine:
         return out
 
     def _table_fingerprint(self, qualified: str) -> tuple | None:
-        """Cheap freshness token for a table's storage: (file count, max
-        mtime ns) under its location — the Glue table-version analog. At
-        catalog scale you would read the version counter the writer bumps
-        instead of statting files; the contract is the same: any data
-        change changes the fingerprint. Unknown names return None, which
-        the hit check treats as never-fresh."""
+        """Cheap freshness token for a table's storage — the Glue
+        table-version analog: any data change changes it. A manifest
+        table's is its current snapshot (version and ``txid``, one
+        pointer read); a plain directory's is (file count, max mtime ns)
+        under its location. Unknown names return None, which the hit
+        check treats as never-fresh."""
         import os
 
         td = self.catalog.tables.get(qualified)
         if td is None:
             return None
+        m = _lake.read_manifest(td.location)
+        if m is not None:
+            return (qualified, m["version"], m.get("txid"))
         n, mx = 0, 0
         for root, _dirs, files in os.walk(td.location):
             for f in files:
@@ -1180,7 +1180,7 @@ class Engine:
     def _stmt_maintain(self, stmt, principal, name, qe) -> DataFrame:
         action, kwargs, schema, row = self._MAINTAIN_STATEMENTS[type(stmt)]
         res = self.maintain(stmt.target, action, principal, **kwargs(stmt))
-        return _local_df(self.spark, [row(stmt, res)], schema)
+        return local_frame(self.spark, [row(stmt, res)], schema)
 
     def _stmt_ctas(self, stmt, principal, name, qe) -> DataFrame:
         # Athena CTAS as SQL: the governed select materializes only
@@ -1195,7 +1195,7 @@ class Engine:
             partition_by=list(stmt.partitioned_by) or None,
         )
         qe.tables = [stmt.target, *inner.tables]
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.target, stmt.location)],
             "table string, location string",
@@ -1210,7 +1210,7 @@ class Engine:
             principal=principal,
         )
         qe.tables = [stmt.target, stmt.source]
-        return _local_df(
+        return local_frame(
             self.spark,
             [
                 (
@@ -1246,7 +1246,7 @@ class Engine:
                 )
             if not existed:
                 self.catalog.create_database(stmt.name, stmt.comment or "")
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.name, not existed)],
             "database string, created boolean",
@@ -1305,7 +1305,7 @@ class Engine:
                     )
             db, _, tname = stmt.target.partition(".")
             if self._claim_table_name(stmt.target, audit, stmt.if_not_exists):
-                return _local_df(
+                return local_frame(
                     self.spark,
                     [
                         (
@@ -1349,7 +1349,7 @@ class Engine:
             if name is not None:
                 # creator owns the table (the CTAS/CLONE rule)
                 self.catalog.grant(name, ALL, db, tname)
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.target, stmt.location, True)],
             "table string, location string, created boolean",
@@ -1393,7 +1393,7 @@ class Engine:
         ) as audit:
             if td is None:
                 if stmt.if_exists:
-                    return _local_df(
+                    return local_frame(
                         self.spark,
                         [(stmt.target, False)],
                         "table string, dropped boolean",
@@ -1437,7 +1437,7 @@ class Engine:
                 for g in self.catalog.grants
                 if not (g.database == td.database and g.resource == td.name)
             ]
-        return _local_df(
+        return local_frame(
             self.spark, [(stmt.target, True)], "table string, dropped boolean"
         )
 
@@ -1470,7 +1470,7 @@ class Engine:
             already = self._holds(stmt.principal, db, res, stmt.permission)
             if not already:
                 self.catalog.grant(stmt.principal, stmt.permission, db, res)
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.principal, stmt.permission, stmt.target, not already)],
             "principal string, permission string, object string, "
@@ -1501,7 +1501,7 @@ class Engine:
             n_revoked = self.catalog.revoke(
                 stmt.principal, stmt.permission, db, res
             )
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.principal, stmt.target, n_revoked)],
             "principal string, object string, revoked long",
@@ -1515,7 +1515,7 @@ class Engine:
             format=stmt.format,
             partition_by=list(stmt.partitioned_by) or None,
         )
-        return _local_df(
+        return local_frame(
             self.spark, [(stmt.path, stmt.format)], "path string, format string"
         )
 
@@ -1565,7 +1565,7 @@ class Engine:
         if name is not None and not replaced:
             self.catalog.grant(name, ALL, db, vname)
         qe.tables = [stmt.view, *touched]
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.view, replaced)],
             "view string, replaced boolean",
@@ -1586,7 +1586,7 @@ class Engine:
             qe.tables = [stmt.view]
         elif not stmt.if_exists:
             raise KeyError(f"view {stmt.view} does not exist")
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.view, dropped)],
             "view string, dropped boolean",
@@ -1614,7 +1614,7 @@ class Engine:
         # filling and statement dispatch happen at EXECUTE, so the gates
         # of the FILLED verb apply then
         self.prepare(stmt.name, stmt.statement_sql)
-        return _local_df(
+        return local_frame(
             self.spark, [(stmt.name, True)], "name string, prepared boolean"
         )
 
@@ -1647,7 +1647,7 @@ class Engine:
             # Athena EXPLAIN shape: the governed plan as result rows
             # (engine.explain never executes, writes no result CSV)
             text = self.explain(stmt.query_sql, principal, mode=stmt.mode)
-            return _local_df(
+            return local_frame(
                 self.spark, [(ln,) for ln in text.splitlines()], "plan string"
             )
         # EXPLAIN ANALYZE: Trino/Athena semantics — the governed query
@@ -1695,7 +1695,7 @@ class Engine:
             ch = node.children()
             for i in range(ch.size()):
                 stack.append(ch.apply(i))
-        return _local_df(
+        return local_frame(
             self.spark,
             rows,
             "op_id long, operator string, metric string, value long",
@@ -1726,7 +1726,7 @@ class Engine:
         self.catalog.evolve_table_schema(
             stmt.target, fields, comments=comments or None
         )
-        return _local_df(
+        return local_frame(
             self.spark,
             [(cname, ddl_type, "pending") for cname, ddl_type, _c in stmt.columns],
             "col_name string, data_type string, status string",
@@ -1796,7 +1796,7 @@ class Engine:
                 schema=table.schema,
             )
         qe.tables = [stmt.target, *touched]
-        return _local_df(
+        return local_frame(
             self.spark,
             [
                 (
@@ -1812,7 +1812,7 @@ class Engine:
         if stmt.mode == "binpack":
             kw = {"partition_where": stmt.where} if stmt.where is not None else {}
             res = self.maintain(stmt.target, "optimize_binpack", principal, **kw)
-            return _local_df(
+            return local_frame(
                 self.spark,
                 [(res["files_before"], res["files_after"], res["files_rewritten"])],
                 "files_before long, files_after long, files_rewritten long",
@@ -1820,7 +1820,7 @@ class Engine:
         res = self.maintain(
             stmt.target, "compact", principal, cluster_by=list(stmt.cluster_by)
         )
-        return _local_df(
+        return local_frame(
             self.spark,
             [(res["files_before"], res["files_after"])],
             "files_before long, files_after long",
@@ -1842,14 +1842,14 @@ class Engine:
         )
         if stmt.dry_run:
             # report-only: the artifact sweep also stays untouched
-            return _local_df(
+            return local_frame(
                 self.spark,
                 [(*counts, 0, True)],
                 "snapshots_removed long, files_removed long, "
                 "artifacts_removed long, dry_run boolean",
             )
         removed = self.maintain(stmt.target, "vacuum_artifacts", principal)
-        return _local_df(
+        return local_frame(
             self.spark,
             [(*counts, len(removed["removed"]))],
             "snapshots_removed long, files_removed long, artifacts_removed long",
@@ -1865,7 +1865,7 @@ class Engine:
             where=stmt.where,
         )
         qe.tables = [stmt.mv, stmt.source]
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.mv, res["source_version"])],
             "mv string, source_version long",
@@ -1874,7 +1874,7 @@ class Engine:
     def _stmt_refresh_mv(self, stmt, principal, name, qe) -> DataFrame:
         res = self.refresh_materialized_view(stmt.mv, principal=principal)
         qe.tables = [stmt.mv]
-        return _local_df(
+        return local_frame(
             self.spark,
             [(res["refreshed"], res["source_version"])],
             "refreshed boolean, source_version long",
@@ -1885,7 +1885,7 @@ class Engine:
             stmt.mv, principal=principal, delete_data=stmt.purge
         )
         qe.tables = [stmt.mv]
-        return _local_df(
+        return local_frame(
             self.spark, [(stmt.mv, stmt.purge)], "mv string, purged boolean"
         )
 
@@ -1893,7 +1893,7 @@ class Engine:
         res = self.analyze_table(
             stmt.target, columns=(list(stmt.columns) or None), principal=principal
         )
-        return _local_df(
+        return local_frame(
             self.spark,
             [
                 (
@@ -1910,21 +1910,21 @@ class Engine:
     # governance hides from an ungranted principal even the EXISTENCE
     # of a table (implicit deny, G6).
     def _stmt_show_databases(self, stmt, principal, name, qe) -> DataFrame:
-        return _local_df(
+        return local_frame(
             self.spark,
             [(db,) for db in sorted(self.catalog.databases) if self._visible(name, db)],
             "database string",
         )
 
     def _stmt_show_tables(self, stmt, principal, name, qe) -> DataFrame:
-        return _local_df(
+        return local_frame(
             self.spark,
             self._listing(self.catalog.tables, stmt.database, name),
             "database string, table string",
         )
 
     def _stmt_show_views(self, stmt, principal, name, qe) -> DataFrame:
-        return _local_df(
+        return local_frame(
             self.spark,
             self._listing(self.catalog.views, stmt.database, name),
             "database string, view string",
@@ -1959,7 +1959,7 @@ class Engine:
                     and any(not f.startswith(("_", ".")) for f in files)
                 ):
                     parts.add(rel.replace(os.sep, "/"))
-        return _local_df(
+        return local_frame(
             self.spark, [(p,) for p in sorted(parts)], "partition string"
         )
 
@@ -2002,7 +2002,7 @@ class Engine:
             and g.resource == res
             and (who is None or g.principal == who)
         ]
-        return _local_df(
+        return local_frame(
             self.spark,
             rows,
             "principal string, permission string, via_filter string, "
@@ -2066,7 +2066,7 @@ class Engine:
                 row_count = int(info["rows"])
                 source = "metadata"
         rows.append((None, None, None, None, None, None, row_count, source))
-        return _local_df(
+        return local_frame(
             self.spark,
             rows,
             "column_name string, null_count long, ndv_approx long, "
@@ -2101,7 +2101,7 @@ class Engine:
         ]
 
     def _stmt_describe(self, stmt, principal, name, qe) -> DataFrame:
-        return _local_df(
+        return local_frame(
             self.spark,
             self._visible_columns(stmt.target, principal, name, qe),
             "col_name string, data_type string, is_partition boolean, "
@@ -2111,7 +2111,7 @@ class Engine:
     def _stmt_show_columns(self, stmt, principal, name, qe) -> DataFrame:
         # DESCRIBE's redaction rules, names only
         rows = self._visible_columns(stmt.target, principal, name, qe)
-        return _local_df(self.spark, [r[:1] for r in rows], "col_name string")
+        return local_frame(self.spark, [r[:1] for r in rows], "col_name string")
 
     def _stmt_show_create_table(self, stmt, principal, name, qe) -> DataFrame:
         # the console's copy-the-DDL verb: reconstruct the column-list
@@ -2126,7 +2126,7 @@ class Engine:
             self.catalog.view(stmt.target, principal)
             vd = self.catalog.views[stmt.target]
             ddl = f"CREATE OR REPLACE VIEW {stmt.target} AS {vd.sql}"
-            return _local_df(self.spark, [(ddl,)], "ddl string")
+            return local_frame(self.spark, [(ddl,)], "ddl string")
         table, allowed = self._introspect_gate(
             qe, stmt.target, name, columns=True
         )
@@ -2158,7 +2158,7 @@ class Engine:
             + "\nSTORED AS PARQUET"
             + f"\nLOCATION '{_q(table.location)}'"
         )
-        return _local_df(self.spark, [(ddl,)], "ddl string")
+        return local_frame(self.spark, [(ddl,)], "ddl string")
 
     def _stmt_describe_database(self, stmt, principal, name, qe) -> DataFrame:
         # metadata-only; table count follows the SHOW TABLES visibility
@@ -2171,7 +2171,7 @@ class Engine:
             if td.database == stmt.name
             and self._visible(name, td.database, td.name)
         )
-        return _local_df(
+        return local_frame(
             self.spark,
             [(stmt.name, self.catalog.databases[stmt.name] or None, n_vis)],
             "database string, comment string, n_tables_visible long",
@@ -2227,7 +2227,7 @@ class Engine:
                 0,
                 [],
             )
-        return _local_df(
+        return local_frame(
             self.spark,
             [row],
             "format string, location string, version long, "
@@ -2282,7 +2282,7 @@ class Engine:
                 rows.append(
                     (f, os.path.dirname(f).replace(os.sep, "/"), nrows, size, None)
                 )
-        return _local_df(
+        return local_frame(
             self.spark,
             rows,
             "file string, partition string, rows long, "
@@ -2302,7 +2302,7 @@ class Engine:
             )
             for h in self.history(stmt.target, principal)
         ]
-        return _local_df(
+        return local_frame(
             self.spark,
             rows,
             "version long, parent long, committed_at double, "
@@ -2477,10 +2477,10 @@ class Engine:
         )
         qe.tables = [stmt.target, *touched]
         if not stmt.overwrite:
-            return _local_df(
+            return local_frame(
                 spark, [(rows, snap["version"])], "rows_inserted long, version long"
             )
-        return _local_df(
+        return local_frame(
             spark,
             [
                 (
@@ -3269,7 +3269,7 @@ class Engine:
         snap = _lake.overwrite_partitions(
             self.spark,
             table.location,
-            self.spark.createDataFrame([], table.schema),
+            local_frame(self.spark, [], table.schema),
             pkeys,
             replace_partitions=[relpath],
         )
@@ -3766,12 +3766,8 @@ class Engine:
             schema = T.StructType(
                 [T.StructField(alias or "count(1)", T.LongType(), False)]
             )
-            # _local_df: one partition, not 32 slices — the caller's
-            # .first() must not pay a take ramp over empty partitions
-            # (round-14 bisect of the lake_multi_table_publish
-            # elevation: the metadata-served count cost MORE jobs than
-            # the scan it replaced)
-            return _local_df(self.spark, [(int(info["rows"]),)], schema)
+            # a local relation: results_page serves it without a job
+            return local_frame(self.spark, [(int(info["rows"]),)], schema)
         # per-partition: decode hive dir names back to typed values;
         # anything outside the decodable envelope (null partitions,
         # non-atomic declared types, layout drift) falls open to the
@@ -3849,10 +3845,8 @@ class Engine:
             vals = dict(zip(group_by, k))
             vals[alias] = v
             rows.append(tuple(vals[c] for c in order))
-        # _local_df for the same take-ramp reason as the bare form
-        # above: the group count is O(#partitions of the table), still
-        # a driver-local list
-        df = _local_df(self.spark, rows, out_schema)
+        # the group count is O(#partitions of the table): driver-local
+        df = local_frame(self.spark, rows, out_schema)
         if order_by:
             from pyspark.sql import functions as F
 

@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 
 from .catalog import GovernedCatalog, TableDef
 from .governance import ALL, SELECT, DataCellsFilter
+from .session import local_frame
 
 DATABASE = "sales_db"  # locals.tf:10
 TABLE = "sales"  # locals.tf:11
@@ -116,7 +117,7 @@ def sales_rows() -> list[tuple]:
 
 def sales_dataframe(spark: SparkSession) -> DataFrame:
     """S3 — in-memory source (generate_sample_data.py:21-67)."""
-    return spark.createDataFrame(sales_rows(), SALES_SCHEMA)
+    return local_frame(spark, sales_rows(), SALES_SCHEMA)
 
 
 def write_sales(spark: SparkSession, lake_dir: str) -> str:
@@ -124,11 +125,8 @@ def write_sales(spark: SparkSession, lake_dir: str) -> str:
     (snappy parquet, upload_sample.sh:27 analog). Returns the table path.
     """
     path = f"{lake_dir}/sales"
-    # repartition(1), NOT coalesce(1): the local relation parallelizes
-    # over 32 slices whose Python-side evaluation coalesce would chain
-    # sequentially into ONE task (~6 s measured); the shuffle keeps the
-    # upstream evaluation parallel and writes one file in 0.6 s.
-    sales_dataframe(spark).repartition(1).write.mode("overwrite").option(
+    # one file: the local relation's slices coalesce without a shuffle
+    sales_dataframe(spark).coalesce(1).write.mode("overwrite").option(
         "compression", "snappy"
     ).parquet(path)
     return path

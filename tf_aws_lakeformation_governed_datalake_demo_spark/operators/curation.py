@@ -867,10 +867,11 @@ def token_budget_mixture(tok: DataFrame) -> DataFrame:
     for r in sorted(partials, key=lambda r: (r["lang"], r["pid"])):
         base_rows.append((int(r["pid"]), r["lang"], acc.get(r["lang"], 0)))
         acc[r["lang"]] = acc.get(r["lang"], 0) + int(r["t"])
-    # ONE-partition local relation (the engine._local_df shape — the
-    # round-14 bisect: a plain createDataFrame parallelizes over 32
-    # slices and every evaluation pays a 32-python-task ramp for rows
-    # that live on the driver; measured ~4 s vs ~0.3 s here)
+    # ONE-partition Python RDD: a plain createDataFrame parallelizes
+    # over 32 slices and every evaluation pays a 32-python-task ramp for
+    # rows that live on the driver (measured ~4 s vs ~0.3 s here). The
+    # engine's statement results use session.local_frame, an Arrow-built
+    # local relation that runs no job at all.
     offsets = spark.createDataFrame(
         spark.sparkContext.parallelize(base_rows, 1),
         "pid int, lang string, base long",

@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -87,3 +88,33 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """Rows built on the driver (a statement result, a metadata answer,
+    an empty frame of a known schema) as a DataFrame — the one way the
+    engine and the lake build one.
+
+    The rows go through Arrow, so the frame is a JVM ``LocalRelation``:
+    collecting it, or a limit or projection over it, runs no Spark job.
+    ``createDataFrame`` of a Python list or of a ``parallelize`` RDD
+    makes a Python RDD instead, and every action on it runs a job that
+    needs a Python worker (about 200 ms for one row on a 4-core host,
+    against about 20 ms here). ``schema`` (a ``StructType`` or a DDL
+    string) is kept as declared, nullability included. Values convert
+    as ``createDataFrame`` converts a list: a naive ``datetime`` in a
+    timestamp column is Python-local time, a ``Row`` or tuple fills a
+    struct."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()
+    )
+    return spark.createDataFrame(table, schema)

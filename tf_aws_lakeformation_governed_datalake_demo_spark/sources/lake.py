@@ -11,11 +11,15 @@ parallelism scales with data, not file count.
 from __future__ import annotations
 
 import re
+import threading
+from collections import OrderedDict
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import local_frame
 
 TPCH_TABLES = (
     "region",
@@ -1170,6 +1174,7 @@ def _commit_manifest(
     file_rows_hints: dict | None = None,
     column_mapping: dict | None = None,
     update_pointer: bool = True,
+    moved_in: frozenset = frozenset(),
 ) -> dict:
     """Write snapshot ``_manifests/v{N}.json`` then atomically replace
     the ``_manifest.json`` pointer with the same content (``os.replace``
@@ -1186,7 +1191,10 @@ def _commit_manifest(
     planning-time skipping (:func:`read_table` ``prune=``): files
     carried from the parent snapshot inherit their recorded stats
     (zero I/O); only NEW files pay one footer read each — the cost
-    Iceberg pays at write time, amortized identically.
+    Iceberg pays at write time, amortized identically. A file this
+    commit moved in (``moved_in``) whose footer counts zero rows is
+    left out of the snapshot and deleted, so a zero-row write commits
+    no file; the recorded schema still gives the table its shape.
 
     ``app_versions`` is the per-writer idempotence ledger (Delta's
     ``txn`` appId/version analog): ``{stream_id: last_batch_id}``.
@@ -1222,6 +1230,7 @@ def _commit_manifest(
     parent_rows = (parent or {}).get("file_rows", {})
     file_stats = {}
     file_rows = {}
+    empty = []
     for f in sorted(files):
         # hint lookup first (rollback supplies the TARGET snapshot's
         # recorded stats so a restore never re-reads footers), then the
@@ -1235,11 +1244,19 @@ def _commit_manifest(
         if s is None or r is None:
             st, nr = _file_footer_info(live / f)
             s = s if s is not None else st
+            if nr == 0 and r is None and f in moved_in:
+                # the empty part file Spark writes for an empty write or
+                # an empty input partition: it holds nothing to read
+                empty.append(f)
+                continue
             r = r if r is not None else nr
         if s:
             file_stats[f] = s
         if r is not None:
             file_rows[f] = r
+    for f in empty:
+        (live / f).unlink()
+    files = [f for f in files if f not in empty]
     if app_versions is None:
         app_versions = (parent or {}).get("app_versions", {})
     parent_blooms = (parent or {}).get("file_blooms", {})
@@ -1551,6 +1568,7 @@ def _commit(live, base, build, *, expected_version=None, staged=None, branch=Non
             parent=current,
             txid=staged.txid if staged else _uuid.uuid4().hex,
             update_pointer=branch is None,
+            moved_in=frozenset(new_files),
             **commit,
         )
         if branch is not None:
@@ -1747,6 +1765,13 @@ def resolve_version(
     return version
 
 
+#: Bound on the scans :func:`read_table` keeps built, least recently
+#: used first out.
+SCAN_CACHE_SIZE = 64
+_scan_cache: OrderedDict = OrderedDict()
+_scan_cache_lock = threading.Lock()
+
+
 def read_table(
     spark: SparkSession,
     path: str,
@@ -1796,7 +1821,15 @@ def read_table(
     only, never a filter: callers still apply the actual predicate, so
     a column or file without recorded stats/blooms fails OPEN
     (scanned, then filtered), and bloom false positives only cost a
-    scan. Non-manifest tables ignore ``prune``."""
+    scan. Non-manifest tables ignore ``prune``.
+
+    A built manifest scan is kept (:data:`SCAN_CACHE_SIZE` of them) and
+    handed out again while the session, the snapshot (version and
+    ``txid``), the declared schema, the files left after ``prune`` and
+    the rename mapping are all the same — Delta's held snapshot. The
+    pointer is still read on every call, so the next read after a
+    commit builds the new snapshot's scan; governance applies above
+    this, per query."""
 
     def _ordered(df: DataFrame) -> DataFrame:
         if schema is not None and df.columns != list(schema.names):
@@ -1882,25 +1915,44 @@ def read_table(
             return True
 
         kept = [f for f in kept if _survives(f)]
-    files = [str(live / f) for f in kept]
-    if not files:
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        if m["files"]:
-            # everything pruned away, no declared schema: plan ONE
-            # file's footer for the shape, emit zero rows
-            return _to_logical(
-                _reader(spark, None)
-                .option("basePath", path)
-                .parquet(str(live / m["files"][0]))
-                .limit(0),
-                m,
-            )
+    key = (
+        spark,
+        str(path),
+        m["version"],
+        m.get("txid"),
+        schema.json() if schema is not None else None,
+        tuple(kept),
+        tuple(sorted((m.get("column_mapping") or {}).items())),
+    )
+    with _scan_cache_lock:
+        df = _scan_cache.get(key)
+        if df is not None:
+            _scan_cache.move_to_end(key)
+            return df
+    if kept:
+        df = _ordered(_masked_scan(spark, path, m, kept, schema))
+    elif schema is not None:
+        df = local_frame(spark, [], schema)
+    elif m["files"]:
+        # everything pruned away, no declared schema: plan ONE
+        # file's footer for the shape, emit zero rows
+        df = _to_logical(
+            _reader(spark, None)
+            .option("basePath", path)
+            .parquet(str(live / m["files"][0]))
+            .limit(0),
+            m,
+        )
+    else:
         raise ValueError(
             f"manifest v{m['version']} at {path} is empty and no "
             "schema was declared — cannot synthesize an empty scan"
         )
-    return _ordered(_masked_scan(spark, path, m, kept, schema))
+    with _scan_cache_lock:
+        _scan_cache[key] = df
+        while len(_scan_cache) > SCAN_CACHE_SIZE:
+            _scan_cache.popitem(last=False)
+    return df
 
 
 def table_changes(
@@ -1977,7 +2029,7 @@ def table_changes(
 
     if not added and not removed and not changed:
         proto = schema or read_table(spark, path, version=from_version).schema
-        return spark.createDataFrame([], proto).withColumn(
+        return local_frame(spark, [], proto).withColumn(
             "_change_type", F.lit("insert")
         )
     new_parts = [_scan(added, m_to)] if added else []
@@ -2004,9 +2056,9 @@ def table_changes(
     new = _fold(new_parts)
     old = _fold(old_parts)
     if new is None:
-        new = spark.createDataFrame([], old.schema)
+        new = local_frame(spark, [], old.schema)
     if old is None:
-        old = spark.createDataFrame([], new.schema)
+        old = local_frame(spark, [], new.schema)
     cols = list(dict.fromkeys([*old.columns, *new.columns]))
 
     def _align(df: DataFrame, other: DataFrame) -> DataFrame:
@@ -4075,9 +4127,7 @@ def _touched_slice(spark, path, predicate, partition_col, schema, set_cols=()):
         # partition) must not break type inference
         out.base = _restrict_to_partitions(
             cur,
-            spark.createDataFrame(
-                out.touched, matched.select(*part_cols).schema
-            ),
+            local_frame(spark, out.touched, matched.select(*part_cols).schema),
             part_cols,
         )
     return out
@@ -4482,8 +4532,8 @@ def optimize_binpack(
                 k, _, v = seg.partition("=")
                 vals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
             rows.append((d, *[vals.get(c) for c in pb]))
-        pdf = spark.createDataFrame(
-            rows, ", ".join(["__dir string", *[f"{c} string" for c in pb]])
+        pdf = local_frame(
+            spark, rows, ", ".join(["__dir string", *[f"{c} string" for c in pb]])
         )
         # evaluating with ONLY the partition columns in scope makes a
         # predicate on any other column an AnalysisException — the
