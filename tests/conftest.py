@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -38,3 +40,53 @@ def sf001_dir(sf_dir):
     if not os.path.exists(os.path.join(cand, "embeddings.parquet")):
         pytest.skip(f"sf0.01 calibration fixture not found at {cand}")
     return cand
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """A context-manager factory: ``with spark_jobs() as jobs:`` leaves
+    in the list ``jobs``, on exit, the number of Spark jobs the block ran
+    on this thread. Jobs are counted through a job group and
+    ``statusTracker``, so the count does not depend on the host."""
+
+    @contextmanager
+    def count():
+        sc = spark.sparkContext
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job-count probe")
+        counted: list[int] = []
+        try:
+            yield counted
+        finally:
+            counted.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            for prop in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(prop, None)
+
+    return count
+
+
+@pytest.fixture()
+def eng(spark, tmp_path):
+    """An engine over a fresh lake holding ``db.t (id bigint, n int)``
+    partitioned by ``grp`` with three rows in two partitions; ``ops`` is
+    the admin. Modules that need another engine define their own."""
+    from tf_aws_lakeformation_governed_datalake_demo_spark.catalog import (
+        GovernedCatalog,
+    )
+    from tf_aws_lakeformation_governed_datalake_demo_spark.engine import Engine
+
+    lake = str(tmp_path)
+    cat = GovernedCatalog(spark, lake_root=lake)
+    cat.set_admins(["ops"])
+    eng = Engine(spark, cat)
+    eng.sql("CREATE DATABASE db", "ops")
+    eng.sql(
+        "CREATE EXTERNAL TABLE db.t (id bigint, n int) "
+        f"PARTITIONED BY (grp string) LOCATION '{lake}/t'",
+        "ops",
+    )
+    eng.sql(
+        "INSERT INTO db.t VALUES (1, 10, 'x'), (2, 20, 'x'), (3, 30, 'y')",
+        "ops",
+    )
+    return eng

@@ -29,6 +29,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
+from tf_aws_lakeformation_governed_datalake_demo_spark.session import (
+    local_frame,
+)
 from tf_aws_lakeformation_governed_datalake_demo_spark.sources import (
     load,
     write_partitioned,
@@ -232,8 +235,8 @@ def test_crash_matrix_on_adopted_directory(
 
 def test_clone_crash_after_move_in(spark, nation_table, monkeypatch):
     """A clone that dies after linking its files into the target, before
-    the pointer replace: the source is untouched, the target holds no
-    snapshot, a re-run into it refuses, and once the target is
+    the pointer replace: the source is untouched, the target is an
+    empty table, a re-run into it refuses, and once the target is
     reclaimed the re-run converges."""
     import shutil
 
@@ -256,7 +259,11 @@ def test_clone_crash_after_move_in(spark, nation_table, monkeypatch):
     assert _rows(spark, path) == rows
     report = lk.verify_table(path)
     assert report["ok"] and not report["orphans"], report
-    assert lk.read_manifest(dst) is None
+    # the first commit claimed the target with an empty snapshot before
+    # linking files in: it reads as an empty table, never as the links
+    claim = lk.read_manifest(dst)
+    assert claim["version"] == 0 and claim["files"] == []
+    assert lk.read_table(spark, dst).count() == 0
     assert not list(Path(dst).glob("_staged_*"))
     with pytest.raises(FileExistsError, match="already holds"):
         lk.clone_table(path, dst)
@@ -264,6 +271,39 @@ def test_clone_crash_after_move_in(spark, nation_table, monkeypatch):
     lk.clone_table(path, dst)
     assert _rows(spark, dst) == rows
     assert lk.verify_table(dst)["ok"]
+
+
+def test_first_commit_crash_leaves_an_empty_table(spark, monkeypatch):
+    """A first write to a never-written path that dies after its move-in,
+    before any snapshot is written: the path already holds an empty
+    version-0 snapshot, so readers see no rows, the moved-in files are
+    reclaimable orphans, and the next writer commits exactly its own
+    rows instead of adopting the crashed write's files."""
+    path = tempfile.mkdtemp(prefix="atomic_pub_") + "/first"
+    schema = "id long, g string"
+
+    def crashing_commit(*a, **k):
+        raise RuntimeError("injected crash before the snapshot write")
+
+    monkeypatch.setattr(lk, "_commit_manifest", crashing_commit)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        lk.publish_overwrite(
+            spark, path, local_frame(spark, [(1, "a"), (2, "b")], schema), ["g"]
+        )
+    monkeypatch.undo()
+
+    assert lk.read_table(spark, path).count() == 0
+    report = lk.verify_table(path)
+    assert report["ok"] and len(report["orphans"]) == 2, report
+    snap = lk.append_rows(
+        spark, path, local_frame(spark, [(3, "a"), (4, "c")], schema), ["g"]
+    )
+    assert snap["version"] == 1
+    got = sorted((r.id, r.g) for r in lk.read_table(spark, path).collect())
+    assert got == [(3, "a"), (4, "c")]
+    lk.vacuum_manifests(path, keep_last=1)
+    report = lk.verify_table(path)
+    assert report["ok"] and not report["orphans"], report
 
 
 def test_merge_crash_then_rerun_converges(spark, nation_table):

@@ -11,16 +11,10 @@ import ast
 import datetime
 import os
 import time
-import uuid
-from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
 
-from tf_aws_lakeformation_governed_datalake_demo_spark.catalog import (
-    GovernedCatalog,
-)
-from tf_aws_lakeformation_governed_datalake_demo_spark.engine import Engine
 from tf_aws_lakeformation_governed_datalake_demo_spark.session import (
     local_frame,
 )
@@ -29,41 +23,6 @@ ADMIN = "ops"
 PKG = Path(__file__).resolve().parent.parent / (
     "tf_aws_lakeformation_governed_datalake_demo_spark"
 )
-
-
-@contextmanager
-def spark_jobs(spark):
-    """Yields a list that holds, on exit, the number of Spark jobs the
-    block ran on this thread."""
-    sc = spark.sparkContext
-    group = f"local-frames-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count probe")
-    counted: list[int] = []
-    try:
-        yield counted
-    finally:
-        counted.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-        for prop in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(prop, None)
-
-
-@pytest.fixture()
-def eng(spark, tmp_path):
-    lake = str(tmp_path)
-    cat = GovernedCatalog(spark, lake_root=lake)
-    cat.set_admins([ADMIN])
-    eng = Engine(spark, cat)
-    eng.sql("CREATE DATABASE db", ADMIN)
-    eng.sql(
-        "CREATE EXTERNAL TABLE db.t (id bigint, n int) "
-        f"PARTITIONED BY (grp string) LOCATION '{lake}/t'",
-        ADMIN,
-    )
-    eng.sql(
-        "INSERT INTO db.t VALUES (1, 10, 'x'), (2, 20, 'x'), (3, 30, 'y')",
-        ADMIN,
-    )
-    return eng
 
 
 @pytest.mark.parametrize(
@@ -79,24 +38,24 @@ def eng(spark, tmp_path):
         "VACUUM db.t RETAIN 1 SNAPSHOTS",
     ],
 )
-def test_statement_result_row_collects_without_a_job(eng, spark, statement):
+def test_statement_result_row_collects_without_a_job(eng, spark_jobs, statement):
     out = eng.sql(statement, ADMIN)
-    with spark_jobs(spark) as jobs:
+    with spark_jobs() as jobs:
         rows = out.collect()
     assert len(rows) == 1
     assert jobs == [0], f"{statement}: collecting its result ran {jobs[0]} jobs"
 
 
 @pytest.mark.parametrize("statement", ["SHOW TABLES", "DESCRIBE HISTORY db.t"])
-def test_metadata_listing_runs_no_job(eng, spark, statement):
-    with spark_jobs(spark) as jobs:
+def test_metadata_listing_runs_no_job(eng, spark_jobs, statement):
+    with spark_jobs() as jobs:
         rows = eng.sql(statement, ADMIN).collect()
     assert rows
     assert jobs == [0], f"{statement} ran {jobs[0]} jobs"
 
 
-def test_metadata_count_through_submit_and_results_runs_no_job(eng, spark):
-    with spark_jobs(spark) as jobs:
+def test_metadata_count_through_submit_and_results_runs_no_job(eng, spark_jobs):
+    with spark_jobs() as jobs:
         qid = eng.submit("SELECT count(*) AS n FROM db.t", ADMIN)
         rows = eng.results(qid)
     assert [tuple(r) for r in rows] == [(3,)]

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import statements as _st
 from .catalog import GovernedCatalog
 from .governance import ALL, PermissionDeniedError, Principal
-from .session import local_frame
+from .session import is_local, local_frame
 from .sources import lake as _lake
 
 # Equi-height histogram resolution for ANALYZE ... FOR COLUMNS
@@ -319,10 +319,9 @@ class Engine:
                 f"query {query_id} is {qe.state.value}: {qe.state_change_reason}"
             )
         if qe.page_source is None:
-            plan = qe.result._jdf.queryExecution().optimizedPlan()
             qe.page_source = (
                 qe.result
-                if plan.getClass().getSimpleName() == "LocalRelation"
+                if is_local(qe.result)
                 else qe.result.localCheckpoint(eager=False)
             )
         offset = int(next_token) if next_token is not None else 0

@@ -440,7 +440,7 @@ def cdc_apply_batch(spark: SparkSession, dim: str, dim_schema, batch: DataFrame)
         ["user_id"],
         partition_by=["bucket"],
         schema=dim_schema,
-        collect_stats=False,  # per-batch stats jobs are pure overhead here
+        collect_stats=False,  # the sink never reads per-batch stats
         updates_pinned=True,
     )
 

@@ -118,3 +118,11 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
         else to_arrow_schema(schema).empty_table()
     )
     return spark.createDataFrame(table, schema)
+
+
+def is_local(df: DataFrame) -> bool:
+    """True when ``df``'s optimized plan is a ``LocalRelation``: its
+    rows sit on the driver, so collecting it or a projection of it runs
+    no Spark job and it needs no pin to stay stable between actions."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import local_frame
+from ..session import is_local, local_frame
 
 TPCH_TABLES = (
     "region",
@@ -129,21 +129,82 @@ def hive_partition_relpath(partition_by: list[str], values: tuple) -> str:
 
 
 def _restrict_to_partitions(
-    cur: DataFrame, touched: DataFrame, part_cols: list[str]
+    cur: DataFrame, touched: list[tuple], part_cols: list[str]
 ) -> DataFrame:
-    """NULL-safe left-semi restriction of ``cur`` to the partition-value
-    tuples in ``touched``. A name-list equi-join here is null-rejecting:
-    rows whose partition value is NULL (the Hive default partition)
-    never match the touched list, silently escaping the rewrite slice —
-    under delete_rows the staged write then lacks the NULL-partition dir
-    and the drop bookkeeping removes the whole live directory, erasing
-    rows the predicate did NOT match (round-7 ADVICE, high)."""
-    a, t = cur.alias("__base"), touched.alias("__touched")
-    cond = None
-    for c in part_cols:
-        eq = F.col(f"__base.{c}").eqNullSafe(F.col(f"__touched.{c}"))
-        cond = eq if cond is None else (cond & eq)
-    return a.join(F.broadcast(t), cond, "left_semi")
+    """``cur``'s rows whose ``part_cols`` value tuple is one of
+    ``touched``. The test is one literal predicate on the partition
+    columns, so the scan prunes every other partition's files at
+    planning time and no join runs (broadcasting even a driver-side
+    tuple list costs a Spark job). Struct equality is NULL-safe: a
+    name-list equi-join or a plain ``IN`` never matches a NULL partition
+    value (the Hive default partition), so those rows would escape the
+    rewrite slice — under delete_rows the staged write then lacks the
+    NULL-partition dir and the drop bookkeeping removes the whole live
+    directory, erasing rows the predicate did NOT match."""
+    types = {f.name: f.dataType for f in cur.schema.fields}
+    wanted = [
+        F.struct(*[F.lit(v).cast(types[c]).alias(c) for c, v in zip(part_cols, t)])
+        for t in dict.fromkeys(touched)
+    ]
+    return cur.filter(F.struct(*part_cols).isin(wanted))
+
+
+#: Seconds :func:`_observed` waits for an observation's metrics.
+_OBSERVE_TIMEOUT_S = 120
+#: JVM session -> the observation manager :func:`_observe` registers with.
+_OBSERVERS: dict = {}
+_OBSERVERS_LOCK = threading.Lock()
+
+
+def _observe(df: DataFrame, **metrics):
+    """``df`` with ``metrics`` (name -> aggregate column) attached as an
+    observation: the first action that runs the returned frame computes
+    them in its own job, with no extra scan. Returns the frame and the
+    JVM observation to read with :func:`_observed` after that action.
+
+    ``DataFrame.observe(Observation)`` would build the session's own
+    observation manager, a lazily set field that Java serialization
+    cannot handle; from then on every closure that captures the session
+    fails to serialize (an ML model's training summary holds it, so a
+    later ``transform`` fails). One manager of our own per session
+    completes observations the same way and leaves the session's field
+    unset."""
+    import uuid as _uuid
+
+    jvm = df.sparkSession._jvm
+    jss = df.sparkSession._jsparkSession
+    with _OBSERVERS_LOCK:
+        manager = _OBSERVERS.get(jss)
+        if manager is None:
+            manager = jvm.org.apache.spark.sql.classic.ObservationManager(jss)
+            _OBSERVERS[jss] = manager
+    name = f"lake_{_uuid.uuid4().hex}"
+    obs = getattr(jvm, "org.apache.spark.sql.Observation")(name)
+    manager.register(obs, df._jdf)
+    cols = [c.alias(n) for n, c in metrics.items()]
+    return df.observe(name, *cols), obs
+
+
+def _observed(obs) -> dict:
+    """The metrics ``obs`` collected during the action that ran its
+    frame. They reach the driver through the listener bus shortly after
+    the action returns, so this waits for them; it raises instead of
+    waiting forever when they never arrive (an observed subtree that
+    the optimizer removed never reports)."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark import SparkContext
+    from pyspark.serializers import CPickleSerializer
+
+    jvm = SparkContext._jvm
+    limit = jvm.scala.concurrent.duration.Duration.apply(_OBSERVE_TIMEOUT_S, "s")
+    try:
+        jvm.scala.concurrent.Await.ready(obs.future(), limit)
+    except Py4JJavaError as exc:
+        raise RuntimeError(
+            f"observed metrics did not arrive within {_OBSERVE_TIMEOUT_S}s"
+        ) from exc
+    utils = jvm.org.apache.spark.sql.api.python.PythonSQLUtils
+    return CPickleSerializer().loads(utils.toPyRow(obs.getRow())).asDict()
 
 
 def _flock_publish_lock(live_dir):
@@ -1548,7 +1609,15 @@ def _commit(live, base, build, *, expected_version=None, staged=None, branch=Non
     stays byte-identical. ``build`` returns None to commit nothing (a
     replayed batch); this returns None then, else the new snapshot. A
     branch commit advances the branch pointer and leaves
-    ``_manifest.json`` alone."""
+    ``_manifest.json`` alone.
+
+    On a path with no snapshot yet, the pointer first names an empty
+    version-0 snapshot with this commit's layout and schema, before any
+    file moves in: a crash after the move-in then leaves an empty table
+    whose moved-in files no snapshot references, never files that a
+    schema-on-read scan serves or that the next writer adopts as
+    committed. The commit itself is still v1 with no parent."""
+    import time
     import uuid as _uuid
 
     with publish_lock(live):
@@ -1562,6 +1631,20 @@ def _commit(live, base, build, *, expected_version=None, staged=None, branch=Non
             return None
         _check_conflict(live, base, current, expected_version, commit)
         if staged:
+            if current is None and staged.files:
+                claim = {
+                    "version": 0,
+                    "parent": None,
+                    "txid": staged.txid,
+                    "partition_by": list(commit.get("partition_by") or []),
+                    "files": [],
+                    "file_stats": {},
+                    "file_added": {},
+                    "committed_at": time.time(),
+                }
+                if commit.get("table_schema"):
+                    claim["schema"] = commit["table_schema"]
+                _write_pointer(live, claim)
             _move_staged_in(live, staged.dir, staged.files)
         snap = _commit_manifest(
             live,
@@ -1978,7 +2061,9 @@ def table_changes(
     scan (``lake_table_diff`` by contrast joins two full snapshots).
     Rows carried unchanged through a rewritten partition cancel in the
     multiset difference (``exceptAll``), which shuffles only the delta
-    rows. Snapshots commit atomically, so the feed is exact between any
+    rows; an append-only chain (no file removed, no tombstone coverage
+    changed) has nothing to cancel and returns its added files'
+    rows as inserts with no difference at all. Snapshots commit atomically, so the feed is exact between any
     two retained versions, composes across versions (1→3 equals 1→2
     followed by 2→3), and ``from_version > to_version`` yields the
     rollback feed.
@@ -2032,6 +2117,10 @@ def table_changes(
         return local_frame(spark, [], proto).withColumn(
             "_change_type", F.lit("insert")
         )
+    if not removed and not changed:
+        # an append-only chain: nothing old can cancel, so the feed is
+        # the added files as inserts, duplicate rows included
+        return _scan(added, m_to).withColumn("_change_type", F.lit("insert"))
     new_parts = [_scan(added, m_to)] if added else []
     old_parts = [_scan(removed, m_from)] if removed else []
     for (kf, kt), fs in sorted(
@@ -3673,12 +3762,9 @@ def merge_into(
     bloom_cols: list[str] | None = None,
     updates_pinned: bool = False,
 ) -> dict:
-    """Keyed MERGE/upsert on a plain-Parquet lake table — the Delta
-    ``MERGE INTO`` / ``replaceWhere`` analog, executable without ACID
-    jars. (The north star names Delta/Iceberg; this image ships neither
-    ``delta-spark`` nor an Iceberg runtime jar and pip installs are
-    unavailable, so this plain-Parquet path IS the upsert surface —
-    see the durability contract below for what that costs.)
+    """Keyed MERGE/upsert on a lake table — the Delta ``MERGE INTO`` /
+    ``replaceWhere`` analog on the lake's own manifest commit, with no
+    ``delta-spark`` or Iceberg runtime jar.
 
     Semantics: rows whose key matches an update row are REPLACED by it;
     unmatched update rows are INSERTED; all other rows are untouched.
@@ -3686,35 +3772,44 @@ def merge_into(
     rewrite (upload_sample.sh:27); this is the partition-granular version
     of that model.
 
-    100 TB design: with ``partition_by``, only partitions that contain an
-    updated key are rewritten — the touched-partition list comes from the
-    updates side (one collect of distinct partition values, bounded by
-    the update batch, not the table), the old-rows read is
-    partition-pruned to exactly those directories, and the rewrite is
-    one manifest commit (``publish_overwrite``) that carries untouched
-    partitions' files without listing, reading, or replacing them. Cost scales
-    with the touched slice, not table size. Unpartitioned tables degrade
-    to a full rewrite — at scale, partition your lake. Returns
-    ``{"rows_updated", "rows_inserted", "partitions_rewritten"}``.
+    Delta's DML shape: find the files, rewrite them, commit once. With
+    ``partition_by``, only partitions that hold an update row are
+    rewritten: the old-rows read is restricted to exactly those
+    partition tuples, and the rewrite is one manifest commit
+    (``publish_overwrite``) that carries untouched partitions' files
+    without listing, reading, or replacing them. Cost scales with the
+    touched slice, not table size. Unpartitioned tables degrade to a
+    full rewrite — at scale, partition your lake.
+
+    Returns ``{"rows_updated", "rows_inserted", "partitions_rewritten"}``
+    (``-1`` partitions for an unpartitioned full rewrite; the two row
+    counts are None with ``collect_stats=False``). No statistic costs a
+    query of its own; each comes from work the merge runs anyway:
+
+    - the USING batch is pinned once with an eager ``localCheckpoint``
+      and an observation on that job counts its rows and collects its
+      partition tuples (a driver-side ``LocalRelation`` batch is
+      already pinned: its rows give both with no job; an
+      ``updates_pinned`` batch answers them with one grouped collect);
+    - ``partitions_rewritten`` is the number of those tuples;
+    - two observations on the staged write count the restricted old
+      rows and the ``keep`` rows (old rows no update key matches):
+      ``rows_updated`` is their difference — the old rows an update key
+      matched, the semi-join count, NULL keys and duplicate target keys
+      included — and ``rows_inserted`` is the batch size minus it.
 
     Contract (same as Delta MERGE + replaceWhere): update keys are unique
     within the batch, and a key's partition value never changes — a moved
     key would leave its old row alive in an untouched partition.
 
-    Schema evolution (round-5 VERDICT #3): with ``evolve_schema=True``,
-    columns the update batch adds are appended to the table — kept rows
-    carry NULL, and partitions the batch doesn't touch keep their old
-    files (their rows read as NULL through a merged/declared schema).
-    Without the flag, an update batch with unknown columns fails fast —
-    a typo'd column must not silently evolve the lake. Without a
-    declared ``schema``, reads here use ``mergeSchema`` so a
-    previously-evolved table can never lose its new columns to a footer
-    picked from an old file (that would silently DROP evolved data from
-    every rewritten row). ``mergeSchema`` is a distributed footer-read
-    job over the whole table — fine for a dimension, wrong at 100 TB
-    (millions of footers): pass ``schema`` (e.g. the governed catalog's
-    declared schema) and the read plans ZERO footer reads while old
-    files still NULL-fill evolved columns.
+    Schema evolution: with ``evolve_schema=True``, columns the update
+    batch adds are appended to the table — kept rows carry NULL, and
+    partitions the batch doesn't touch keep their old files (their rows
+    read as NULL through a merged/declared schema). Without the flag,
+    an update batch with unknown columns fails fast — a typo'd column
+    must not silently evolve the lake. Pass ``schema`` (e.g. the
+    governed catalog's declared schema) so the read plans zero footer
+    reads while old files still NULL-fill evolved columns.
 
     Durability contract: publication is one manifest commit
     (:func:`publish_overwrite`). A crash before the pointer replace
@@ -3726,23 +3821,20 @@ def merge_into(
     matches the reference's atomic-object-PUT model (main.tf:25-30) at
     table granularity.
     """
-    # Pin the updates batch ONCE: the merged frame AND the reported stats
-    # must derive from the same materialization, or a nondeterministic
-    # updates plan (sampling, un-sorted limit) makes the stats diverge
-    # from what was written (round-4 ADVICE). ``updates_pinned=True`` is
-    # the caller's statement that it ALREADY materialized the frame
-    # (localCheckpoint/cache) — e.g. the CDC sinks checkpoint the batch
-    # to run their own emptiness probe — so re-pinning here would only
-    # add a copy job per micro-batch (r16, guide §2.4).
-    if not updates_pinned:
-        updates = updates.localCheckpoint(eager=True)
-    else:
-        # Trust-but-verify the caller's pin, failing closed: a
-        # merely-deterministic-LOOKING but unpinned plan would silently
-        # reintroduce the stats-divergence bug. The optimized plan's
-        # ROOT must be the materialization itself — a checkpoint's
-        # LogicalRDD or a cache's InMemoryRelation. Anything built on
-        # top (pinned.filter(...), a projection) re-evaluates per use.
+    part = list(partition_by or [])
+    missing = [c for c in part if c not in updates.columns]
+    if missing:
+        raise ValueError(f"updates missing partition columns: {missing}")
+    # The merged frame and the statistics must derive from one
+    # materialization of the batch, or a nondeterministic plan
+    # (sampling, an unsorted limit) makes them disagree.
+    if updates_pinned:
+        # ``updates_pinned=True`` is the caller's statement that it
+        # already materialized the frame (the CDC sinks checkpoint the
+        # batch for their own emptiness probe). Fail closed on a plan
+        # built on top of the pin (a filter, a projection): its root
+        # must be the checkpoint's LogicalRDD or a cache's
+        # InMemoryRelation, or every use re-evaluates it.
         plan = updates._jdf.queryExecution().optimizedPlan()
         if plan.nodeName() not in ("LogicalRDD", "InMemoryRelation"):
             raise ValueError(
@@ -3751,26 +3843,34 @@ def merge_into(
                 "not a plan built on top of it; got:\n"
                 + plan.toString()[:500]
             )
+        per_part = updates.groupBy(*part).count().collect() if part else []
+        touched = [tuple(r)[:-1] for r in per_part]
+        # unpartitioned, the batch is counted only when stats are asked for
+        n_updates = sum(r[-1] for r in per_part) if part else None
+    elif is_local(updates):
+        rows = updates.select(*part).collect()
+        touched = list(dict.fromkeys(tuple(r) for r in rows))
+        n_updates = len(rows)
+    else:
+        metrics = {"n": F.count(F.lit(1))}
+        if part:
+            metrics["touched"] = F.collect_set(F.struct(*part))
+        updates, pin = _observe(updates, **metrics)
+        updates = updates.localCheckpoint(eager=True)
+        got = _observed(pin)
+        touched = [tuple(r) for r in got.get("touched", [])]
+        n_updates = got["n"]
     # Optimistic concurrency: remember which snapshot this rewrite is
     # computed against (read_table's file list is fixed at planning
     # time); the publish refuses to commit over a different one. A
     # plain directory is adopted first, so there is always a base.
     pre = adopt_table(path, partition_by, spark=spark, schema=schema)
-    if partition_by:
-        missing = [c for c in partition_by if c not in updates.columns]
-        if missing:
-            raise ValueError(f"updates missing partition columns: {missing}")
-        touched = updates.select(*partition_by).distinct()
+    current = read_table(spark, path, schema)
+    if part:
         # NULL-safe restriction: an update batch targeting the NULL
         # (Hive default) partition must still pull that partition's old
         # rows into the rewrite, or the staged replacement erases them.
-        current = _restrict_to_partitions(
-            read_table(spark, path, schema), touched, partition_by
-        )
-        n_partitions = touched.count()
-    else:
-        current = read_table(spark, path, schema)
-        n_partitions = -1  # full rewrite
+        current = _restrict_to_partitions(current, touched, part)
     new_cols = [c for c in updates.columns if c not in current.columns]
     if new_cols and not evolve_schema:
         raise ValueError(
@@ -3780,27 +3880,18 @@ def merge_into(
     for c in new_cols:
         current = current.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
     cols = current.columns
+    # an empty batch of a partitioned table touches nothing: no old row
+    # is read, so there is nothing to observe
+    observe = collect_stats and (touched or not part)
+    if observe:
+        current, seen = _observe(current, n=F.count(F.lit(1)))
     keep = current.join(updates, key_cols, "left_anti")
+    if observe:
+        keep, kept = _observe(keep, n=F.count(F.lit(1)))
     # No localCheckpoint needed: the staged write (publish_overwrite)
     # never targets the directory this plan reads, so there is no
     # read-under-overwrite hazard to pin against.
     merged = keep.select(*cols).unionByName(updates.select(*cols))
-    if collect_stats:
-        # Key-overlap stats: column-pruned semi-join count over the
-        # pinned updates, evaluated BEFORE the commit moves ``path``.
-        # ``collect_stats=False`` skips these two jobs — the right call
-        # for high-frequency callers that never read them (CDC
-        # micro-batches); the updates localCheckpoint above stays
-        # unconditionally, because it also pins WHICH rows the
-        # touched-partition list and the staged write see.
-        n_updated = (
-            current.select(*key_cols)
-            .join(updates.select(*key_cols), key_cols, "left_semi")
-            .count()
-        )
-        n_inserted = updates.count() - n_updated
-    else:
-        n_updated = n_inserted = None
     publish_overwrite(
         spark,
         path,
@@ -3809,10 +3900,18 @@ def merge_into(
         bloom_cols=bloom_cols,
         expected_version=pre["version"] if pre else 0,
     )
+    n_updated = n_inserted = None
+    if collect_stats:
+        n_updated = (
+            _observed(seen)["n"] - _observed(kept)["n"] if observe else 0
+        )
+        if n_updates is None:
+            n_updates = updates.count()
+        n_inserted = n_updates - n_updated
     return {
         "rows_updated": n_updated,
         "rows_inserted": n_inserted,
-        "partitions_rewritten": n_partitions,
+        "partitions_rewritten": len(touched) if part else -1,
     }
 
 
@@ -3853,14 +3952,14 @@ def scd2_apply(
       version — the null-safe comparison treats NULL = NULL as equal);
     - historical (non-current) rows are never touched.
 
-    Partial-attribute batches (round-5 ADVICE): an inserted version
+    Partial-attribute batches: an inserted version
     takes every column the batch supplies from the batch and CARRIES
     FORWARD the rest from the key's current row — a batch that only
     ships (key, changed attribute) no longer nulls out the other
     attributes. Brand-new keys have no row to carry from; their missing
     columns are NULL.
 
-    Partitioned dimensions (round-5 VERDICT #6): pass
+    Partitioned dimensions: pass
     ``partition_col`` naming a stored hive-partition column whose value
     is ``scd2_partition_value(from_col)`` (the month of the validity
     start). Closing a row never changes its ``from_col``, so every
@@ -3880,6 +3979,13 @@ def scd2_apply(
     unchanged). Scale: one key-join against current rows only (AQE
     broadcasts a small batch), map-only version arithmetic, rewrite
     bounded by touched partitions.
+
+    Returns ``{"rows_closed", "rows_inserted", "partitions_rewritten"}``
+    (``-1`` partitions when unpartitioned; the row counts are None with
+    ``collect_stats=False``). As in :func:`merge_into`, no statistic
+    runs a query of its own: the pinned change-detection join counts
+    the closing rows and collects their partitions, and an observation
+    on the staged write counts the inserted versions.
     """
     if not change_cols:
         raise ValueError("change_cols must be non-empty: nothing to compare")
@@ -3913,26 +4019,47 @@ def scd2_apply(
         # mergeSchema read above NULL-fills them on the next apply)
         cur = cur.withColumn(c, F.lit(None).cast(updates.schema[c].dataType))
     data_cols = [c for c in cur.columns if c not in meta_cols]
+    partitioned = partition_col is not None
+    # A batch row with a NULL key part matches no dimension row and is
+    # never inserted (the key joins are null-rejecting). The batch's pin
+    # counts its distinct non-NULL keys; more of them than the join
+    # matches below means some key is new.
+    keyed = F.struct(*key_cols)
+    if partitioned:
+        non_null = None
+        for k in key_cols:
+            ok = F.col(k).isNotNull()
+            non_null = ok if non_null is None else (non_null & ok)
+        updates, upd_pin = _observe(
+            updates, keys=F.size(F.collect_set(F.when(non_null, keyed)))
+        )
     updates = updates.localCheckpoint(eager=True)
     active = cur.filter(F.col(current_col))
     upd_data = [c for c in updates.columns if c not in key_cols]
     upd = updates.select(
         *key_cols, *[F.col(c).alias(f"__new_{c}") for c in upd_data]
     )
-    # r17 (guide §2.4 — don't re-evaluate what you already computed):
-    # the change-detection join (dimension scan + key join) used to be
-    # re-run by every downstream consumer — three changed_keys broadcast
-    # builds, the new-keys anti-join, the touched-partition count, both
-    # stats counts, and the staged write each re-planned the whole
-    # chain. Pin it ONCE; everything below derives from the pin, so the
-    # dimension is scanned exactly twice per apply (here, and once more
-    # for the untouched slice inside the publish). The pin is
-    # batch-bounded (rows = update keys present in the dimension).
-    joined = active.join(upd, key_cols, "inner").localCheckpoint(eager=True)
     same = None
     for c in change_cols:
         eq = F.col(c).eqNullSafe(F.col(f"__new_{c}"))
         same = eq if same is None else (same & eq)
+    # The change-detection join (dimension scan + key join) is pinned
+    # once and everything below derives from the pin, so the dimension
+    # is scanned exactly twice per apply (here, and once more for the
+    # untouched slice inside the publish). The pin is batch-bounded
+    # (rows = update keys present in the dimension). Its job also
+    # counts the closing rows and, on a partitioned dimension, collects
+    # their partitions and counts the matched keys.
+    metrics = {"closed": F.count(F.when(~same, F.lit(1)))}
+    if partitioned:
+        metrics["keys"] = F.size(F.collect_set(keyed))
+        metrics["parts"] = F.collect_set(
+            F.when(~same, F.struct(partition_col))
+        )
+    joined, join_pin = _observe(active.join(upd, key_cols, "inner"), **metrics)
+    joined = joined.localCheckpoint(eager=True)
+    got = _observed(join_pin)
+    n_closed = got["closed"]
     # `changed` carries BOTH the closing row (the active columns) and
     # the replacement version (the __new_* columns) for every changed
     # key — update keys are unique per batch (the documented contract),
@@ -3971,26 +4098,32 @@ def scd2_apply(
         .withColumn(to_col, F.lit(None).cast(cur.schema[to_col].dataType))
         .withColumn(current_col, F.lit(True))
     )
-    if partition_col is not None:
+    any_inserted = True
+    if partitioned:
         inserted = inserted.withColumn(
             partition_col, scd2_partition_value(F.col(from_col))
         )
         # Rewrite slice: partitions holding a closing row + the as_of
-        # month the inserts land in. Everything else is never read back
-        # or rewritten.
-        touched = (
-            closing.select(partition_col)
-            .distinct()
-            .unionByName(
-                inserted.select(partition_col).distinct()
+        # month the inserts land in, when anything is inserted: a
+        # changed key, or a batch key the join did not match.
+        # Everything else is never read back or rewritten.
+        any_inserted = n_closed > 0 or _observed(upd_pin)["keys"] > got["keys"]
+        touched = [tuple(r) for r in got["parts"]]
+        if any_inserted:
+            as_of_part = (
+                local_frame(spark, [(0,)], "x int")
+                .select(scd2_partition_value(F.lit(as_of)))
+                .collect()[0][0]
             )
-            .distinct()
-        )
+            touched = list(dict.fromkeys([*touched, (as_of_part,)]))
         base = _restrict_to_partitions(cur, touched, [partition_col])
-        n_partitions = touched.count()
+        n_partitions = len(touched)
     else:
         base = cur
         n_partitions = -1  # full rewrite
+    observe = collect_stats and any_inserted
+    if observe:
+        inserted, ins_obs = _observe(inserted, n=F.count(F.lit(1)))
     # keep ALL (in-slice) historical rows plus the active rows of
     # unchanged keys — only the active rows of changed keys leave this
     # set (they re-enter via `closing`)
@@ -4008,22 +4141,18 @@ def scd2_apply(
         .unionByName(closing.select(*out_cols))
         .unionByName(inserted.select(*out_cols))
     )
-    if collect_stats:
-        # two O(batch-bounded) counts; skip for high-frequency callers
-        # that never read them (merge_into's collect_stats contract)
-        n_closed = closing.count()
-        n_inserted = inserted.count()
-    else:
-        n_closed = n_inserted = None
     publish_overwrite(
         spark,
         path,
         result,
-        [partition_col] if partition_col is not None else None,
+        [partition_col] if partitioned else None,
         expected_version=pre["version"] if pre else 0,
     )
+    n_inserted = None
+    if collect_stats:
+        n_inserted = _observed(ins_obs)["n"] if observe else 0
     return {
-        "rows_closed": n_closed,
+        "rows_closed": n_closed if collect_stats else None,
         "rows_inserted": n_inserted,
         "partitions_rewritten": n_partitions,
     }
@@ -4113,23 +4242,15 @@ def _touched_slice(spark, path, predicate, partition_col, schema, set_cols=()):
     missing = [c for c in part_cols if c not in cur.columns]
     if missing:
         raise ValueError(f"table at {path} has no partition columns {missing}")
-    # r17 (guide §2.4): ONE aggregation job answers the matched count
-    # and the touched-partition list together — the matched slice was
-    # scanned twice to answer two questions one per-partition rollup
-    # answers. O(#touched) collect.
+    # One aggregation job answers the matched count and the
+    # touched-partition list together. O(#touched) collect.
     per_part = (
         matched.groupBy(*part_cols).agg(F.count(F.lit(1)).alias("__n")).collect()
     )
     out.matched = sum(r["__n"] for r in per_part)
     out.touched = [tuple(r)[: len(part_cols)] for r in per_part]
     if out.touched:
-        # explicit schema: a NULL partition value (the Hive default
-        # partition) must not break type inference
-        out.base = _restrict_to_partitions(
-            cur,
-            local_frame(spark, out.touched, matched.select(*part_cols).schema),
-            part_cols,
-        )
+        out.base = _restrict_to_partitions(cur, out.touched, part_cols)
     return out
 
 
